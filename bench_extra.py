@@ -278,8 +278,8 @@ def run_cosine():
 # ---------------------------------------------------------------------------
 def run_er():
     from codingchallenge_spark.functions.normalize import (
-        normalize_records,
-        with_token_hashes,
+        normalize_for_matching,
+        work_projection,
     )
     from codingchallenge_spark.operators.cc import connected_components
     from codingchallenge_spark.operators.scoring import (
@@ -299,14 +299,7 @@ def run_er():
     ], passes=PASSES)
 
     cfg = MatcherConfig(threshold=0.75)
-    records = documents_as_records(spark, SF_DIR)
-    parallelism = spark.sparkContext.defaultParallelism
-    if records.rdd.getNumPartitions() < parallelism:
-        records = records.repartition(parallelism)
-
-    norm = with_token_hashes(normalize_records(records)).withColumn(
-        "rid_b", F.unhex("rid")
-    )
+    norm = normalize_for_matching(documents_as_records(spark, SF_DIR))
     # stage-isolated (persisted inputs) — measured sequentially, noise noted
     def stage(name, thunk):
         sc = spark.sparkContext
@@ -322,7 +315,7 @@ def run_er():
 
     stage("er/normalize", lambda: noop(norm))
     normp = norm.persist(); normp.count()
-    work = normp.select(F.col("rid_b").alias("rid"), "name_norm", "tokens", "th")
+    work = work_projection(normp)
     pairs = candidate_pairs(work, cfg)
     stage("er/blocking", lambda: noop(pairs))
     pairsp = pairs.persist(); pairsp.count()

@@ -8,6 +8,10 @@ blocking"); no wall-clock, no randomness.
 Per-row invariant (BASELINE.json:15): ``content`` is carried through
 byte-identically — normalization writes NEW columns, never overwrites
 ``content``. ``content_sha = sha2(content, 256)`` is the invariant witness.
+
+The relation-level steps every resolving plan shares also live here, once:
+the partition floor, the matching normalize (:func:`normalize_for_matching`)
+and the binary-rid work projection.
 """
 
 from __future__ import annotations
@@ -41,7 +45,7 @@ def record_id(
     return F.sha2(F.concat_ws("\x1f", F.col(repo), F.col(path), F.col(commit)), 256)
 
 
-def guarded_unhex(col: str, context: str, allow_null: bool = False) -> Column:
+def guarded_unhex(col: str, context: str) -> Column:
     """``unhex`` with the sha256-hex invariant ASSERTED, never silently nulled.
 
     ``F.unhex`` returns NULL for any malformed input, which downstream turns
@@ -49,13 +53,10 @@ def guarded_unhex(col: str, context: str, allow_null: bool = False) -> Column:
     filter that discards the edge). Every rid/entity_id in this engine is
     64-char lowercase sha256 hex BY CONSTRUCTION (:func:`record_id`), so a
     violation means a foreign or corrupted input and must raise with the
-    offending value. ``allow_null`` tolerates NULL ids (they stay NULL);
-    the error message coalesces NULL to a printable token so assert_true
-    never raises with a NULL message.
+    offending value. The error message coalesces NULL to a printable token
+    so assert_true never raises with a NULL message.
     """
     ok = F.col(col).rlike("^[0-9a-f]{64}$")
-    if allow_null:
-        ok = F.col(col).isNull() | ok
     msg = F.concat(
         F.lit(f"{context}: {col} is not 64-char lowercase sha256 hex: "),
         F.coalesce(F.col(col), F.lit("<null>")),
@@ -125,12 +126,43 @@ def with_token_hashes(records_norm: DataFrame) -> DataFrame:
     return records_norm.withColumn("th", token_hashes("tokens"))
 
 
-def with_token_hashes32(records_norm: DataFrame) -> DataFrame:
-    """Append ``th32`` = 31-bit truncated/deduped/sorted form of ``th`` —
-    the half-width fingerprints the scoring prefilter crossing ships instead
-    of the full 64-bit arrays (similarity.token_hashes32 documents the
-    exact-conservative upper-bound property). Interpreted-eval: materialize
-    once alongside ``th``, same rule as :func:`with_token_hashes`."""
-    from codingchallenge_spark.functions.similarity import token_hashes32
+def partition_floor(df: DataFrame) -> DataFrame:
+    """Round-robin ``df`` up to the session's default parallelism when it
+    has fewer partitions.
 
-    return records_norm.withColumn("th32", token_hashes32("th"))
+    A small input scans into few partitions, and every downstream stage
+    that reads it inherits them — that would cap the whole job's
+    parallelism below the cluster's. At production scale the input has far
+    more splits than cores and this is a no-op.
+    """
+    parallelism = df.sparkSession.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() < parallelism:
+        df = df.repartition(parallelism)
+    return df
+
+
+def normalize_for_matching(records: DataFrame) -> DataFrame:
+    """The matcher's normalize step, shared by every plan that resolves a
+    whole corpus: partition floor → :func:`normalize_records` →
+    :func:`with_token_hashes` → ``rid_b``.
+
+    ``rid_b`` = unhex(rid): every blocking/scoring/CC exchange keys on
+    record ids, and a 32-byte binary halves that key's shuffle bytes vs the
+    64-char hex string — the dominant cost of the biggest intermediates
+    (the exploded token relation and the candidate-pair stream) at
+    10^12-file scale. Exact, not approximate: rid is lowercase sha256-hex BY
+    CONSTRUCTION (:func:`record_id`), and fixed-width binary compares
+    bytewise in the same order as its hex form — so least/greatest
+    canonicalization, SN sort order, CC minima and the final min-label all
+    pick identical records; lower(hex(·)) restores the exact string at emit.
+    """
+    norm = with_token_hashes(normalize_records(partition_floor(records)))
+    return norm.withColumn("rid_b", F.unhex("rid"))
+
+
+def work_projection(norm: DataFrame, *extra: str) -> DataFrame:
+    """The narrow, binary-rid relation blocking, scoring and CC read:
+    ``(rid_b AS rid, name_norm, tokens, th, *extra)``."""
+    return norm.select(
+        F.col("rid_b").alias("rid"), "name_norm", "tokens", "th", *extra
+    )

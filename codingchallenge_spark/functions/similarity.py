@@ -236,41 +236,18 @@ def token_hashes(col: Column | str = "tokens") -> Column:
     return F.array_sort(F.transform(c, lambda t: F.xxhash64(t)))
 
 
-def token_hashes32(th_col: Column | str = "th") -> Column:
-    """31-bit truncation of a :func:`token_hashes` array, re-deduped + sorted.
+def hashed_jaccard_batch(a: pd.Series, b: pd.Series) -> np.ndarray:
+    """V3 batched form — exact Jaccard over 64-bit pre-hashed
+    (distinct-element) arrays, vectorized across the whole Arrow batch.
 
-    ``x & 0x7FFFFFFF`` keeps the value in [0, 2³¹−1] so the int cast is exact
-    under ANSI SQL (no overflow path). Truncation can merge elements —
-    array_distinct restores the distinct-within-side invariant the batched
-    kernel requires, and the size delta vs ``th`` feeds the exact relaxation
-    term of the prefilter bound (see :func:`hashed_jaccard_batch32`).
-    Shipping these through the Arrow crossing halves the prefilter's bytes;
-    the exact 64-bit recompute runs only on the tiny survivor set.
-    Interpreted-eval like ``token_hashes`` — materialize once per record
-    (normalize.with_token_hashes32), never recompute per pair.
-    """
-    c = F.col(th_col) if isinstance(th_col, str) else th_col
-    return F.array_sort(
-        F.array_distinct(
-            F.transform(c, lambda x: x.bitwiseAND(F.lit(0x7FFFFFFF)).cast("int"))
-        )
-    )
-
-
-def _hashed_jaccard_impl(a: pd.Series, b: pd.Series, dtype: type) -> np.ndarray:
-    """V3 batched form — Jaccard over pre-hashed (distinct-element) arrays,
-    vectorized across the whole Arrow batch. ``dtype`` is the hash width
-    (int64 for the exact kernel, int32 for the prefilter kernel — half the
-    matrix bytes, ~2× faster sort, same algorithm).
-
-    Each pair's hashes are scattered into one padded row of an (n, L) dtype
+    Each pair's hashes are scattered into one padded row of an (n, L) int64
     matrix, sorted along axis=1 (a single vectorized C sort — no per-row
     Python, no global lexsort over keyed pairs), and |A∩B| is the count of
     adjacent equal values per row: both sides are distinct-within-side, so a
     value appears at most twice per row. Pads are position-distinct sentinels
-    (dtype max − column) so they never form an adjacent-equal pair with each
+    (int64 max − column) so they never form an adjacent-equal pair with each
     other; a DATA value inside the top-L hash range could still equal a pad
-    (~L/2^bits per element), so rows containing any value in that range are
+    (~L/2^64 per element), so rows containing any value in that range are
     detected up front and recomputed exactly with sets — the sentinel trick
     is then an optimization, never an approximation. Rows are processed in
     4096-row slices to keep the matrices cache-resident — the same
@@ -279,10 +256,10 @@ def _hashed_jaccard_impl(a: pd.Series, b: pd.Series, dtype: type) -> np.ndarray:
     n = len(a)
     if n == 0:
         return np.empty(0, dtype=np.float64)
-    empty = np.empty(0, dtype=dtype)
-    dmax = np.iinfo(dtype).max
-    av = [np.asarray(x, dtype=dtype) if x is not None else empty for x in a]
-    bv = [np.asarray(x, dtype=dtype) if x is not None else empty for x in b]
+    empty = np.empty(0, dtype=np.int64)
+    dmax = np.iinfo(np.int64).max
+    av = [np.asarray(x, dtype=np.int64) if x is not None else empty for x in a]
+    bv = [np.asarray(x, dtype=np.int64) if x is not None else empty for x in b]
     la = np.fromiter((x.size for x in av), dtype=np.int64, count=n)
     lb = np.fromiter((x.size for x in bv), dtype=np.int64, count=n)
     tot = la + lb
@@ -294,7 +271,7 @@ def _hashed_jaccard_impl(a: pd.Series, b: pd.Series, dtype: type) -> np.ndarray:
         L = int(tot[lo:hi].max(initial=0))
         if L == 0:
             continue
-        pads = dtype(dmax) - np.arange(L, dtype=dtype)
+        pads = np.int64(dmax) - np.arange(L, dtype=np.int64)
         M = np.tile(pads, (m, 1))
         lens_a, lens_b = la[lo:hi], lb[lo:hi]
         ridx = np.arange(m)
@@ -317,7 +294,7 @@ def _hashed_jaccard_impl(a: pd.Series, b: pd.Series, dtype: type) -> np.ndarray:
         # Pad-collision guard: any data value inside the sentinel range
         # [MAX−L+1, MAX] could equal a pad and inflate the adjacent-equal
         # count. Recompute those (rare) rows exactly.
-        pad_floor = dtype(dmax) - dtype(L - 1)
+        pad_floor = np.int64(dmax) - np.int64(L - 1)
         risky = np.union1d(
             rows_a[flat_a >= pad_floor] if flat_a.size else empty,
             rows_b[flat_b >= pad_floor] if flat_b.size else empty,
@@ -330,37 +307,6 @@ def _hashed_jaccard_impl(a: pd.Series, b: pd.Series, dtype: type) -> np.ndarray:
     return out
 
 
-def hashed_jaccard_batch(a: pd.Series, b: pd.Series) -> np.ndarray:
-    """Exact Jaccard over 64-bit pre-hashed distinct-element arrays."""
-    return _hashed_jaccard_impl(a, b, np.int64)
-
-
-def hashed_jaccard_batch32(a: pd.Series, b: pd.Series) -> np.ndarray:
-    """Jaccard over 31-bit truncated hash arrays (:func:`token_hashes32`).
-
-    Used as an exact-conservative PREFILTER via a provable lower bound. For
-    records A, B with truncated images A' = f(A), B' = f(B): f(A∩B) ⊆ A'∩B'
-    and merges within A∩B are merges within A AND within B, so
-    |A'∩B'| ≥ |A∩B| − m with m = min(|A|−|A'|, |B|−|B'|); with |A'∪B'| ≤
-    |A∪B| that gives
-
-        jaccard(A',B') ≥ jaccard(A,B) − m / max(|A|,|B|).
-
-    (A pure ≥ does NOT hold — a collision can merge two COMMON tokens and
-    pull the truncated jaccard below the exact one.) All four sizes are
-    plain ``F.size`` columns, so the filter
-    ``jac32 ≥ min_jac − m/max(|A|,|B|)`` is codegen'd JVM-side and never
-    drops a pair whose exact Jaccard passes; m = 0 for virtually every real
-    pair (~10²·10²/2³² within-record collision odds), so selectivity is
-    unchanged. Survivors recompute exactly with the 64-bit hashes
-    (scoring.fused_score_from_attrs). Property-tested with forced collisions
-    in tests/test_similarity.py."""
-    return _hashed_jaccard_impl(a, b, np.int32)
-
-
-_EMPTY_I64 = np.empty(0, dtype=np.int64)
-
-
 # ---------------------------------------------------------------------------
 # Arrow-batched pandas UDFs (scalar): adjacent UDFs in one projection are
 # evaluated in a single ArrowEvalPython pass (one JVM↔Python crossing).
@@ -371,10 +317,6 @@ _EMPTY_I64 = np.empty(0, dtype=np.int64)
 def hashed_jaccard_udf(a: pd.Series, b: pd.Series) -> pd.Series:
     return pd.Series(hashed_jaccard_batch(a, b))
 
-
-@pandas_udf(DoubleType())
-def hashed_jaccard32_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    return pd.Series(hashed_jaccard_batch32(a, b))
 
 @pandas_udf(DoubleType())
 def jaro_winkler_udf(s1: pd.Series, s2: pd.Series) -> pd.Series:

@@ -1,10 +1,10 @@
-"""Pairwise scoring over candidate pairs — J3, V4, V5 (SURVEY.md §2.4/2.8).
+"""Pairwise scoring over candidate pairs — J3, V4 (SURVEY.md §2.4/2.8).
 
 Spec: BASELINE.json:6 — "pairwise scoring with vectorized pandas/Arrow UDFs
 computing batched Jaro-Winkler/Levenshtein and token-Jaccard similarities over
 candidate pairs".
 
-Plan shape at scale (production = score_pairs_fused):
+One production scorer, :func:`score_pairs_fused`:
   cand_pairs ⋈ records_norm(rid1) ⋈ records_norm(rid2)   (attribute fan-in,
     one join round per side shipping (name_norm, token-hashes) together)
   → codegen'd size-ratio pre-prune
@@ -14,6 +14,11 @@ Plan shape at scale (production = score_pairs_fused):
   → codegen'd weighted blend + threshold.
 rids and the jaccard column never cross into Python at all.
 
+:func:`attach_pair_attrs` + :func:`score_pairs` are the unpruned REFERENCE
+scorer: every candidate pair scored, jaccard over the token strings. Tests
+check the production scorer against it and read exact scores of pairs the
+production prune drops (the flagship's threshold-margin gate).
+
 Only the *name keys and token arrays* travel into the joins — never
 ``content`` (the wide column stays at the scan; SURVEY.md §4 column pruning).
 The fan-in join is optionally salted (operators.blocking.salted_join) when a
@@ -22,19 +27,12 @@ record participates in pathologically many pairs.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from codingchallenge_spark.functions.similarity import (
-    hashed_jaccard32_udf,
-    hashed_jaccard_batch,
     hashed_jaccard_udf,
-    jaro_winkler_batch,
     jaro_winkler_udf,
-    levenshtein_ratio_batch,
     levenshtein_ratio_udf,
     token_hashes,
     token_jaccard,
@@ -46,16 +44,12 @@ DEFAULT_THRESHOLD = 0.72
 
 _ATTR_COLS = ["rid", "name_norm", "tokens"]
 
-SCORED_SCHEMA = (
-    "rid1 string, rid2 string, block_key string, "
-    "jw double, lev double, jaccard double, score double"
-)
-
 
 def attach_pair_attrs(
     pairs: DataFrame, records_norm: DataFrame, salt_buckets: int = 0
 ) -> DataFrame:
-    """J3 — candidate pairs ⋈ record attributes (twice: rid1 then rid2).
+    """J3 — candidate pairs ⋈ record attributes (twice: rid1 then rid2), the
+    input of the reference scorer :func:`score_pairs`.
 
     ``salt_buckets > 0`` switches to the deterministic salted join for hot
     record ids (B3). Attribute projection is narrow: (rid, name_norm, tokens).
@@ -85,7 +79,12 @@ def score_pairs(
     weights: dict[str, float] | None = None,
     threshold: float = DEFAULT_THRESHOLD,
 ) -> DataFrame:
-    """V1+V2 via one Arrow crossing, V3 native, V4 blend + threshold flag.
+    """Reference scorer over :func:`attach_pair_attrs` output: V1+V2 via one
+    Arrow crossing, V3 native over the token strings, V4 blend — for EVERY
+    pair, no prune. Not on any production path: tests hold
+    :func:`score_pairs_fused` equal to it, and the flagship's
+    threshold-margin test (tests/test_query_pack.py) reads the exact scores
+    of pairs the production prune drops from it.
 
     Returns scored_pairs[rid1, rid2, block_key?, jw, lev, jaccard, score].
     """
@@ -109,82 +108,6 @@ def score_pairs(
     return scored.select(*keep, "jw", "lev", "jaccard", "score")
 
 
-def score_pairs_pruned(
-    pairs: DataFrame,
-    records_norm: DataFrame,
-    weights: dict[str, float] | None = None,
-    threshold: float = DEFAULT_THRESHOLD,
-    salt_buckets: int = 0,
-) -> DataFrame:
-    """Scoring with an exact upper-bound prune before the Python crossing.
-
-    score = w_jw·jw + w_lev·lev + w_jac·jaccard with jw, lev ≤ 1, so
-    score ≤ w_jw + w_lev + w_jac·jaccard. Any pair whose JVM-computed
-    jaccard keeps that bound below ``threshold`` can NEVER become an edge —
-    drop it before the (expensive) Arrow jw/lev crossing. With the default
-    weights/threshold this prunes the vast majority of candidate pairs, so
-    the pandas-UDF kernels only ever see plausible matches.
-
-    Join order is also chosen for scale: the wide fan-in join ships ONLY the
-    token arrays (for jaccard); the name keys are joined onto the already
-    pruned survivor set, which is orders of magnitude smaller.
-
-    Returns the same schema as :func:`score_pairs`, restricted to pairs with
-    score-bound ≥ threshold. Exact: no pair with final score ≥ threshold is
-    ever pruned, so ``edges_from_scores(...)`` yields identical edges.
-    """
-    w = weights or DEFAULT_WEIGHTS
-    keep = [c for c in ("rid1", "rid2", "block_key") if c in pairs.columns]
-
-    # Hash each record's (distinct) tokens ONCE — the fan-in join then ships
-    # 8-byte longs instead of token strings, and the batched numpy Jaccard
-    # kernel runs on primitive arrays (hashed_jaccard_batch). ~3× faster than
-    # JVM array_intersect on string arrays at 10⁷ pairs, identical values.
-    # A precomputed ``th`` column (normalize.with_token_hashes) is used as-is:
-    # array_sort∘transform is INTERPRETED (higher-order fns don't codegen), so
-    # recomputing it per query execution serializes the whole scoring stage
-    # behind a few interpreted-eval tasks. Materialize once, join many.
-    if "th" in records_norm.columns:
-        toks = records_norm.select("rid", "th")
-    else:
-        toks = records_norm.select("rid", token_hashes("tokens").alias("th"))
-    if salt_buckets > 0:
-        with_tok = salted_join(pairs, toks, "rid1", salt_buckets)
-        with_tok = with_tok.withColumnRenamed("th", "th1")
-        with_tok = salted_join(with_tok, toks, "rid2", salt_buckets)
-        with_tok = with_tok.withColumnRenamed("th", "th2")
-    else:
-        t1 = toks.select(F.col("rid").alias("rid1"), F.col("th").alias("th1"))
-        t2 = toks.select(F.col("rid").alias("rid2"), F.col("th").alias("th2"))
-        with_tok = pairs.join(t1, "rid1").join(t2, "rid2")
-
-    jacc = with_tok.select(
-        *keep, hashed_jaccard_udf("th1", "th2").alias("jaccard")
-    )
-    if w["jaccard"] > 0:
-        min_jaccard = (threshold - w["jw"] - w["lev"]) / w["jaccard"]
-        if min_jaccard > 0:
-            jacc = jacc.filter(F.col("jaccard") >= F.lit(min_jaccard))
-
-    names = records_norm.select("rid", "name_norm")
-    n1 = names.select(F.col("rid").alias("rid1"), F.col("name_norm").alias("name1"))
-    n2 = names.select(F.col("rid").alias("rid2"), F.col("name_norm").alias("name2"))
-    survivors = jacc.join(n1, "rid1").join(n2, "rid2")
-
-    scored = survivors.withColumns(
-        {
-            "jw": jaro_winkler_udf("name1", "name2"),
-            "lev": levenshtein_ratio_udf("name1", "name2"),
-        }
-    ).withColumn(
-        "score",
-        F.col("jw") * F.lit(w["jw"])
-        + F.col("lev") * F.lit(w["lev"])
-        + F.col("jaccard") * F.lit(w["jaccard"]),
-    )
-    return scored.select(*keep, "jw", "lev", "jaccard", "score")
-
-
 def fused_pair_attrs(
     pairs: DataFrame, records_norm: DataFrame, salt_buckets: int = 0
 ) -> DataFrame:
@@ -192,95 +115,30 @@ def fused_pair_attrs(
     ONCE, shipping (name_norm, th) together. Half the joins / broadcast
     builds of a jaccard-then-names two-round plan."""
     keep = [c for c in ("rid1", "rid2", "block_key") if c in pairs.columns]
-    # When the records relation carries the 31-bit truncated fingerprints
-    # (normalize.with_token_hashes32), ship them alongside th: the prefilter
-    # crossing then sends the half-width arrays to Python while th rides
-    # JVM-side to the (tiny) survivor recompute — see fused_score_from_attrs.
-    has32 = "th32" in records_norm.columns
-    extra = ["th32"] if has32 else []
     if "th" in records_norm.columns:
-        attrs = records_norm.select("rid", "name_norm", "th", *extra)
+        attrs = records_norm.select("rid", "name_norm", "th")
     else:
         attrs = records_norm.select(
-            "rid", "name_norm", token_hashes("tokens").alias("th"), *extra
+            "rid", "name_norm", token_hashes("tokens").alias("th")
         )
     if salt_buckets > 0:
         joined = salted_join(pairs, attrs, "rid1", salt_buckets)
-        joined = joined.withColumnsRenamed(
-            {"name_norm": "name1", "th": "th1", **({"th32": "th1_32"} if has32 else {})}
-        )
+        joined = joined.withColumnsRenamed({"name_norm": "name1", "th": "th1"})
         joined = salted_join(joined, attrs, "rid2", salt_buckets)
-        joined = joined.withColumnsRenamed(
-            {"name_norm": "name2", "th": "th2", **({"th32": "th2_32"} if has32 else {})}
-        )
+        joined = joined.withColumnsRenamed({"name_norm": "name2", "th": "th2"})
     else:
         a1 = attrs.select(
             F.col("rid").alias("rid1"),
             F.col("name_norm").alias("name1"),
             F.col("th").alias("th1"),
-            *([F.col("th32").alias("th1_32")] if has32 else []),
         )
         a2 = attrs.select(
             F.col("rid").alias("rid2"),
             F.col("name_norm").alias("name2"),
             F.col("th").alias("th2"),
-            *([F.col("th32").alias("th2_32")] if has32 else []),
         )
         joined = pairs.join(a1, "rid1").join(a2, "rid2")
-    cols32 = ["th1_32", "th2_32"] if has32 else []
-    return joined.select(*keep, "name1", "name2", "th1", "th2", *cols32)
-
-
-def fused_kernel(
-    joined: DataFrame,
-    weights: dict[str, float] | None = None,
-    threshold: float = DEFAULT_THRESHOLD,
-    rid_binary: bool = False,
-) -> DataFrame:
-    """The single-crossing scoring kernel over ``fused_pair_attrs`` output:
-    one mapInPandas pass computes hashed Jaccard, prunes on the exact score
-    upper bound, and runs jw/lev only on (and emits only) surviving rows.
-
-    ``rid_binary=True`` declares rid1/rid2 as 32-byte binary instead of
-    64-char hex strings — the kernel never reads them, but they ride through
-    Arrow both ways and are ~58% of the input payload at this corpus's name/
-    token sizes. Halving them measured 1.11×/1.15× kernel throughput at
-    8/32 cores (the crossing is DRAM-bandwidth-bound at high core counts)."""
-    w = weights or DEFAULT_WEIGHTS
-    has_bk = "block_key" in joined.columns
-    keep = ["rid1", "rid2"] + (["block_key"] if has_bk else [])
-    schema = SCORED_SCHEMA if has_bk else SCORED_SCHEMA.replace(
-        "block_key string, ", ""
-    )
-    if rid_binary:
-        schema = schema.replace("rid1 string, rid2 string",
-                                "rid1 binary, rid2 binary")
-    min_bound = threshold - (w["jw"] + w["lev"])  # prune iff w_jac·jac < this
-
-    def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in it:
-            jac = hashed_jaccard_batch(pdf["th1"], pdf["th2"])
-            if w["jaccard"] > 0 and min_bound > 0:
-                mask = (w["jaccard"] * jac) >= min_bound
-            else:
-                mask = np.ones(len(pdf), dtype=bool)
-            if not mask.all():
-                pdf = pdf.iloc[mask.nonzero()[0]]
-                jac = jac[mask]
-            jw = jaro_winkler_batch(pdf["name1"], pdf["name2"])
-            lev = levenshtein_ratio_batch(pdf["name1"], pdf["name2"])
-            out = {k: pdf[k] for k in keep}
-            out |= {
-                "jw": jw,
-                "lev": lev,
-                "jaccard": jac,
-                "score": w["jw"] * jw + w["lev"] * lev + w["jaccard"] * jac,
-            }
-            yield pd.DataFrame(out)
-
-    return joined.mapInPandas(fn, schema)
+    return joined.select(*keep, "name1", "name2", "th1", "th2")
 
 
 def fused_score_from_attrs(
@@ -304,10 +162,9 @@ def fused_score_from_attrs(
          over the SURVIVORS' name keys only;
       5. codegen'd weighted blend.
 
-    Versus the single fused mapInPandas kernel (kept as
-    :func:`score_pairs_fused_arrow`): mapInPandas round-trips the WHOLE row
-    through Arrow — rids and name keys pay the serialization toll for every
-    candidate pair even though the jaccard kernel never reads them. The
+    Versus a single mapInPandas kernel: mapInPandas round-trips the WHOLE
+    row through Arrow — rids and name keys pay the serialization toll for
+    every candidate pair even though the jaccard kernel never reads them. The
     narrow-crossing plan ships th once, names only for survivors, rids never
     — measured 1.33×/1.40×/1.11× faster at 2/8/32 cores over the 7.2M-pair
     exhaustive bench set (BENCH/BASELINE.md). Worker-spawn serialization
@@ -327,57 +184,19 @@ def fused_score_from_attrs(
             joined = joined.filter(
                 F.least(n1, n2) >= F.lit(min_jac) * F.greatest(n1, n2)
             )
-    if "th1_32" in joined.columns and min_jac > 0:
-        # Half-width prefilter crossing: ship the 31-bit truncated arrays
-        # (half the Arrow bytes of th, and the int32 kernel sorts half the
-        # matrix bytes), filter on the provable lower bound
-        #   jac32 ≥ jaccard − m/max(|A|,|B|),  m = min(|A|−|A'|, |B|−|B'|)
-        # (similarity.hashed_jaccard_batch32 derives it; a plain jac32 ≥
-        # jaccard does NOT hold when a collision merges two common tokens).
-        # m = 0 for virtually every real pair, so the relaxation changes
-        # selectivity only on the ~10⁻⁶ of pairs with a within-record 31-bit
-        # collision. Then one survivor crossing computes the exact 64-bit
-        # jaccard + jw + lev together (three adjacent scalar UDFs → one
-        # ArrowEvalPython node). th1/th2 ride JVM-side past the prefilter —
-        # ArrowEvalPython ships only UDF arguments, so the full-width arrays
-        # only ever cross for the tiny survivor set. Exact: the final filter
-        # re-applies the bound on the exact jaccard, so the output multiset
-        # is identical to the th64-only plan (tested equal).
-        n1, n2 = F.size("th1"), F.size("th2")
-        relax = (
-            F.least(n1 - F.size("th1_32"), n2 - F.size("th2_32"))
-            / F.greatest(n1, n2, F.lit(1))
-        ).cast("double")
-        pre = joined.withColumn(
-            "jac32", hashed_jaccard32_udf("th1_32", "th2_32")
-        )
-        pre = pre.filter(
-            F.col("jac32") >= F.lit(min_jac) - relax
-        ).drop("th1_32", "th2_32", "jac32")
-        scored = pre.withColumns(
-            {
-                "jaccard": hashed_jaccard_udf("th1", "th2"),
-                "jw": jaro_winkler_udf("name1", "name2"),
-                "lev": levenshtein_ratio_udf("name1", "name2"),
-            }
-        ).drop("th1", "th2")
+    scored = joined.withColumn(
+        "jaccard", hashed_jaccard_udf("th1", "th2")
+    ).drop("th1", "th2")
+    if min_jac > 0:
         scored = scored.filter(F.col("jaccard") >= F.lit(min_jac))
-    else:
-        if "th1_32" in joined.columns:
-            joined = joined.drop("th1_32", "th2_32")
-        scored = joined.withColumn(
-            "jaccard", hashed_jaccard_udf("th1", "th2")
-        ).drop("th1", "th2")
-        if min_jac > 0:
-            scored = scored.filter(F.col("jaccard") >= F.lit(min_jac))
-        scored = scored.withColumns(
-            {
-                # Adjacent scalar pandas UDFs in one projection → a single
-                # ArrowEvalPython node; name1/name2 ship once, doubles return.
-                "jw": jaro_winkler_udf("name1", "name2"),
-                "lev": levenshtein_ratio_udf("name1", "name2"),
-            }
-        )
+    scored = scored.withColumns(
+        {
+            # Adjacent scalar pandas UDFs in one projection → a single
+            # ArrowEvalPython node; name1/name2 ship once, doubles return.
+            "jw": jaro_winkler_udf("name1", "name2"),
+            "lev": levenshtein_ratio_udf("name1", "name2"),
+        }
+    )
     scored = scored.withColumn(
         "score",
         F.col("jw") * F.lit(w["jw"])
@@ -396,98 +215,11 @@ def score_pairs_fused(
 ) -> DataFrame:
     """Production scorer: single attribute join round per side
     (:func:`fused_pair_attrs`), then the narrow-crossing scoring body
-    (:func:`fused_score_from_attrs`). Result multiset identical to
-    :func:`score_pairs_pruned` and :func:`score_pairs_fused_arrow`
-    (tested equal)."""
+    (:func:`fused_score_from_attrs`). Every emitted row equals the
+    reference :func:`score_pairs` row of the same pair, and the two yield the
+    same edge set (tested equal)."""
     joined = fused_pair_attrs(pairs, records_norm, salt_buckets)
     return fused_score_from_attrs(joined, weights=weights, threshold=threshold)
-
-
-def score_pairs_fused_arrow(
-    pairs: DataFrame,
-    records_norm: DataFrame,
-    weights: dict[str, float] | None = None,
-    threshold: float = DEFAULT_THRESHOLD,
-    salt_buckets: int = 0,
-) -> DataFrame:
-    """V5 — the single-crossing mapInPandas scorer (round-2 production path,
-    kept as a tested alternative): ONE mapInPandas pass computes hashed
-    Jaccard, prunes on the exact score bound in-kernel, and runs jw/lev on
-    survivors, with rid1/rid2 crossing Arrow as 32-byte binary (they are
-    sha256-hex by construction; measured 1.11×/1.15× at 8/32 cores vs hex
-    strings). Superseded by :func:`score_pairs_fused`'s narrow-crossing plan,
-    which keeps rids/jaccard JVM-side entirely.
-    """
-    w = weights or DEFAULT_WEIGHTS
-    joined = fused_pair_attrs(pairs, records_norm, salt_buckets)
-    if w["jaccard"] > 0:
-        min_jac = (threshold - w["jw"] - w["lev"]) / w["jaccard"]
-        if min_jac > 0:
-            n1, n2 = F.size("th1"), F.size("th2")
-            joined = joined.filter(
-                F.least(n1, n2) >= F.lit(min_jac) * F.greatest(n1, n2)
-            )
-    # rids are sha256-hex by construction (normalize.record_id) — ship them
-    # through the Arrow crossing as 32-byte binary and restore the hex form
-    # on the (small) survivor set. Both conversions are codegen'd JVM
-    # expressions; F.hex uppercases, so lower() restores the exact input.
-    # guarded_unhex raises on any malformed rid instead of silently nulling
-    # it (normalize.guarded_unhex — shared with the incremental star edges).
-    from codingchallenge_spark.functions.normalize import guarded_unhex
-
-    ctx = "score_pairs_fused_arrow"
-    joined = joined.withColumn(
-        "rid1", guarded_unhex("rid1", ctx, allow_null=True)
-    ).withColumn("rid2", guarded_unhex("rid2", ctx, allow_null=True))
-    out = fused_kernel(
-        joined, weights=weights, threshold=threshold, rid_binary=True
-    )
-    return out.withColumn("rid1", F.lower(F.hex("rid1"))).withColumn(
-        "rid2", F.lower(F.hex("rid2"))
-    )
-
-
-def score_pairs_map_in_pandas(
-    pairs_with_attrs: DataFrame,
-    weights: dict[str, float] | None = None,
-) -> DataFrame:
-    """V5 — alternative single-pass scorer: ONE mapInPandas crossing computes
-    all three similarities per Arrow batch (tokens travel through Arrow once).
-    Benchmarked against :func:`score_pairs`; semantics identical."""
-    w = weights or DEFAULT_WEIGHTS
-    has_bk = "block_key" in pairs_with_attrs.columns
-    cols = ["rid1", "rid2"] + (["block_key"] if has_bk else []) + [
-        "name1", "name2", "tokens1", "tokens2",
-    ]
-    schema = SCORED_SCHEMA if has_bk else SCORED_SCHEMA.replace(
-        "block_key string, ", ""
-    )
-
-    def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in it:
-            jw = jaro_winkler_batch(pdf["name1"], pdf["name2"])
-            lev = levenshtein_ratio_batch(pdf["name1"], pdf["name2"])
-            jac = np.empty(len(pdf), dtype=np.float64)
-            for i, (x, y) in enumerate(zip(pdf["tokens1"], pdf["tokens2"])):
-                sx = set(x) if x is not None else set()
-                sy = set(y) if y is not None else set()
-                u = len(sx | sy)
-                jac[i] = (len(sx & sy) / u) if u else 1.0
-            out = {
-                "rid1": pdf["rid1"],
-                "rid2": pdf["rid2"],
-                "jw": jw,
-                "lev": lev,
-                "jaccard": jac,
-                "score": w["jw"] * jw + w["lev"] * lev + w["jaccard"] * jac,
-            }
-            if has_bk:
-                out["block_key"] = pdf["block_key"]
-            yield pd.DataFrame(out)
-
-    return pairs_with_attrs.select(*cols).mapInPandas(fn, schema)
 
 
 def edges_from_scores(

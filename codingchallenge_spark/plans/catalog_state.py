@@ -498,6 +498,14 @@ def _read_labels_chain(spark: SparkSession, labels_chain: list[str]) -> DataFram
     return out
 
 
+def _read_norm(spark: SparkSession, *paths: str) -> DataFrame:
+    """Read a norm chain. A catalog persisted by an engine that still had the
+    int32 prefilter opt-in carries a ``th32`` column; it is dropped here, so
+    a legacy chain unions with current delta norms (unionByName on
+    ``state.norm.columns``)."""
+    return spark.read.parquet(*paths).drop("th32")
+
+
 def load_catalog_state(spark: SparkSession, run_dir: str) -> CatalogState:
     """Read a persisted state (batch run_dir or maintained delta run_dir)."""
     manifest = json.loads((Path(run_dir) / STATE_MANIFEST).read_text())
@@ -518,7 +526,7 @@ def load_catalog_state(spark: SparkSession, run_dir: str) -> CatalogState:
         spark.read.parquet(*tok_chain) if tok_chain else None
     )  # append-only overlay: plain union, no shadowing
     return CatalogState(
-        norm=spark.read.parquet(*norm_paths),
+        norm=_read_norm(spark, *norm_paths),
         token_df=spark.read.parquet(str(Path(run_dir) / "token_df")),
         sn_index=resolve_sn_index(stored, bounds),
         sn_bounds=bounds,
@@ -530,25 +538,6 @@ def load_catalog_state(spark: SparkSession, run_dir: str) -> CatalogState:
         tok_postings=tok_postings,
         tok_chain=tok_chain,
         tok_buckets=manifest.get("tok_buckets"),
-    )
-
-
-def state_from_norm(
-    norm: DataFrame,
-    num_buckets: int | None = None,
-    tok_buckets: int = 32,
-) -> CatalogState:
-    """In-memory state from a normalized catalog (tests / ad-hoc use; the
-    pipeline persists the same relations as stages)."""
-    stored, bounds = build_sn_index(norm, num_buckets=num_buckets)
-    return CatalogState(
-        norm=norm,
-        token_df=build_token_df(norm),
-        sn_index=resolve_sn_index(stored, bounds),
-        sn_bounds=bounds,
-        sn_stored=stored,
-        tok_postings=build_tok_postings(norm, tok_buckets),
-        tok_buckets=tok_buckets,
     )
 
 
@@ -584,7 +573,7 @@ def compact_state(
 
     norm_path = str(out / "normalize")
     state.norm.write.parquet(norm_path)
-    normp = spark.read.parquet(norm_path)
+    normp = _read_norm(spark, norm_path)
 
     stored, _ = build_sn_index(normp, num_buckets=num_buckets)
     idx_path = str(out / "sn_index")

@@ -69,7 +69,9 @@ from pyspark.sql import functions as F
 from codingchallenge_spark.functions.normalize import (
     guarded_unhex,
     normalize_records,
+    partition_floor,
     with_token_hashes,
+    work_projection,
 )
 from codingchallenge_spark.operators.blocking import (
     canonical_pairs,
@@ -528,22 +530,15 @@ def delta_attrs(
     """Scoring attribute side for a delta run: catalog ∪ delta narrow attrs
     pre-filtered to rids that actually appear in a candidate pair (semi join
     — AQE broadcasts the delta-proportional rid set; the catalog side is
-    scanned narrow, never shuffled corpus-wide). ``th32`` rides along when
-    both sides carry it (a catalog persisted with int32_prefilter), so the
-    scoring prefilter branch engages in delta runs too."""
+    scanned narrow, never shuffled corpus-wide)."""
     touched_rids = (
         pairs.select(F.col("rid1").alias("rid"))
         .unionByName(pairs.select(F.col("rid2").alias("rid")))
         .distinct()
     )
-    attr_cols = ["name_norm", "th"] + (
-        ["th32"]
-        if "th32" in state.norm.columns and "th32" in work_new.columns
-        else []
-    )
     return (
-        state.norm.select(F.col("rid_b").alias("rid"), *attr_cols)
-        .unionByName(work_new.select("rid", *attr_cols))
+        state.norm.select(F.col("rid_b").alias("rid"), "name_norm", "th")
+        .unionByName(work_new.select("rid", "name_norm", "th"))
         .join(touched_rids, "rid", "left_semi")
     )
 
@@ -616,8 +611,6 @@ def resolve_entities_incremental(
     cfg = cfg or MatcherConfig()
     if emit not in ("full", "delta"):
         raise ValueError(f"emit must be 'full' or 'delta', got {emit!r}")
-    spark = catalog.sparkSession
-    parallelism = spark.sparkContext.defaultParallelism
 
     labels_old = catalog.select("rid", "entity_id")
     # guarded_unhex raises on malformed catalog ids instead of silently
@@ -642,31 +635,12 @@ def resolve_entities_incremental(
 
     if state is not None:
         # Delta-proportional path: only the delta is normalized/persisted;
-        # the catalog contributes its PERSISTED narrow columns. The delta's
-        # derived-column set follows the STATE's schema, not cfg: a catalog
-        # persisted with int32_prefilter carries th32, and the norm-chain
-        # union below requires the delta to carry it too (without this the
-        # unionByName on state.norm.columns raises — ADVICE r04).
-        norm_new = (
-            with_token_hashes(norm_new)
-            .withColumn("rid_b", F.unhex("rid"))
+        # the catalog contributes its PERSISTED narrow columns.
+        norm_new = with_token_hashes(norm_new).withColumn(
+            "rid_b", F.unhex("rid")
         )
-        if "th32" in state.norm.columns:
-            from codingchallenge_spark.functions.normalize import (
-                with_token_hashes32,
-            )
-
-            norm_new = with_token_hashes32(norm_new)
-        if norm_new.rdd.getNumPartitions() < parallelism:
-            norm_new = norm_new.repartition(parallelism)
-        norm_new = norm_new.persist()
-        work_new = norm_new.select(
-            F.col("rid_b").alias("rid"),
-            "name_norm",
-            "tokens",
-            "th",
-            *(["th32"] if "th32" in norm_new.columns else []),
-        )
+        norm_new = partition_floor(norm_new).persist()
+        work_new = work_projection(norm_new)
         # The delta-proportional intermediates are persisted: `pairs` feeds
         # the touched-rid derivation AND both attribute fan-in sides, and
         # `delta_edges` feeds the touched-entity derivation AND CC — left
@@ -705,25 +679,10 @@ def resolve_entities_incremental(
             norm_new.withColumn("is_new", F.lit(True))
         )
     )
-    if cfg.int32_prefilter:
-        from codingchallenge_spark.functions.normalize import (
-            with_token_hashes32,
-        )
-
-        norm = with_token_hashes32(norm)
     norm = norm.withColumn("rid_b", F.unhex("rid"))
     # Same partition floor + persist-once rationale as plans.matcher.
-    if norm.rdd.getNumPartitions() < parallelism:
-        norm = norm.repartition(parallelism)
-    norm = norm.persist()
-    work = norm.select(
-        F.col("rid_b").alias("rid"),
-        "name_norm",
-        "tokens",
-        "th",
-        "is_new",
-        *(["th32"] if cfg.int32_prefilter else []),
-    )
+    norm = partition_floor(norm).persist()
+    work = work_projection(norm, "is_new")
 
     pairs = incremental_candidate_pairs(work, cfg, sn=sn)
     scored = score_pairs_fused(

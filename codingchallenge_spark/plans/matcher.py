@@ -17,8 +17,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from codingchallenge_spark.functions.normalize import (
-    normalize_records,
-    with_token_hashes,
+    normalize_for_matching,
+    work_projection,
 )
 from codingchallenge_spark.operators.blocking import (
     DEFAULT_SN_WINDOW,
@@ -55,17 +55,6 @@ class MatcherConfig:
     # coincidence pairs that dominate token-blocking output at scale; set 1
     # for exhaustive (every co-blocked pair scored) semantics.
     min_token_overlap: int = 2
-    # Opt-in half-width (31-bit) token-hash prefilter crossing
-    # (normalize.with_token_hashes32 + the th32 branch in
-    # operators.scoring.fused_score_from_attrs). Measured-REJECTED for this
-    # box's production default: 0.77×/0.64× at 8/32 cores in an isolated-JVM
-    # A/B (scripts/ab_int32_prefilter.py; BENCH/BASELINE.md) — exactness
-    # forces both widths through the fan-in join, which dominates on a
-    # DRAM-bound host, and the join *shuffles* those bytes on a cluster too.
-    # Kept as a knob because the result is EXACT (provable lower bound,
-    # tested equal) and a deployment whose bottleneck is the Python crossing
-    # rather than the join may measure differently.
-    int32_prefilter: bool = False
 
 
 def candidate_pairs(records_norm: DataFrame, cfg: MatcherConfig) -> DataFrame:
@@ -95,7 +84,7 @@ def emit_entities(norm: DataFrame, labels: DataFrame) -> DataFrame:
     used to produce, kept stable for downstream consumers.
     """
     out = (
-        norm.drop("name_norm", "tokens", "th", "th32")
+        norm.drop("name_norm", "tokens", "th")
         .join(labels.withColumnRenamed("rid", "rid_b"), "rid_b")
         .drop("rid_b")
         .withColumn("entity_id", F.lower(F.hex("entity_id")))
@@ -108,14 +97,6 @@ def resolve_entities(
 ) -> DataFrame:
     """Full in-memory plan: records → records + content_sha + entity_id."""
     cfg = cfg or MatcherConfig()
-    # Partition floor: a small input parquet scans into few partitions, and
-    # since every downstream stage that reads the persisted norm inherits
-    # them, that would cap the whole job's parallelism below the cluster's.
-    # At production scale the input has far more splits than cores and this
-    # is a no-op.
-    parallelism = records.sparkSession.sparkContext.defaultParallelism
-    if records.rdd.getNumPartitions() < parallelism:
-        records = records.repartition(parallelism)
     # norm feeds two blocking passes, two scoring joins, the CC node set and
     # the final emit — pin it once instead of re-scanning + re-tokenizing
     # the input per consumer. (The checkpointed pipeline gets the same effect
@@ -129,25 +110,8 @@ def resolve_entities(
     # fault-tolerance tradeoff is the one this plan already makes for the SN
     # base and every CC round (see operators/blocking.py's documented
     # replicated-persist alternative for flaky clusters).
-    # ``rid_b`` = unhex(rid): every blocking/scoring/CC exchange keys on
-    # record ids, and a 32-byte binary halves that key's shuffle bytes vs the
-    # 64-char hex string — the dominant cost of the biggest intermediates
-    # (the exploded token relation and the candidate-pair stream) at
-    # 10^12-file scale. Exact, not approximate: rid is lowercase sha256-hex
-    # BY CONSTRUCTION (normalize.record_id), and fixed-width binary compares
-    # bytewise in the same order as its hex form — so least/greatest
-    # canonicalization, SN sort order, CC minima and the final min-label all
-    # pick identical records; lower(hex(·)) restores the exact string at emit.
-    norm = with_token_hashes(normalize_records(records))
-    if cfg.int32_prefilter:
-        from codingchallenge_spark.functions.normalize import with_token_hashes32
-
-        norm = with_token_hashes32(norm)
-    norm = norm.withColumn("rid_b", F.unhex("rid")).localCheckpoint(eager=False)
-    work_cols = ["name_norm", "tokens", "th"] + (
-        ["th32"] if cfg.int32_prefilter else []
-    )
-    work = norm.select(F.col("rid_b").alias("rid"), *work_cols)
+    norm = normalize_for_matching(records).localCheckpoint(eager=False)
+    work = work_projection(norm)
     pairs = candidate_pairs(work, cfg)
     scored = score_pairs_fused(
         pairs,

@@ -32,8 +32,10 @@ from pyspark.sql import functions as F
 
 from codingchallenge_spark.functions.normalize import (
     guarded_unhex,
+    normalize_for_matching,
     normalize_records,
     with_token_hashes,
+    work_projection,
 )
 from codingchallenge_spark.operators.blocking import (
     sorted_neighborhood,
@@ -239,32 +241,11 @@ def run_pipeline(
     stage = runner.stage
     executed, skipped, fps = runner.executed, runner.skipped, runner.fps
 
-    def build_normalize() -> DataFrame:
-        recs = records
-        # Partition floor (see plans.matcher): small scans must not cap the
-        # whole run's parallelism. No-op at production scale.
-        parallelism = spark.sparkContext.defaultParallelism
-        if recs.rdd.getNumPartitions() < parallelism:
-            recs = recs.repartition(parallelism)
-        # th (token-hash fingerprints) is interpreted-eval — materialize it
-        # in the stage parquet so scoring never recomputes it per execution.
-        # rid_b = unhex(rid): the blocking/scoring/cc stages shuffle on
-        # record ids constantly, and the 32-byte binary form halves that
-        # key's bytes vs the 64-char hex string (exact — see plans.matcher).
-        n = with_token_hashes(normalize_records(recs))
-        if cfg.int32_prefilter:
-            from codingchallenge_spark.functions.normalize import (
-                with_token_hashes32,
-            )
-
-            n = with_token_hashes32(n)
-        return n.withColumn("rid_b", F.unhex("rid"))
-
-    norm = stage("normalize", [], build_normalize)
-    narrow_cols = ["name_norm", "tokens", "th"] + (
-        ["th32"] if cfg.int32_prefilter else []
-    )
-    norm_narrow = norm.select(F.col("rid_b").alias("rid"), *narrow_cols)
+    # th (token-hash fingerprints) is interpreted-eval — materialized in the
+    # stage parquet so scoring never recomputes it per execution; rid_b
+    # halves the record-id shuffle bytes (normalize.normalize_for_matching).
+    norm = stage("normalize", [], lambda: normalize_for_matching(records))
+    norm_narrow = work_projection(norm)
 
     tok_pairs = stage(
         "block_token",
@@ -287,8 +268,9 @@ def run_pipeline(
         ),
     )
     # The scored stage persists only pairs whose score can reach the
-    # threshold (exact upper-bound prune, see score_pairs_pruned) — the
-    # pruned pairs are provably non-edges, so resume semantics are unchanged.
+    # threshold (exact upper-bound prune, see
+    # scoring.fused_score_from_attrs) — the pruned pairs are provably
+    # non-edges, so resume semantics are unchanged.
     scored = stage(
         "score",
         ["pairs", "normalize"],
@@ -462,26 +444,13 @@ def run_delta_pipeline(
                 "catalog entities relation to derive one in-run"
             )
 
-        def build_catalog_norm() -> DataFrame:
-            recs = catalog.select(*normalize_input_columns())
-            parallelism = spark.sparkContext.defaultParallelism
-            if recs.rdd.getNumPartitions() < parallelism:
-                recs = recs.repartition(parallelism)
-            from codingchallenge_spark.functions.normalize import (
-                normalize_records,
-                with_token_hashes,
-            )
-
-            n = with_token_hashes(normalize_records(recs))
-            if cfg.int32_prefilter:
-                from codingchallenge_spark.functions.normalize import (
-                    with_token_hashes32,
-                )
-
-                n = with_token_hashes32(n)
-            return n.withColumn("rid_b", F.unhex("rid"))
-
-        cat_norm = stage("catalog_norm", [], build_catalog_norm)
+        cat_norm = stage(
+            "catalog_norm",
+            [],
+            lambda: normalize_for_matching(
+                catalog.select(*normalize_input_columns())
+            ),
+        )
         tok_df_cat = stage(
             "token_df_cat",
             ["catalog_norm"],
@@ -521,10 +490,6 @@ def run_delta_pipeline(
         labels_old_b = labels_cat  # downstream reads the persisted stage
 
     def build_normalize_delta() -> DataFrame:
-        from codingchallenge_spark.functions.normalize import (
-            normalize_records,
-            with_token_hashes,
-        )
         from codingchallenge_spark.sources.records import INPUT_COLUMNS
 
         nd = (
@@ -538,26 +503,10 @@ def run_delta_pipeline(
                 "left_anti",
             )
         )
-        nd = with_token_hashes(nd)
-        # Delta schema follows the STATE's: a catalog persisted with
-        # int32_prefilter carries th32 and the norm-chain union requires the
-        # delta to carry it too (ADVICE r04 — cfg alone must not decide).
-        if "th32" in state.norm.columns:
-            from codingchallenge_spark.functions.normalize import (
-                with_token_hashes32,
-            )
-
-            nd = with_token_hashes32(nd)
-        return nd.withColumn("rid_b", F.unhex("rid"))
+        return with_token_hashes(nd).withColumn("rid_b", F.unhex("rid"))
 
     norm_delta = stage("normalize_delta", [], build_normalize_delta)
-    work_new = norm_delta.select(
-        F.col("rid_b").alias("rid"),
-        "name_norm",
-        "tokens",
-        "th",
-        *(["th32"] if "th32" in norm_delta.columns else []),
-    )
+    work_new = work_projection(norm_delta)
 
     pairs = stage(
         "pairs_delta",

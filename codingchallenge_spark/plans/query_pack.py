@@ -20,7 +20,11 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from codingchallenge_spark.functions.normalize import STOPWORDS, name_norm
+from codingchallenge_spark.functions.normalize import (
+    STOPWORDS,
+    name_norm,
+    partition_floor,
+)
 from codingchallenge_spark.functions.similarity import (
     jaro_winkler_udf,
     token_jaccard,
@@ -99,7 +103,7 @@ def _t_par(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     CONDITIONAL on the scan's EFFECTIVE parallelism — min(splits, total row
     groups) — being below the session's parallelism, so at production scale
     (many files / many row groups) it is a no-op: the same guard
-    plans.matcher.resolve_entities has always used for the flagship, with
+    (functions.normalize.partition_floor) the flagship uses, with
     the row-group bound added because split count alone over-reports (byte
     ranges that contain no row-group start scan nothing). Only applied to
     queries whose post-scan per-row work dominates the scan; scan-bound
@@ -120,12 +124,9 @@ def _t_par(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # session's — the floor applies whatever the split count is, so
             # the (costlier) .rdd split probe is skipped.
             return df.repartition(parallelism)
-        effective = min(df.rdd.getNumPartitions(), row_groups)
-    else:
-        effective = df.rdd.getNumPartitions()
-    if effective < parallelism:
-        df = df.repartition(parallelism)
-    return df
+    # Row groups (when known) cover parallelism here, so the split count
+    # alone decides: min(splits, row groups) < parallelism ⇔ splits do.
+    return partition_floor(df)
 
 
 # ---------------------------------------------------------------------------

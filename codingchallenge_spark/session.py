@@ -99,6 +99,18 @@ def _reap_stale_local_dirs(shm_root: Path, max_age_s: float = 86400) -> None:
             pass
 
 
+def default_driver_memory() -> str:
+    """Local-mode driver heap: half of this host's physical RAM, in MB.
+
+    The heap is a ceiling the JVM grows into, not a reservation, so a fixed
+    size larger than the host lets a busy session grow past physical memory
+    until the kernel kills it. Half leaves room for the Python workers, the
+    JVM's off-heap use and a tmpfs shuffle dir.
+    """
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{ram // 2 // (1 << 20)}m"
+
+
 def build_session(
     app_name: str = "codingchallenge-spark",
     master: str | None = None,
@@ -121,7 +133,7 @@ def build_session(
         # On a cluster spark-submit owns driver/executor memory; never set
         # it from library code there (master=None skips this branch).
         conf["spark.driver.memory"] = os.environ.get(
-            "CCSPARK_DRIVER_MEMORY", "48g"
+            "CCSPARK_DRIVER_MEMORY", default_driver_memory()
         )
         # Shuffle/spill dir: tmpfs when available. 32 concurrent shuffle
         # writers through the page cache onto a virtio disk serialize the

@@ -233,3 +233,48 @@ def test_compact_state_builds_and_rebuckets_tok_index(
         for r in st2.tok_postings.select("tok", "rid").collect()
     )
     assert a == b
+
+
+def test_legacy_th32_catalog_takes_a_delta(spark, corpus3, catalog_run, tmp_path):
+    """A catalog whose persisted norm carries the retired ``th32`` column
+    (written while the engine still had its int32-prefilter opt-in) loads,
+    takes a delta and compacts: both norm reads drop the column, so the
+    delta's norm still unions with the catalog's by name."""
+    import shutil
+
+    from pyspark.sql import functions as F
+
+    legacy = str(tmp_path / "legacy32")
+    shutil.copytree(catalog_run, legacy)
+    mpath = Path(legacy) / "state.json"
+    manifest = json.loads(mpath.read_text())
+    norm32 = str(tmp_path / "norm32")
+    spark.read.parquet(*manifest["norm_paths"]).withColumn(
+        "th32",
+        F.array_sort(
+            F.array_distinct(
+                F.transform(
+                    "th", lambda x: x.bitwiseAND(F.lit(0x7FFFFFFF)).cast("int")
+                )
+            )
+        ),
+    ).write.parquet(norm32)
+    assert "th32" in spark.read.parquet(norm32).columns
+    manifest["norm_paths"] = [norm32]
+    mpath.write_text(json.dumps(manifest))
+
+    da = corpus3[1]
+    ref = run_delta_pipeline(
+        spark, None, da, str(tmp_path / "ref"), CFG, input_id="l32",
+        state=cstate.load_catalog_state(spark, catalog_run),
+    )
+    got = run_delta_pipeline(
+        spark, None, da, str(tmp_path / "d"), CFG, input_id="l32",
+        state=cstate.load_catalog_state(spark, legacy),
+    )
+    assert "th32" not in got.entities.columns
+    assert _labels(got.entities) == _labels(ref.entities)
+
+    compacted = str(tmp_path / "c")
+    cstate.compact_state(spark, legacy, compacted, num_buckets=8)
+    assert "th32" not in cstate.load_catalog_state(spark, compacted).norm.columns

@@ -19,8 +19,10 @@ from codingchallenge_spark.functions.normalize import (
     with_token_hashes,
 )
 from codingchallenge_spark.operators.scoring import (
+    attach_pair_attrs,
+    edges_from_scores,
+    score_pairs,
     score_pairs_fused,
-    score_pairs_pruned,
 )
 from codingchallenge_spark.plans.matcher import MatcherConfig, candidate_pairs
 from codingchallenge_spark.plans.query_pack import queries
@@ -100,10 +102,7 @@ def test_scoring_python_crossings_bounded(spark, tiny_records):
     """The production (fused) scoring plan has exactly TWO narrow
     ArrowEvalPython crossings — jaccard over (th1, th2), then jw/lev over
     survivor names — and NO mapInPandas: ArrowEvalPython ships only the UDF
-    argument columns, so rids/jaccard never enter Python. The mapInPandas
-    variant (score_pairs_fused_arrow) must stay at exactly one crossing."""
-    from codingchallenge_spark.operators.scoring import score_pairs_fused_arrow
-
+    argument columns, so rids/jaccard never enter Python."""
     cfg = MatcherConfig()
     norm = with_token_hashes(normalize_records(tiny_records)).select(
         "rid", "name_norm", "tokens", "th"
@@ -119,59 +118,31 @@ def test_scoring_python_crossings_bounded(spark, tiny_records):
     assert "MapInPandas" not in plan, plan
     assert "BatchEvalPython" not in plan  # no row-at-a-time Python anywhere
 
-    arrow = score_pairs_fused_arrow(pairs, norm, weights=cfg.weights,
-                                    threshold=cfg.threshold)
-    plan2 = _plan(arrow)
-    assert len(re.findall(r"\(\d+\) MapInPandas", plan2)) == 1, plan2
-    assert "BatchEvalPython" not in plan2
 
-    pruned = score_pairs_pruned(pairs, norm, weights=cfg.weights,
-                                threshold=cfg.threshold)
-    plan3 = _plan(pruned)
-    assert len(re.findall(r"\(\d+\) ArrowEvalPython", plan3)) >= 2, plan3
-    assert "BatchEvalPython" not in plan3
-
-    # int32-prefilter variant: still exactly two crossings — the half-width
-    # jac32 prefilter, then ONE survivor node evaluating exact jaccard + jw
-    # + lev as adjacent scalar UDFs (th64 only ever crosses for survivors).
-    from codingchallenge_spark.functions.normalize import with_token_hashes32
-
-    norm32 = with_token_hashes32(
-        with_token_hashes(normalize_records(tiny_records))
-    ).select("rid", "name_norm", "tokens", "th", "th32")
-    fused32 = score_pairs_fused(pairs, norm32, weights=cfg.weights,
-                                threshold=cfg.threshold)
-    plan4 = _plan(fused32)
-    assert len(re.findall(r"\(\d+\) ArrowEvalPython", plan4)) == 2, plan4
-    assert "MapInPandas" not in plan4 and "BatchEvalPython" not in plan4
-
-
-def test_fused_equals_pruned(spark, tiny_records):
-    """Exactness across all three scorer plans: the production narrow-crossing
-    scorer, the mapInPandas fused kernel, and the two-crossing pruned scorer
-    yield the identical (rid1, rid2, jw, lev, jaccard, score) multiset."""
-    from codingchallenge_spark.operators.scoring import score_pairs_fused_arrow
-
+def test_production_scorer_equals_reference(spark, tiny_records):
+    """The production scorer (exact bound prune + hashed jaccard) against
+    the unpruned reference (score_pairs over the token strings): the same
+    edge set, and every row production emits equals the reference row of
+    the same pair."""
     cfg = MatcherConfig()
     norm = with_token_hashes(normalize_records(tiny_records)).persist()
     pairs = candidate_pairs(norm, cfg).persist()
-    a = score_pairs_pruned(pairs, norm, weights=cfg.weights,
-                           threshold=cfg.threshold)
-    b = score_pairs_fused(pairs, norm, weights=cfg.weights,
-                          threshold=cfg.threshold)
-    c = score_pairs_fused_arrow(pairs, norm, weights=cfg.weights,
-                                threshold=cfg.threshold)
-    from codingchallenge_spark.functions.normalize import with_token_hashes32
+    prod = score_pairs_fused(pairs, norm, weights=cfg.weights,
+                             threshold=cfg.threshold)
+    ref = score_pairs(attach_pair_attrs(pairs, norm), weights=cfg.weights,
+                      threshold=cfg.threshold)
+    cols = ["rid1", "rid2", "jw", "lev", "jaccard", "score"]
+    prod_rows = [tuple(r) for r in prod.select(*cols).collect()]
+    ref_rows = {(r.rid1, r.rid2): tuple(r) for r in ref.select(*cols).collect()}
 
-    d = score_pairs_fused(pairs, with_token_hashes32(norm),
-                          weights=cfg.weights, threshold=cfg.threshold)
-    ra = sorted(map(tuple, a.collect()))
-    rb = sorted(map(tuple, b.collect()))
-    rc = sorted(map(tuple, c.collect()))
-    rd = sorted(map(tuple, d.collect()))
-    assert ra == rb
-    assert ra == rc
-    assert ra == rd  # int32 prefilter is exact: survivors recompute on th64
+    def edges(df):
+        return set(map(tuple, edges_from_scores(df, cfg.threshold).collect()))
+
+    prod_edges = edges(prod)
+    assert prod_edges and prod_edges == edges(ref)
+    assert len({r[:2] for r in prod_rows}) == len(prod_rows)
+    for row in prod_rows:
+        assert row == ref_rows[row[:2]]
     norm.unpersist()
     pairs.unpersist()
 
