@@ -77,6 +77,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from codingchallenge_spark.sources import checkpoint as ckpt
+
 STATE_MANIFEST = "state.json"
 # v2: sn_index stored with bucket-LOCAL positions + manifest sn_chain
 # (round 5 — bucket-local maintenance). v1 run_dirs (global-pos index, no
@@ -458,7 +460,7 @@ def _read_sn_chain(spark: SparkSession, sn_chain: list[dict]) -> DataFrame:
     parts: list[DataFrame] = []
     shadowed: set[int] = set()
     for entry in reversed(sn_chain):
-        df = spark.read.parquet(entry["path"])
+        df = ckpt.read_parquet(spark, entry["path"])
         if shadowed:
             df = df.filter(~F.col("bucket").isin(sorted(shadowed)))
         parts.append(df)
@@ -485,11 +487,11 @@ def _read_labels_chain(spark: SparkSession, labels_chain: list[str]) -> DataFram
     out: DataFrame | None = None
     newer_rids: DataFrame | None = None
     for path in reversed(labels_chain):
-        df = spark.read.parquet(path).select("rid", "entity_id")
+        df = ckpt.read_parquet(spark, path).select("rid", "entity_id")
         if newer_rids is not None:
             df = df.join(newer_rids, "rid", "left_anti")
         out = df if out is None else out.unionByName(df)
-        rids = spark.read.parquet(path).select("rid")
+        rids = ckpt.read_parquet(spark, path).select("rid")
         newer_rids = (
             rids if newer_rids is None else newer_rids.unionByName(rids)
         )
@@ -503,7 +505,7 @@ def _read_norm(spark: SparkSession, *paths: str) -> DataFrame:
     int32 prefilter opt-in carries a ``th32`` column; it is dropped here, so
     a legacy chain unions with current delta norms (unionByName on
     ``state.norm.columns``)."""
-    return spark.read.parquet(*paths).drop("th32")
+    return ckpt.read_parquet(spark, *paths).drop("th32")
 
 
 def load_catalog_state(spark: SparkSession, run_dir: str) -> CatalogState:
@@ -520,14 +522,14 @@ def load_catalog_state(spark: SparkSession, run_dir: str) -> CatalogState:
     sn_chain = manifest["sn_chain"]
     labels_chain = manifest["labels_chain"]
     stored = _read_sn_chain(spark, sn_chain)
-    bounds = spark.read.parquet(str(Path(run_dir) / "sn_bounds"))
+    bounds = ckpt.read_parquet(spark, str(Path(run_dir) / "sn_bounds"))
     tok_chain = manifest.get("tok_chain")
     tok_postings = (
-        spark.read.parquet(*tok_chain) if tok_chain else None
+        ckpt.read_parquet(spark, *tok_chain) if tok_chain else None
     )  # append-only overlay: plain union, no shadowing
     return CatalogState(
         norm=_read_norm(spark, *norm_paths),
-        token_df=spark.read.parquet(str(Path(run_dir) / "token_df")),
+        token_df=ckpt.read_parquet(spark, str(Path(run_dir) / "token_df")),
         sn_index=resolve_sn_index(stored, bounds),
         sn_bounds=bounds,
         sn_stored=stored,
@@ -558,6 +560,9 @@ def compact_state(
     merges, the same role Iceberg's rewrite_data_files / an LSM major merge
     plays), fresh bounds derived from the persisted index, the maintained
     token_df copied through, and the labels chain resolved to one relation.
+    The relations depend only on the loaded state, so they are written
+    concurrently (sources.checkpoint.run_parallel); the manifest is written
+    after all of them, so a failed compaction leaves no state.
     Everything older becomes unreferenced — a streaming deployment deletes
     the superseded batch run_dirs afterwards (streaming.ingest does).
 
@@ -570,20 +575,25 @@ def compact_state(
     if out.exists() and any(out.iterdir()):
         raise ValueError(f"compact_state target {out_dir!r} is not empty")
     out.mkdir(parents=True, exist_ok=True)
+    # Every relation goes through the stage writer, so its marker records
+    # the schema the next load_catalog_state reads with (no inference job).
+    fingerprint = f"compact_state:{run_dir}"
 
-    norm_path = str(out / "normalize")
-    state.norm.write.parquet(norm_path)
-    normp = _read_norm(spark, norm_path)
+    def write(stage: str, df: DataFrame) -> None:
+        ckpt.write_stage(df, str(out), stage, fingerprint)
 
-    stored, _ = build_sn_index(normp, num_buckets=num_buckets)
-    idx_path = str(out / "sn_index")
-    stored.write.parquet(idx_path)
-    idxp = spark.read.parquet(idx_path)
-    bounds_from_index(idxp).write.parquet(str(out / "sn_bounds"))
+    def write_sn() -> None:
+        stored, _ = build_sn_index(state.norm, num_buckets=num_buckets)
+        write("sn_index", stored)
+        idxp = ckpt.load_stage(spark, str(out), "sn_index")
+        write("sn_bounds", bounds_from_index(idxp))
 
-    state.token_df.write.parquet(str(out / "token_df"))
-    labels_path = str(out / "labels")
-    state.labels.write.parquet(labels_path)
+    branches = [
+        lambda: write("normalize", state.norm),
+        write_sn,
+        lambda: write("token_df", state.token_df),
+        lambda: write("labels", state.labels),
+    ]
 
     # Token-postings side (ADVICE r05): compaction is the ONE event that
     # already pays a corpus-proportional pass, so it is also where (a) a
@@ -603,25 +613,25 @@ def compact_state(
 
         out_tok_buckets = MatcherConfig().tok_buckets
     if out_tok_buckets is not None:
-        tok_path = str(out / "tok_index")
         if (
             state.tok_postings is not None
             and out_tok_buckets == state.tok_buckets
         ):
-            (
-                state.tok_postings.repartitionByRange(
-                    spark.sparkContext.defaultParallelism, "tbucket", "tok"
-                ).write.parquet(tok_path)
+            postings = state.tok_postings.repartitionByRange(
+                spark.sparkContext.defaultParallelism, "tbucket", "tok"
             )
         else:
-            build_tok_postings(normp, out_tok_buckets).write.parquet(tok_path)
-        tok_chain = [tok_path]
+            postings = build_tok_postings(state.norm, out_tok_buckets)
+        branches.append(lambda: write("tok_index", postings))
+        tok_chain = [ckpt.stage_path(str(out), "tok_index")]
 
+    # The relations are independent of each other: written concurrently.
+    ckpt.run_parallel(spark, *branches)
     write_state_manifest(
         str(out),
-        [norm_path],
-        sn_chain=[{"path": idx_path, "buckets": None}],
-        labels_chain=[labels_path],
+        [ckpt.stage_path(str(out), "normalize")],
+        sn_chain=[{"path": ckpt.stage_path(str(out), "sn_index"), "buckets": None}],
+        labels_chain=[ckpt.stage_path(str(out), "labels")],
         emit="full",
         tok_chain=tok_chain,
         tok_buckets=out_tok_buckets,

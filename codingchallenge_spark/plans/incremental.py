@@ -87,6 +87,7 @@ from codingchallenge_spark.operators.scoring import (
 from codingchallenge_spark.plans import catalog_state as cstate
 from codingchallenge_spark.plans.catalog_state import CatalogState, build_token_df
 from codingchallenge_spark.plans.matcher import MatcherConfig, emit_entities
+from codingchallenge_spark.sources.checkpoint import run_parallel
 from codingchallenge_spark.sources.records import INPUT_COLUMNS
 
 
@@ -484,16 +485,26 @@ def incremental_candidate_pairs(
     recall path for name-similar-but-token-poor records folds into the
     periodic full re-resolution instead."""
     if state is not None:
-        tok = incremental_token_pairs_state(
-            state, work_new, df_cap=cfg.token_df_cap
-        )
         if not sn:
+            tok = incremental_token_pairs_state(
+                state, work_new, df_cap=cfg.token_df_cap
+            )
             empty = tok.filter(F.lit(False))
             return union_candidates_meta(
                 tok, empty, min_token_overlap=cfg.min_token_overlap
             )
-        sn_new = delta_sn_pairs(
-            state, work_new.select("rid", "name_norm"), window=cfg.sn_window
+        # Building either pass runs driver-side collects (the token pass's
+        # hash-bucket list, the SN pass's bounds table); the two are
+        # independent, so their jobs overlap.
+        tok, sn_new = run_parallel(
+            work_new.sparkSession,
+            lambda: incremental_token_pairs_state(
+                state, work_new, df_cap=cfg.token_df_cap
+            ),
+            lambda: delta_sn_pairs(
+                state, work_new.select("rid", "name_norm"),
+                window=cfg.sn_window,
+            ),
         )
         return union_candidates_meta(
             tok, sn_new, min_token_overlap=cfg.min_token_overlap
@@ -570,9 +581,14 @@ def _touched_component_labels(
         labels_old_b.join(ends, "rid").select("entity_id").distinct()
     )
     # members is delta-proportional but feeds three consumers (star edges,
-    # the CC node set, the untouched-remainder anti-join) — persisted so the
-    # catalog label scan behind it runs once, not per consumer.
-    members = labels_old_b.join(touched_ents, "entity_id", "left_semi").persist()
+    # the CC node set, the untouched-remainder anti-join) — pinned so the
+    # catalog label scan behind it runs once, not per consumer. A lazy
+    # localCheckpoint, not persist(): nothing in the session's cache manager
+    # outlives the relation, so a long-lived stream that comes through here
+    # once per micro-batch does not accumulate cached relations.
+    members = labels_old_b.join(
+        touched_ents, "entity_id", "left_semi"
+    ).localCheckpoint(eager=False)
     star = members.filter(F.col("rid") != F.col("entity_id")).select(
         F.col("entity_id").alias("src"), F.col("rid").alias("dst")
     )
@@ -639,18 +655,20 @@ def resolve_entities_incremental(
         norm_new = with_token_hashes(norm_new).withColumn(
             "rid_b", F.unhex("rid")
         )
-        norm_new = partition_floor(norm_new).persist()
+        norm_new = partition_floor(norm_new).localCheckpoint(eager=False)
         work_new = work_projection(norm_new)
-        # The delta-proportional intermediates are persisted: `pairs` feeds
-        # the touched-rid derivation AND both attribute fan-in sides, and
-        # `delta_edges` feeds the touched-entity derivation AND CC — left
-        # lazy, each consumer would re-run the whole blocking plan (with its
-        # catalog parquet scans and broadcast sub-jobs) per evaluation. Both
-        # relations are delta-sized, so the persist is cheap by construction.
-        # (The staged pipeline gets the same effect from its stage sinks.)
+        # The delta-proportional intermediates are pinned (lazy
+        # localCheckpoint, like every pin here — no cache-manager entry
+        # outlives them): `pairs` feeds the touched-rid derivation AND both
+        # attribute fan-in sides, and `delta_edges` feeds the touched-entity
+        # derivation AND CC — left lazy, each consumer would re-run the whole
+        # blocking plan (with its catalog parquet scans and broadcast
+        # sub-jobs) per evaluation. Both relations are delta-sized, so the
+        # pin is cheap by construction. (The staged pipeline gets the same
+        # effect from its stage sinks.)
         pairs = incremental_candidate_pairs(
             None, cfg, sn=sn, state=state, work_new=work_new
-        ).persist()
+        ).localCheckpoint(eager=False)
         attrs = delta_attrs(state, work_new, pairs)
         scored = score_pairs_fused(
             pairs,
@@ -659,7 +677,9 @@ def resolve_entities_incremental(
             threshold=cfg.threshold,
             salt_buckets=cfg.salt_buckets,
         )
-        delta_edges = edges_from_scores(scored, threshold=cfg.threshold).persist()
+        delta_edges = edges_from_scores(
+            scored, threshold=cfg.threshold
+        ).localCheckpoint(eager=False)
         labels_touched, labels_rest = _touched_component_labels(
             delta_edges,
             labels_old_b,
@@ -680,8 +700,8 @@ def resolve_entities_incremental(
         )
     )
     norm = norm.withColumn("rid_b", F.unhex("rid"))
-    # Same partition floor + persist-once rationale as plans.matcher.
-    norm = partition_floor(norm).persist()
+    # Same partition floor + pin-once rationale as plans.matcher.
+    norm = partition_floor(norm).localCheckpoint(eager=False)
     work = work_projection(norm, "is_new")
 
     pairs = incremental_candidate_pairs(work, cfg, sn=sn)
@@ -692,10 +712,12 @@ def resolve_entities_incremental(
         threshold=cfg.threshold,
         salt_buckets=cfg.salt_buckets,
     )
-    # Persisted for the same reason as the state branch: the touched-entity
+    # Pinned for the same reason as the state branch: the touched-entity
     # CC consumes the edge relation several times (endpoint derivation +
     # the CC seed), and it is delta-sized.
-    delta_edges = edges_from_scores(scored, threshold=cfg.threshold).persist()
+    delta_edges = edges_from_scores(
+        scored, threshold=cfg.threshold
+    ).localCheckpoint(eager=False)
 
     # CC over the touched components only — the catalog's untouched
     # entities keep their labels verbatim (same output, delta-proportional
@@ -710,7 +732,7 @@ def resolve_entities_incremental(
     norm_out = norm.drop("is_new")
     if emit == "delta":
         return emit_entities(norm_out, labels_touched)
-    # norm stays persisted (matcher convention): the returned plan is lazy
+    # norm stays pinned (matcher convention): the returned plan is lazy
     # and re-reads it through blocking, scoring, CC nodes and the emit join.
     return emit_entities(
         norm_out, labels_touched.unionByName(labels_rest)

@@ -2,12 +2,21 @@
 
 Spec: BASELINE.json:6/14 — the pipeline "ships as spark-submit --py-files
 modules" and "interrupted runs resume at the blocking, scoring, or clustering
-stage". Stage graph:
+stage". Stage graph (``║`` marks branches that run concurrently,
+sources.checkpoint.run_parallel):
 
-    normalize → block_token → block_sn → pairs → score → edges → cc → entities
+    normalize ─┬→ ┌ block_token ┐
+               │  ║             ├→ pairs → score → edges → cc → entities
+               │  └ block_sn ───┘
+               ║
+               └→ token_df, sn_index → sn_bounds, tok_index  (catalog state)
+    → state.json, once both branches are written
 
 Every stage materializes to ``run_dir/<stage>/`` with a fingerprinted
-``_STAGE_DONE`` marker (sources/checkpoint.py). On --resume, stages whose
+``_STAGE_DONE`` marker (sources/checkpoint.py). The driver mostly waits on
+Spark jobs, so stages that do not depend on each other are written from
+separate threads; ``PipelineRun.executed``/``skipped`` still list stages in
+the declared order (``STAGES``). On --resume, stages whose
 fingerprint matches are loaded, not recomputed; a fingerprint is the sha256
 of (config json ⊕ input id ⊕ upstream fingerprint), so changing any upstream
 config invalidates exactly the downstream suffix. The CC stage additionally
@@ -74,6 +83,21 @@ DELTA_STAGES = [
     "edges_delta",
     "cc_delta",
     "entities_delta",
+]
+
+# The declared order of every stage a delta run can write: the in-run
+# catalog derivation, the delta chain, then the state maintenance.
+_DELTA_ORDER = [
+    "catalog_norm",
+    "token_df_cat",
+    "sn_index_cat",
+    "tok_index_cat",
+    "labels_cat",
+    *DELTA_STAGES,
+    "token_df",
+    "sn_index",
+    "sn_bounds",
+    "tok_index",
 ]
 
 
@@ -150,7 +174,7 @@ def current_entities(spark: SparkSession, run_dir: str) -> DataFrame:
         if not full_sink_ok:
             state = cstate.load_catalog_state(spark, run_dir)
             return emit_entities(state.norm, state.labels)
-    return spark.read.parquet(catalog_entities_path(run_dir))
+    return ckpt.read_parquet(spark, catalog_entities_path(run_dir))
 
 
 # Bump whenever any stage's OUTPUT SCHEMA or on-disk semantics change: the
@@ -194,7 +218,9 @@ def _latest_cc_iteration(iter_dir: str) -> tuple[int, str | None]:
 
 class _StageRunner:
     """The fingerprinted execute-or-skip protocol shared by the batch and
-    delta pipelines (one implementation, two stage graphs)."""
+    delta pipelines (one implementation, two stage graphs). ``stage`` may be
+    called from concurrent branches: ``executed``/``skipped`` are reported
+    in ``order`` (the graph's declared stage order), not completion order."""
 
     def __init__(
         self,
@@ -203,15 +229,25 @@ class _StageRunner:
         cfg: MatcherConfig,
         input_id: str,
         resume: bool,
+        order: list[str],
     ):
         self.spark = spark
         self.run_dir = run_dir
         self.cfg = cfg
         self.input_id = input_id
         self.resume = resume
-        self.executed: list[str] = []
-        self.skipped: list[str] = []
+        self.order = order
+        self._executed: list[str] = []
+        self._skipped: list[str] = []
         self.fps: dict[str, str] = {}
+
+    @property
+    def executed(self) -> list[str]:
+        return sorted(self._executed, key=self.order.index)
+
+    @property
+    def skipped(self) -> list[str]:
+        return sorted(self._skipped, key=self.order.index)
 
     def stage(self, name: str, upstream: list[str], build) -> DataFrame:
         up_fp = "|".join(self.fps[u] for u in upstream)
@@ -219,10 +255,10 @@ class _StageRunner:
         self.fps[name] = fp
         if self.resume and ckpt.is_done(self.run_dir, name, fp):
             ckpt.record_skip(self.run_dir, name, fp)
-            self.skipped.append(name)
+            self._skipped.append(name)
         else:
             ckpt.write_stage(build(), self.run_dir, name, fp)
-            self.executed.append(name)
+            self._executed.append(name)
         return ckpt.load_stage(self.spark, self.run_dir, name)
 
 
@@ -237,9 +273,8 @@ def run_pipeline(
     """Execute (or resume) the full record-linkage pipeline."""
     cfg = cfg or MatcherConfig()
     Path(run_dir).mkdir(parents=True, exist_ok=True)
-    runner = _StageRunner(spark, run_dir, cfg, input_id, resume)
-    stage = runner.stage
-    executed, skipped, fps = runner.executed, runner.skipped, runner.fps
+    runner = _StageRunner(spark, run_dir, cfg, input_id, resume, STAGES)
+    stage, fps = runner.stage, runner.fps
 
     # th (token-hash fingerprints) is interpreted-eval — materialized in the
     # stage parquet so scoring never recomputes it per execution; rid_b
@@ -247,48 +282,7 @@ def run_pipeline(
     norm = stage("normalize", [], lambda: normalize_for_matching(records))
     norm_narrow = work_projection(norm)
 
-    tok_pairs = stage(
-        "block_token",
-        ["normalize"],
-        lambda: token_blocking(norm_narrow, df_cap=cfg.token_df_cap, dedupe=False),
-    )
-    sn_pairs = stage(
-        "block_sn",
-        ["normalize"],
-        lambda: sorted_neighborhood(
-            norm_narrow, window=cfg.sn_window, num_buckets=cfg.sn_buckets,
-            dedupe=False,
-        ),
-    )
-    pairs = stage(
-        "pairs",
-        ["block_token", "block_sn"],
-        lambda: union_candidates_meta(
-            tok_pairs, sn_pairs, min_token_overlap=cfg.min_token_overlap
-        ),
-    )
-    # The scored stage persists only pairs whose score can reach the
-    # threshold (exact upper-bound prune, see
-    # scoring.fused_score_from_attrs) — the pruned pairs are provably
-    # non-edges, so resume semantics are unchanged.
-    scored = stage(
-        "score",
-        ["pairs", "normalize"],
-        lambda: score_pairs_fused(
-            pairs,
-            norm_narrow,
-            weights=cfg.weights,
-            threshold=cfg.threshold,
-            salt_buckets=cfg.salt_buckets,
-        ),
-    )
-    edges = stage(
-        "edges",
-        ["score"],
-        lambda: edges_from_scores(scored, threshold=cfg.threshold),
-    )
-
-    def build_cc() -> DataFrame:
+    def build_cc(edges: DataFrame) -> DataFrame:
         iter_dir = _resume_cc_iter_dir(run_dir)
         Path(iter_dir).mkdir(parents=True, exist_ok=True)
         # cc_iters must belong to THIS edge set: the directory is stamped
@@ -311,7 +305,7 @@ def run_pipeline(
         # (edges stage was skipped under the same fingerprint — and, via the
         # stamp above, the surviving iter files provably came from it).
         latest = None
-        if resume and "edges" in skipped:
+        if resume and "edges" in runner.skipped:
             _, latest = _latest_cc_iteration(iter_dir)
         seed_edges = spark.read.parquet(latest) if latest else edges
         res = connected_components(
@@ -322,31 +316,83 @@ def run_pipeline(
         )
         return res.labels
 
-    labels = stage("cc", ["edges", "normalize"], build_cc)
-    entities = stage(
-        "entities", ["cc", "normalize"], lambda: emit_entities(norm, labels)
-    )
+    def matching() -> DataFrame:
+        # The two blocking passes read only the normalize stage.
+        tok_pairs, sn_pairs = ckpt.run_parallel(
+            spark,
+            lambda: stage(
+                "block_token",
+                ["normalize"],
+                lambda: token_blocking(
+                    norm_narrow, df_cap=cfg.token_df_cap, dedupe=False
+                ),
+            ),
+            lambda: stage(
+                "block_sn",
+                ["normalize"],
+                lambda: sorted_neighborhood(
+                    norm_narrow, window=cfg.sn_window,
+                    num_buckets=cfg.sn_buckets, dedupe=False,
+                ),
+            ),
+        )
+        pairs = stage(
+            "pairs",
+            ["block_token", "block_sn"],
+            lambda: union_candidates_meta(
+                tok_pairs, sn_pairs, min_token_overlap=cfg.min_token_overlap
+            ),
+        )
+        # The scored stage persists only pairs whose score can reach the
+        # threshold (exact upper-bound prune, see
+        # scoring.fused_score_from_attrs) — the pruned pairs are provably
+        # non-edges, so resume semantics are unchanged.
+        scored = stage(
+            "score",
+            ["pairs", "normalize"],
+            lambda: score_pairs_fused(
+                pairs,
+                norm_narrow,
+                weights=cfg.weights,
+                threshold=cfg.threshold,
+                salt_buckets=cfg.salt_buckets,
+            ),
+        )
+        edges = stage(
+            "edges",
+            ["score"],
+            lambda: edges_from_scores(scored, threshold=cfg.threshold),
+        )
+        labels = stage("cc", ["edges", "normalize"], lambda: build_cc(edges))
+        return stage(
+            "entities", ["cc", "normalize"], lambda: emit_entities(norm, labels)
+        )
 
-    # Catalog-state stages (plans.catalog_state): the derived relations a
-    # --delta run needs to stay delta-proportional — maintained token dfs
-    # and the materialized (name_norm, rid) key order. sn_bounds is derived
-    # from the PERSISTED index so both describe one materialization.
-    tok_df = stage(
-        "token_df", ["normalize"], lambda: cstate.build_token_df(norm)
-    )
-    sn_index = stage(
-        "sn_index",
-        ["normalize"],
-        lambda: cstate.build_sn_index(norm, num_buckets=cfg.sn_buckets)[0],
-    )
-    stage(
-        "sn_bounds", ["sn_index"], lambda: cstate.bounds_from_index(sn_index)
-    )
-    stage(
-        "tok_index",
-        ["normalize"],
-        lambda: cstate.build_tok_postings(norm, cfg.tok_buckets),
-    )
+    def catalog_state() -> None:
+        # Catalog-state stages (plans.catalog_state): the derived relations a
+        # --delta run needs to stay delta-proportional — maintained token
+        # dfs and the materialized (name_norm, rid) key order. sn_bounds is
+        # derived from the PERSISTED index so both describe one
+        # materialization.
+        stage("token_df", ["normalize"], lambda: cstate.build_token_df(norm))
+        sn_index = stage(
+            "sn_index",
+            ["normalize"],
+            lambda: cstate.build_sn_index(norm, num_buckets=cfg.sn_buckets)[0],
+        )
+        stage(
+            "sn_bounds", ["sn_index"], lambda: cstate.bounds_from_index(sn_index)
+        )
+        stage(
+            "tok_index",
+            ["normalize"],
+            lambda: cstate.build_tok_postings(norm, cfg.tok_buckets),
+        )
+
+    # Both sides read only the normalize stage. CC (matching side) toggles
+    # the session's AQE flag; it runs in no other branch, so that toggle
+    # keeps one owner.
+    entities, _ = ckpt.run_parallel(spark, matching, catalog_state)
     cstate.write_state_manifest(
         run_dir,
         [ckpt.stage_path(run_dir, "normalize")],
@@ -362,7 +408,10 @@ def run_pipeline(
         tok_buckets=cfg.tok_buckets,
     )
     return PipelineRun(
-        entities=entities, executed=executed, skipped=skipped, run_dir=run_dir
+        entities=entities,
+        executed=runner.executed,
+        skipped=runner.skipped,
+        run_dir=run_dir,
     )
 
 
@@ -383,22 +432,26 @@ def run_delta_pipeline(
     through the same sources.checkpoint protocol as the batch run).
 
     Stage graph (each a fingerprinted parquet sink; an interrupted ingest
-    resumes after the last completed stage):
+    resumes after the last completed stage; ``║`` marks branches that run
+    concurrently, sources.checkpoint.run_parallel):
 
         [catalog_norm → token_df_cat → sn_index_cat → tok_index_cat]
                                                        (only when no
                                                         persisted state —
                                                         builds one in-run)
-        normalize_delta → pairs_delta → score_delta → edges_delta
-        → cc_delta → entities_delta
-        [→ token_df / sn_index / sn_bounds / tok_index + state.json]
-                                                       (maintain_state:
-                                                        the run_dir becomes
-                                                        a valid catalog
-                                                        state for the NEXT
-                                                        delta — norm chain =
-                                                        catalog paths +
-                                                        this delta's)
+        normalize_delta ─┬→ pairs_delta → score_delta → edges_delta
+                         │  → cc_delta → entities_delta
+                         ║
+                         └→ token_df, sn_index → sn_bounds, tok_index,
+                            touched-bucket ids          (maintain_state)
+        [→ state.json, once both branches are written]
+
+    With ``maintain_state`` the run_dir becomes a valid catalog state for
+    the NEXT delta (norm chain = catalog paths + this delta's). The
+    maintenance branch reads only normalize_delta and the prior state, and
+    its stages are not consumed by the delta chain, so the two overlap; the
+    manifest is written only after both succeed, so a failure on either
+    side leaves no state.json and a ``resume=True`` rerun completes it.
 
     ``input_id`` must identify BOTH the catalog and the delta (the CLI folds
     both paths plus the sn/emit flags) so fingerprints invalidate when either
@@ -413,7 +466,8 @@ def run_delta_pipeline(
     cfg = cfg or MatcherConfig()
     Path(run_dir).mkdir(parents=True, exist_ok=True)
     runner = _StageRunner(
-        spark, run_dir, cfg, f"{input_id}|sn={int(sn)}|emit={emit}", resume
+        spark, run_dir, cfg, f"{input_id}|sn={int(sn)}|emit={emit}", resume,
+        _DELTA_ORDER,
     )
     stage = runner.stage
     # Prior labels, BINARY (rid, entity_id): from the state's labels chain
@@ -505,76 +559,75 @@ def run_delta_pipeline(
         )
         return with_token_hashes(nd).withColumn("rid_b", F.unhex("rid"))
 
+    if maintain_state and (state.sn_chain is None or state.labels_chain is None):
+        raise ValueError(
+            "maintain_state=True needs a parquet-backed catalog state "
+            "(state.sn_chain + state.labels_chain) — pass state from "
+            "load_catalog_state / a prior run_dir, or "
+            "maintain_state=False"
+        )
+
     norm_delta = stage("normalize_delta", [], build_normalize_delta)
     work_new = work_projection(norm_delta)
 
-    pairs = stage(
-        "pairs_delta",
-        ["normalize_delta"],
-        lambda: inc.incremental_candidate_pairs(
-            None, cfg, sn=sn, state=state, work_new=work_new
-        ),
-    )
-    scored = stage(
-        "score_delta",
-        ["pairs_delta", "normalize_delta"],
-        lambda: score_pairs_fused(
-            pairs,
-            inc.delta_attrs(state, work_new, pairs),
-            weights=cfg.weights,
-            threshold=cfg.threshold,
-            salt_buckets=cfg.salt_buckets,
-        ),
-    )
-    edges = stage(
-        "edges_delta",
-        ["score_delta"],
-        lambda: edges_from_scores(scored, threshold=cfg.threshold),
-    )
-    # cc_delta IS the labels-chain upsert element: new rids + every member
-    # of a touched catalog entity, relabeled — exactly the set whose labels
-    # the next chain read must override.
-    labels_touched = stage(
-        "cc_delta",
-        ["edges_delta", "normalize_delta"],
-        lambda: inc._touched_component_labels(
-            edges,
-            labels_old_b,
-            new_rids=work_new.select("rid"),
-            max_iterations=cfg.cc_max_iterations,
-        )[0],
-    )
-
-    def build_entities() -> DataFrame:
-        norm_union = state.norm.unionByName(
-            norm_delta.select(*state.norm.columns)
+    def delta_chain() -> DataFrame:
+        pairs = stage(
+            "pairs_delta",
+            ["normalize_delta"],
+            lambda: inc.incremental_candidate_pairs(
+                None, cfg, sn=sn, state=state, work_new=work_new
+            ),
         )
-        if emit == "delta":
-            return emit_entities(norm_union, labels_touched)
-        labels_rest = labels_old_b.join(
-            labels_touched.select("rid"), "rid", "left_anti"
+        scored = stage(
+            "score_delta",
+            ["pairs_delta", "normalize_delta"],
+            lambda: score_pairs_fused(
+                pairs,
+                inc.delta_attrs(state, work_new, pairs),
+                weights=cfg.weights,
+                threshold=cfg.threshold,
+                salt_buckets=cfg.salt_buckets,
+            ),
         )
-        return emit_entities(
-            norm_union, labels_touched.unionByName(labels_rest)
+        edges = stage(
+            "edges_delta",
+            ["score_delta"],
+            lambda: edges_from_scores(scored, threshold=cfg.threshold),
+        )
+        # cc_delta IS the labels-chain upsert element: new rids + every
+        # member of a touched catalog entity, relabeled — exactly the set
+        # whose labels the next chain read must override.
+        labels_touched = stage(
+            "cc_delta",
+            ["edges_delta", "normalize_delta"],
+            lambda: inc._touched_component_labels(
+                edges,
+                labels_old_b,
+                new_rids=work_new.select("rid"),
+                max_iterations=cfg.cc_max_iterations,
+            )[0],
         )
 
-    entities = stage("entities_delta", ["cc_delta", "normalize_delta"], build_entities)
-
-    if emit == "delta" and not maintain_state:
-        # No manifest will record the emit mode — leave the marker that
-        # makes catalog_entities_path refuse this partial sink (ADVICE r04).
-        (Path(run_dir) / EMIT_DELTA_MARKER).write_text(
-            "entities_delta is an upsert set (emit='delta'), not a catalog\n"
-        )
-
-    if maintain_state:
-        if state.sn_chain is None or state.labels_chain is None:
-            raise ValueError(
-                "maintain_state=True needs a parquet-backed catalog state "
-                "(state.sn_chain + state.labels_chain) — pass state from "
-                "load_catalog_state / a prior run_dir, or "
-                "maintain_state=False"
+        def build_entities() -> DataFrame:
+            norm_union = state.norm.unionByName(
+                norm_delta.select(*state.norm.columns)
             )
+            if emit == "delta":
+                return emit_entities(norm_union, labels_touched)
+            labels_rest = labels_old_b.join(
+                labels_touched.select("rid"), "rid", "left_anti"
+            )
+            return emit_entities(
+                norm_union, labels_touched.unionByName(labels_rest)
+            )
+
+        return stage(
+            "entities_delta", ["cc_delta", "normalize_delta"], build_entities
+        )
+
+    def maintenance() -> tuple[list[int], list[str] | None]:
+        """The next state's relations; returns (touched sn buckets, next
+        tok_chain)."""
         stage(
             "token_df",
             ["normalize_delta"],
@@ -599,6 +652,7 @@ def run_delta_pipeline(
         # postings become a delta-sized chain element; no catalog posting is
         # ever rewritten (only catalogs that carry a postings chain maintain
         # one — pre-postings state dirs keep the norm-explode fallback).
+        tok_chain_next = None
         if state.tok_chain is not None and state.tok_buckets:
             stage(
                 "tok_index",
@@ -610,13 +664,29 @@ def run_delta_pipeline(
             tok_chain_next = list(state.tok_chain) + [
                 ckpt.stage_path(run_dir, "tok_index")
             ]
-        else:
-            tok_chain_next = None
         # Touched-bucket ids for the manifest, from the PERSISTED element
         # (delta-proportional distinct over a delta-sized stage).
         touched_ids = sorted(
             r.bucket
             for r in idx_touched.select("bucket").distinct().collect()
+        )
+        return touched_ids, tok_chain_next
+
+    if not maintain_state:
+        entities = delta_chain()
+        if emit == "delta":
+            # No manifest will record the emit mode — leave the marker that
+            # makes catalog_entities_path refuse this partial sink (ADVICE
+            # r04).
+            (Path(run_dir) / EMIT_DELTA_MARKER).write_text(
+                "entities_delta is an upsert set (emit='delta'), not a catalog\n"
+            )
+    else:
+        # The maintenance branch depends only on normalize_delta and the
+        # prior state. CC runs on the delta-chain side only, so its
+        # session-level AQE toggle keeps one owner.
+        entities, (touched_ids, tok_chain_next) = ckpt.run_parallel(
+            spark, delta_chain, maintenance
         )
         cstate.write_state_manifest(
             run_dir,

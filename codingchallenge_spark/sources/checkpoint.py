@@ -8,8 +8,17 @@ A stage is DONE iff its parquet output + `_STAGE_DONE` marker exist and the
 marker's fingerprint (config hash ⊕ input fingerprint chain) matches the
 current run. The marker also records the per-partition lineage: rows per
 output file (read from parquet footers — metadata only, no data scan) and
-wall time. Markers are JSON so humans and the resume logic read the same
-artifact.
+wall time, plus the written DataFrame's schema (``df.schema.json()``), so a
+later read passes it to the parquet reader and starts no schema-inference
+job (:func:`read_parquet`). Markers are JSON so humans and the resume logic
+read the same artifact.
+
+Each stage write is still the resume unit: a stage whose marker is missing
+or stale is recomputed, whatever else finished. Independent stages (no
+stage among each other's upstream) may be written concurrently from
+:func:`run_parallel` branches; each write owns its own directory and
+marker, and ``stage_metrics.jsonl`` gets one whole line per stage either
+way.
 
 Scale note: in production the run_dir lives on HDFS/S3 and stage outputs are
 Iceberg tables/branches; this module keeps the protocol identical with local
@@ -20,11 +29,14 @@ data pass.
 from __future__ import annotations
 
 import json
+import threading
 import time
 from dataclasses import asdict, dataclass, field
 from pathlib import Path
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 MARKER = "_STAGE_DONE"
 
@@ -39,6 +51,7 @@ class StageResult:
     partitions: int
     file_rows: dict[str, int] = field(default_factory=dict)  # per-partition lineage
     skipped: bool = False
+    schema: str | None = None  # df.schema.json() of the written relation
 
 
 def stage_path(run_dir: str, stage: str) -> str:
@@ -72,8 +85,45 @@ def is_done(run_dir: str, stage: str, fingerprint: str) -> bool:
     return meta.get("fingerprint") == fingerprint
 
 
+def _recorded_schema(path: str) -> StructType | None:
+    m = Path(path) / MARKER
+    if not m.exists():
+        return None
+    try:
+        schema = json.loads(m.read_text()).get("schema")
+    except (json.JSONDecodeError, OSError):
+        return None
+    return StructType.fromJson(json.loads(schema)) if schema else None
+
+
+def _columns(schema: StructType) -> dict[str, str]:
+    return {f.name: f.dataType.simpleString() for f in schema.fields}
+
+
+def read_parquet(spark: SparkSession, *paths: str) -> DataFrame:
+    """Read stage-written parquet with the schema its markers recorded.
+
+    A read with a given schema starts no Spark job; an inferring read
+    starts one per call to merge footers. Spark makes every file-source
+    column nullable either way, so the loaded schema and plan are the same.
+    Paths may order their columns differently (a norm chain unions the
+    batch normalize stage with delta ones): inference reads the first
+    path's footer and matches later files by name, so the first path's
+    recorded schema is what inference returns. Falls back to inference when
+    any path has no recorded schema (written before markers carried one, or
+    not by :func:`write_stage`) or when the paths disagree on a column's
+    name or type."""
+    schemas = [_recorded_schema(p) for p in paths]
+    first = schemas[0]
+    if first is None or any(
+        s is None or _columns(s) != _columns(first) for s in schemas[1:]
+    ):
+        return spark.read.parquet(*paths)
+    return spark.read.schema(first).parquet(*paths)
+
+
 def load_stage(spark: SparkSession, run_dir: str, stage: str) -> DataFrame:
-    return spark.read.parquet(stage_path(run_dir, stage))
+    return read_parquet(spark, stage_path(run_dir, stage))
 
 
 def read_marker(run_dir: str, stage: str) -> dict:
@@ -99,10 +149,51 @@ def write_stage(
         wall_ms=wall_ms,
         partitions=len(file_rows),
         file_rows=file_rows,
+        schema=df.schema.json(),
     )
     _marker_path(run_dir, stage).write_text(json.dumps(asdict(res), indent=1))
     _append_metrics(run_dir, res)
     return res
+
+
+def run_parallel(spark: SparkSession, *fns):
+    """Run each zero-argument ``fn`` on its own thread; return their results
+    in argument order.
+
+    For independent stage branches: the driver spends most of a stage
+    waiting on Spark jobs, so branches whose jobs do not depend on each
+    other overlap instead of queueing. Each thread inherits the caller's
+    Spark local properties (job group, description, tags) through
+    ``inheritable_thread_target``. Every branch runs to its end before the
+    first error, in argument order, is re-raised — no branch is left
+    writing behind a failed call."""
+    results: list = [None] * len(fns)
+    errors: list[BaseException | None] = [None] * len(fns)
+
+    def branch(i: int) -> None:
+        try:
+            results[i] = fns[i]()
+        except BaseException as e:  # re-raised in the calling thread below
+            errors[i] = e
+
+    # One wrapper per thread: each wrapper clones the caller's local
+    # properties, and a clone shared between threads would let one branch's
+    # setJobGroup leak into the other.
+    threads = [
+        threading.Thread(
+            target=inheritable_thread_target(spark)(branch), args=(i,),
+            name=f"stage-branch-{i}",
+        )
+        for i in range(len(fns))
+    ]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    for e in errors:
+        if e is not None:
+            raise e
+    return results
 
 
 def _append_metrics(run_dir: str, res: StageResult) -> None:

@@ -299,7 +299,14 @@ def ingest_batch(
             "identity — the streaming checkpoint was recreated over a used "
             "out_dir. Reprocess into a fresh --out-dir."
         )
-    if batch_df.isEmpty():
+    delta = batch_df.select(*INPUT_COLUMNS)
+    # One delta-sized aggregate pass, one collected row: the row count
+    # answers emptiness, the per-column counts feed the refusals below.
+    stats = delta.agg(
+        F.count(F.lit(1)).alias("_n"),
+        *[F.count(c).alias(f"_n_{c}") for c in INPUT_COLUMNS],
+    ).collect()[0]
+    if stats["_n"] == 0:
         # File source can hand an empty batch (e.g. an empty landed file);
         # don't burn a run_dir or chain an empty normalize path for it.
         return {"batch_id": batch_id, "run_dir": None, "empty": True}
@@ -317,11 +324,10 @@ def ingest_batch(
             "Reprocess into a fresh --out-dir."
         )
 
-    delta = batch_df.select(*INPUT_COLUMNS)
     # Fail-loud parity with sources.records.read_records' missing-column
     # check: the streaming schema fills columns absent from a landed file
     # with nulls. Two shapes are refused BEFORE the file's offsets commit
-    # (one delta-sized aggregate pass, one collected row):
+    # (from the aggregate above):
     # - a null in an IDENTITY column (repo/path/commit — the rid inputs):
     #   normalize would mint a rid from a partial key, silently mislinking;
     # - a column that is null on EVERY row of a non-empty batch — the
@@ -332,10 +338,6 @@ def ingest_batch(
     # succeed — a stream must not wedge forever replaying what batch
     # tolerates. Empty-string content likewise follows batch drop semantics
     # (the null check can't see it, and doesn't need to).
-    stats = delta.agg(
-        F.count(F.lit(1)).alias("_n"),
-        *[F.count(c).alias(f"_n_{c}") for c in INPUT_COLUMNS],
-    ).collect()[0]
     id_cols = ("repo", "path", "commit")
     bad_id = [c for c in id_cols if stats[f"_n_{c}"] < stats["_n"]]
     if bad_id:

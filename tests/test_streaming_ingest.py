@@ -263,6 +263,61 @@ def test_compaction_bounds_chains_and_disk(spark, corpus3, catalog_run, tmp_path
     assert st.norm.count() == final.count()
 
 
+def test_ingest_releases_cached_relations(spark, corpus3, catalog_run, tmp_path):
+    """A long-lived stream must not accumulate cached relations: after two
+    micro-batches the session's cache manager holds nothing, and CC's
+    session-level AQE toggle is restored although the state-maintenance
+    branch ran beside it."""
+    _, da, db = corpus3
+    out = str(tmp_path / "out")
+    spark.catalog.clearCache()
+    for bid, pdf in enumerate((da, db)):
+        res = ingest_batch(
+            spark, spark.createDataFrame(pdf), bid, out, catalog_run, CFG
+        )
+        assert res["executed"]
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+
+
+def test_failed_branch_leaves_no_state_then_resume_completes(
+    spark, corpus3, catalog_run, tmp_path, monkeypatch
+):
+    """A raise in the state-maintenance branch fails the delta run after
+    the delta chain has finished, and writes no state.json; a resume=True
+    rerun skips what was written and completes the state."""
+    _, da, _ = corpus3
+    delta = spark.createDataFrame(da)
+    rd = str(tmp_path / "d")
+
+    def run():
+        return run_delta_pipeline(
+            spark, None, delta, rd, CFG, input_id="branch-fail", resume=True,
+            state=cstate.load_catalog_state(spark, catalog_run), emit="delta",
+        )
+
+    def boom(state, delta_norm):
+        raise RuntimeError("sn merge failed")
+
+    with monkeypatch.context() as m:
+        m.setattr(cstate, "merge_sn_buckets", boom)
+        with pytest.raises(RuntimeError, match="sn merge failed"):
+            run()
+    assert not cstate.has_state(rd)
+    assert Path(rd, "entities_delta", "_STAGE_DONE").exists()
+
+    res = run()
+    assert res.skipped == [
+        "normalize_delta", "pairs_delta", "score_delta", "edges_delta",
+        "cc_delta", "entities_delta", "token_df",
+    ]
+    assert res.executed == ["sn_index", "sn_bounds", "tok_index"]
+    assert cstate.has_state(rd)
+    assert current_entities(spark, rd).count() == (
+        current_entities(spark, catalog_run).count() + len(da)
+    )
+
+
 def test_out_dir_reuse_refused(spark, corpus3, catalog_run, tmp_path):
     """A recreated streaming checkpoint over a used out_dir restarts batch
     numbering over NEW files — both collision shapes must fail loudly
