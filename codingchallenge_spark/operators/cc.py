@@ -213,6 +213,11 @@ def _adaptive_partitions(
 
 @dataclass
 class CCResult:
+    """``iterations`` counts the rounds run, including the round whose star
+    test proved convergence — an input that is already converged reports
+    ``iterations=1``. ``converged`` is always True: :func:`connected_components`
+    raises instead of returning labels it did not converge to."""
+
     labels: DataFrame  # [rid, entity_id]
     iterations: int
     converged: bool
@@ -231,7 +236,8 @@ def connected_components(
     label themselves. ``iter_dir`` (optional) persists each round's edge set
     as parquet for mid-stage resume. ``target_rows_per_partition`` sizes each
     round's exchanges to the LIVE edge count (observed for free on the
-    previous convergence action) — None disables adaptive sizing.
+    previous convergence action) — None disables adaptive sizing. Raises
+    ``RuntimeError`` when ``max_iterations`` rounds do not converge.
     """
     spark = edges.sparkSession
     # Lazy local checkpoint: the lineage still truncates (G4), but the data is
@@ -286,34 +292,31 @@ def connected_components(
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
 
+    if not converged:
+        # The min-labels of a non-star edge set are not the transitive
+        # closure: returning them would silently split entities.
+        raise RuntimeError(
+            f"connected_components did not converge within max_iterations="
+            f"{max_iterations}: {n_edges} live edges remain"
+        )
     # At the fixpoint every component is a star centered at its min node:
     # labels = (dst → src) ∪ (src → src) ∪ isolated self-labels.
     member = cur.select(F.col("dst").alias("rid"), F.col("src").alias("entity_id"))
-    if converged:
-        # Round 6 fast path, exact BY the star-set property the convergence
-        # test just proved: no dst occurs twice and no node is both src and
-        # dst — so member rows are already unique per rid and the only
-        # duplicates are the per-edge center rows. A keys-only dedup of the
-        # centers replaces the groupBy-min: min() over a binary column is not
-        # hash-aggregatable (immutable agg buffer), so the old form paid a
-        # SortAggregate over the whole member ∪ center relation; the dedup
-        # runs as a plain HashAggregate over the (far smaller) center set.
-        # Output multiset is identical (proved by the same property).
-        center = (
-            cur.select("src")
-            .dropDuplicates(["src"])
-            .select(F.col("src").alias("rid"), F.col("src").alias("entity_id"))
-        )
-        labels = member.unionByName(center)
-    else:
-        # max_iterations hit without convergence: the general (non-star-set)
-        # min-label form, unchanged.
-        center = cur.select(
-            F.col("src").alias("rid"), F.col("src").alias("entity_id")
-        )
-        labels = member.unionByName(center).groupBy("rid").agg(
-            F.min("entity_id").alias("entity_id")
-        )
+    # Exact BY the star-set property the convergence test just proved: no
+    # dst occurs twice and no node is both src and dst — so member rows are
+    # already unique per rid and the only duplicates are the per-edge
+    # center rows. A keys-only dedup of the centers replaces a groupBy-min:
+    # min() over a binary column is not hash-aggregatable (immutable agg
+    # buffer), so that form pays a SortAggregate over the whole member ∪
+    # center relation; the dedup runs as a plain HashAggregate over the (far
+    # smaller) center set. Output multiset is identical (proved by the same
+    # property).
+    center = (
+        cur.select("src")
+        .dropDuplicates(["src"])
+        .select(F.col("src").alias("rid"), F.col("src").alias("entity_id"))
+    )
+    labels = member.unionByName(center)
     if nodes is not None:
         labels = (
             nodes.select("rid")

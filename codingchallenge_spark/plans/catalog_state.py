@@ -77,6 +77,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from codingchallenge_spark.plans.matcher import MatcherConfig
 from codingchallenge_spark.sources import checkpoint as ckpt
 
 STATE_MANIFEST = "state.json"
@@ -188,7 +189,8 @@ def build_sn_index(
     rows and the bounds table MUST observe identical boundaries.
     """
     spark = norm.sparkSession
-    num_buckets = num_buckets or spark.sparkContext.defaultParallelism
+    if num_buckets is None:
+        num_buckets = spark.sparkContext.defaultParallelism
     keyed = norm.select(F.col("rid_b").alias("rid"), "name_norm")
     bucketed = (
         keyed.repartitionByRange(num_buckets, "name_norm", "rid")
@@ -233,6 +235,47 @@ def updated_token_df(token_df: DataFrame, delta_norm: DataFrame) -> DataFrame:
             "tok",
             (F.coalesce("df", F.lit(0)) + F.coalesce("dfn", F.lit(0))).alias("df"),
         )
+    )
+
+
+def derive_catalog_state(
+    stage,
+    norm: DataFrame,
+    cfg: MatcherConfig,
+    norm_stage: str = "normalize",
+    suffix: str = "",
+    labels: DataFrame | None = None,
+) -> CatalogState:
+    """Build a catalog state from a normalize relation through the stage
+    sink ``stage`` (plans.matcher): stages ``token_df``, ``sn_index``,
+    ``tok_index`` (named with ``suffix``, upstream ``norm_stage``) and, when
+    binary ``labels`` are given, ``labels``. The bounds are derived from the
+    index stage's output, so both describe one materialization. The state
+    carries no chain paths; a parquet-backed caller records them.
+    """
+    up = [norm_stage]
+    token_df = stage("token_df" + suffix, up, lambda: build_token_df(norm))
+    stored = stage(
+        "sn_index" + suffix,
+        up,
+        lambda: build_sn_index(norm, num_buckets=cfg.sn_buckets)[0],
+    )
+    postings = stage(
+        "tok_index" + suffix, up, lambda: build_tok_postings(norm, cfg.tok_buckets)
+    )
+    labels_out = None
+    if labels is not None:
+        labels_out = stage("labels" + suffix, [], lambda: labels)
+    bounds = bounds_from_index(stored)
+    return CatalogState(
+        norm=norm,
+        token_df=token_df,
+        sn_index=resolve_sn_index(stored, bounds),
+        sn_bounds=bounds,
+        sn_stored=stored,
+        labels=labels_out,
+        tok_postings=postings,
+        tok_buckets=cfg.tok_buckets,
     )
 
 
@@ -566,10 +609,21 @@ def compact_state(
     Everything older becomes unreferenced — a streaming deployment deletes
     the superseded batch run_dirs afterwards (streaming.ingest does).
 
+    ``num_buckets`` re-buckets the sn_index (default: the session's default
+    parallelism). ``tok_buckets`` sets the postings' hash-bucket modulus
+    (default: the state's own). When the two moduli are equal, compaction
+    takes a shortcut: it folds the postings chain as it is and only
+    re-clusters it, because every stored ``tbucket`` is still valid; any
+    other modulus rebuilds the postings from the folded norm. A value below
+    1 raises ``ValueError`` before anything is written.
+
     Cost: one corpus read+write per relation, paid at the operator-chosen
     cadence and amortized over the batches between compactions; every
     per-batch cost stays delta-proportional because this exists.
     """
+    for name, value in (("num_buckets", num_buckets), ("tok_buckets", tok_buckets)):
+        if value is not None and value < 1:
+            raise ValueError(f"compact_state: {name} must be >= 1, got {value}")
     state = load_catalog_state(spark, run_dir)
     out = Path(out_dir)
     if out.exists() and any(out.iterdir()):
@@ -607,10 +661,8 @@ def compact_state(
     # chain elements each cover the full tbucket range, one re-clustered
     # parquet does not).
     tok_chain = None
-    out_tok_buckets = tok_buckets or state.tok_buckets
+    out_tok_buckets = tok_buckets if tok_buckets is not None else state.tok_buckets
     if out_tok_buckets is None and state.tok_postings is None:
-        from codingchallenge_spark.plans.matcher import MatcherConfig
-
         out_tok_buckets = MatcherConfig().tok_buckets
     if out_tok_buckets is not None:
         if (

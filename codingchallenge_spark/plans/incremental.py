@@ -9,24 +9,25 @@ that touch at least one new record, seeds transitive closure with the star
 edges of the (few) catalog entities those pairs touch, and converges in O(1)
 extra CC rounds.
 
-Two cost regimes, selected by the ``state`` argument:
+One cost regime. The delta graph (:func:`normalize_delta_stage`,
+:func:`delta_stages`) links against a catalog state (plans.catalog_state):
+the catalog run's PERSISTED normalize/th stage is reused (no content is
+ever re-normalized), document frequencies are maintained incrementally
+(df' = df + delta counts, exact), the sorted-neighborhood pass range-joins
+delta keys into the persisted (name_norm, rid) key index instead of
+re-sorting the union corpus, and the catalog side of the token pass reads
+the persisted inverted postings (catalog_state.build_tok_postings),
+bucket-pruned by the delta's token hash-buckets; pre-postings state dirs
+fall back to the norm-chain explode. Remaining corpus-proportional work:
+only the final full-table emit when ``emit="full"`` (use ``emit="delta"``
+to emit only new + possibly-relabeled rows, i.e. an upsert set).
 
-- ``state=None`` (self-contained): the catalog is re-normalized and token
-  document frequencies recomputed per delta — corpus-linear passes, correct
-  but wrong for high-frequency ingest.
-- ``state=CatalogState`` (plans.catalog_state — the production path): the
-  catalog run's PERSISTED normalize/th stage is reused (no content is ever
-  re-normalized), document frequencies are maintained incrementally
-  (df' = df + delta counts, exact), and the sorted-neighborhood pass range-
-  joins delta keys into the persisted (name_norm, rid) key index instead of
-  re-sorting the union corpus. Round 5: the catalog side of the token pass
-  reads the persisted inverted postings (catalog_state.build_tok_postings),
-  bucket-pruned by the delta's token hash-buckets — the per-batch
-  re-explode of every catalog token array (the last corpus-proportional
-  term in candidate generation) is gone; pre-postings state dirs fall back
-  to the norm-chain explode. Remaining corpus-proportional work: only the
-  final full-table emit when ``emit="full"`` (use ``emit="delta"`` to emit
-  only new + possibly-relabeled rows, i.e. an upsert set).
+The graph is defined once and run through a stage sink, like the batch
+graph (plans.matcher): :func:`resolve_entities_incremental` runs it in
+memory, plans.pipeline.run_delta_pipeline through parquet stages. A caller
+with no state derives one from the catalog entities table first
+(:func:`catalog_side`) — a corpus-proportional pass, paid once per catalog
+by the checkpointed run.
 
 Semantics (documented contract, tested in tests/test_incremental.py and
 tests/test_incremental_state.py):
@@ -40,8 +41,8 @@ tests/test_incremental_state.py):
 - **Delta-touching pairs are scored exactly as the batch matcher would.**
   Token document frequencies (the hot-key cap) are computed over the FULL
   union corpus and the sorted-neighborhood pass reproduces the full union
-  sort order (with state: analytically, via the key index — provably the
-  same pair set, see delta_sn_pairs), so the candidate set equals the batch
+  sort order (analytically, via the key index — provably the same pair
+  set, see delta_sn_pairs), so the candidate set equals the batch
   run's candidate set restricted to pairs with ≥ 1 new side — same blocking
   keys, same meta-blocking overlap counts, same kernels, same threshold.
 - **Relation to a from-scratch batch run** (tests assert both directions on
@@ -63,20 +64,21 @@ All shuffles run on 32-byte binary rids, like the batch pipeline.
 
 from __future__ import annotations
 
+from dataclasses import replace
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from codingchallenge_spark.functions.normalize import (
     guarded_unhex,
+    normalize_for_matching,
     normalize_records,
-    partition_floor,
     with_token_hashes,
     work_projection,
 )
 from codingchallenge_spark.operators.blocking import (
     canonical_pairs,
     sn_window_pairs,
-    sorted_neighborhood,
     union_candidates_meta,
 )
 from codingchallenge_spark.operators.cc import connected_components
@@ -85,62 +87,27 @@ from codingchallenge_spark.operators.scoring import (
     score_pairs_fused,
 )
 from codingchallenge_spark.plans import catalog_state as cstate
-from codingchallenge_spark.plans.catalog_state import CatalogState, build_token_df
-from codingchallenge_spark.plans.matcher import MatcherConfig, emit_entities
+from codingchallenge_spark.plans.catalog_state import CatalogState
+from codingchallenge_spark.plans.matcher import (
+    MatcherConfig,
+    _InMemorySink,
+    emit_entities,
+)
 from codingchallenge_spark.sources.checkpoint import run_parallel
 from codingchallenge_spark.sources.records import INPUT_COLUMNS
-
-
-def incremental_token_pairs(work: DataFrame, df_cap: int) -> DataFrame:
-    """Token pass restricted to pairs touching ≥ 1 new record (self-
-    contained form: document frequencies recomputed over the full union).
-
-    ``work`` carries [rid, tokens, is_new, ...]. Document frequencies and the
-    hot-token cap are computed over the FULL corpus — identical cold-token set
-    to a batch run — but only the (tiny) delta side of the exploded relation
-    drives the join, so the pair volume is |delta tokens| × per-token df
-    instead of the batch self-join's quadratic block volume.
-
-    Emits each unordered delta-touching pair once per shared cold token
-    (NON-deduped — exactly the multiplicity union_candidates_meta counts as
-    token overlap): a (new, old) pair joins once because old rows never sit
-    on the delta side; a (new, new) pair is kept only in its a.rid < b.rid
-    orientation.
-    """
-    tok = work.select("rid", "is_new", F.explode("tokens").alias("tok"))
-    hot = (
-        tok.groupBy("tok")
-        .agg(F.count("*").alias("df"))
-        .filter(F.col("df") > df_cap)
-        .select("tok")
-    )
-    cold = tok.join(F.broadcast(hot), "tok", "left_anti")
-    new_side = cold.filter(F.col("is_new"))
-    # shuffle_hash on the corpus side for the same reason as token_blocking
-    # (operators/blocking.py): Catalyst under-estimates the exploded relation
-    # and would broadcast the ENTIRE corpus token list. Per-token build rows
-    # are bounded by df_cap.
-    a, b = new_side.alias("a"), cold.hint("shuffle_hash").alias("b")
-    pairs = (
-        a.join(b, "tok")
-        .filter((~F.col("b.is_new")) | (F.col("a.rid") < F.col("b.rid")))
-        .select(
-            F.least(F.col("a.rid"), F.col("b.rid")).alias("rid1"),
-            F.greatest(F.col("a.rid"), F.col("b.rid")).alias("rid2"),
-            F.col("tok").alias("block_key"),
-        )
-    )
-    return pairs
 
 
 def incremental_token_pairs_state(
     state: CatalogState, work_new: DataFrame, df_cap: int
 ) -> DataFrame:
-    """Token pass using the MAINTAINED document-frequency relation.
+    """Token pass restricted to pairs touching ≥ 1 new record, using the
+    MAINTAINED document-frequency relation.
 
-    Same pair multiset as :func:`incremental_token_pairs` over the union
-    corpus (tested equal): the hot set is derived from
-    df_union = state.token_df + delta counts — exact, because tokenize emits
+    Same pair multiset as batch token blocking over the union corpus,
+    restricted to pairs with ≥ 1 new side (tested equal): each unordered
+    delta-touching pair once per shared cold token (NON-deduped — exactly
+    the multiplicity union_candidates_meta counts as token overlap). The hot
+    set is derived from df_union = state.token_df + delta counts — exact, because tokenize emits
     distinct tokens per record and catalog/delta rid sets are disjoint — and
     the catalog side of the join is filtered to the delta's cold-token set
     BEFORE the exchange (broadcast probe: tokens absent from the delta can
@@ -352,7 +319,6 @@ def delta_sn_pairs(
     state: CatalogState,
     delta_keys: DataFrame,
     window: int,
-    num_parts: int | None = None,
 ) -> DataFrame:
     """Sorted-neighborhood pairs with ≥ 1 new side, WITHOUT re-sorting the
     union corpus: range-join delta keys into the persisted catalog key index.
@@ -382,7 +348,7 @@ def delta_sn_pairs(
     operators.blocking.sorted_neighborhood.
     """
     spark = delta_keys.sparkSession
-    num_parts = num_parts or spark.sparkContext.defaultParallelism
+    num_parts = spark.sparkContext.defaultParallelism
     s = _delta_sn_candidates(state, delta_keys, window)
     s2 = (
         s.repartitionByRange(num_parts, "name_norm", "rid")
@@ -468,70 +434,42 @@ def delta_sn_pairs(
 
 
 def incremental_candidate_pairs(
-    work: DataFrame,
+    state: CatalogState,
+    work_new: DataFrame,
     cfg: MatcherConfig,
     sn: bool = True,
-    state: CatalogState | None = None,
-    work_new: DataFrame | None = None,
 ) -> DataFrame:
     """Multi-pass delta blocking: restricted token pass ∪ delta-touching
     sorted-neighborhood pairs, merged through the same single-shuffle
-    meta-union as the batch matcher (identical overlap semantics).
+    meta-union as the batch matcher (identical overlap semantics). Both
+    passes are delta-proportional: maintained dfs + index range-join
+    (:func:`incremental_token_pairs_state`, :func:`delta_sn_pairs`).
+    ``sn=False`` drops the sorted-neighborhood pass entirely — the recall
+    path for name-similar-but-token-poor records folds into the periodic
+    full re-resolution instead."""
 
-    With ``state`` (and ``work_new``), both passes are delta-proportional:
-    maintained dfs + index range-join (:func:`incremental_token_pairs_state`,
-    :func:`delta_sn_pairs`). Without, the self-contained full-union forms
-    run. ``sn=False`` drops the sorted-neighborhood pass entirely — the
-    recall path for name-similar-but-token-poor records folds into the
-    periodic full re-resolution instead."""
-    if state is not None:
-        if not sn:
-            tok = incremental_token_pairs_state(
-                state, work_new, df_cap=cfg.token_df_cap
-            )
-            empty = tok.filter(F.lit(False))
-            return union_candidates_meta(
-                tok, empty, min_token_overlap=cfg.min_token_overlap
-            )
+    def tok() -> DataFrame:
+        return incremental_token_pairs_state(
+            state, work_new, df_cap=cfg.token_df_cap
+        )
+
+    if sn:
         # Building either pass runs driver-side collects (the token pass's
         # hash-bucket list, the SN pass's bounds table); the two are
         # independent, so their jobs overlap.
-        tok, sn_new = run_parallel(
+        tok_pairs, sn_pairs = run_parallel(
             work_new.sparkSession,
-            lambda: incremental_token_pairs_state(
-                state, work_new, df_cap=cfg.token_df_cap
-            ),
+            tok,
             lambda: delta_sn_pairs(
                 state, work_new.select("rid", "name_norm"),
                 window=cfg.sn_window,
             ),
         )
-        return union_candidates_meta(
-            tok, sn_new, min_token_overlap=cfg.min_token_overlap
-        )
-    tok = incremental_token_pairs(work, df_cap=cfg.token_df_cap)
-    if not sn:
-        empty = tok.filter(F.lit(False))
-        return union_candidates_meta(
-            tok, empty, min_token_overlap=cfg.min_token_overlap
-        )
-    # SN runs over the FULL union order (exact batch semantics), then keeps
-    # pairs with ≥ 1 new side. The flag join shuffles the O(N·window) SN pair
-    # set on rid — the same key every downstream stage shuffles on.
-    sn_pairs = sorted_neighborhood(
-        work, window=cfg.sn_window, num_buckets=cfg.sn_buckets, dedupe=False
-    )
-    flags = work.select("rid", "is_new")
-    f1 = flags.select(F.col("rid").alias("rid1"), F.col("is_new").alias("_n1"))
-    f2 = flags.select(F.col("rid").alias("rid2"), F.col("is_new").alias("_n2"))
-    sn_new = (
-        sn_pairs.join(f1, "rid1")
-        .join(f2, "rid2")
-        .filter(F.col("_n1") | F.col("_n2"))
-        .select("rid1", "rid2", "block_key")
-    )
+    else:
+        tok_pairs = tok()
+        sn_pairs = tok_pairs.filter(F.lit(False))
     return union_candidates_meta(
-        tok, sn_new, min_token_overlap=cfg.min_token_overlap
+        tok_pairs, sn_pairs, min_token_overlap=cfg.min_token_overlap
     )
 
 
@@ -559,16 +497,14 @@ def _touched_component_labels(
     labels_old_b: DataFrame,
     new_rids: DataFrame,
     max_iterations: int,
-) -> tuple[DataFrame, DataFrame]:
+) -> DataFrame:
     """CC restricted to the components a delta edge can change.
 
     Only entities with a member incident to a delta edge can merge or gain
     members; everything else keeps its catalog label verbatim.
-    ``labels_old_b`` carries BINARY (rid, entity_id) — hex-keyed callers
-    convert with guarded_unhex first. Returns (labels_touched,
-    labels_rest_binary): labels_touched covers new rids + members of touched
-    catalog entities (CC output, binary rid/entity); labels_rest_binary is
-    the untouched remainder of the catalog. Cost: CC input is
+    ``labels_old_b`` carries BINARY (rid, entity_id). Returns the labels of
+    new rids + members of touched catalog entities (CC output, binary
+    rid/entity). Cost: CC input is
     delta-proportional (delta edges + touched-entity star edges) instead of
     corpus-proportional star edges for EVERY catalog entity.
     """
@@ -580,8 +516,8 @@ def _touched_component_labels(
     touched_ents = (
         labels_old_b.join(ends, "rid").select("entity_id").distinct()
     )
-    # members is delta-proportional but feeds three consumers (star edges,
-    # the CC node set, the untouched-remainder anti-join) — pinned so the
+    # members is delta-proportional but feeds two consumers (star edges and
+    # the CC node set) — pinned so the
     # catalog label scan behind it runs once, not per consumer. A lazy
     # localCheckpoint, not persist(): nothing in the session's cache manager
     # outlives the relation, so a long-lived stream that comes through here
@@ -593,15 +529,146 @@ def _touched_component_labels(
         F.col("entity_id").alias("src"), F.col("rid").alias("dst")
     )
     nodes = members.select("rid").unionByName(new_rids).distinct()
-    labels_touched = connected_components(
+    return connected_components(
         delta_edges.unionByName(star),
         nodes=nodes,
         max_iterations=max_iterations,
     ).labels
-    labels_rest = labels_old_b.join(
-        members.select("rid"), "rid", "left_anti"
-    ).select("rid", "entity_id")
-    return labels_touched, labels_rest
+
+
+def catalog_side(
+    stage,
+    state: CatalogState | None,
+    catalog: DataFrame | None,
+    cfg: MatcherConfig,
+    caller: str,
+) -> CatalogState:
+    """The catalog a delta run links against.
+
+    ``state`` as given when it carries labels; a state without labels takes
+    them from the ``catalog`` entities table; with no state, one is derived
+    from ``catalog`` through the sink ``stage``: ``catalog_norm``, then
+    ``token_df_cat``, ``sn_index_cat``, ``tok_index_cat`` and
+    ``labels_cat`` (plans.catalog_state.derive_catalog_state). ``caller``
+    names the entry point in errors.
+    """
+    if state is not None and state.labels is not None:
+        return state
+    if catalog is None:
+        raise ValueError(
+            f"{caller} needs a catalog entities relation or a state carrying "
+            "a labels chain (load_catalog_state)"
+        )
+    # guarded_unhex raises on malformed catalog ids instead of silently
+    # nulling: a NULL id would drop the star edge in CC and silently split
+    # the old entity — a foreign/corrupted catalog must surface instead.
+    ctx = f"{caller}: catalog"
+    labels = catalog.select(
+        guarded_unhex("rid", ctx).alias("rid"),
+        guarded_unhex("entity_id", ctx).alias("entity_id"),
+    )
+    if state is not None:
+        return replace(state, labels=labels)
+    norm = stage(
+        "catalog_norm",
+        [],
+        lambda: normalize_for_matching(catalog.select(*INPUT_COLUMNS)),
+    )
+    return cstate.derive_catalog_state(
+        stage, norm, cfg, norm_stage="catalog_norm", suffix="_cat",
+        labels=labels,
+    )
+
+
+def normalize_delta_stage(
+    stage, state: CatalogState, delta_records: DataFrame
+) -> DataFrame:
+    """The delta graph's first stage: the delta normalized like the catalog.
+
+    Idempotent ingest: delta rows whose rid (derived from the natural key)
+    is already in the catalog's labels are dropped — the catalog row wins
+    (the labels are binary, the normalized rid hex). The same key is
+    deduped WITHIN the batch too: one delta replaying a row twice (same
+    repo/path/commit) must not emit duplicate rid rows.
+    """
+
+    def build() -> DataFrame:
+        nd = (
+            normalize_records(delta_records.select(*INPUT_COLUMNS))
+            .dropDuplicates(["rid"])
+            .join(
+                state.labels.select(F.lower(F.hex("rid")).alias("rid")),
+                "rid",
+                "left_anti",
+            )
+        )
+        return with_token_hashes(nd).withColumn("rid_b", F.unhex("rid"))
+
+    return stage("normalize_delta", [], build)
+
+
+def delta_stages(
+    stage,
+    state: CatalogState,
+    norm_delta: DataFrame,
+    cfg: MatcherConfig,
+    sn: bool = True,
+    emit: str = "full",
+) -> DataFrame:
+    """The delta graph after normalize_delta: pairs_delta → score_delta →
+    edges_delta → cc_delta → entities_delta, each stage through the sink
+    ``stage`` (plans.matcher documents the sinks)."""
+    work_new = work_projection(norm_delta)
+    pairs = stage(
+        "pairs_delta",
+        ["normalize_delta"],
+        lambda: incremental_candidate_pairs(state, work_new, cfg, sn=sn),
+    )
+    scored = stage(
+        "score_delta",
+        ["pairs_delta", "normalize_delta"],
+        lambda: score_pairs_fused(
+            pairs,
+            delta_attrs(state, work_new, pairs),
+            weights=cfg.weights,
+            threshold=cfg.threshold,
+            salt_buckets=cfg.salt_buckets,
+        ),
+    )
+    edges = stage(
+        "edges_delta",
+        ["score_delta"],
+        lambda: edges_from_scores(scored, threshold=cfg.threshold),
+    )
+    # cc_delta holds new rids + every member of a touched catalog entity,
+    # relabeled; every other catalog rid keeps its label verbatim.
+    labels_touched = stage(
+        "cc_delta",
+        ["edges_delta", "normalize_delta"],
+        lambda: _touched_component_labels(
+            edges,
+            state.labels,
+            new_rids=work_new.select("rid"),
+            max_iterations=cfg.cc_max_iterations,
+        ),
+    )
+
+    def build_entities() -> DataFrame:
+        norm_union = state.norm.unionByName(
+            norm_delta.select(*state.norm.columns)
+        )
+        if emit == "delta":
+            return emit_entities(norm_union, labels_touched)
+        labels_rest = state.labels.join(
+            labels_touched.select("rid"), "rid", "left_anti"
+        )
+        return emit_entities(
+            norm_union, labels_touched.unionByName(labels_rest)
+        )
+
+    return stage(
+        "entities_delta", ["cc_delta", "normalize_delta"], build_entities
+    )
 
 
 def resolve_entities_incremental(
@@ -612,14 +679,15 @@ def resolve_entities_incremental(
     state: CatalogState | None = None,
     emit: str = "full",
 ) -> DataFrame:
-    """Resolve ``catalog ∪ new_records`` by linking only the delta.
+    """Resolve ``catalog ∪ new_records`` by linking only the delta: the
+    delta graph with the in-memory sink.
 
     ``catalog`` is a prior resolve_entities / run_pipeline output (the five
     input columns + content_sha + entity_id, entity_id = min rid per
     cluster). ``new_records`` is a raw delta with the five input columns.
     ``state`` supplies the catalog run's persisted normalize stage +
-    maintained token-df + key index (plans.catalog_state) — the delta-
-    proportional path; without it the catalog is re-derived from its rows.
+    maintained token-df + key index + labels (plans.catalog_state); without
+    it one is derived in memory from the catalog rows.
     ``emit="delta"`` returns only rows whose label could have changed (new
     rows + members of touched entities — an upsert set); ``"full"`` returns
     the whole combined entity table.
@@ -627,113 +695,18 @@ def resolve_entities_incremental(
     cfg = cfg or MatcherConfig()
     if emit not in ("full", "delta"):
         raise ValueError(f"emit must be 'full' or 'delta', got {emit!r}")
-
-    labels_old = catalog.select("rid", "entity_id")
-    # guarded_unhex raises on malformed catalog ids instead of silently
-    # nulling: F.unhex of a malformed id returns NULL, _canon_edges would
-    # then DROP the star edge and the old entity would silently split — the
-    # exact failure mode a foreign/corrupted catalog must surface instead.
-    _ctx = "resolve_entities_incremental: catalog"
-    labels_old_b = labels_old.select(
-        guarded_unhex("rid", _ctx).alias("rid"),
-        guarded_unhex("entity_id", _ctx).alias("entity_id"),
+    # The pins: catalog_norm feeds every catalog-state relation and the
+    # emit; `pairs_delta` feeds the touched-rid derivation AND both
+    # attribute fan-in sides; `edges_delta` feeds the touched-entity
+    # derivation AND CC — left lazy, each consumer would re-run the whole
+    # blocking plan per evaluation. The delta relations are delta-sized, so
+    # the pins are cheap by construction (the parquet sink gets the same
+    # effect from its stage writes).
+    stage = _InMemorySink(
+        "catalog_norm", "normalize_delta", "pairs_delta", "edges_delta"
+    ).stage
+    state = catalog_side(
+        stage, state, catalog, cfg, "resolve_entities_incremental"
     )
-    # Idempotent ingest: delta rows whose natural key already exists in the
-    # catalog are dropped (the catalog row wins). rid is derived from the
-    # natural key, so one left_anti on rid is the whole check. The same key
-    # deduped WITHIN the batch too: one delta replaying a row twice (same
-    # repo/path/commit) must not emit duplicate rid rows.
-    norm_new = (
-        normalize_records(new_records.select(*INPUT_COLUMNS))
-        .dropDuplicates(["rid"])
-        .join(labels_old.select("rid"), "rid", "left_anti")
-    )
-
-    if state is not None:
-        # Delta-proportional path: only the delta is normalized/persisted;
-        # the catalog contributes its PERSISTED narrow columns.
-        norm_new = with_token_hashes(norm_new).withColumn(
-            "rid_b", F.unhex("rid")
-        )
-        norm_new = partition_floor(norm_new).localCheckpoint(eager=False)
-        work_new = work_projection(norm_new)
-        # The delta-proportional intermediates are pinned (lazy
-        # localCheckpoint, like every pin here — no cache-manager entry
-        # outlives them): `pairs` feeds the touched-rid derivation AND both
-        # attribute fan-in sides, and `delta_edges` feeds the touched-entity
-        # derivation AND CC — left lazy, each consumer would re-run the whole
-        # blocking plan (with its catalog parquet scans and broadcast
-        # sub-jobs) per evaluation. Both relations are delta-sized, so the
-        # pin is cheap by construction. (The staged pipeline gets the same
-        # effect from its stage sinks.)
-        pairs = incremental_candidate_pairs(
-            None, cfg, sn=sn, state=state, work_new=work_new
-        ).localCheckpoint(eager=False)
-        attrs = delta_attrs(state, work_new, pairs)
-        scored = score_pairs_fused(
-            pairs,
-            attrs,
-            weights=cfg.weights,
-            threshold=cfg.threshold,
-            salt_buckets=cfg.salt_buckets,
-        )
-        delta_edges = edges_from_scores(
-            scored, threshold=cfg.threshold
-        ).localCheckpoint(eager=False)
-        labels_touched, labels_rest = _touched_component_labels(
-            delta_edges,
-            labels_old_b,
-            new_rids=work_new.select("rid"),
-            max_iterations=cfg.cc_max_iterations,
-        )
-        norm_union = state.norm.unionByName(norm_new.select(*state.norm.columns))
-        if emit == "delta":
-            return emit_entities(norm_union, labels_touched)
-        return emit_entities(
-            norm_union, labels_touched.unionByName(labels_rest)
-        )
-
-    norm_old = normalize_records(catalog.select(*INPUT_COLUMNS))
-    norm = with_token_hashes(
-        norm_old.withColumn("is_new", F.lit(False)).unionByName(
-            norm_new.withColumn("is_new", F.lit(True))
-        )
-    )
-    norm = norm.withColumn("rid_b", F.unhex("rid"))
-    # Same partition floor + pin-once rationale as plans.matcher.
-    norm = partition_floor(norm).localCheckpoint(eager=False)
-    work = work_projection(norm, "is_new")
-
-    pairs = incremental_candidate_pairs(work, cfg, sn=sn)
-    scored = score_pairs_fused(
-        pairs,
-        work,
-        weights=cfg.weights,
-        threshold=cfg.threshold,
-        salt_buckets=cfg.salt_buckets,
-    )
-    # Pinned for the same reason as the state branch: the touched-entity
-    # CC consumes the edge relation several times (endpoint derivation +
-    # the CC seed), and it is delta-sized.
-    delta_edges = edges_from_scores(
-        scored, threshold=cfg.threshold
-    ).localCheckpoint(eager=False)
-
-    # CC over the touched components only — the catalog's untouched
-    # entities keep their labels verbatim (same output, delta-proportional
-    # CC input; the star edges of touched entities keep old clusters
-    # connected and a delta edge landing in two stars merges them).
-    labels_touched, labels_rest = _touched_component_labels(
-        delta_edges,
-        labels_old_b,
-        new_rids=work.filter("is_new").select("rid"),
-        max_iterations=cfg.cc_max_iterations,
-    )
-    norm_out = norm.drop("is_new")
-    if emit == "delta":
-        return emit_entities(norm_out, labels_touched)
-    # norm stays pinned (matcher convention): the returned plan is lazy
-    # and re-reads it through blocking, scoring, CC nodes and the emit join.
-    return emit_entities(
-        norm_out, labels_touched.unionByName(labels_rest)
-    )
+    norm_delta = normalize_delta_stage(stage, state, new_records)
+    return delta_stages(stage, state, norm_delta, cfg, sn=sn, emit=emit)

@@ -2,8 +2,12 @@
 
 Spec: BASELINE.json:6/14 — the pipeline "ships as spark-submit --py-files
 modules" and "interrupted runs resume at the blocking, scoring, or clustering
-stage". Stage graph (``║`` marks branches that run concurrently,
-sources.checkpoint.run_parallel):
+stage". The stage graphs are not defined here: the batch graph is
+plans.matcher's, the delta graph plans.incremental's and the catalog-state
+derivation plans.catalog_state's — the in-memory plans run the same graphs.
+This module supplies the parquet sink (``_StageRunner``), CC's resumable
+form, and the state manifests. Batch graph (``║`` marks branches that run
+concurrently, sources.checkpoint.run_parallel):
 
     normalize ─┬→ ┌ block_token ┐
                │  ║             ├→ pairs → score → edges → cc → entities
@@ -33,31 +37,19 @@ from __future__ import annotations
 import hashlib
 import json
 import re
-from dataclasses import asdict, dataclass, field
+from dataclasses import asdict, dataclass, replace
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from codingchallenge_spark.functions.normalize import (
-    guarded_unhex,
-    normalize_for_matching,
-    normalize_records,
-    with_token_hashes,
-    work_projection,
-)
-from codingchallenge_spark.operators.blocking import (
-    sorted_neighborhood,
-    token_blocking,
-    union_candidates_meta,
-)
 from codingchallenge_spark.operators.cc import connected_components
-from codingchallenge_spark.operators.scoring import (
-    edges_from_scores,
-    score_pairs_fused,
-)
 from codingchallenge_spark.plans import catalog_state as cstate
-from codingchallenge_spark.plans.matcher import MatcherConfig, emit_entities
+from codingchallenge_spark.plans.matcher import (
+    MatcherConfig,
+    emit_entities,
+    matching_stages,
+    normalize_stage,
+)
 from codingchallenge_spark.sources import checkpoint as ckpt
 
 STAGES = [
@@ -109,10 +101,11 @@ class PipelineRun:
     run_dir: str
 
 
-# Marker a delta-EMIT run writes when it maintains no state manifest (the
-# manifest records emit itself): the only signal that its entities_delta
-# holds the upsert set, not the catalog (ADVICE r04 — a partial sink must
-# never be silently consumable as a full one).
+# Marker that older delta-EMIT runs wrote when they maintained no state
+# manifest (the manifest records emit itself). Every delta run now writes a
+# manifest, but such run_dirs still exist and their entities_delta holds the
+# upsert set, not the catalog (ADVICE r04 — a partial sink must never be
+# silently consumable as a full one).
 EMIT_DELTA_MARKER = "EMIT_DELTA"
 
 
@@ -217,10 +210,11 @@ def _latest_cc_iteration(iter_dir: str) -> tuple[int, str | None]:
 
 
 class _StageRunner:
-    """The fingerprinted execute-or-skip protocol shared by the batch and
-    delta pipelines (one implementation, two stage graphs). ``stage`` may be
-    called from concurrent branches: ``executed``/``skipped`` are reported
-    in ``order`` (the graph's declared stage order), not completion order."""
+    """The parquet stage sink: the fingerprinted execute-or-skip protocol
+    the batch and delta graphs run through (plans.matcher's in-memory sink
+    is the other one). ``stage`` may be called from concurrent branches:
+    ``executed``/``skipped`` are reported in ``order`` (the graph's declared
+    stage order), not completion order."""
 
     def __init__(
         self,
@@ -270,19 +264,17 @@ def run_pipeline(
     input_id: str = "",
     resume: bool = False,
 ) -> PipelineRun:
-    """Execute (or resume) the full record-linkage pipeline."""
+    """Execute (or resume) the full record-linkage pipeline: the batch graph
+    of plans.matcher and the catalog-state builder of plans.catalog_state,
+    run through the parquet sink."""
     cfg = cfg or MatcherConfig()
     Path(run_dir).mkdir(parents=True, exist_ok=True)
     runner = _StageRunner(spark, run_dir, cfg, input_id, resume, STAGES)
     stage, fps = runner.stage, runner.fps
 
-    # th (token-hash fingerprints) is interpreted-eval — materialized in the
-    # stage parquet so scoring never recomputes it per execution; rid_b
-    # halves the record-id shuffle bytes (normalize.normalize_for_matching).
-    norm = stage("normalize", [], lambda: normalize_for_matching(records))
-    norm_narrow = work_projection(norm)
+    norm = normalize_stage(stage, records)
 
-    def build_cc(edges: DataFrame) -> DataFrame:
+    def build_cc(edges: DataFrame, nodes: DataFrame) -> DataFrame:
         iter_dir = _resume_cc_iter_dir(run_dir)
         Path(iter_dir).mkdir(parents=True, exist_ok=True)
         # cc_iters must belong to THIS edge set: the directory is stamped
@@ -310,89 +302,26 @@ def run_pipeline(
         seed_edges = spark.read.parquet(latest) if latest else edges
         res = connected_components(
             seed_edges,
-            nodes=norm_narrow.select("rid"),
+            nodes=nodes,
             max_iterations=cfg.cc_max_iterations,
             iter_dir=iter_dir,
         )
         return res.labels
 
-    def matching() -> DataFrame:
-        # The two blocking passes read only the normalize stage.
-        tok_pairs, sn_pairs = ckpt.run_parallel(
-            spark,
-            lambda: stage(
-                "block_token",
-                ["normalize"],
-                lambda: token_blocking(
-                    norm_narrow, df_cap=cfg.token_df_cap, dedupe=False
-                ),
-            ),
-            lambda: stage(
-                "block_sn",
-                ["normalize"],
-                lambda: sorted_neighborhood(
-                    norm_narrow, window=cfg.sn_window,
-                    num_buckets=cfg.sn_buckets, dedupe=False,
-                ),
-            ),
-        )
-        pairs = stage(
-            "pairs",
-            ["block_token", "block_sn"],
-            lambda: union_candidates_meta(
-                tok_pairs, sn_pairs, min_token_overlap=cfg.min_token_overlap
-            ),
-        )
-        # The scored stage persists only pairs whose score can reach the
-        # threshold (exact upper-bound prune, see
-        # scoring.fused_score_from_attrs) — the pruned pairs are provably
-        # non-edges, so resume semantics are unchanged.
-        scored = stage(
-            "score",
-            ["pairs", "normalize"],
-            lambda: score_pairs_fused(
-                pairs,
-                norm_narrow,
-                weights=cfg.weights,
-                threshold=cfg.threshold,
-                salt_buckets=cfg.salt_buckets,
-            ),
-        )
-        edges = stage(
-            "edges",
-            ["score"],
-            lambda: edges_from_scores(scored, threshold=cfg.threshold),
-        )
-        labels = stage("cc", ["edges", "normalize"], lambda: build_cc(edges))
-        return stage(
-            "entities", ["cc", "normalize"], lambda: emit_entities(norm, labels)
-        )
-
     def catalog_state() -> None:
-        # Catalog-state stages (plans.catalog_state): the derived relations a
-        # --delta run needs to stay delta-proportional — maintained token
-        # dfs and the materialized (name_norm, rid) key order. sn_bounds is
-        # derived from the PERSISTED index so both describe one
-        # materialization.
-        stage("token_df", ["normalize"], lambda: cstate.build_token_df(norm))
-        sn_index = stage(
-            "sn_index",
-            ["normalize"],
-            lambda: cstate.build_sn_index(norm, num_buckets=cfg.sn_buckets)[0],
-        )
-        stage(
-            "sn_bounds", ["sn_index"], lambda: cstate.bounds_from_index(sn_index)
-        )
-        stage(
-            "tok_index",
-            ["normalize"],
-            lambda: cstate.build_tok_postings(norm, cfg.tok_buckets),
-        )
+        # The derived relations a --delta run needs to stay
+        # delta-proportional. sn_bounds is derived from the PERSISTED index,
+        # so both describe one materialization.
+        state = cstate.derive_catalog_state(stage, norm, cfg)
+        stage("sn_bounds", ["sn_index"], lambda: state.sn_bounds)
 
     # Both sides read only the normalize stage. CC (matching side) toggles
     # the session's AQE flag; it runs in no other branch, so that toggle
     # keeps one owner.
-    entities, _ = ckpt.run_parallel(spark, matching, catalog_state)
+    entities, _ = ckpt.run_parallel(
+        spark, lambda: matching_stages(stage, norm, cfg, cc=build_cc),
+        catalog_state,
+    )
     cstate.write_state_manifest(
         run_dir,
         [ckpt.stage_path(run_dir, "normalize")],
@@ -426,32 +355,31 @@ def run_delta_pipeline(
     sn: bool = True,
     state: "cstate.CatalogState | None" = None,
     emit: str = "full",
-    maintain_state: bool = True,
 ) -> PipelineRun:
-    """Checkpointed, resumable INCREMENTAL pipeline (plans.incremental staged
-    through the same sources.checkpoint protocol as the batch run).
+    """Checkpointed, resumable INCREMENTAL pipeline: the delta graph of
+    plans.incremental run through the same parquet sink as the batch run,
+    plus the maintenance of the catalog state.
 
     Stage graph (each a fingerprinted parquet sink; an interrupted ingest
     resumes after the last completed stage; ``║`` marks branches that run
     concurrently, sources.checkpoint.run_parallel):
 
-        [catalog_norm → token_df_cat → sn_index_cat → tok_index_cat]
-                                                       (only when no
-                                                        persisted state —
-                                                        builds one in-run)
+        [catalog_norm → token_df_cat, sn_index_cat, tok_index_cat,
+         labels_cat]              (only when no persisted state is passed —
+                                   plans.catalog_state builds one in-run)
         normalize_delta ─┬→ pairs_delta → score_delta → edges_delta
                          │  → cc_delta → entities_delta
                          ║
                          └→ token_df, sn_index → sn_bounds, tok_index,
-                            touched-bucket ids          (maintain_state)
-        [→ state.json, once both branches are written]
+                            touched-bucket ids
+        → state.json, once both branches are written
 
-    With ``maintain_state`` the run_dir becomes a valid catalog state for
-    the NEXT delta (norm chain = catalog paths + this delta's). The
-    maintenance branch reads only normalize_delta and the prior state, and
-    its stages are not consumed by the delta chain, so the two overlap; the
-    manifest is written only after both succeed, so a failure on either
-    side leaves no state.json and a ``resume=True`` rerun completes it.
+    The run_dir becomes a valid catalog state for the NEXT delta (norm
+    chain = catalog paths + this delta's). The maintenance branch reads
+    only normalize_delta and the prior state, and its stages are not
+    consumed by the delta chain, so the two overlap; the manifest is written
+    only after both succeed, so a failure on either side leaves no
+    state.json and a ``resume=True`` rerun completes it.
 
     ``input_id`` must identify BOTH the catalog and the delta (the CLI folds
     both paths plus the sn/emit flags) so fingerprints invalidate when either
@@ -470,65 +398,14 @@ def run_delta_pipeline(
         _DELTA_ORDER,
     )
     stage = runner.stage
-    # Prior labels, BINARY (rid, entity_id): from the state's labels chain
-    # when available (narrow, delta-sized elements over one corpus-sized
-    # base), else converted from the catalog entities relation.
-    if state is not None and state.labels is not None:
-        labels_old_b = state.labels
-    elif catalog is not None:
-        ctx = "run_delta_pipeline: catalog"
-        labels_old_b = catalog.select(
-            guarded_unhex("rid", ctx).alias("rid"),
-            guarded_unhex("entity_id", ctx).alias("entity_id"),
-        )
-    else:
-        raise ValueError(
-            "run_delta_pipeline needs a catalog entities relation or a "
-            "state carrying a labels chain (load_catalog_state)"
-        )
-
-    if state is None:
-        # No persisted state supplied: derive one IN-RUN, checkpointed — the
-        # corpus-proportional derivation is paid once per catalog (resume
-        # skips it), not once per stage, and the run_dir then carries a
-        # reusable state.
-        if catalog is None:
-            raise ValueError(
-                "run_delta_pipeline without a persisted state needs the "
-                "catalog entities relation to derive one in-run"
-            )
-
-        cat_norm = stage(
-            "catalog_norm",
-            [],
-            lambda: normalize_for_matching(
-                catalog.select(*normalize_input_columns())
-            ),
-        )
-        tok_df_cat = stage(
-            "token_df_cat",
-            ["catalog_norm"],
-            lambda: cstate.build_token_df(cat_norm),
-        )
-        idx_cat = stage(
-            "sn_index_cat",
-            ["catalog_norm"],
-            lambda: cstate.build_sn_index(cat_norm, num_buckets=cfg.sn_buckets)[0],
-        )
-        tok_idx_cat = stage(
-            "tok_index_cat",
-            ["catalog_norm"],
-            lambda: cstate.build_tok_postings(cat_norm, cfg.tok_buckets),
-        )
-        labels_cat = stage("labels_cat", [], lambda: labels_old_b)
-        bounds_cat = cstate.bounds_from_index(idx_cat)
-        state = cstate.CatalogState(
-            norm=cat_norm,
-            token_df=tok_df_cat,
-            sn_index=cstate.resolve_sn_index(idx_cat, bounds_cat),
-            sn_bounds=bounds_cat,
-            sn_stored=idx_cat,
-            labels=labels_cat,
+    derived = state is None
+    state = inc.catalog_side(stage, state, catalog, cfg, "run_delta_pipeline")
+    if derived:
+        # The in-run derivation is checkpointed: the corpus-proportional
+        # pass is paid once per catalog (resume skips it), and the run_dir
+        # then carries a reusable state.
+        state = replace(
+            state,
             norm_paths=[ckpt.stage_path(run_dir, "catalog_norm")],
             sn_chain=[
                 {
@@ -537,93 +414,16 @@ def run_delta_pipeline(
                 }
             ],
             labels_chain=[ckpt.stage_path(run_dir, "labels_cat")],
-            tok_postings=tok_idx_cat,
             tok_chain=[ckpt.stage_path(run_dir, "tok_index_cat")],
-            tok_buckets=cfg.tok_buckets,
         )
-        labels_old_b = labels_cat  # downstream reads the persisted stage
-
-    def build_normalize_delta() -> DataFrame:
-        from codingchallenge_spark.sources.records import INPUT_COLUMNS
-
-        nd = (
-            normalize_records(delta_records.select(*INPUT_COLUMNS))
-            .dropDuplicates(["rid"])
-            # idempotency: rids already cataloged are dropped (labels are
-            # the catalog's rid set; hex both sides — norm rids are hex)
-            .join(
-                labels_old_b.select(F.lower(F.hex("rid")).alias("rid")),
-                "rid",
-                "left_anti",
-            )
-        )
-        return with_token_hashes(nd).withColumn("rid_b", F.unhex("rid"))
-
-    if maintain_state and (state.sn_chain is None or state.labels_chain is None):
+    if state.sn_chain is None or state.labels_chain is None:
         raise ValueError(
-            "maintain_state=True needs a parquet-backed catalog state "
-            "(state.sn_chain + state.labels_chain) — pass state from "
-            "load_catalog_state / a prior run_dir, or "
-            "maintain_state=False"
+            "run_delta_pipeline maintains the catalog state and needs a "
+            "parquet-backed one (state.sn_chain + state.labels_chain) — "
+            "pass state from load_catalog_state / a prior run_dir"
         )
 
-    norm_delta = stage("normalize_delta", [], build_normalize_delta)
-    work_new = work_projection(norm_delta)
-
-    def delta_chain() -> DataFrame:
-        pairs = stage(
-            "pairs_delta",
-            ["normalize_delta"],
-            lambda: inc.incremental_candidate_pairs(
-                None, cfg, sn=sn, state=state, work_new=work_new
-            ),
-        )
-        scored = stage(
-            "score_delta",
-            ["pairs_delta", "normalize_delta"],
-            lambda: score_pairs_fused(
-                pairs,
-                inc.delta_attrs(state, work_new, pairs),
-                weights=cfg.weights,
-                threshold=cfg.threshold,
-                salt_buckets=cfg.salt_buckets,
-            ),
-        )
-        edges = stage(
-            "edges_delta",
-            ["score_delta"],
-            lambda: edges_from_scores(scored, threshold=cfg.threshold),
-        )
-        # cc_delta IS the labels-chain upsert element: new rids + every
-        # member of a touched catalog entity, relabeled — exactly the set
-        # whose labels the next chain read must override.
-        labels_touched = stage(
-            "cc_delta",
-            ["edges_delta", "normalize_delta"],
-            lambda: inc._touched_component_labels(
-                edges,
-                labels_old_b,
-                new_rids=work_new.select("rid"),
-                max_iterations=cfg.cc_max_iterations,
-            )[0],
-        )
-
-        def build_entities() -> DataFrame:
-            norm_union = state.norm.unionByName(
-                norm_delta.select(*state.norm.columns)
-            )
-            if emit == "delta":
-                return emit_entities(norm_union, labels_touched)
-            labels_rest = labels_old_b.join(
-                labels_touched.select("rid"), "rid", "left_anti"
-            )
-            return emit_entities(
-                norm_union, labels_touched.unionByName(labels_rest)
-            )
-
-        return stage(
-            "entities_delta", ["cc_delta", "normalize_delta"], build_entities
-        )
+    norm_delta = inc.normalize_delta_stage(stage, state, delta_records)
 
     def maintenance() -> tuple[list[int], list[str] | None]:
         """The next state's relations; returns (touched sn buckets, next
@@ -672,48 +472,37 @@ def run_delta_pipeline(
         )
         return touched_ids, tok_chain_next
 
-    if not maintain_state:
-        entities = delta_chain()
-        if emit == "delta":
-            # No manifest will record the emit mode — leave the marker that
-            # makes catalog_entities_path refuse this partial sink (ADVICE
-            # r04).
-            (Path(run_dir) / EMIT_DELTA_MARKER).write_text(
-                "entities_delta is an upsert set (emit='delta'), not a catalog\n"
-            )
-    else:
-        # The maintenance branch depends only on normalize_delta and the
-        # prior state. CC runs on the delta-chain side only, so its
-        # session-level AQE toggle keeps one owner.
-        entities, (touched_ids, tok_chain_next) = ckpt.run_parallel(
-            spark, delta_chain, maintenance
-        )
-        cstate.write_state_manifest(
-            run_dir,
-            (state.norm_paths or [])
-            + [ckpt.stage_path(run_dir, "normalize_delta")],
-            sn_chain=list(state.sn_chain)
-            + [
-                {
-                    "path": ckpt.stage_path(run_dir, "sn_index"),
-                    "buckets": touched_ids,
-                }
-            ],
-            labels_chain=list(state.labels_chain)
-            + [ckpt.stage_path(run_dir, "cc_delta")],
-            emit=emit,
-            tok_chain=tok_chain_next,
-            tok_buckets=state.tok_buckets if tok_chain_next else None,
-        )
+    # The maintenance branch depends only on normalize_delta and the prior
+    # state. CC runs on the delta-chain side only, so its session-level AQE
+    # toggle keeps one owner.
+    entities, (touched_ids, tok_chain_next) = ckpt.run_parallel(
+        spark,
+        lambda: inc.delta_stages(stage, state, norm_delta, cfg, sn=sn, emit=emit),
+        maintenance,
+    )
+    cstate.write_state_manifest(
+        run_dir,
+        (state.norm_paths or [])
+        + [ckpt.stage_path(run_dir, "normalize_delta")],
+        sn_chain=list(state.sn_chain)
+        + [
+            {
+                "path": ckpt.stage_path(run_dir, "sn_index"),
+                "buckets": touched_ids,
+            }
+        ],
+        # cc_delta IS the labels-chain upsert element: new rids + every
+        # member of a touched catalog entity, relabeled — exactly the set
+        # whose labels the next chain read must override.
+        labels_chain=list(state.labels_chain)
+        + [ckpt.stage_path(run_dir, "cc_delta")],
+        emit=emit,
+        tok_chain=tok_chain_next,
+        tok_buckets=state.tok_buckets if tok_chain_next else None,
+    )
     return PipelineRun(
         entities=entities,
         executed=runner.executed,
         skipped=runner.skipped,
         run_dir=run_dir,
     )
-
-
-def normalize_input_columns() -> list[str]:
-    from codingchallenge_spark.sources.records import INPUT_COLUMNS
-
-    return list(INPUT_COLUMNS)

@@ -370,7 +370,6 @@ def ingest_batch(
         sn=sn,
         state=state,
         emit="delta",  # every per-batch write is delta-sized (VERDICT r04 #3)
-        maintain_state=True,
     )
     _advance_pointer(
         out_root, run_dir, digest,

@@ -14,10 +14,14 @@ Local smoke (this sandbox):
     python run_pipeline.py --master 'local[8]' \
         --input <fixture>/repo_files.parquet --run-dir /tmp/run1
 
+Each mode runs its stage graph — the batch graph of plans.matcher or the
+delta graph of plans.incremental, the same graphs the in-memory plans run —
+through checkpointed parquet stages (plans.pipeline).
+
 Incremental (delta) mode — link new records against a prior run's output
 without re-scoring the corpus (plans.incremental), staged + resumable
 (plans.pipeline.run_delta_pipeline). Point --input at the prior RUN DIR to
-reuse its persisted catalog state (the delta-proportional path); each delta
+reuse its persisted catalog state (the delta-proportional path); every delta
 run_dir maintains the state, so ingests chain:
 
     python run_pipeline.py --master 'local[8]' \
@@ -27,7 +31,8 @@ run_dir maintains the state, so ingests chain:
         --run-dir /tmp/run1_d2
 
 A bare entities parquet path also works as --input: the catalog state is
-then derived in-run (checkpointed — paid once, resume skips it).
+then derived in-run (checkpointed — paid once, resume skips it), and the
+run_dir becomes a state the next --delta can chain from.
 
 When the master comes from the spark-submit CLI instead of ``--master``,
 this script defers ALL memory sizing to spark-submit (on a cluster the
@@ -82,11 +87,6 @@ def main(argv: list[str] | None = None) -> int:
                          "labels come from the state manifest's labels "
                          "chain, never the (partial) entities_delta sink, "
                          "which catalog_entities_path refuses to serve")
-    ap.add_argument("--no-maintain-state", action="store_true",
-                    help="with --delta: skip writing the updated catalog "
-                         "state (token_df / sn_index / state.json) into the "
-                         "run_dir; the run_dir is then not usable as the "
-                         "next delta's catalog state")
     ap.add_argument("--master", default=None,
                     help="only for local runs; omit under spark-submit")
     ap.add_argument("--shuffle-partitions", type=int, default=None)
@@ -94,7 +94,6 @@ def main(argv: list[str] | None = None) -> int:
     for flag, name in (
         (args.token_only, "--token-only"),
         (args.emit_delta, "--emit-delta"),
-        (args.no_maintain_state, "--no-maintain-state"),
     ):
         if flag and not args.delta:
             # Reject flags that would otherwise be silently ignored.
@@ -148,7 +147,6 @@ def main(argv: list[str] | None = None) -> int:
             sn=not args.token_only,
             state=state,
             emit="delta" if args.emit_delta else "full",
-            maintain_state=not args.no_maintain_state,
         )
         entities = run.entities
         summary = {

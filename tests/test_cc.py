@@ -59,6 +59,15 @@ def test_cc_chain_and_isolated(spark):
     assert res.iterations <= 10
 
 
+def test_cc_raises_at_iteration_cap(spark):
+    """One round cannot collapse the 31-node chain into stars: CC must raise
+    rather than return min-labels that are not the transitive closure."""
+    chain = [(f"c{i:03d}", f"c{i+1:03d}") for i in range(30)]
+    edf = spark.createDataFrame(chain, ["src", "dst"])
+    with pytest.raises(RuntimeError, match=r"max_iterations=1: \d+ live edges"):
+        connected_components(edf, max_iterations=1)
+
+
 def test_star_steps_preserve_components(spark):
     edges = [("a", "b"), ("b", "c"), ("d", "e"), ("x", "a")]
     df = spark.createDataFrame(edges, ["src", "dst"])

@@ -1,11 +1,15 @@
 """State-based (delta-proportional) incremental ingest — plans.catalog_state
-+ the state branch of plans.incremental + the staged delta pipeline.
++ the delta graph of plans.incremental + the staged delta pipeline.
+
+The references are the batch operators, which share no code with the delta
+path.
 
 Contract under test:
-- the state path produces EXACTLY the self-contained path's entity table
-  (which test_incremental.py already pins against batch refinement);
-- the sorted-catalog SN pass reproduces the full-union-sort pair set
-  restricted to delta-touching pairs, without sorting the corpus;
+- the state path produces EXACTLY the batch entity table over catalog ∪
+  delta (test_incremental.py shows the two agree on this split);
+- the token pass reproduces batch token blocking over the union, and the
+  sorted-catalog SN pass the full-union-sort pair set, each restricted to
+  delta-touching pairs, without sorting the corpus;
 - the candidate set S is delta-proportional (|S| ≤ |delta| · (2w − 1));
 - maintained state (token_df / sn_index) equals a from-scratch rebuild;
 - the blocking plan never reads the catalog's content column (plan gate);
@@ -24,12 +28,16 @@ from codingchallenge_spark.functions.normalize import (
     normalize_records,
     with_token_hashes,
 )
-from codingchallenge_spark.operators.blocking import sorted_neighborhood
+from codingchallenge_spark.operators.blocking import (
+    sorted_neighborhood,
+    token_blocking,
+)
 from codingchallenge_spark.plans import catalog_state as cstate
 from codingchallenge_spark.plans.incremental import (
     _delta_sn_candidates,
     delta_sn_pairs,
     incremental_candidate_pairs,
+    incremental_token_pairs_state,
     resolve_entities_incremental,
 )
 from codingchallenge_spark.plans.matcher import MatcherConfig, resolve_entities
@@ -122,24 +130,29 @@ def work_new(spark, catalog, split_corpus):
 
 
 @pytest.fixture(scope="module")
-def inc_nostate(spark, catalog, split_corpus):
-    _, new = split_corpus
-    df = resolve_entities_incremental(catalog, new, MatcherConfig()).cache()
+def batch_union(spark, split_corpus):
+    """The batch matcher over catalog ∪ delta: the reference entity table."""
+    old, new = split_corpus
+    df = resolve_entities(old.unionByName(new), MatcherConfig()).cache()
     df.count()
     return df
 
 
-def test_state_path_equals_self_contained(spark, catalog, split_corpus, state, inc_nostate):
+def test_state_path_equals_batch(spark, catalog, split_corpus, state, batch_union):
     _, new = split_corpus
     st, _ = state
     inc = resolve_entities_incremental(catalog, new, MatcherConfig(), state=st)
-    assert _partition(inc) == _partition(inc_nostate)
+    assert _partition(inc) == _partition(batch_union)
     # and the content invariant rides through the persisted-norm emit
     bad = inc.filter(F.sha2("content", 256) != F.col("content_sha")).count()
     assert bad == 0
 
 
-def test_state_token_only_equals_self_contained(spark, catalog, split_corpus, state):
+def test_token_only_derived_state_equals_parquet_state(
+    spark, catalog, split_corpus, state
+):
+    """Token-only (sn=False) ingest: the state derived in memory from the
+    catalog rows links the delta exactly like the parquet-backed state."""
     _, new = split_corpus
     st, _ = state
     ref = resolve_entities_incremental(catalog, new, MatcherConfig(), sn=False)
@@ -149,38 +162,68 @@ def test_state_token_only_equals_self_contained(spark, catalog, split_corpus, st
     assert _partition(got) == _partition(ref)
 
 
+def _pair_rows(df) -> list[tuple[str, str, str]]:
+    return sorted(
+        (bytes(r.rid1).hex(), bytes(r.rid2).hex(), r.block_key)
+        for r in df.collect()
+    )
+
+
+def _union_work(st, work_new):
+    return st.norm.select(
+        F.col("rid_b").alias("rid"), "name_norm", "tokens",
+        F.lit(False).alias("is_new"),
+    ).unionByName(
+        work_new.select("rid", "name_norm", "tokens").withColumn(
+            "is_new", F.lit(True)
+        )
+    )
+
+
+def _touching_new(pairs, union_work):
+    """Restrict a batch pair relation to pairs with ≥ 1 new side."""
+    flags = union_work.select("rid", "is_new")
+    f1 = flags.select(F.col("rid").alias("rid1"), F.col("is_new").alias("_n1"))
+    f2 = flags.select(F.col("rid").alias("rid2"), F.col("is_new").alias("_n2"))
+    return (
+        pairs.join(f1, "rid1").join(f2, "rid2")
+        .filter(F.col("_n1") | F.col("_n2"))
+        .select("rid1", "rid2", "block_key")
+    )
+
+
+def test_delta_token_pairs_exact(spark, state, work_new):
+    """The postings-chain token pass = batch token blocking over the union
+    corpus restricted to pairs with ≥ 1 new side — as a MULTISET (one row
+    per shared cold token: meta-blocking counts them as overlap)."""
+    st, _ = state
+    assert st.tok_postings is not None  # the production catalog side
+    union_work = _union_work(st, work_new)
+    df_cap = 50
+    batch = token_blocking(union_work, df_cap=df_cap, dedupe=False)
+    want = _pair_rows(_touching_new(batch, union_work))
+    got = _pair_rows(incremental_token_pairs_state(st, work_new, df_cap=df_cap))
+    assert got == want
+    assert len(got) > 0  # non-vacuous on this corpus
+    # and the cap is live: some delta token is hot over the union
+    hot = (
+        union_work.select(F.explode("tokens").alias("tok"))
+        .groupBy("tok").count().filter(F.col("count") > df_cap)
+        .join(work_new.select(F.explode("tokens").alias("tok")), "tok", "left_semi")
+    )
+    assert hot.count() > 0
+
+
 def test_delta_sn_pairs_exact(spark, catalog, split_corpus, state, work_new):
     """The sorted-catalog SN pass = full union sort restricted to pairs with
     ≥ 1 new side — pair-level equality, the strongest form of the claim."""
     st, _ = state
-    union_work = (
-        st.norm.select(
-            F.col("rid_b").alias("rid"), "name_norm", F.lit(False).alias("is_new")
-        )
-        .unionByName(
-            work_new.select("rid", "name_norm").withColumn("is_new", F.lit(True))
-        )
-    )
+    union_work = _union_work(st, work_new)
     batch = sorted_neighborhood(union_work, window=SN_WINDOW, dedupe=True)
-    flags = union_work.select("rid", "is_new")
-    f1 = flags.select(F.col("rid").alias("rid1"), F.col("is_new").alias("_n1"))
-    f2 = flags.select(F.col("rid").alias("rid2"), F.col("is_new").alias("_n2"))
-    batch_new = (
-        batch.join(f1, "rid1").join(f2, "rid2")
-        .filter(F.col("_n1") | F.col("_n2"))
-        .select("rid1", "rid2", "block_key")
-    )
     got = delta_sn_pairs(
         st, work_new.select("rid", "name_norm"), window=SN_WINDOW
     ).dropDuplicates(["rid1", "rid2"])
-
-    def rows(df):
-        return {
-            (bytes(r.rid1).hex(), bytes(r.rid2).hex(), r.block_key)
-            for r in df.collect()
-        }
-
-    assert rows(got) == rows(batch_new)
+    assert _pair_rows(got) == _pair_rows(_touching_new(batch, union_work))
 
 
 def test_candidate_set_is_delta_proportional(spark, state, work_new):
@@ -211,7 +254,7 @@ def test_blocking_plan_reads_no_catalog_content(spark, state, work_new):
 
     for sn in (False, True):
         pairs = incremental_candidate_pairs(
-            None, MatcherConfig(), sn=sn, state=st, work_new=work_new
+            st, work_new, MatcherConfig(), sn=sn
         )
         plan = _plan(pairs)
         for cols in norm_scan_cols(plan):
@@ -242,23 +285,12 @@ def test_tok_postings_path_equals_fallback(spark, state, work_new):
     bucket is in the IN list."""
     import dataclasses
 
-    from codingchallenge_spark.plans.incremental import (
-        incremental_token_pairs_state,
-    )
-
     st, _ = state
     st_noidx = dataclasses.replace(st, tok_postings=None, tok_chain=None)
-
-    def rows(df):
-        return sorted(
-            (bytes(r.rid1).hex(), bytes(r.rid2).hex(), r.block_key)
-            for r in df.collect()
-        )
-
-    got = incremental_token_pairs_state(st, work_new, df_cap=50)
-    ref = incremental_token_pairs_state(st_noidx, work_new, df_cap=50)
-    assert rows(got) == rows(ref)
-    assert len(rows(got)) > 0  # non-vacuous on this corpus
+    got = _pair_rows(incremental_token_pairs_state(st, work_new, df_cap=50))
+    ref = _pair_rows(incremental_token_pairs_state(st_noidx, work_new, df_cap=50))
+    assert got == ref
+    assert len(got) > 0  # non-vacuous on this corpus
 
 
 def test_token_pass_plan_is_bucket_pruned(spark, state, work_new):
@@ -266,10 +298,6 @@ def test_token_pass_plan_is_bucket_pruned(spark, state, work_new):
     tok_index parquet with the tbucket IN literal REACHING the scan, and the
     catalog side never explodes the norm chain's token arrays (the norm
     parquet is absent from the token-pass plan entirely)."""
-    from codingchallenge_spark.plans.incremental import (
-        incremental_token_pairs_state,
-    )
-
     st, norm_path = state
     plan = _plan(incremental_token_pairs_state(st, work_new, df_cap=50))
     assert "tok_index" in plan, "catalog side must read the postings index"
@@ -347,7 +375,7 @@ def test_maintenance_plan_is_bucket_local(spark, state, catalog, split_corpus):
     assert "BroadcastNestedLoopJoin" not in cand_plan
 
 
-def test_emit_delta_is_exact_upsert(spark, catalog, split_corpus, state, inc_nostate):
+def test_emit_delta_is_exact_upsert(spark, catalog, split_corpus, state, batch_union):
     _, new = split_corpus
     st, _ = state
     up = resolve_entities_incremental(
@@ -356,7 +384,7 @@ def test_emit_delta_is_exact_upsert(spark, catalog, split_corpus, state, inc_nos
     up_rows = {(r.rid, r.entity_id) for r in up.select("rid", "entity_id").collect()}
     full_rows = {
         (r.rid, r.entity_id)
-        for r in inc_nostate.select("rid", "entity_id").collect()
+        for r in batch_union.select("rid", "entity_id").collect()
     }
     assert up_rows <= full_rows
     up_rids = {rid for rid, _ in up_rows}
@@ -369,7 +397,7 @@ def test_emit_delta_is_exact_upsert(spark, catalog, split_corpus, state, inc_nos
 
 
 def test_delta_pipeline_resumes_after_interruption(
-    spark, catalog, split_corpus, state, inc_nostate, tmp_path
+    spark, catalog, split_corpus, state, batch_union, tmp_path
 ):
     """VERDICT item: staged --delta checkpointing — kill after scoring,
     resume recomputes only the downstream suffix; fingerprints fold the
@@ -383,7 +411,7 @@ def test_delta_pipeline_resumes_after_interruption(
         spark, catalog, new, run_dir, MatcherConfig(), input_id="cat1", state=st
     )
     assert r1.skipped == []
-    assert _partition(r1.entities) == _partition(inc_nostate)
+    assert _partition(r1.entities) == _partition(batch_union)
 
     # interruption: downstream of scoring lost
     for stg in ("edges_delta", "cc_delta", "entities_delta"):
@@ -394,7 +422,7 @@ def test_delta_pipeline_resumes_after_interruption(
     )
     assert "normalize_delta" in r2.skipped and "score_delta" in r2.skipped
     assert r2.executed[:3] == ["edges_delta", "cc_delta", "entities_delta"]
-    assert _partition(r2.entities) == _partition(inc_nostate)
+    assert _partition(r2.entities) == _partition(batch_union)
 
     # catalog identity is part of every fingerprint
     r3 = run_delta_pipeline(
@@ -402,3 +430,21 @@ def test_delta_pipeline_resumes_after_interruption(
         state=st, resume=True,
     )
     assert "normalize_delta" in r3.executed
+
+
+def test_delta_pipeline_refuses_state_without_chains(spark, split_corpus, state, tmp_path):
+    """Every delta run maintains the catalog state, so a state without chain
+    paths (an in-memory one) is refused before any stage is written."""
+    import dataclasses
+
+    from codingchallenge_spark.plans.pipeline import run_delta_pipeline
+
+    _, new = split_corpus
+    st, _ = state
+    rd = tmp_path / "d"
+    with pytest.raises(ValueError, match="parquet-backed"):
+        run_delta_pipeline(
+            spark, None, new, str(rd), MatcherConfig(),
+            state=dataclasses.replace(st, sn_chain=None),
+        )
+    assert not (rd / "normalize_delta").exists()

@@ -7,7 +7,8 @@ Contract under test:
   the full-emit chain's entity table exactly (the labels overlay resolves
   "latest element containing a rid wins");
 - ``catalog_entities_path`` REFUSES a delta-emit run_dir's partial sink —
-  both the manifest-recorded form and the no-manifest EMIT_DELTA marker;
+  both the manifest-recorded form and the EMIT_DELTA marker of older
+  run_dirs that have no manifest;
 - ``compact_state`` folds the three chains back to single elements and the
   compacted dir chains a further delta identically to the uncompacted one.
 """
@@ -123,21 +124,23 @@ def test_catalog_entities_path_refuses_delta_emit(spark, delta_chain):
             catalog_entities_path(rd)
 
 
-def test_emit_delta_marker_without_manifest(
-    spark, corpus3, catalog_run, tmp_path
-):
-    """--emit-delta --no-maintain-state leaves no manifest; the EMIT_DELTA
-    marker still makes the partial sink refuse to serve as a catalog."""
-    da = corpus3[1]
-    rd = str(tmp_path / "nm")
-    run_delta_pipeline(
-        spark, None, da, rd, CFG, input_id="nm",
-        state=cstate.load_catalog_state(spark, catalog_run),
-        emit="delta", maintain_state=False,
+def test_emit_delta_marker_without_manifest(spark, delta_chain, tmp_path):
+    """A delta-emit run_dir without a state.json — the shape older runs
+    left when they skipped state maintenance — is refused through its
+    EMIT_DELTA marker alone."""
+    import shutil
+
+    d1, _ = delta_chain
+    rd = tmp_path / "nm"
+    shutil.copytree(d1, rd)
+    (rd / "state.json").unlink()
+    # No manifest and no marker: nothing tells the upsert set apart.
+    assert catalog_entities_path(str(rd)) == str(rd / "entities_delta")
+    (rd / "EMIT_DELTA").write_text(
+        "entities_delta is an upsert set (emit='delta'), not a catalog\n"
     )
-    assert (Path(rd) / "EMIT_DELTA").exists()
     with pytest.raises(ValueError, match="emit='delta'"):
-        catalog_entities_path(rd)
+        catalog_entities_path(str(rd))
 
 
 def test_compact_state_folds_chains_and_chains_on(
@@ -233,6 +236,18 @@ def test_compact_state_builds_and_rebuckets_tok_index(
         for r in st2.tok_postings.select("tok", "rid").collect()
     )
     assert a == b
+
+
+def test_compact_state_refuses_bucket_counts_below_one(
+    spark, catalog_run, tmp_path
+):
+    """An explicit 0 is a bad value, not "unset": compaction raises before
+    it writes anything."""
+    for kwargs in ({"tok_buckets": 0}, {"num_buckets": 0}):
+        out = tmp_path / next(iter(kwargs))
+        with pytest.raises(ValueError, match=">= 1"):
+            cstate.compact_state(spark, catalog_run, str(out), **kwargs)
+        assert not (out / "state.json").exists()
 
 
 def test_legacy_th32_catalog_takes_a_delta(spark, corpus3, catalog_run, tmp_path):

@@ -329,18 +329,75 @@ def test_ivf_ann_cell_join_guarded(spark):
     _assert_selfjoin_guarded(ivf_topk(emb, k=5, assign="arrow"), "ivf_topk")
 
 
-def test_incremental_token_join_guarded(spark, tiny_records):
-    """The delta-side token join is the same exploded-relation shape whose
-    size estimate Catalyst gets wrong (commits ce2a8c6/05fcdda): the corpus
-    side must shuffle, never broadcast."""
-    from codingchallenge_spark.plans.incremental import incremental_token_pairs
+def _broadcast_subtrees(plan: str) -> list[str]:
+    """Each BroadcastExchange node of a `simple` plan with its subtree (the
+    lines below it that sit deeper in the tree)."""
+    lines = plan.splitlines()
 
-    work = normalize_records(tiny_records).select(
-        "rid", "name_norm", "tokens", (F.crc32("rid") % 7 == 0).alias("is_new")
+    def depth(line: str) -> int:
+        return len(line) - len(line.lstrip(" :+-"))
+
+    out = []
+    for i, line in enumerate(lines):
+        if "BroadcastExchange" in line:
+            sub = [line]
+            for nxt in lines[i + 1:]:
+                if depth(nxt) <= depth(line):
+                    break
+                sub.append(nxt)
+            out.append("\n".join(sub))
+    return out
+
+
+def test_incremental_token_join_guarded(spark, tiny_records, tmp_path):
+    """The delta⋈catalog token join has the exploded-relation shape whose
+    size estimate Catalyst gets wrong (commits ce2a8c6/05fcdda): it must
+    shuffle, and no broadcast may carry the catalog side — neither the
+    postings scan nor the norm scan the pre-postings fallback explodes."""
+    import dataclasses
+
+    from codingchallenge_spark.functions.normalize import work_projection
+    from codingchallenge_spark.plans import catalog_state as cstate
+    from codingchallenge_spark.plans.incremental import (
+        incremental_token_pairs_state,
     )
-    _assert_selfjoin_guarded(
-        incremental_token_pairs(work, df_cap=100), "incremental_token_pairs"
+
+    norm = with_token_hashes(normalize_records(tiny_records)).withColumn(
+        "rid_b", F.unhex("rid")
     )
+    is_new = F.crc32("rid") % 7 == 0
+    norm_path, idx_path = str(tmp_path / "norm"), str(tmp_path / "tok_index")
+    norm.filter(~is_new).write.parquet(norm_path)
+    cat = spark.read.parquet(norm_path)
+    cstate.build_token_df(cat).write.parquet(str(tmp_path / "token_df"))
+    cstate.build_tok_postings(cat, 16).write.parquet(idx_path)
+    st = cstate.CatalogState(
+        norm=cat,
+        token_df=spark.read.parquet(str(tmp_path / "token_df")),
+        sn_index=None,
+        sn_bounds=None,
+        tok_postings=spark.read.parquet(idx_path),
+        tok_buckets=16,
+    )
+    work_new = work_projection(norm.filter(is_new))
+    for label, s in (
+        ("postings", st),
+        ("norm fallback", dataclasses.replace(st, tok_postings=None)),
+    ):
+        plan = _simple_plan(incremental_token_pairs_state(s, work_new, df_cap=100))
+        assert "ShuffledHashJoin" in plan, f"{label}: tok join not shuffle-hash:\n{plan}"
+        # A catalog scan is recognised by its path or, should the plan
+        # string truncate the path, by the columns it reads.
+        catalog_scan = re.compile(
+            re.escape(idx_path) + "|" + re.escape(norm_path)
+            + r"|FileScan parquet \[[^\]]*\b(tbucket|tokens)#"
+        )
+        for sub in _broadcast_subtrees(plan):
+            assert not catalog_scan.search(sub), (
+                f"{label}: catalog scan on a broadcast build side:\n{sub}\n{plan}"
+            )
+        assert "BroadcastNestedLoopJoin" not in plan, label
+        assert "CartesianProduct" not in plan, label
 
 
 def test_exchange_count_in_token_blocking(spark, tiny_records):
