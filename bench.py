@@ -16,8 +16,9 @@ large-star/small-star CC), the relational core (scan/filter/join/agg/window),
 token blocking's explode + self-join shuffle shape, MinHash-LSH dedup, text
 quality metrics, and brute-force cosine top-k over embeddings.
 
-Scaling-efficiency evidence (local[8] vs local[32]) is produced separately by
-``scripts/bench_scaling.py`` and recorded in ``BENCH/BASELINE.md``.
+Scaling-efficiency evidence (local[8] vs local[32]) is recorded in
+``BENCH/BASELINE.md``; per-layer numbers come from
+``python3 perfbench/run.py --trace 1``.
 """
 
 from __future__ import annotations

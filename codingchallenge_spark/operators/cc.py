@@ -21,49 +21,50 @@ Scale notes: every round shuffles on node id — 32-byte binary sha256 record
 ids (the pipeline unhexes the 64-char hex form once after normalize), i.e.
 uniformly distributed keys; skew only arises from genuinely huge components,
 which the star construction itself flattens logarithmically. AQE handles the
-rest. No driver-side iteration over data — the only per-round action is the
-O(1)-result star-set convergence count, which doubles as the job that
-materializes the round's lazy localCheckpoint and (via ``observe``) reports
-the live edge count for free. That count drives per-round ADAPTIVE
-PARALLELISM: when the edge set is small relative to the configured shuffle
-partitions, each round's exchanges are re-targeted to
-ceil(edges / target_rows_per_partition) partitions instead — explicit
-``repartition(n, key)`` satisfies the window/aggregate distribution
-requirement, so the exchange count per round is unchanged; only the task
-count shrinks. At scale the computed n hits the configured ceiling and the
-plans are bit-identical to the non-adaptive form (map-side partial
-aggregation preserved); in the small regime — local runs, and the tail
-rounds of a converging production job, whose active set shrinks
-geometrically — per-round wall stops paying for empty tasks. Paired A/B on
-the 100k bench fixture (143k edges, 64 shuffle partitions): a sweep over
-round widths bottoms at n≈4-8 (2.10s vs 2.50s CC stage wall at local[32]);
-the 25k-rows/partition default picks that region, is a wash at local[8]
-(1.68 vs 1.70s), and cures the stage's local anti-scaling (pre-change the CC
-stage ran SLOWER at 32 cores than at 8).
+rest. The only per-round action is the O(1)-result star-set convergence
+count, which doubles as the job that materializes the round's lazy
+localCheckpoint and (via ``observe``) reports the live edge count for free.
+
+DRIVER FINISH: a distributed round costs a handful of jobs whatever the edge
+count, so a graph that fits on the driver is cheaper closed there. The bound
+(:func:`_driver_edge_bound`) is the collect limit the driver already enforces,
+``spark.driver.maxResultSize`` (or ``spark.driver.memory`` when that is
+unlimited), divided by a per-edge byte budget. Before round 1 CC collects at
+most bound+1 canonical edges; at most bound rows is the whole graph and no
+distributed round runs. Otherwise rounds run as above, and after every
+non-converged star test whose live count is within the bound the remaining
+edges are collected and closed on the driver — star steps preserve
+components, so the closure of any round's edge set is the closure of the
+input (:func:`_closure_on_driver`).
 """
 
 from __future__ import annotations
 
-import math
 from dataclasses import dataclass
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
+# Driver bytes budgeted per collected edge: two 32-byte ids with their Arrow
+# offsets, plus the dense-id and numpy working arrays of the closure.
+_DRIVER_BYTES_PER_EDGE = 256
 
-def _canon_edges(edges: DataFrame, num_partitions: int | None = None) -> DataFrame:
+
+def _canon_edges(edges: DataFrame) -> DataFrame:
     """Undirected canonical form: src < dst, no self-loops, deduped."""
-    out = edges.select(
-        F.least("src", "dst").alias("src"), F.greatest("src", "dst").alias("dst")
-    ).filter(F.col("src") != F.col("dst"))
-    if num_partitions is not None:
-        # Replaces (not adds to) the dedup's implicit exchange: hash
-        # partitioning on the dedup keys satisfies its required distribution.
-        out = out.repartition(num_partitions, "src", "dst")
-    return out.dropDuplicates(["src", "dst"])
+    return (
+        edges.select(
+            F.least("src", "dst").alias("src"), F.greatest("src", "dst").alias("dst")
+        )
+        .filter(F.col("src") != F.col("dst"))
+        .dropDuplicates(["src", "dst"])
+    )
 
 
-def _large_star_raw(edges: DataFrame, num_partitions: int | None = None) -> DataFrame:
+def _large_star_raw(edges: DataFrame) -> DataFrame:
     """Large-star body without canonicalization (duplicates possible, rows
     oriented (larger, min)). The per-u minimum is a whole-partition window
     min — ONE exchange of the symmetric edge list, where the groupBy+join
@@ -73,8 +74,6 @@ def _large_star_raw(edges: DataFrame, num_partitions: int | None = None) -> Data
     sym = edges.unionByName(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
-    if num_partitions is not None:
-        sym = sym.repartition(num_partitions, "src")
     w = Window.partitionBy("src")
     return (
         sym.withColumn("m", F.least(F.col("src"), F.min("dst").over(w)))
@@ -89,7 +88,7 @@ def large_star(edges: DataFrame) -> DataFrame:
     return _canon_edges(_large_star_raw(edges))
 
 
-def _small_star_raw(edges: DataFrame, num_partitions: int | None = None) -> DataFrame:
+def _small_star_raw(edges: DataFrame) -> DataFrame:
     """Small-star body without canonicalization. One ordered window per
     directed edge list yields both the per-src minimum (first dst in order)
     and a row_number that emits the (src → m) center edge exactly once —
@@ -107,8 +106,6 @@ def _small_star_raw(edges: DataFrame, num_partitions: int | None = None) -> Data
     directed = edges.select(
         F.greatest("src", "dst").alias("src"), F.least("src", "dst").alias("dst")
     )
-    if num_partitions is not None:
-        directed = directed.repartition(num_partitions, "src")
     w = Window.partitionBy("src").orderBy("dst")
     ranked = directed.withColumn("rn", F.row_number().over(w)).withColumn(
         "m", F.first("dst").over(w)
@@ -131,9 +128,7 @@ def small_star(edges: DataFrame) -> DataFrame:
     return _canon_edges(_small_star_raw(edges))
 
 
-def _star_test_and_count(
-    edges: DataFrame, num_partitions: int | None = None
-) -> tuple[bool, int]:
+def _star_test_and_count(edges: DataFrame) -> tuple[bool, int]:
     """Exact fixpoint test (G3), one action — also returns the edge count.
 
     A canonical edge set (src<dst, deduped) is stable under
@@ -152,7 +147,7 @@ def _star_test_and_count(
     The edge count rides the same action as an ``observe`` metric on the
     roles relation (exactly 2 rows per edge, consumed once — observing
     ``edges`` itself would double-count, since the union scans it twice);
-    it costs nothing and feeds the next round's adaptive partition sizing.
+    it costs nothing and decides whether the next step is a driver finish.
     """
     obs = Observation()
     roles = edges.select(
@@ -160,11 +155,6 @@ def _star_test_and_count(
     ).unionByName(
         edges.select(F.col("dst").alias("node"), F.lit(0).alias("s"), F.lit(1).alias("d"))
     ).observe(obs, F.count(F.lit(1)).alias("rows2x"))
-    if num_partitions is not None:
-        # Small regime only (see _adaptive_partitions): losing map-side
-        # partial aggregation is irrelevant at these sizes, bounding the task
-        # count is what matters.
-        roles = roles.repartition(num_partitions, "node")
     viol = (
         roles.groupBy("node")
         .agg(F.max("s").alias("s"), F.sum("d").alias("d"))
@@ -180,8 +170,8 @@ def _star_test_and_count(
         # ⇒ converged=True, and the caller only consumes the count when NOT
         # converged — 0 is exact there. Any OTHER failure must surface: on a
         # non-converged round a swallowed error would feed n_edges=0 to the
-        # adaptive sizing and silently serialize the next round's shuffles
-        # of a possibly huge edge set into one partition.
+        # driver-finish gate and collect a possibly huge edge set on the
+        # driver.
         if not converged:
             raise
         n_edges = 0
@@ -194,29 +184,60 @@ def _is_star_set(edges: DataFrame) -> bool:
     return _star_test_and_count(edges)[0]
 
 
-def _adaptive_partitions(
-    n_edges: int, spark, target_rows_per_partition: int
-) -> int | None:
-    """Per-round exchange width: ceil(edges / target), floored at 1, capped
-    at the configured shuffle-partition count. Returns None at or above the
-    cap — the round then compiles to exactly the non-adaptive plan (implicit
-    exchanges, map-side partial agg preserved), so production-scale behavior
-    is untouched; only the small regime (local runs, the geometrically
-    shrinking tail rounds of a converging job) gets narrower exchanges."""
-    try:
-        ceiling = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except (TypeError, ValueError):  # e.g. "auto" on some platforms
-        return None
-    n = max(1, math.ceil(n_edges / target_rows_per_partition))
-    return n if n < ceiling else None
+def _driver_edge_bound(spark) -> int:
+    """Most edges CC collects to the driver: the driver's collect limit
+    (``spark.driver.maxResultSize``; ``spark.driver.memory`` when that is 0,
+    i.e. unlimited) over :data:`_DRIVER_BYTES_PER_EDGE` — ~8M edges at the
+    2g that ``build_session`` sets; capped so bound + 1 fits the int that
+    ``Dataset.limit`` takes."""
+    conf = spark.sparkContext._jsc.getConf()
+    limit = conf.getSizeAsBytes("spark.driver.maxResultSize", "1g")
+    if limit == 0:
+        limit = conf.getSizeAsBytes("spark.driver.memory", "1g")
+    return min(limit // _DRIVER_BYTES_PER_EDGE, 2**31 - 2)
+
+
+def _closure_on_driver(spark, edges: pa.Table) -> DataFrame:
+    """Min-id labels [rid, entity_id] of every node of a collected edge set.
+
+    Ids map to dense ints in Spark's order (sorted unique ids: Arrow compares
+    binary and UTF-8 bytewise, unsigned — as Spark does), so the min dense
+    int of a component is its min id. Closure is root hooking with pointer
+    jumping: each pass hooks the larger root of every edge under the smaller
+    (``np.minimum.at``), drops edges whose roots agree, and jumps
+    ``par = par[par]`` to a fixpoint. Parents only decrease, so there are no
+    cycles and each component's root is its minimum. Unlike per-node
+    min-label propagation, whose sweeps grow with the diameter, the pass
+    count stays small on long chains."""
+    ids = pa.chunked_array(
+        edges["src"].chunks + edges["dst"].chunks, type=edges.schema.field("src").type
+    )
+    uniq = pc.unique(ids)
+    uniq = uniq.take(pc.sort_indices(uniq))
+    u = pc.index_in(edges["src"], value_set=uniq).to_numpy()
+    v = pc.index_in(edges["dst"], value_set=uniq).to_numpy()
+    par = np.arange(len(uniq))
+    while len(u):
+        np.minimum.at(par, np.maximum(u, v), np.minimum(u, v))
+        while True:
+            nxt = par[par]
+            if np.array_equal(nxt, par):
+                break
+            par = nxt
+        u, v = par[u], par[v]
+        live = u != v
+        u, v = u[live], v[live]
+    # Arrow string/binary columns map back to Spark string/binary.
+    return spark.createDataFrame(pa.table({"rid": uniq, "entity_id": uniq.take(par)}))
 
 
 @dataclass
 class CCResult:
-    """``iterations`` counts the rounds run, including the round whose star
-    test proved convergence — an input that is already converged reports
-    ``iterations=1``. ``converged`` is always True: :func:`connected_components`
-    raises instead of returning labels it did not converge to."""
+    """``iterations`` counts the distributed rounds run, including the round
+    whose star test proved convergence; a graph closed on the driver before
+    round 1 reports ``iterations=0``. ``converged`` is always True:
+    :func:`connected_components` raises instead of returning labels it did
+    not converge to."""
 
     labels: DataFrame  # [rid, entity_id]
     iterations: int
@@ -228,95 +249,68 @@ def connected_components(
     nodes: DataFrame | None = None,
     max_iterations: int = 25,
     iter_dir: str | None = None,
-    target_rows_per_partition: int | None = 25_000,
 ) -> CCResult:
     """G1-G5 — labels[rid, entity_id] with entity_id = min rid in component.
 
     ``nodes`` (DataFrame with column ``rid``) adds isolated records, which
-    label themselves. ``iter_dir`` (optional) persists each round's edge set
-    as parquet for mid-stage resume. ``target_rows_per_partition`` sizes each
-    round's exchanges to the LIVE edge count (observed for free on the
-    previous convergence action) — None disables adaptive sizing. Raises
-    ``RuntimeError`` when ``max_iterations`` rounds do not converge.
+    label themselves. ``iter_dir`` (optional) persists each distributed
+    round's edge set as parquet for mid-stage resume. An edge set within
+    :func:`_driver_edge_bound` (the input, or the live set after a round) is
+    closed on the driver. Raises ``RuntimeError`` when ``max_iterations``
+    rounds neither converge nor shrink the edge set within the bound.
     """
     spark = edges.sparkSession
+    bound = _driver_edge_bound(spark)
     # Lazy local checkpoint: the lineage still truncates (G4), but the data is
-    # materialized by the star-test action itself — one job per round instead
-    # of an eager-checkpoint job plus a fingerprint job.
+    # materialized by the first action on it, the gate's collect.
     cur = _canon_edges(edges.select("src", "dst")).localCheckpoint(eager=False)
-    iterations = 0
-    converged = False
-    n_edges: int | None = None
-    # Round 6: no up-front star test. The old loop spent one full job testing
-    # the INPUT before round 1; star steps are identity on a converged set,
-    # so running round 1 unconditionally returns the same edges (and labels)
-    # while the test rides round 1's own action — one job saved on every
-    # invocation, at worst one identity round on an already-converged input.
-    # Round 1 is sized at the configured ceiling (n=None) because no observed
-    # count exists yet — exactly the non-adaptive production plan.
-    #
-    # Small-regime rounds (adaptive n fired, i.e. the live edge set is below
-    # the partition ceiling) additionally run with AQE DISABLED: under AQE
-    # every exchange materializes as its own mini-job with driver re-planning
-    # between stages, which at these sizes is pure per-round latency — the
-    # round's exchanges are already explicitly sized by n, so AQE has nothing
-    # left to decide (coalescing is redundant, and rounds contain no joins
-    # for skew-split to act on). Production-width rounds (n=None) keep AQE
-    # untouched. Measured ~0.2 s/round on the sf1.0 flagship tail. The flag
-    # is restored in a finally even on job failure.
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    try:
-        while not converged and iterations < max_iterations:
-            iterations += 1
-            n = (
-                _adaptive_partitions(n_edges, spark, target_rows_per_partition)
-                if target_rows_per_partition and n_edges is not None
-                else None
-            )
-            spark.conf.set(
-                "spark.sql.adaptive.enabled",
-                "false" if n is not None else prev_aqe,
-            )
-            # Raw composition: one canon (dedup shuffle) per round, not two —
-            # small-star's min is duplicate-insensitive, so large-star's
-            # intermediate dedup would buy nothing.
-            nxt = _canon_edges(_small_star_raw(_large_star_raw(cur, n), n), n)
-            if iter_dir is not None:
-                path = f"{iter_dir}/edges_iter_{iterations:03d}.parquet"
-                nxt.write.mode("overwrite").parquet(path)
-                nxt = spark.read.parquet(path)
-            else:
-                nxt = nxt.localCheckpoint(eager=False)
-            converged, n_edges = _star_test_and_count(nxt, n)
-            cur = nxt
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
+    head = cur.limit(bound + 1).toArrow()
+    labels = _closure_on_driver(spark, head) if head.num_rows <= bound else None
+    del head  # up to bound + 1 edges held on the driver
+    iterations, converged, n_edges = 0, False, None
+    while labels is None and not converged and iterations < max_iterations:
+        iterations += 1
+        # Raw composition: one canon (dedup shuffle) per round, not two —
+        # small-star's min is duplicate-insensitive, so large-star's
+        # intermediate dedup would buy nothing.
+        nxt = _canon_edges(_small_star_raw(_large_star_raw(cur)))
+        if iter_dir is not None:
+            path = f"{iter_dir}/edges_iter_{iterations:03d}.parquet"
+            nxt.write.mode("overwrite").parquet(path)
+            nxt = spark.read.parquet(path)
+        else:
+            nxt = nxt.localCheckpoint(eager=False)
+        converged, n_edges = _star_test_and_count(nxt)
+        cur = nxt
+        if not converged and n_edges <= bound:
+            labels = _closure_on_driver(spark, cur.toArrow())
 
-    if not converged:
-        # The min-labels of a non-star edge set are not the transitive
-        # closure: returning them would silently split entities.
-        raise RuntimeError(
-            f"connected_components did not converge within max_iterations="
-            f"{max_iterations}: {n_edges} live edges remain"
+    if labels is None:
+        if not converged:
+            # The min-labels of a non-star edge set are not the transitive
+            # closure: returning them would silently split entities.
+            raise RuntimeError(
+                f"connected_components did not converge within max_iterations="
+                f"{max_iterations}: {n_edges} live edges remain"
+            )
+        # At the fixpoint every component is a star centered at its min node:
+        # labels = (dst → src) ∪ (src → src).
+        member = cur.select(F.col("dst").alias("rid"), F.col("src").alias("entity_id"))
+        # Exact BY the star-set property the convergence test just proved: no
+        # dst occurs twice and no node is both src and dst — so member rows
+        # are already unique per rid and the only duplicates are the per-edge
+        # center rows. A keys-only dedup of the centers replaces a
+        # groupBy-min: min() over a binary column is not hash-aggregatable
+        # (immutable agg buffer), so that form pays a SortAggregate over the
+        # whole member ∪ center relation; the dedup runs as a plain
+        # HashAggregate over the (far smaller) center set. Output multiset is
+        # identical (proved by the same property).
+        center = (
+            cur.select("src")
+            .dropDuplicates(["src"])
+            .select(F.col("src").alias("rid"), F.col("src").alias("entity_id"))
         )
-    # At the fixpoint every component is a star centered at its min node:
-    # labels = (dst → src) ∪ (src → src) ∪ isolated self-labels.
-    member = cur.select(F.col("dst").alias("rid"), F.col("src").alias("entity_id"))
-    # Exact BY the star-set property the convergence test just proved: no
-    # dst occurs twice and no node is both src and dst — so member rows are
-    # already unique per rid and the only duplicates are the per-edge
-    # center rows. A keys-only dedup of the centers replaces a groupBy-min:
-    # min() over a binary column is not hash-aggregatable (immutable agg
-    # buffer), so that form pays a SortAggregate over the whole member ∪
-    # center relation; the dedup runs as a plain HashAggregate over the (far
-    # smaller) center set. Output multiset is identical (proved by the same
-    # property).
-    center = (
-        cur.select("src")
-        .dropDuplicates(["src"])
-        .select(F.col("src").alias("rid"), F.col("src").alias("entity_id"))
-    )
-    labels = member.unionByName(center)
+        labels = member.unionByName(center)
     if nodes is not None:
         labels = (
             nodes.select("rid")
@@ -326,4 +320,4 @@ def connected_components(
                 "rid", F.coalesce("entity_id", F.col("rid")).alias("entity_id")
             )
         )
-    return CCResult(labels=labels, iterations=iterations, converged=converged)
+    return CCResult(labels=labels, iterations=iterations, converged=True)

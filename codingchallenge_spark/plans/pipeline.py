@@ -315,9 +315,7 @@ def run_pipeline(
         state = cstate.derive_catalog_state(stage, norm, cfg)
         stage("sn_bounds", ["sn_index"], lambda: state.sn_bounds)
 
-    # Both sides read only the normalize stage. CC (matching side) toggles
-    # the session's AQE flag; it runs in no other branch, so that toggle
-    # keeps one owner.
+    # Both sides read only the normalize stage.
     entities, _ = ckpt.run_parallel(
         spark, lambda: matching_stages(stage, norm, cfg, cc=build_cc),
         catalog_state,
@@ -473,8 +471,7 @@ def run_delta_pipeline(
         return touched_ids, tok_chain_next
 
     # The maintenance branch depends only on normalize_delta and the prior
-    # state. CC runs on the delta-chain side only, so its session-level AQE
-    # toggle keeps one owner.
+    # state.
     entities, (touched_ids, tok_chain_next) = ckpt.run_parallel(
         spark,
         lambda: inc.delta_stages(stage, state, norm_delta, cfg, sn=sn, emit=emit),

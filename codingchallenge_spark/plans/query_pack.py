@@ -618,11 +618,13 @@ def q_jaccard_pairs(spark, sf_dir):
     # (size ints unchanged → identical IEEE result; null/empty handling
     # identical: any null side nulls the guard and falls to the 1.0 branch,
     # exactly like size(array_union(null, x))). Measured 9.2 s → 0.65 s at
-    # sf1.0 (floor 9.2→0.9, kernel 0.9→0.65).
+    # sf1.0 (floor 9.2→0.9, kernel 0.9→0.65). ``n`` is null, not size(null),
+    # for a null text: with ANSI mode off size(null) is −1, which would turn
+    # the 1.0 branch into a negative jaccard.
     d = _t_par(spark, sf_dir, "documents").select(
         "doc_id", "lang", "n_chars",
         F.array_distinct(F.split("text", " ")).alias("toks"),
-    ).withColumn("n", F.size("toks"))
+    ).withColumn("n", F.when(F.col("toks").isNotNull(), F.size("toks")))
     a, b = d.alias("a"), d.alias("b")
     paired = a.join(
         b,
@@ -1267,6 +1269,10 @@ def _er_cte_body() -> str:
     via recursive reachability. Valid because every kernel is bitwise equal
     across engines on these inputs (name keys < 64 chars — the numpy kernels
     truncate at 64) and hashed jaccard has no 64-bit collisions here.
+
+    ``cand`` dedups explicitly: under ``WITH RECURSIVE`` DuckDB 1.0 plans a
+    plain ``… UNION …`` CTE as a recursive one and keeps duplicate rows, so a
+    pair proposed by both passes would count its shared tokens twice.
     """
     sw = ", ".join(f"'{w}'" for w in STOPWORDS)
     return f"""
@@ -1308,9 +1314,11 @@ sn_pairs AS (
   FROM sn_base a JOIN sn_base b ON b.pos - a.pos BETWEEN 1 AND 3
 ),
 cand AS (
-  SELECT rid1, rid2 FROM tok_pairs WHERE overlap >= 2
-  UNION
-  SELECT rid1, rid2 FROM sn_pairs
+  SELECT DISTINCT rid1, rid2 FROM (
+    SELECT rid1, rid2 FROM tok_pairs WHERE overlap >= 2
+    UNION ALL
+    SELECT rid1, rid2 FROM sn_pairs
+  )
 ),
 sz AS (SELECT rid, COUNT(*) AS n FROM tok GROUP BY rid),
 inter AS (

@@ -4,7 +4,10 @@ import networkx as nx
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
+from pyspark.sql import functions as F
+from pyspark.sql.conf import RuntimeConfig
 
+from codingchallenge_spark.operators import cc
 from codingchallenge_spark.operators.cc import (
     connected_components,
     large_star,
@@ -24,13 +27,21 @@ def _nx_labels(edges, nodes):
     return out
 
 
-def _run_cc(spark, edges, nodes):
+# Driver-edge bounds forcing the two closure paths: every graph closed on
+# the driver before round 1, and no driver finish at all (distributed rounds
+# to the star fixpoint).
+BOUNDS = (10**9, 0)
+
+
+def _run_cc(spark, edges, nodes, bound, **kw):
     edf = spark.createDataFrame(
         edges or [("__none__", "__none__")], ["src", "dst"]
     )
     ndf = spark.createDataFrame([(n,) for n in nodes], ["rid"])
-    res = connected_components(edf, nodes=ndf)
-    return {r.rid: r.entity_id for r in res.labels.collect()}, res
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(cc, "_driver_edge_bound", lambda _spark: bound)
+        res = connected_components(edf, nodes=ndf, **kw)
+        return {r.rid: r.entity_id for r in res.labels.collect()}, res
 
 
 edge_lists = st.lists(
@@ -43,29 +54,80 @@ edge_lists = st.lists(
 def test_cc_matches_networkx(spark, raw):
     edges = [(f"n{a:02d}", f"n{b:02d}") for a, b in raw]
     nodes = sorted({x for e in edges for x in e} | {"n00", "n41"})
-    got, _ = _run_cc(spark, edges, nodes)
     want = _nx_labels(edges, nodes)
-    assert got == want
+    for bound in BOUNDS:
+        got, _ = _run_cc(spark, edges, nodes, bound)
+        assert got == want, bound
 
 
 def test_cc_chain_and_isolated(spark):
     # A long chain stresses the O(log n) alternation; isolates self-label.
     chain = [(f"c{i:03d}", f"c{i+1:03d}") for i in range(30)]
     nodes = [f"c{i:03d}" for i in range(31)] + ["iso1", "iso2"]
-    got, res = _run_cc(spark, chain, nodes)
-    assert got == _nx_labels(chain, nodes)
-    assert res.converged
+    driver, rounds = (_run_cc(spark, chain, nodes, b) for b in BOUNDS)
+    for got, res in (driver, rounds):
+        assert got == _nx_labels(chain, nodes)
+        assert res.converged
+    assert driver[1].iterations == 0
     # log2(31) ≈ 5 — alternation must not need anywhere near 31 rounds.
-    assert res.iterations <= 10
+    assert 1 <= rounds[1].iterations <= 10
+
+
+def test_cc_driver_finish_after_round_one(spark, monkeypatch):
+    """A 10-clique plus a 20-node chain has 64 edges; round 1 turns the
+    clique into a star but leaves the chain unconverged, and the live count
+    drops within a bound of 40: CC finishes on the driver after one round."""
+    clique = [(f"k{i}", f"k{j}") for i in range(10) for j in range(i + 1, 10)]
+    chain = [(f"c{i:02d}", f"c{i+1:02d}") for i in range(19)]
+    edges = clique + chain
+    nodes = sorted({x for e in edges for x in e})
+    calls = []
+    closure = cc._closure_on_driver
+    monkeypatch.setattr(
+        cc, "_closure_on_driver", lambda *a: calls.append(a[1].num_rows) or closure(*a)
+    )
+    got, res = _run_cc(spark, edges, nodes, 40)
+    assert got == _nx_labels(edges, nodes)
+    assert res.iterations == 1
+    assert len(calls) == 1 and calls[0] <= 40
+
+
+def test_cc_binary_ids_take_unsigned_min(spark):
+    """Binary rids order bytewise unsigned on both paths, as Spark's min
+    does: 0x7f… labels the component, not 0x80… (the signed-byte min)."""
+    lo, mid, hi = b"\x7f" * 32, b"\x80" * 32, b"\xff" * 32
+    edf = spark.createDataFrame([(mid, lo), (hi, mid)], "src binary, dst binary")
+    want = bytes(
+        edf.select(F.least("src", "dst").alias("m")).agg(F.min("m")).first()[0]
+    )
+    assert want == lo
+    for bound in BOUNDS:
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(cc, "_driver_edge_bound", lambda _spark: bound)
+            labels = connected_components(edf).labels
+            got = {bytes(r.rid): bytes(r.entity_id) for r in labels.collect()}
+        assert got == {lo: want, mid: want, hi: want}, bound
+
+
+def test_cc_writes_no_session_conf(spark, monkeypatch):
+    """CC runs beside other stage branches on one session, so it must not
+    write session conf (an AQE toggle would re-plan the other branch)."""
+    writes = []
+    monkeypatch.setattr(RuntimeConfig, "set", lambda self, k, v: writes.append(k))
+    chain = [(f"c{i:03d}", f"c{i+1:03d}") for i in range(30)]
+    for bound in BOUNDS:
+        got, _ = _run_cc(spark, chain, [f"c{i:03d}" for i in range(31)], bound)
+        assert got == _nx_labels(chain, [])
+    assert writes == []
 
 
 def test_cc_raises_at_iteration_cap(spark):
-    """One round cannot collapse the 31-node chain into stars: CC must raise
-    rather than return min-labels that are not the transitive closure."""
+    """One round cannot collapse the 31-node chain into stars: with no
+    driver finish, CC must raise rather than return min-labels that are not
+    the transitive closure."""
     chain = [(f"c{i:03d}", f"c{i+1:03d}") for i in range(30)]
-    edf = spark.createDataFrame(chain, ["src", "dst"])
     with pytest.raises(RuntimeError, match=r"max_iterations=1: \d+ live edges"):
-        connected_components(edf, max_iterations=1)
+        _run_cc(spark, chain, ["c000"], 0, max_iterations=1)
 
 
 def test_star_steps_preserve_components(spark):
@@ -104,6 +166,9 @@ def test_star_set_fixpoint_test(spark):
 def test_cc_empty_edges(spark):
     ndf = spark.createDataFrame([("a",), ("b",)], ["rid"])
     edf = spark.createDataFrame([], "src string, dst string")
-    res = connected_components(edf, nodes=ndf)
-    got = {r.rid: r.entity_id for r in res.labels.collect()}
-    assert got == {"a": "a", "b": "b"}
+    for bound in BOUNDS:
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(cc, "_driver_edge_bound", lambda _spark: bound)
+            res = connected_components(edf, nodes=ndf)
+            got = {r.rid: r.entity_id for r in res.labels.collect()}
+        assert got == {"a": "a", "b": "b"}, bound

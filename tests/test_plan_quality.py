@@ -224,39 +224,6 @@ def test_cc_round_plan_shape(spark):
     assert plan.count("Exchange hashpartitioning") <= 3, plan
 
 
-def test_cc_adaptive_round_narrows_exchanges(spark):
-    """With an adaptive partition count n, every round exchange is an
-    explicit n-way repartition that REPLACES the implicit
-    shuffle-partition-wide exchange (hash partitioning on the window/dedup
-    keys satisfies their required distribution) — same exchange count, no
-    joins, and no exchange at the session's shuffle-partition width. This is
-    what stops per-round task-scheduling overhead dominating when the live
-    edge set is small (local runs; the shrinking tail rounds at scale)."""
-    from codingchallenge_spark.operators.cc import (
-        _canon_edges,
-        _large_star_raw,
-        _small_star_raw,
-    )
-
-    edges = spark.createDataFrame(
-        [("a", "b"), ("b", "c"), ("c", "d"), ("x", "y")], ["src", "dst"]
-    )
-    n = 2
-    round_df = _canon_edges(_small_star_raw(_large_star_raw(edges, n), n), n)
-    plan = _plan(round_df)
-    for node in ("SortMergeJoin", "BroadcastHashJoin", "ShuffledHashJoin",
-                 "CartesianProduct"):
-        assert node not in plan, f"{node} in adaptive CC round plan"
-    # Every exchange is one of our explicit n-way repartitions; none were
-    # ADDED on top of them by the planner to meet a distribution requirement
-    # (that would show as an ENSURE_REQUIREMENTS exchange at the session's
-    # shuffle-partition width).
-    assert "ENSURE_REQUIREMENTS" not in plan, plan
-    n_exchanges = plan.count("REPARTITION_BY_NUM")
-    assert n_exchanges >= 1, plan
-    assert plan.count(f"hashpartitioning") == plan.count(f", {n}), REPARTITION_BY_NUM"), plan
-
-
 def _simple_plan(df) -> str:
     """`simple` explain: one line per physical node with the join type inline
     (`BroadcastHashJoin [k], [k], Inner, BuildRight`) — what the broadcast-

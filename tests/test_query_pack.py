@@ -146,3 +146,89 @@ def test_flagship_threshold_margin(spark):
         norm.unpersist()
         assert row.n > 0, sf_dir
         assert row.m >= floor, (sf_dir, row.m)
+
+
+def _partition(rows):
+    """rid → entity_id rows as a set of clusters (frozensets of rids)."""
+    clusters = {}
+    for rid, entity_id in rows:
+        clusters.setdefault(entity_id, set()).add(rid)
+    return {frozenset(c) for c in clusters.values()}
+
+
+@pytest.mark.parametrize("n", [20, 50, 100, 200])
+@pytest.mark.parametrize("seed", [1, 2, 3])
+def test_er_entities_matches_twin_small_corpora(spark, tmp_path, n, seed):
+    """q_er_entities and SQL_ER_ENTITIES give the same partition on small
+    documents tables, drawn as the benchmark's query tables draw them. Below
+    ~500 documents the sorted-neighbourhood pairs overlap the token pairs
+    more often, so a twin whose candidate set keeps the overlap twice
+    double-counts the shared tokens of those pairs and over-merges."""
+    import numpy as np
+    import pandas as pd
+
+    from codingchallenge_spark.plans.query_pack import _er_cte_body, q_er_entities
+    from perfbench.inputs import DOC_LANGS, DOC_VOCAB
+
+    rng = np.random.default_rng(seed)
+    words = np.array(DOC_VOCAB)
+    texts = [
+        " ".join(words[rng.integers(0, len(words), int(k))])
+        for k in rng.integers(10, 100, n)
+    ]
+    path = tmp_path / "documents.parquet"
+    pd.DataFrame(
+        {
+            "doc_id": np.arange(n, dtype=np.int64),
+            "text": texts,
+            "lang": rng.choice(DOC_LANGS, n, p=[0.44, 0.14, 0.14, 0.14, 0.14]),
+            "source": [f"src{i % 20}" for i in range(n)],
+            "n_chars": np.array([len(t) for t in texts], dtype=np.int64),
+        }
+    ).to_parquet(path, index=False)
+
+    got = q_er_entities(spark, str(tmp_path)).select("rid", "entity_id").collect()
+    con = duckdb.connect()
+    try:
+        con.execute(f"CREATE VIEW documents AS SELECT * FROM read_parquet('{path}')")
+        body = _er_cte_body()
+        want = con.execute(body + "SELECT rid, entity_id FROM labels").fetchall()
+        rows, pairs = con.execute(
+            body + "SELECT COUNT(*), COUNT(DISTINCT (rid1, rid2)) FROM cand"
+        ).fetchone()
+    finally:
+        con.close()
+    assert rows == pairs, f"twin cand keeps {rows - pairs} duplicate pairs"
+    assert _partition(map(tuple, got)) == _partition(want)
+
+
+def test_jaccard_pairs_null_text_same_in_both_ansi_modes(spark, tmp_path):
+    """A null-text side scores 1.0 whether ANSI mode is on or off: with it
+    off, size(null) is −1 and must not reach the jaccard arithmetic."""
+    import pandas as pd
+
+    from codingchallenge_spark.plans.query_pack import q_jaccard_pairs
+
+    pd.DataFrame(
+        {
+            "doc_id": [1, 2, 3],
+            "text": ["a b", None, "a c"],
+            "lang": ["en", "en", "en"],
+            "source": ["s", "s", "s"],
+            "n_chars": [3, 3, 3],
+        }
+    ).to_parquet(tmp_path / "documents.parquet", index=False)
+    key = "spark.sql.ansi.enabled"
+    prev = spark.conf.get(key)
+    got = {}
+    try:
+        for mode in ("true", "false"):
+            spark.conf.set(key, mode)
+            got[mode] = sorted(
+                tuple(r) for r in q_jaccard_pairs(spark, str(tmp_path)).collect()
+            )
+    finally:
+        spark.conf.set(key, prev)
+    assert got["true"] == got["false"] == [
+        (1, 2, 1.0), (1, 3, 1 / 3), (2, 3, 1.0)
+    ]
