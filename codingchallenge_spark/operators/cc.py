@@ -23,19 +23,17 @@ uniformly distributed keys; skew only arises from genuinely huge components,
 which the star construction itself flattens logarithmically. AQE handles the
 rest. The only per-round action is the O(1)-result star-set convergence
 count, which doubles as the job that materializes the round's lazy
-localCheckpoint and (via ``observe``) reports the live edge count for free.
+localCheckpoint.
 
 DRIVER FINISH: a distributed round costs a handful of jobs whatever the edge
 count, so a graph that fits on the driver is cheaper closed there. The bound
-(:func:`_driver_edge_bound`) is the collect limit the driver already enforces,
-``spark.driver.maxResultSize`` (or ``spark.driver.memory`` when that is
-unlimited), divided by a per-edge byte budget. Before round 1 CC collects at
-most bound+1 canonical edges; at most bound rows is the whole graph and no
-distributed round runs. Otherwise rounds run as above, and after every
-non-converged star test whose live count is within the bound the remaining
-edges are collected and closed on the driver — star steps preserve
-components, so the closure of any round's edge set is the closure of the
-input (:func:`_closure_on_driver`).
+(:func:`_driver_edge_bound`) is the smaller of the driver's collect limit
+(``spark.driver.maxResultSize``, 0 = unlimited) and its heap
+(``spark.driver.memory``), over a per-edge byte budget. Before round 1 CC
+counts the canonical edge set (the count materializes its checkpoint); within
+the bound the set is collected and closed on the driver
+(:func:`_closure_on_driver`) and no distributed round runs. Above it, rounds
+run to the star fixpoint as above.
 """
 
 from __future__ import annotations
@@ -45,12 +43,14 @@ from dataclasses import dataclass
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import DataFrame, Observation, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-# Driver bytes budgeted per collected edge: two 32-byte ids with their Arrow
-# offsets, plus the dense-id and numpy working arrays of the closure.
-_DRIVER_BYTES_PER_EDGE = 256
+# Driver heap budgeted per collected edge. Measured in local mode on 32-byte
+# binary ids, worst case of two fresh nodes per edge: a 1g heap closed 1.5M
+# edges and ran out at 2.1M; a 2g heap closed 3M. The Python side peaked at
+# under 560 B per edge on top of that.
+_DRIVER_BYTES_PER_EDGE = 1024
 
 
 def _canon_edges(edges: DataFrame) -> DataFrame:
@@ -128,8 +128,8 @@ def small_star(edges: DataFrame) -> DataFrame:
     return _canon_edges(_small_star_raw(edges))
 
 
-def _star_test_and_count(edges: DataFrame) -> tuple[bool, int]:
-    """Exact fixpoint test (G3), one action — also returns the edge count.
+def _is_star_set(edges: DataFrame) -> bool:
+    """Exact fixpoint test (G3), one action.
 
     A canonical edge set (src<dst, deduped) is stable under
     large-star/small-star iff it is a disjoint union of stars centered at
@@ -143,58 +143,30 @@ def _star_test_and_count(edges: DataFrame) -> tuple[bool, int]:
     computation; conversely a repeated dst (m1,x),(m2,x) is rewritten by
     small-star to (m1,m2),(m1,x), and a src∩dst node b in (a,b),(b,c) is
     rewritten by large-star — so any non-star-set changes within one round.
-
-    The edge count rides the same action as an ``observe`` metric on the
-    roles relation (exactly 2 rows per edge, consumed once — observing
-    ``edges`` itself would double-count, since the union scans it twice);
-    it costs nothing and decides whether the next step is a driver finish.
     """
-    obs = Observation()
     roles = edges.select(
         F.col("src").alias("node"), F.lit(1).alias("s"), F.lit(0).alias("d")
     ).unionByName(
         edges.select(F.col("dst").alias("node"), F.lit(0).alias("s"), F.lit(1).alias("d"))
-    ).observe(obs, F.count(F.lit(1)).alias("rows2x"))
+    )
     viol = (
         roles.groupBy("node")
         .agg(F.max("s").alias("s"), F.sum("d").alias("d"))
         .filter(((F.col("s") == 1) & (F.col("d") >= 1)) | (F.col("d") >= 2))
     )
-    converged = viol.count() == 0
-    try:
-        n_edges = int(obs.get["rows2x"]) // 2
-    except Exception:
-        # An EMPTY edge relation is constant-folded away by
-        # PropagateEmptyRelation together with the CollectMetrics node, so no
-        # metrics row ever materializes and obs.get raises. Empty ⇒ star set
-        # ⇒ converged=True, and the caller only consumes the count when NOT
-        # converged — 0 is exact there. Any OTHER failure must surface: on a
-        # non-converged round a swallowed error would feed n_edges=0 to the
-        # driver-finish gate and collect a possibly huge edge set on the
-        # driver.
-        if not converged:
-            raise
-        n_edges = 0
-    return converged, n_edges
-
-
-def _is_star_set(edges: DataFrame) -> bool:
-    """Convergence predicate alone (tests use this; the loop uses the
-    count-carrying form)."""
-    return _star_test_and_count(edges)[0]
+    return viol.count() == 0
 
 
 def _driver_edge_bound(spark) -> int:
-    """Most edges CC collects to the driver: the driver's collect limit
-    (``spark.driver.maxResultSize``; ``spark.driver.memory`` when that is 0,
-    i.e. unlimited) over :data:`_DRIVER_BYTES_PER_EDGE` — ~8M edges at the
-    2g that ``build_session`` sets; capped so bound + 1 fits the int that
-    ``Dataset.limit`` takes."""
+    """Most edges CC collects to the driver: the smaller of
+    ``spark.driver.maxResultSize`` (0 = unlimited) and
+    ``spark.driver.memory`` over :data:`_DRIVER_BYTES_PER_EDGE` — ~2.1M
+    edges at the 2g collect limit ``build_session`` sets, ~1M on a 1g
+    driver."""
     conf = spark.sparkContext._jsc.getConf()
-    limit = conf.getSizeAsBytes("spark.driver.maxResultSize", "1g")
-    if limit == 0:
-        limit = conf.getSizeAsBytes("spark.driver.memory", "1g")
-    return min(limit // _DRIVER_BYTES_PER_EDGE, 2**31 - 2)
+    heap = conf.getSizeAsBytes("spark.driver.memory", "1g")
+    limit = conf.getSizeAsBytes("spark.driver.maxResultSize", "1g") or heap
+    return min(limit, heap) // _DRIVER_BYTES_PER_EDGE
 
 
 def _closure_on_driver(spark, edges: pa.Table) -> DataFrame:
@@ -234,8 +206,8 @@ def _closure_on_driver(spark, edges: pa.Table) -> DataFrame:
 @dataclass
 class CCResult:
     """``iterations`` counts the distributed rounds run, including the round
-    whose star test proved convergence; a graph closed on the driver before
-    round 1 reports ``iterations=0``. ``converged`` is always True:
+    whose star test proved convergence; a graph closed on the driver reports
+    ``iterations=0``. ``converged`` is always True:
     :func:`connected_components` raises instead of returning labels it did
     not converge to."""
 
@@ -254,44 +226,38 @@ def connected_components(
 
     ``nodes`` (DataFrame with column ``rid``) adds isolated records, which
     label themselves. ``iter_dir`` (optional) persists each distributed
-    round's edge set as parquet for mid-stage resume. An edge set within
-    :func:`_driver_edge_bound` (the input, or the live set after a round) is
-    closed on the driver. Raises ``RuntimeError`` when ``max_iterations``
-    rounds neither converge nor shrink the edge set within the bound.
+    round's edge set as parquet for mid-stage resume. A canonical edge set
+    within :func:`_driver_edge_bound` is closed on the driver. Raises
+    ``RuntimeError`` when ``max_iterations`` rounds do not converge.
     """
     spark = edges.sparkSession
-    bound = _driver_edge_bound(spark)
-    # Lazy local checkpoint: the lineage still truncates (G4), but the data is
-    # materialized by the first action on it, the gate's collect.
+    # Lazy local checkpoint: the lineage still truncates (G4), and the count
+    # materializes it for the collect or round 1 that reads it next.
     cur = _canon_edges(edges.select("src", "dst")).localCheckpoint(eager=False)
-    head = cur.limit(bound + 1).toArrow()
-    labels = _closure_on_driver(spark, head) if head.num_rows <= bound else None
-    del head  # up to bound + 1 edges held on the driver
-    iterations, converged, n_edges = 0, False, None
-    while labels is None and not converged and iterations < max_iterations:
-        iterations += 1
-        # Raw composition: one canon (dedup shuffle) per round, not two —
-        # small-star's min is duplicate-insensitive, so large-star's
-        # intermediate dedup would buy nothing.
-        nxt = _canon_edges(_small_star_raw(_large_star_raw(cur)))
-        if iter_dir is not None:
-            path = f"{iter_dir}/edges_iter_{iterations:03d}.parquet"
-            nxt.write.mode("overwrite").parquet(path)
-            nxt = spark.read.parquet(path)
-        else:
-            nxt = nxt.localCheckpoint(eager=False)
-        converged, n_edges = _star_test_and_count(nxt)
-        cur = nxt
-        if not converged and n_edges <= bound:
-            labels = _closure_on_driver(spark, cur.toArrow())
-
-    if labels is None:
+    iterations, converged = 0, False
+    if cur.count() <= _driver_edge_bound(spark):
+        labels = _closure_on_driver(spark, cur.toArrow())
+    else:
+        while not converged and iterations < max_iterations:
+            iterations += 1
+            # Raw composition: one canon (dedup shuffle) per round, not two —
+            # small-star's min is duplicate-insensitive, so large-star's
+            # intermediate dedup would buy nothing.
+            nxt = _canon_edges(_small_star_raw(_large_star_raw(cur)))
+            if iter_dir is not None:
+                path = f"{iter_dir}/edges_iter_{iterations:03d}.parquet"
+                nxt.write.mode("overwrite").parquet(path)
+                nxt = spark.read.parquet(path)
+            else:
+                nxt = nxt.localCheckpoint(eager=False)
+            converged = _is_star_set(nxt)
+            cur = nxt
         if not converged:
             # The min-labels of a non-star edge set are not the transitive
             # closure: returning them would silently split entities.
             raise RuntimeError(
                 f"connected_components did not converge within max_iterations="
-                f"{max_iterations}: {n_edges} live edges remain"
+                f"{max_iterations}: {cur.count()} live edges remain"
             )
         # At the fixpoint every component is a star centered at its min node:
         # labels = (dst → src) ∪ (src → src).

@@ -1,5 +1,7 @@
 """Connected-components tests vs networkx (SURVEY.md §5.4, FIXTURES.md §A4)."""
 
+from types import SimpleNamespace
+
 import networkx as nx
 import pytest
 from hypothesis import given, settings
@@ -28,8 +30,7 @@ def _nx_labels(edges, nodes):
 
 
 # Driver-edge bounds forcing the two closure paths: every graph closed on
-# the driver before round 1, and no driver finish at all (distributed rounds
-# to the star fixpoint).
+# the driver, and distributed rounds to the star fixpoint.
 BOUNDS = (10**9, 0)
 
 
@@ -73,23 +74,33 @@ def test_cc_chain_and_isolated(spark):
     assert 1 <= rounds[1].iterations <= 10
 
 
-def test_cc_driver_finish_after_round_one(spark, monkeypatch):
-    """A 10-clique plus a 20-node chain has 64 edges; round 1 turns the
-    clique into a star but leaves the chain unconverged, and the live count
-    drops within a bound of 40: CC finishes on the driver after one round."""
-    clique = [(f"k{i}", f"k{j}") for i in range(10) for j in range(i + 1, 10)]
-    chain = [(f"c{i:02d}", f"c{i+1:02d}") for i in range(19)]
-    edges = clique + chain
-    nodes = sorted({x for e in edges for x in e})
-    calls = []
-    closure = cc._closure_on_driver
-    monkeypatch.setattr(
-        cc, "_closure_on_driver", lambda *a: calls.append(a[1].num_rows) or closure(*a)
-    )
-    got, res = _run_cc(spark, edges, nodes, 40)
-    assert got == _nx_labels(edges, nodes)
-    assert res.iterations == 1
-    assert len(calls) == 1 and calls[0] <= 40
+def test_cc_collects_nothing_above_bound(spark, monkeypatch):
+    """Above the bound the gate only counts: no edge reaches the driver."""
+    collects = []
+    frame = type(spark.range(1))
+    monkeypatch.setattr(frame, "toArrow", lambda self: collects.append(self))
+    chain = [(f"c{i:03d}", f"c{i+1:03d}") for i in range(30)]
+    nodes = [f"c{i:03d}" for i in range(31)]
+    got, res = _run_cc(spark, chain, nodes, 29)
+    assert got == _nx_labels(chain, nodes)
+    assert res.iterations >= 1 and collects == []
+
+
+def test_driver_edge_bound_takes_smaller_limit(spark):
+    """The bound is min(maxResultSize, driver.memory) over the per-edge
+    budget, with a maxResultSize of 0 meaning unlimited."""
+
+    def bound(**conf):
+        jconf = spark._jvm.org.apache.spark.SparkConf(False)
+        for k, v in conf.items():
+            jconf.set(f"spark.driver.{k}", v)
+        ctx = SimpleNamespace(_jsc=SimpleNamespace(getConf=lambda: jconf))
+        return cc._driver_edge_bound(SimpleNamespace(sparkContext=ctx))
+
+    per_gb = 2**30 // cc._DRIVER_BYTES_PER_EDGE
+    assert bound(maxResultSize="2g", memory="8g") == 2 * per_gb
+    assert bound(maxResultSize="2g") == per_gb  # spark-submit's 1g default heap
+    assert bound(maxResultSize="0", memory="4g") == 4 * per_gb
 
 
 def test_cc_binary_ids_take_unsigned_min(spark):
