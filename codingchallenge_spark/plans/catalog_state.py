@@ -34,7 +34,8 @@ pass the round-3 incremental path still paid:
   every catalog row's token array). Query: bucket-pruned scan via a literal
   IN over the delta's token hash-buckets. Maintenance: APPEND-ONLY chain —
   postings are facts about existing rids, insertion never rewrites one, so
-  a delta contributes a delta-sized element and compaction re-folds.
+  a delta contributes a delta-sized element, and compaction re-folds the
+  chain once its tail has grown.
 
 - ``labels`` — the catalog's resolved (rid, entity_id) assignment, as an
   overlay CHAIN of per-batch upsert sets ("latest element containing a rid
@@ -54,8 +55,12 @@ touched-label element instead of rewriting the corpus. The full normalized
 relation is the union of the norm chain; the full index is resolved per
 bucket by "latest chain element covering that bucket wins"
 (:func:`_read_sn_chain`); the full label assignment by "latest element
-containing the rid wins". :func:`compact_state` folds long chains back into
-single elements at whatever cadence the operator picks.
+containing the rid wins". :func:`compact_state` runs at whatever cadence
+the operator picks and is size-tiered: it folds a chain back into one
+element only once the chain's tail has grown to a fixed fraction of its
+base (:data:`FOLD_RATIO`), and otherwise re-references the chain's
+existing elements, so a compacted state may still point into older
+run_dirs.
 
 Production shape: at 10^12 files ``sn_index`` buckets would be sized to
 ~64k rows (here: defaultParallelism buckets — a knob), bucket splits and
@@ -86,6 +91,11 @@ STATE_MANIFEST = "state.json"
 # chain) are refused with a rebuild hint: silently resolving them would
 # mix incompatible position semantics.
 STATE_VERSION = 2
+# compact_state folds a chain once the elements newer than its base hold at
+# least this fraction of the base's on-disk bytes; below it the chain is
+# re-referenced as it is. With deltas at ~10% of the base, a chain folds
+# about once every five compactions.
+FOLD_RATIO = 0.5
 
 
 @dataclass
@@ -135,7 +145,8 @@ def build_tok_postings(norm: DataFrame, num_buckets: int) -> DataFrame:
     corpus — scan cost per batch is then |delta tokens| · bucket bytes,
     independent of corpus size. Maintenance is APPEND-ONLY (postings are
     facts about existing rids — insertion never rewrites one), so a delta
-    contributes a delta-sized chain element; :func:`compact_state` re-folds.
+    contributes a delta-sized chain element; :func:`compact_state` re-folds
+    the chain once its tail has grown.
     """
     parallelism = norm.sparkSession.sparkContext.defaultParallelism
     return (
@@ -586,6 +597,27 @@ def load_catalog_state(spark: SparkSession, run_dir: str) -> CatalogState:
     )
 
 
+def manifest_paths(run_dir: str) -> list[str]:
+    """Every chain element the state manifest at ``run_dir`` references
+    (norm, sn, labels and postings chains). The state's ``token_df`` and
+    ``sn_bounds`` sit at fixed paths inside ``run_dir`` and are not listed."""
+    m = json.loads((Path(run_dir) / STATE_MANIFEST).read_text())
+    return (
+        m["norm_paths"]
+        + [e["path"] for e in m["sn_chain"]]
+        + m["labels_chain"]
+        + (m.get("tok_chain") or [])
+    )
+
+
+def _tail_is_large(paths: list[str]) -> bool:
+    """Whether the elements after a chain's base hold at least
+    :data:`FOLD_RATIO` of the base's on-disk bytes. A base this process
+    cannot list reads as 0 bytes, so its chain always folds."""
+    base, *tail = (ckpt.stored_bytes(p) for p in paths)
+    return sum(tail) >= FOLD_RATIO * base
+
+
 def compact_state(
     spark: SparkSession,
     run_dir: str,
@@ -593,33 +625,39 @@ def compact_state(
     num_buckets: int | None = None,
     tok_buckets: int | None = None,
 ) -> str:
-    """Fold a state's chains back into single elements — the periodic
-    corpus-proportional event that bounds every per-batch cost.
+    """Write the state at ``run_dir`` as a fresh catalog state in
+    ``out_dir``, folding only the chains whose tail has grown large.
 
-    Reads the state at ``run_dir`` and writes ``out_dir`` as a fresh,
-    chain-length-1 catalog state: one normalize parquet (the folded norm
-    chain), one RE-BUCKETED sn_index (build_sn_index over the folded norm —
-    compaction is where bucket balance is restored after many bucket-local
-    merges, the same role Iceberg's rewrite_data_files / an LSM major merge
-    plays), fresh bounds derived from the persisted index, the maintained
-    token_df copied through, and the labels chain resolved to one relation.
-    The relations depend only on the loaded state, so they are written
-    concurrently (sources.checkpoint.run_parallel); the manifest is written
-    after all of them, so a failed compaction leaves no state.
-    Everything older becomes unreferenced — a streaming deployment deletes
-    the superseded batch run_dirs afterwards (streaming.ingest does).
+    Size-tiered, as in O'Neil et al., *The Log-Structured Merge-Tree*
+    (1996): a chain (norm, sn, labels, postings) folds into one element
+    only when the elements newer than its base hold at least
+    :data:`FOLD_RATIO` of the base's on-disk bytes (:func:`_tail_is_large`,
+    file sizes, no Spark job), or when the caller asks for a bucket modulus
+    other than the state's. Otherwise the new manifest re-references the
+    chain's existing element paths, and no data file is copied — the fast
+    append Iceberg keeps apart from its rewrite_data_files. So the output
+    dir may reference sinks of older run_dirs; a caller that deletes
+    superseded dirs must keep every path :func:`manifest_paths` lists
+    (streaming.ingest does).
 
-    ``num_buckets`` re-buckets the sn_index (default: the session's default
-    parallelism). ``tok_buckets`` sets the postings' hash-bucket modulus
-    (default: the state's own). When the two moduli are equal, compaction
-    takes a shortcut: it folds the postings chain as it is and only
-    re-clusters it, because every stored ``tbucket`` is still valid; any
-    other modulus rebuilds the postings from the folded norm. A value below
-    1 raises ``ValueError`` before anything is written.
+    A fold is the corpus-proportional pass that bounds every per-batch
+    cost: the norm chain is written as one normalize parquet, the labels
+    chain resolved to one relation, and the sn_index RE-BUCKETED over the
+    full norm (build_sn_index — this is where bucket balance is restored
+    after many bucket-local merges), with fresh bounds derived from the
+    persisted index. ``token_df`` and ``sn_bounds`` live at fixed paths in
+    ``out_dir`` and are always written (copied when the sn chain does not
+    fold). The relations depend only on the loaded state, so they are
+    written concurrently (sources.checkpoint.run_parallel); the manifest is
+    written after all of them, so a failed compaction leaves no state.
 
-    Cost: one corpus read+write per relation, paid at the operator-chosen
-    cadence and amortized over the batches between compactions; every
-    per-batch cost stays delta-proportional because this exists.
+    ``num_buckets`` is the sn_index bucket count and ``tok_buckets`` the
+    postings' hash-bucket modulus; each defaults to the state's own, and a
+    value equal to the state's forces no fold. A folded postings chain with
+    an unchanged modulus is only re-clustered (every stored ``tbucket``
+    stays valid); another modulus, or a state without postings, rebuilds
+    them from the full norm. A value below 1 raises ``ValueError`` before
+    anything is written.
     """
     for name, value in (("num_buckets", num_buckets), ("tok_buckets", tok_buckets)):
         if value is not None and value < 1:
@@ -633,59 +671,66 @@ def compact_state(
     # the schema the next load_catalog_state reads with (no inference job).
     fingerprint = f"compact_state:{run_dir}"
 
-    def write(stage: str, df: DataFrame) -> None:
+    def write(stage: str, df: DataFrame) -> list[str]:
         ckpt.write_stage(df, str(out), stage, fingerprint)
+        return [ckpt.stage_path(str(out), stage)]
 
-    def write_sn() -> None:
+    def norm_chain() -> list[str]:
+        if _tail_is_large(state.norm_paths):
+            return write("normalize", state.norm)
+        return state.norm_paths
+
+    def labels_chain() -> list[str]:
+        if _tail_is_large(state.labels_chain):
+            return write("labels", state.labels)
+        return state.labels_chain
+
+    # One sn_bounds row per bucket: the marker's row count is the state's
+    # bucket count, read without a Spark job.
+    sn_count = ckpt.read_marker(run_dir, "sn_bounds")["rows"]
+    if num_buckets is None:
+        num_buckets = sn_count
+
+    def sn_chain() -> list[dict]:
+        if num_buckets == sn_count and not _tail_is_large(
+            [e["path"] for e in state.sn_chain]
+        ):
+            write("sn_bounds", state.sn_bounds)
+            return state.sn_chain
         stored, _ = build_sn_index(state.norm, num_buckets=num_buckets)
         write("sn_index", stored)
         idxp = ckpt.load_stage(spark, str(out), "sn_index")
         write("sn_bounds", bounds_from_index(idxp))
+        return [{"path": ckpt.stage_path(str(out), "sn_index"), "buckets": None}]
 
-    branches = [
-        lambda: write("normalize", state.norm),
-        write_sn,
-        lambda: write("token_df", state.token_df),
-        lambda: write("labels", state.labels),
-    ]
+    # Postings: compaction is also where a state without them (older v2
+    # dirs) gains a tok_index, built from the full norm at the default
+    # modulus, and where the modulus can grow with the corpus.
+    if tok_buckets is None:
+        tok_buckets = state.tok_buckets or MatcherConfig().tok_buckets
 
-    # Token-postings side (ADVICE r05): compaction is the ONE event that
-    # already pays a corpus-proportional pass, so it is also where (a) a
-    # pre-postings state (older v2 dirs) gains its tok_index — built from the
-    # folded norm at the production-default modulus — and (b) the bucket
-    # modulus can GROW with the corpus via the ``tok_buckets`` parameter
-    # (tbucket recomputed over the folded norm), the same re-bucket role the
-    # sn_index's ``num_buckets`` has always had here. A matching modulus
-    # keeps the cheaper fold-only path (tbucket values stay valid; only the
-    # range clustering bucket-pruning relies on is restored — many appended
-    # chain elements each cover the full tbucket range, one re-clustered
-    # parquet does not).
-    tok_chain = None
-    out_tok_buckets = tok_buckets if tok_buckets is not None else state.tok_buckets
-    if out_tok_buckets is None and state.tok_postings is None:
-        out_tok_buckets = MatcherConfig().tok_buckets
-    if out_tok_buckets is not None:
-        if (
-            state.tok_postings is not None
-            and out_tok_buckets == state.tok_buckets
-        ):
-            postings = state.tok_postings.repartitionByRange(
-                spark.sparkContext.defaultParallelism, "tbucket", "tok"
+    def tok_chain() -> list[str]:
+        if state.tok_postings is None or tok_buckets != state.tok_buckets:
+            return write("tok_index", build_tok_postings(state.norm, tok_buckets))
+        if _tail_is_large(state.tok_chain):
+            # Many appended elements each cover the whole tbucket range; one
+            # re-clustered parquet restores the clustering bucket pruning
+            # relies on.
+            return write(
+                "tok_index",
+                state.tok_postings.repartitionByRange(
+                    spark.sparkContext.defaultParallelism, "tbucket", "tok"
+                ),
             )
-        else:
-            postings = build_tok_postings(state.norm, out_tok_buckets)
-        branches.append(lambda: write("tok_index", postings))
-        tok_chain = [ckpt.stage_path(str(out), "tok_index")]
+        return state.tok_chain
 
     # The relations are independent of each other: written concurrently.
-    ckpt.run_parallel(spark, *branches)
+    norm_paths, sn, labels, toks, _ = ckpt.run_parallel(
+        spark, norm_chain, sn_chain, labels_chain, tok_chain,
+        lambda: write("token_df", state.token_df),
+    )
     write_state_manifest(
-        str(out),
-        [ckpt.stage_path(str(out), "normalize")],
-        sn_chain=[{"path": ckpt.stage_path(str(out), "sn_index"), "buckets": None}],
-        labels_chain=[ckpt.stage_path(str(out), "labels")],
-        emit="full",
-        tok_chain=tok_chain,
-        tok_buckets=out_tok_buckets,
+        str(out), norm_paths, sn_chain=sn, labels_chain=labels, emit="full",
+        tok_chain=toks, tok_buckets=tok_buckets,
     )
     return str(out)

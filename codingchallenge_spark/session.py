@@ -14,6 +14,8 @@ from drowning in task overhead. On local[N] the same confs apply unchanged.
 from __future__ import annotations
 
 import os
+import re
+import shutil
 import tempfile
 import zipfile
 from pathlib import Path
@@ -22,6 +24,9 @@ from pyspark.sql import SparkSession
 
 # One knob: shuffle parallelism scales with cores (cluster: with executors).
 DEFAULT_SHUFFLE_PARTITIONS = 32
+# Shuffle budget a tmpfs local dir must have room for, in /dev/shm and in
+# physical RAM beside the driver heap.
+TMPFS_SHUFFLE_BYTES = 8 << 30
 
 
 def _tree_newest_mtime(root: Path) -> float:
@@ -54,7 +59,6 @@ def _reap_stale_local_dirs(shm_root: Path, max_age_s: float = 86400) -> None:
     not a liveness signal (a live session's blockmgr dir mtime freezes at
     startup while writes land in nested hash subdirs).
     """
-    import shutil
     import time
 
     if not shm_root.is_dir():
@@ -111,6 +115,40 @@ def default_driver_memory() -> str:
     return f"{ram // 2 // (1 << 20)}m"
 
 
+def _size_bytes(size: str) -> int:
+    """A JVM memory size (``512m``, ``8g``; a bare number is MiB, as for
+    ``spark.driver.memory``) in bytes."""
+    m = re.fullmatch(r"(\d+)([kmgt])?b?", size.strip().lower())
+    if m is None:
+        raise ValueError(f"not a memory size: {size!r}")
+    return int(m.group(1)) << {"k": 10, "m": 20, "g": 30, "t": 40}[m.group(2) or "m"]
+
+
+def _tmpfs_local_dir(heap_bytes: int) -> str | None:
+    """A per-process shuffle dir under ``/dev/shm``, or None when tmpfs
+    cannot hold :data:`TMPFS_SHUFFLE_BYTES` beside a driver heap of
+    ``heap_bytes``.
+
+    tmpfs shuffle eats RAM, and the heap is a ceiling the JVM grows into:
+    both must fit in physical memory together, and /dev/shm must have the
+    budget free (a footprint past capacity fails with ENOSPC where disk
+    would absorb it). Crashed-run leftovers are reaped first — each session
+    writes under its own ``pid-<pid>`` subdir so
+    :func:`_reap_stale_local_dirs` can use process liveness, not mtime.
+    """
+    if not Path("/dev/shm").is_dir():
+        return None
+    shm_root = Path("/dev/shm/ccspark-local")
+    _reap_stale_local_dirs(shm_root)
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    if (
+        heap_bytes + TMPFS_SHUFFLE_BYTES > ram
+        or shutil.disk_usage("/dev/shm").free < TMPFS_SHUFFLE_BYTES
+    ):
+        return None
+    return str(shm_root / f"pid-{os.getpid()}")
+
+
 def build_session(
     app_name: str = "codingchallenge-spark",
     master: str | None = None,
@@ -135,24 +173,14 @@ def build_session(
         conf["spark.driver.memory"] = os.environ.get(
             "CCSPARK_DRIVER_MEMORY", default_driver_memory()
         )
-        # Shuffle/spill dir: tmpfs when available. 32 concurrent shuffle
+        # Shuffle/spill dir: tmpfs when it fits. 32 concurrent shuffle
         # writers through the page cache onto a virtio disk serialize the
         # whole job in writeback (measured: 83% sys time, 5× stage slowdown
         # at local[32] vs local[8]). On a real cluster local dirs are
         # admin-provisioned NVMe — never set from library code (master=None).
         local_dir = os.environ.get("CCSPARK_LOCAL_DIR")
-        if local_dir is None and Path("/dev/shm").is_dir():
-            # tmpfs shuffle eats RAM: opt in only with real headroom (a
-            # footprint past capacity fails with ENOSPC where disk would
-            # absorb it), and reap crashed-run leftovers first — each
-            # session writes under its own ``pid-<pid>`` subdir so
-            # _reap_stale_local_dirs can use process liveness, not mtime.
-            import shutil
-
-            shm_root = Path("/dev/shm/ccspark-local")
-            _reap_stale_local_dirs(shm_root)
-            if shutil.disk_usage("/dev/shm").free >= 8 << 30:
-                local_dir = str(shm_root / f"pid-{os.getpid()}")
+        if local_dir is None:
+            local_dir = _tmpfs_local_dir(_size_bytes(conf["spark.driver.memory"]))
         if local_dir:
             Path(local_dir).mkdir(parents=True, exist_ok=True)
             conf["spark.local.dir"] = local_dir

@@ -74,6 +74,13 @@ def _parquet_file_rows(path: str) -> dict[str, int]:
     return out
 
 
+def stored_bytes(path: str) -> int:
+    """On-disk bytes of a stage's parquet files, from a directory listing
+    (no Spark job). A path this process cannot list (an object-store URI)
+    reads as 0."""
+    return sum(f.stat().st_size for f in Path(path).glob("*.parquet"))
+
+
 def is_done(run_dir: str, stage: str, fingerprint: str) -> bool:
     m = _marker_path(run_dir, stage)
     if not m.exists():

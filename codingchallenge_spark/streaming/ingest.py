@@ -46,13 +46,16 @@ normalize-delta, and its touched-bucket index element — all delta-sized;
 the full corpus is never rewritten per batch. The full resolved view is
 available on demand via ``plans.pipeline.current_entities`` (a lazy read
 paid by the consumer who asks for it). Disk and chain growth are bounded
-twice: :func:`prune_superseded` strips superseded run_dirs down to the
-sinks the state manifest still references (normalize_delta / sn_index /
-tok_index / cc_delta), and every ``compact_every`` batches the chains are
-folded back
-to single elements (plans.catalog_state.compact_state) and the superseded
-batch dirs deleted outright — the periodic, amortized corpus-proportional
-event that keeps every per-batch cost delta-sized.
+twice, by one rule: a superseded run_dir keeps only the sinks that CURRENT's
+state manifest still references (plans.catalog_state.manifest_paths) —
+:func:`prune_superseded` applies it after each batch, and every
+``compact_every`` batches plans.catalog_state.compact_state writes a compact
+dir, CURRENT is repointed at it, and the rule is applied to every older
+batch and compact dir. Compaction is size-tiered: it folds a chain only
+once the chain's tail has grown to a fixed fraction of its base and
+otherwise re-references the existing elements, so a compact dir may point
+into older batch dirs (and into the catalog run_dir the stream started
+from) until their chain folds.
 
 Production shape: the source directory is an object-store landing zone (or
 an Iceberg table scanned as a stream); ``maxFilesPerTrigger`` bounds
@@ -77,18 +80,6 @@ from codingchallenge_spark.sources.records import INPUT_COLUMNS, RECORDS_SCHEMA
 
 CURRENT_POINTER = "CURRENT"
 INGEST_ID_FILE = "INGEST_ID"
-# Stage sinks still needed from a SUPERSEDED batch run_dir: the state
-# manifest's norm-path chain references every batch's normalize_delta, its
-# sn_chain references every batch's sn_index overlay element (the
-# touched-bucket merge), and its labels_chain references every batch's
-# cc_delta touched-label element — all delta-sized.
-PRUNE_KEEP = {
-    "normalize_delta",
-    "sn_index",
-    "tok_index",
-    "cc_delta",
-    INGEST_ID_FILE,
-}
 
 
 def _pointer_path(out_dir: str) -> Path:
@@ -158,17 +149,41 @@ def _file_digest(batch_df: DataFrame) -> str:
     return hashlib.md5("\n".join(files).encode()).hexdigest()
 
 
+def _drop_unreferenced(
+    d: Path, live: set[Path], keep: str | None = None
+) -> list[str]:
+    """Delete each child of the superseded run_dir ``d`` that no path in
+    ``live`` lies under, except the child named ``keep``; remove ``d`` once
+    it is empty. Returns the deleted paths."""
+    dropped = []
+    for child in d.iterdir():
+        if child.name == keep or any(
+            p == child or child in p.parents for p in live
+        ):
+            continue
+        shutil.rmtree(child) if child.is_dir() else child.unlink()
+        dropped.append(str(child))
+    if not any(d.iterdir()):
+        d.rmdir()
+    return dropped
+
+
+def _live_paths(run_dir: str) -> set[Path]:
+    return {Path(p).resolve() for p in cstate.manifest_paths(run_dir)}
+
+
 def prune_superseded(
     out_dir: str, current_run_dir: str, watermark: int = -1
 ) -> list[str]:
-    """Strip superseded batch run_dirs down to their normalize_delta sink.
+    """Strip superseded batch run_dirs down to the sinks CURRENT's state
+    manifest still references, and their sentinel.
 
     Every batch dir older than CURRENT is offset-committed (its successor
     only started after its offsets committed) and can never be replayed;
-    nothing reads its entities/pairs/score/cc/state sinks again. Its
-    ``normalize_delta`` parquet IS still read — the state manifest's
-    norm-path chain unions every batch's delta-normalize — so that one sink
-    (and the sentinel) survives. Returns the pruned paths.
+    nothing reads its entities/pairs/score/cc/state sinks again. The chain
+    elements it wrote (normalize_delta, sn_index, tok_index, cc_delta) ARE
+    still read while ``current_run_dir``'s manifest lists them, so they
+    survive, and so does the sentinel. Returns the pruned paths.
 
     Cost is O(1) amortized per batch, not O(#batches): ids are visited
     numerically from ``watermark + 1`` (the pointer's pruned-upto line, so
@@ -181,20 +196,31 @@ def prune_superseded(
     cur_id = _batch_id_of(Path(current_run_dir).name)
     if cur_id is None:
         return []
+    live = _live_paths(current_run_dir)
     pruned = []
     for bid in range(max(watermark + 1, 0), cur_id):
         d = Path(out_dir) / f"batch-{bid:06d}"
-        if not d.is_dir():
-            continue
-        for child in d.iterdir():
-            if child.name in PRUNE_KEEP:
-                continue
-            if child.is_dir():
-                shutil.rmtree(child)
-            else:
-                child.unlink()
-            pruned.append(str(child))
+        if d.is_dir():
+            pruned += _drop_unreferenced(d, live, keep=INGEST_ID_FILE)
     return pruned
+
+
+def _delete_superseded(out_root: str, compact_dir: str, batch_id: int) -> None:
+    """Apply the reference rule to every batch and compact dir the compact
+    dir ``compact_dir`` (CURRENT, written after batch ``batch_id``)
+    supersedes. Batch ``batch_id`` keeps its sentinel for replay detection
+    until its offsets commit; older dirs keep only referenced sinks and are
+    removed once nothing in them is."""
+    live = _live_paths(compact_dir)
+    for d in Path(out_root).iterdir():
+        m = re.fullmatch(r"(batch|compact)-(\d+)", d.name)
+        if (
+            not m or not d.is_dir() or str(d) == compact_dir
+            or int(m.group(2)) > batch_id
+        ):
+            continue
+        triggering = d.name == f"batch-{batch_id:06d}"
+        _drop_unreferenced(d, live, keep=INGEST_ID_FILE if triggering else None)
 
 
 def _compact_and_clean(
@@ -205,16 +231,19 @@ def _compact_and_clean(
     digest: str,
     cfg: MatcherConfig | None,
 ) -> str:
-    """Fold the chains into a fresh compact dir, repoint CURRENT at it, and
-    delete everything it supersedes.
+    """Compact the state into a fresh compact dir, repoint CURRENT at it,
+    and delete what it supersedes.
 
     Runs AFTER batch ``batch_id``'s pointer advance (so a crash mid-compact
     leaves a consistent batch-run_dir pointer) and before its offsets commit
     (a replay after the repoint hits the sentinel-verified no-op branch in
-    :func:`ingest_batch`). Once the pointer names the compact dir, no chain
-    references any batch run_dir: older batch dirs and older compact dirs
-    are deleted outright, and this batch's dir is stripped to its sentinel
-    (kept only for replay detection until the offsets commit).
+    :func:`ingest_batch`). Compaction folds only the chains whose tail has
+    grown and re-references the rest, so the compact dir's manifest may
+    still name sinks of older batch and compact dirs: only sinks it does
+    not reference are deleted (:func:`_delete_superseded`). A crash between
+    the repoint and the deletion leaves extra files, never a missing one;
+    the next compaction deletes them. With ``cfg`` None the state keeps its
+    own bucket counts.
     """
     compact_dir = str(Path(out_root) / f"compact-{batch_id:06d}")
     cstate.compact_state(
@@ -225,21 +254,7 @@ def _compact_and_clean(
         out_root, compact_dir, digest,
         pruned_upto=batch_id, last_batch_id=batch_id,
     )
-    for d in Path(out_root).glob("batch-*"):
-        bid = _batch_id_of(d.name)
-        if bid is None or not d.is_dir():
-            continue
-        if bid < batch_id:
-            shutil.rmtree(d)
-        elif bid == batch_id:
-            for child in d.iterdir():
-                if child.name == INGEST_ID_FILE:
-                    continue
-                shutil.rmtree(child) if child.is_dir() else child.unlink()
-    for d in Path(out_root).glob("compact-*"):
-        m = re.fullmatch(r"compact-(\d+)", d.name)
-        if m and int(m.group(1)) < batch_id and d.is_dir():
-            shutil.rmtree(d)
+    _delete_superseded(out_root, compact_dir, batch_id)
     return compact_dir
 
 

@@ -56,11 +56,11 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--max-files-per-trigger", type=int, default=1,
                     help="per-micro-batch delta size bound")
     ap.add_argument("--compact-every", type=int, default=None,
-                    help="fold the state chains (norm / sn_index / labels) "
-                         "into a fresh compact dir and delete superseded "
-                         "batch dirs after every Nth batch — bounds chain "
-                         "length and disk at the cost of one amortized "
-                         "corpus-sized write per N batches")
+                    help="after every Nth batch, write a compact dir that "
+                         "folds each state chain whose tail has grown to "
+                         "half its base and re-references the others, then "
+                         "delete what is no longer referenced — bounds chain "
+                         "length and disk")
     ap.add_argument("--continuous", action="store_true",
                     help="run until interrupted instead of drain-and-stop "
                          "(availableNow)")

@@ -6,8 +6,9 @@ Done-criteria (round-4 verdict item #3):
   ``emit="full"`` wrote the whole corpus per batch);
 - restart smoke F1 = 1.0000 unchanged (query restarted mid-stream with the
   same out_dir — the checkpoint skips committed files, the pointer chains);
-- chain length bounded in a ≥10-batch run (``--compact-every`` folds the
-  state chains and deletes superseded batch dirs).
+- chain length bounded in a ≥10-batch run (``--compact-every`` compacts
+  the state, folding the chains whose tail has grown, and deletes the
+  superseded sinks the compacted state no longer references).
 
 Protocol: one deterministic fixture (seed=42) split into a catalog plus
 N_BATCHES landed delta files; batch pipeline resolves the catalog; phase 1

@@ -9,8 +9,9 @@ Contract under test:
 - ``catalog_entities_path`` REFUSES a delta-emit run_dir's partial sink —
   both the manifest-recorded form and the EMIT_DELTA marker of older
   run_dirs that have no manifest;
-- ``compact_state`` folds the three chains back to single elements and the
-  compacted dir chains a further delta identically to the uncompacted one.
+- ``compact_state`` re-references short chains, folds long ones (or all of
+  them when forced), and the compacted dir chains a further delta
+  identically to the uncompacted one.
 """
 
 from __future__ import annotations
@@ -144,38 +145,121 @@ def test_emit_delta_marker_without_manifest(spark, delta_chain, tmp_path):
 
 
 def test_compact_state_folds_chains_and_chains_on(
-    spark, corpus3, delta_chain, full_chain_entities, tmp_path
+    spark, corpus3, delta_chain, full_chain_entities, tmp_path, monkeypatch
 ):
+    """Two compactions of the same chain: one with the default arguments,
+    where the small norm and postings tails are re-referenced, and one
+    forced to fold every chain (a new sn bucket count and a fold ratio of
+    0). Both are semantics-free."""
     dc = corpus3[3]
     _, d2 = delta_chain
-    cdir = str(tmp_path / "compact")
-    cstate.compact_state(spark, d2, cdir, num_buckets=8)
+    chained = json.loads((Path(d2) / "state.json").read_text())
 
-    manifest = json.loads((Path(cdir) / "state.json").read_text())
-    assert len(manifest["norm_paths"]) == 1
-    assert len(manifest["sn_chain"]) == 1
-    assert len(manifest["labels_chain"]) == 1
-
-    # the compacted view equals the chain it folded
-    assert _labels(
-        current_entities(spark, cdir)
-    ) == _labels(full_chain_entities)
-
-    # a third delta chained from the COMPACTED dir equals the same delta
-    # chained from the UNcompacted run_dir — compaction is semantics-free
-    rd3 = str(tmp_path / "d3")
-    run_delta_pipeline(
-        spark, None, dc, rd3, CFG, input_id="d3c",
-        state=cstate.load_catalog_state(spark, cdir), emit="delta",
-    )
+    # a third delta chained from the UNcompacted run_dir: the reference
     rd4 = str(tmp_path / "d4")
     run_delta_pipeline(
         spark, None, dc, rd4, CFG, input_id="d3u",
         state=cstate.load_catalog_state(spark, d2), emit="delta",
     )
-    assert _labels(current_entities(spark, rd3)) == _labels(
-        current_entities(spark, rd4)
-    )
+    want = _labels(current_entities(spark, rd4))
+
+    cref = str(tmp_path / "compact_ref")
+    cstate.compact_state(spark, d2, cref)
+    manifest = json.loads((Path(cref) / "state.json").read_text())
+    # the two deltas' norm rows are a third of the catalog's bytes: the
+    # chain is re-referenced, nothing is copied
+    assert manifest["norm_paths"] == chained["norm_paths"]
+    assert manifest["tok_chain"] == chained["tok_chain"]
+    assert not (Path(cref) / "normalize").exists()
+    assert all(Path(p).exists() for p in cstate.manifest_paths(cref))
+
+    cfold = str(tmp_path / "compact_fold")
+    with monkeypatch.context() as m:
+        m.setattr(cstate, "FOLD_RATIO", 0.0)
+        cstate.compact_state(spark, d2, cfold, num_buckets=8)
+    manifest = json.loads((Path(cfold) / "state.json").read_text())
+    assert len(manifest["norm_paths"]) == 1
+    assert len(manifest["sn_chain"]) == 1
+    assert len(manifest["labels_chain"]) == 1
+    assert len(manifest["tok_chain"]) == 1
+    assert all(p.startswith(cfold) for p in cstate.manifest_paths(cfold))
+
+    for i, cdir in enumerate((cref, cfold)):
+        # the compacted view equals the chain it compacted
+        assert _labels(
+            current_entities(spark, cdir)
+        ) == _labels(full_chain_entities)
+
+        # a third delta chained from the COMPACTED dir equals the same delta
+        # chained from the UNcompacted run_dir — compaction is semantics-free
+        rd3 = str(tmp_path / f"d3_{i}")
+        run_delta_pipeline(
+            spark, None, dc, rd3, CFG, input_id="d3c",
+            state=cstate.load_catalog_state(spark, cdir), emit="delta",
+        )
+        assert _labels(current_entities(spark, rd3)) == want
+
+
+def test_compact_state_keeps_the_state_bucket_counts(spark, catalog_run, tmp_path):
+    """Unset bucket counts mean the state's own, and a count equal to the
+    state's forces no fold: compacting a state whose chains are single
+    elements re-references every chain and keeps its sn buckets (not the
+    session's default parallelism)."""
+    from codingchallenge_spark.sources import checkpoint as ckpt
+
+    buckets = ckpt.read_marker(catalog_run, "sn_bounds")["rows"]
+    assert buckets != spark.sparkContext.defaultParallelism
+    chained = json.loads((Path(catalog_run) / "state.json").read_text())
+    for name, kwargs in (
+        ("unset", {}),
+        ("same", {"num_buckets": buckets, "tok_buckets": CFG.tok_buckets}),
+    ):
+        out = str(tmp_path / name)
+        cstate.compact_state(spark, catalog_run, out, **kwargs)
+        manifest = json.loads((Path(out) / "state.json").read_text())
+        for chain in ("norm_paths", "sn_chain", "labels_chain", "tok_chain"):
+            assert manifest[chain] == chained[chain], (name, chain)
+        assert manifest["tok_buckets"] == CFG.tok_buckets
+        assert ckpt.read_marker(out, "sn_bounds")["rows"] == buckets
+        assert sorted(p.name for p in Path(out).iterdir()) == [
+            "sn_bounds", "stage_metrics.jsonl", "state.json", "token_df",
+        ]
+
+
+def test_parent_layout_states_take_a_delta_and_a_compaction(
+    spark, corpus3, delta_chain, tmp_path, monkeypatch
+):
+    """State dirs in the layout an always-folding compaction wrote — a
+    compact dir whose chains are single elements inside it, re-bucketed to
+    the session's parallelism — and a delta run_dir chained from a batch
+    catalog each take a delta, then a compaction, with identical labels."""
+    dc = corpus3[3]
+    _, d2 = delta_chain
+    legacy = str(tmp_path / "legacy_compact")
+    with monkeypatch.context() as m:
+        m.setattr(cstate, "FOLD_RATIO", 0.0)
+        cstate.compact_state(
+            spark, d2, legacy,
+            num_buckets=spark.sparkContext.defaultParallelism,
+        )
+    manifest = json.loads((Path(legacy) / "state.json").read_text())
+    assert all(len(manifest[c]) == 1 for c in (
+        "norm_paths", "sn_chain", "labels_chain", "tok_chain"
+    ))
+
+    got = []
+    for i, src in enumerate((legacy, d2)):
+        rd = str(tmp_path / f"delta_{i}")
+        run_delta_pipeline(
+            spark, None, dc, rd, CFG, input_id="legacy",
+            state=cstate.load_catalog_state(spark, src), emit="delta",
+        )
+        out = str(tmp_path / f"compact_{i}")
+        cstate.compact_state(spark, rd, out)
+        assert all(Path(p).exists() for p in cstate.manifest_paths(out))
+        got.append(_labels(current_entities(spark, rd)))
+        got.append(_labels(current_entities(spark, out)))
+    assert all(g == got[0] for g in got)
 
 
 def test_compact_state_builds_and_rebuckets_tok_index(

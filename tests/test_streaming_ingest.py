@@ -21,6 +21,7 @@ import os
 import time
 from pathlib import Path
 
+import pandas as pd
 import pytest
 
 from codingchallenge_spark.plans import catalog_state as cstate
@@ -202,17 +203,29 @@ def test_ingest_batch_replay_and_empty(spark, corpus3, catalog_run, tmp_path):
     assert read_pointer(out) == run_dir
 
 
-def test_compaction_bounds_chains_and_disk(spark, corpus3, catalog_run, tmp_path):
-    """compact_every folds the state chains into a compact dir, repoints
-    CURRENT, deletes superseded batch dirs outright — and a replay of the
-    batch that triggered compaction is still a sentinel-verified no-op."""
-    import json
+def test_compaction_bounds_chains_and_disk(
+    spark, corpus3, catalog_run, tmp_path, monkeypatch
+):
+    """compact_every writes a compact dir, repoints CURRENT, deletes every
+    superseded sink the compact dir does not reference — and a replay of
+    the batch that triggered compaction is still a sentinel-verified no-op.
+    Once with the small norm tail re-referenced, once forced to fold every
+    chain (fold ratio 0)."""
+    for fold in (False, True):
+        with monkeypatch.context() as m:
+            if fold:
+                m.setattr(cstate, "FOLD_RATIO", 0.0)
+            _compaction_round(
+                spark, corpus3, catalog_run, str(tmp_path / f"out{fold:d}"),
+                fold,
+            )
 
-    from codingchallenge_spark.plans import catalog_state as cstate
+
+def _compaction_round(spark, corpus3, catalog_run, out: str, fold: bool):
+    import json
 
     _, da, db = corpus3
     db1, db2 = db.iloc[: len(db) // 2], db.iloc[len(db) // 2 :]
-    out = str(tmp_path / "out")
 
     r0 = ingest_batch(
         spark, spark.createDataFrame(da), 0, out, catalog_run, CFG,
@@ -227,14 +240,27 @@ def test_compaction_bounds_chains_and_disk(spark, corpus3, catalog_run, tmp_path
     cdir = r1["compacted"]
     assert cdir is not None and cdir.endswith("compact-000001")
     assert read_pointer(out) == cdir
-    # batch 0 deleted outright; batch 1 stripped to its sentinel
-    assert not Path(out, "batch-000000").exists()
-    b1 = Path(out, "batch-000001")
-    assert [p.name for p in b1.iterdir()] == ["INGEST_ID"]
-    # folded chains are single-element
     manifest = json.loads((Path(cdir) / "state.json").read_text())
-    assert len(manifest["norm_paths"]) == 1
-    assert len(manifest["labels_chain"]) == 1
+    b0, b1 = Path(out, "batch-000000"), Path(out, "batch-000001")
+    if fold:
+        # batch 0 deleted outright; batch 1 stripped to its sentinel
+        assert not b0.exists()
+        assert [p.name for p in b1.iterdir()] == ["INGEST_ID"]
+        # folded chains are single-element
+        assert len(manifest["norm_paths"]) == 1
+        assert len(manifest["labels_chain"]) == 1
+    else:
+        # the norm chain is re-referenced: both batches keep their
+        # normalize_delta, batch 0 loses its sentinel and every unreferenced
+        # sink, batch 1 keeps its sentinel
+        assert manifest["norm_paths"][1:] == [
+            str(b0 / "normalize_delta"), str(b1 / "normalize_delta")
+        ]
+        live = {Path(p) for p in cstate.manifest_paths(cdir)}
+        assert {p for p in b0.iterdir()} <= live
+        assert {p for p in b1.iterdir()} <= live | {b1 / "INGEST_ID"}
+        assert (b1 / "INGEST_ID").exists()
+    assert all(Path(p).exists() for p in cstate.manifest_paths(cdir))
 
     # replay of the compaction-triggering batch (crash before its offsets
     # committed): sentinel-verified no-op, pointer stays on the compact dir
@@ -256,8 +282,9 @@ def test_compaction_bounds_chains_and_disk(spark, corpus3, catalog_run, tmp_path
     cat, _, _ = corpus3
     assert final.count() == len(cat) + len(da) + len(db)
     m2 = json.loads((Path(r2["run_dir"]) / "state.json").read_text())
-    assert len(m2["norm_paths"]) == 2  # compact base + this batch's delta
-    assert len(m2["labels_chain"]) == 2
+    # the compact dir's chains + this batch's delta
+    assert len(m2["norm_paths"]) == len(manifest["norm_paths"]) + 1
+    assert len(m2["labels_chain"]) == len(manifest["labels_chain"]) + 1
     # compact state still loads and is internally consistent
     st = cstate.load_catalog_state(spark, read_pointer(out))
     assert st.norm.count() == final.count()
@@ -405,9 +432,18 @@ def test_prune_is_numeric_and_watermarked(tmp_path):
         (d / "normalize_delta").mkdir()
         (d / "INGEST_ID").write_text("x\n")
     cur = str(out / "batch-1000001")
+    # CURRENT's manifest references both normalize_delta sinks
+    Path(cur).mkdir()
+    cstate.write_state_manifest(
+        cur,
+        [str(out / f"batch-{bid:06d}" / "normalize_delta")
+         for bid in (999999, 1000000)],
+        sn_chain=[], labels_chain=[],
+    )
     pruned = prune_superseded(str(out), cur, watermark=-1)
-    # both older dirs pruned down to normalize_delta (+ sentinel), despite
-    # 'batch-1000000' sorting before 'batch-999999' lexicographically
+    # both older dirs pruned down to the referenced normalize_delta
+    # (+ sentinel), despite 'batch-1000000' sorting before 'batch-999999'
+    # lexicographically
     assert len(pruned) == 2
     for bid in (999999, 1000000):
         d = out / f"batch-{bid:06d}"
@@ -435,3 +471,129 @@ def test_start_requires_persisted_state(spark, tmp_path):
             spark, str(tmp_path / "src"), str(tmp_path / "nostate"),
             str(tmp_path / "out"), CFG,
         )
+
+
+# --- Reference safety: size-tiered compaction re-references chain elements
+# that live in older batch and compact dirs, so deletion follows CURRENT's
+# manifest. ------------------------------------------------------------------
+
+
+@pytest.fixture(scope="module")
+def chain8(corpus3):
+    """The non-catalog rows of the tiny fixture as eight small batches."""
+    _, da, db = corpus3
+    rest = pd.concat([da, db]).sort_index().reset_index(drop=True)
+    return [rest[rest.index % 8 == i] for i in range(8)]
+
+
+@pytest.fixture(scope="module")
+def batch_partitions(spark, corpus3, chain8):
+    """Batch ``resolve_entities`` over the catalog and batches 0..k, as a
+    partition of rids (computed once per k)."""
+    from codingchallenge_spark.plans.matcher import resolve_entities
+
+    cat = corpus3[0]
+    cache: dict[int, set] = {}
+
+    def get(k: int) -> set:
+        if k not in cache:
+            rows = pd.concat([cat, *chain8[: k + 1]])
+            cache[k] = _partition(
+                resolve_entities(spark.createDataFrame(rows), CFG)
+            )
+        return cache[k]
+
+    return get
+
+
+def _partition(df) -> set[frozenset[str]]:
+    groups: dict[str, set[str]] = {}
+    for r in df.select("rid", "entity_id").collect():
+        groups.setdefault(r.entity_id, set()).add(r.rid)
+    return {frozenset(g) for g in groups.values()}
+
+
+def _unreferenced(out: str) -> list[Path]:
+    """Children of superseded batch/compact dirs that CURRENT's manifest
+    does not reference, sentinels aside."""
+    cur = Path(read_pointer(out))
+    live = {Path(p) for p in cstate.manifest_paths(str(cur))}
+    return [
+        child
+        for d in Path(out).iterdir()
+        if d.is_dir() and d != cur and d.name.startswith(("batch-", "compact-"))
+        for child in d.iterdir()
+        if child.name != "INGEST_ID" and child not in live
+    ]
+
+
+@pytest.mark.parametrize("every", [1, 3])
+def test_compacted_chain_references_only_live_paths(
+    spark, catalog_run, chain8, batch_partitions, tmp_path, every
+):
+    """Eight batches with compaction every ``every`` batches: after each,
+    every path in CURRENT's manifest exists, the resolved view equals batch
+    resolution over the same rows, and the state keeps the catalog's sn
+    bucket count. Each compaction leaves nothing unreferenced behind; over
+    the run some chain is re-referenced and some chain folds."""
+    from codingchallenge_spark.sources import checkpoint as ckpt
+
+    out = str(tmp_path / "out")
+    buckets = ckpt.read_marker(catalog_run, "sn_bounds")["rows"]
+    rereferenced = folded = False
+    for bid, pdf in enumerate(chain8):
+        res = ingest_batch(
+            spark, spark.createDataFrame(pdf), bid, out, catalog_run,
+            compact_every=every,
+        )
+        cur = read_pointer(out)
+        assert cur == (res["compacted"] or res["run_dir"])
+        paths = cstate.manifest_paths(cur)
+        assert [p for p in paths if not Path(p).exists()] == [], bid
+        assert ckpt.read_marker(cur, "sn_bounds")["rows"] == buckets
+        assert _partition(current_entities(spark, cur)) == batch_partitions(bid)
+        if res["compacted"]:
+            assert _unreferenced(out) == [], bid
+            rereferenced |= any(not p.startswith(cur) for p in paths)
+            folded |= any(p.startswith(cur) for p in paths)
+    assert rereferenced and folded
+
+
+def test_crash_between_repoint_and_cleanup(
+    spark, catalog_run, chain8, batch_partitions, tmp_path, monkeypatch
+):
+    """A run killed after CURRENT names the new compact dir but before the
+    superseded sinks are deleted: the state still loads, the replay is a
+    no-op, and the next batch succeeds and deletes the leftovers."""
+    from codingchallenge_spark.streaming import ingest
+
+    out = str(tmp_path / "out")
+
+    def batch(bid: int) -> dict:
+        return ingest_batch(
+            spark, spark.createDataFrame(chain8[bid]), bid, out, catalog_run,
+            CFG, compact_every=1,
+        )
+
+    batch(0)
+
+    def killed(*_args):
+        raise RuntimeError("killed before cleanup")
+
+    with monkeypatch.context() as m:
+        m.setattr(ingest, "_delete_superseded", killed)
+        with pytest.raises(RuntimeError, match="killed before cleanup"):
+            batch(1)
+    cur = read_pointer(out)
+    assert cur.endswith("compact-000001")
+    assert _unreferenced(out) != []  # the cleanup never ran
+    cstate.load_catalog_state(spark, cur)
+    assert _partition(current_entities(spark, cur)) == batch_partitions(1)
+
+    assert batch(1).get("replay_noop")
+    res = batch(2)
+    assert res["executed"] and res["compacted"]
+    cur = read_pointer(out)
+    assert all(Path(p).exists() for p in cstate.manifest_paths(cur))
+    assert _unreferenced(out) == []
+    assert _partition(current_entities(spark, cur)) == batch_partitions(2)
