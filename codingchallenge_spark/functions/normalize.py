@@ -144,25 +144,23 @@ def partition_floor(df: DataFrame) -> DataFrame:
 def normalize_for_matching(records: DataFrame) -> DataFrame:
     """The matcher's normalize step, shared by every plan that resolves a
     whole corpus: partition floor → :func:`normalize_records` →
-    :func:`with_token_hashes` → ``rid_b``.
+    :func:`with_token_hashes` → ``rid`` = unhex(rid), the one id column.
 
-    ``rid_b`` = unhex(rid): every blocking/scoring/CC exchange keys on
-    record ids, and a 32-byte binary halves that key's shuffle bytes vs the
-    64-char hex string — the dominant cost of the biggest intermediates
-    (the exploded token relation and the candidate-pair stream) at
-    10^12-file scale. Exact, not approximate: rid is lowercase sha256-hex BY
-    CONSTRUCTION (:func:`record_id`), and fixed-width binary compares
-    bytewise in the same order as its hex form — so least/greatest
-    canonicalization, SN sort order, CC minima and the final min-label all
-    pick identical records; lower(hex(·)) restores the exact string at emit.
+    Binary because every blocking/scoring/CC exchange keys on record ids,
+    and a 32-byte binary halves that key's shuffle bytes vs the 64-char hex
+    string — the dominant cost of the biggest intermediates (the exploded
+    token relation and the candidate-pair stream) at 10^12-file scale.
+    Exact: rid is lowercase sha256-hex BY CONSTRUCTION (:func:`record_id`),
+    and fixed-width binary compares bytewise in the same order as its hex
+    form — so least/greatest canonicalization, SN sort order, CC minima and
+    the final min-label all pick identical records; lower(hex(·)) restores
+    the exact string, only at emit (plans.matcher.emit_entities).
     """
     norm = with_token_hashes(normalize_records(partition_floor(records)))
-    return norm.withColumn("rid_b", F.unhex("rid"))
+    return norm.withColumn("rid", F.unhex("rid"))
 
 
-def work_projection(norm: DataFrame, *extra: str) -> DataFrame:
-    """The narrow, binary-rid relation blocking, scoring and CC read:
-    ``(rid_b AS rid, name_norm, tokens, th, *extra)``."""
-    return norm.select(
-        F.col("rid_b").alias("rid"), "name_norm", "tokens", "th", *extra
-    )
+def work_projection(norm: DataFrame) -> DataFrame:
+    """The narrow relation blocking, scoring and CC read from a matching
+    normalize: ``(rid, name_norm, tokens, th)``, ``rid`` binary."""
+    return norm.select("rid", "name_norm", "tokens", "th")

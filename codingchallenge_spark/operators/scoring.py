@@ -34,7 +34,6 @@ from codingchallenge_spark.functions.similarity import (
     hashed_jaccard_udf,
     jaro_winkler_udf,
     levenshtein_ratio_udf,
-    token_hashes,
     token_jaccard,
 )
 from codingchallenge_spark.operators.blocking import salted_join
@@ -115,12 +114,7 @@ def fused_pair_attrs(
     ONCE, shipping (name_norm, th) together. Half the joins / broadcast
     builds of a jaccard-then-names two-round plan."""
     keep = [c for c in ("rid1", "rid2", "block_key") if c in pairs.columns]
-    if "th" in records_norm.columns:
-        attrs = records_norm.select("rid", "name_norm", "th")
-    else:
-        attrs = records_norm.select(
-            "rid", "name_norm", token_hashes("tokens").alias("th")
-        )
+    attrs = records_norm.select("rid", "name_norm", "th")
     if salt_buckets > 0:
         joined = salted_join(pairs, attrs, "rid1", salt_buckets)
         joined = joined.withColumnsRenamed({"name_norm": "name1", "th": "th1"})

@@ -75,6 +75,7 @@ from __future__ import annotations
 
 import json
 from dataclasses import dataclass
+from functools import reduce
 from pathlib import Path
 
 import numpy as np
@@ -102,7 +103,7 @@ FOLD_RATIO = 0.5
 class CatalogState:
     """In-memory handle on a catalog's persisted derived relations."""
 
-    norm: DataFrame  # normalize-stage rows (full cols + name_norm/tokens/th/rid_b)
+    norm: DataFrame  # normalize-stage rows: full cols + name_norm/tokens/th, binary rid
     token_df: DataFrame  # (tok, df)
     sn_index: DataFrame  # RESOLVED view: (bucket, rid: binary, name_norm, pos)
     sn_bounds: DataFrame  # (bucket, n, start_pos, min_name, min_rid) — tiny
@@ -150,7 +151,7 @@ def build_tok_postings(norm: DataFrame, num_buckets: int) -> DataFrame:
     """
     parallelism = norm.sparkSession.sparkContext.defaultParallelism
     return (
-        norm.select(F.col("rid_b").alias("rid"), F.explode("tokens").alias("tok"))
+        norm.select("rid", F.explode("tokens").alias("tok"))
         .withColumn(
             "tbucket",
             F.pmod(F.xxhash64("tok"), F.lit(num_buckets)).cast("int"),
@@ -202,7 +203,7 @@ def build_sn_index(
     spark = norm.sparkSession
     if num_buckets is None:
         num_buckets = spark.sparkContext.defaultParallelism
-    keyed = norm.select(F.col("rid_b").alias("rid"), "name_norm")
+    keyed = norm.select("rid", "name_norm")
     bucketed = (
         keyed.repartitionByRange(num_buckets, "name_norm", "rid")
         .withColumn("bucket", F.spark_partition_id())
@@ -409,7 +410,8 @@ def merge_sn_buckets(state: "CatalogState", delta_norm: DataFrame) -> DataFrame:
     name_norm, lpos) — the new sn_chain element. Untouched buckets are never
     read or rewritten: their rows' (bucket, lpos) are insertion-invariant;
     the global-position shift an insertion causes lives entirely in the
-    recomputed bounds table (:func:`merged_bounds`).
+    recomputed bounds table (:func:`merged_bounds`). A delta landing in
+    :data:`FOLD_RATIO` of the buckets rewrites all: a whole index, the base.
 
     Cost: |delta| key assignments (binary search) + one hash exchange and
     per-bucket sort over |touched buckets| · bucket rows — delta-
@@ -429,14 +431,17 @@ def merge_sn_buckets(state: "CatalogState", delta_norm: DataFrame) -> DataFrame:
             "merge_sn_buckets needs the stored-form index (state.sn_stored); "
             "in-memory states built without one cannot be maintained"
         )
-    delta_keys = delta_norm.select(F.col("rid_b").alias("rid"), "name_norm")
+    delta_keys = delta_norm.select("rid", "name_norm")
     bidx = collect_bounds(state.sn_bounds)
     assigned = assign_buckets(delta_keys, bidx)
     # Touched-bucket ids: bounded by min(|delta|, num_buckets) — collected so
-    # the isin literal prunes the stored scan at plan-build time.
+    # the isin literal prunes the stored scan at plan-build time. An element
+    # compaction would fold (re-sorting the norm chain) takes every bucket.
     touched = sorted(
         r.bucket for r in assigned.select("bucket").distinct().collect()
     )
+    if len(touched) >= FOLD_RATIO * len(bidx):
+        touched = bidx.buckets.tolist()
     old_rows = state.sn_stored.filter(F.col("bucket").isin(touched)).select(
         "bucket", "rid", "name_norm"
     )
@@ -555,11 +560,24 @@ def _read_labels_chain(spark: SparkSession, labels_chain: list[str]) -> DataFram
 
 
 def _read_norm(spark: SparkSession, *paths: str) -> DataFrame:
-    """Read a norm chain. A catalog persisted by an engine that still had the
-    int32 prefilter opt-in carries a ``th32`` column; it is dropped here, so
-    a legacy chain unions with current delta norms (unionByName on
-    ``state.norm.columns``)."""
-    return ckpt.read_parquet(spark, *paths).drop("th32")
+    """Read a norm chain in the current layout. Older layouts are mapped
+    here, and only here: a retired ``th32`` column is dropped, and a hex
+    ``rid`` stored next to its binary ``rid_b`` gives way to it. One scan
+    cannot read ``rid`` as both string and binary, so paths are read in
+    groups by the layout their markers record (no Spark job), then
+    unioned; a current-layout chain is one read."""
+    groups: dict[bool | None, list[str]] = {}
+    for path in paths:
+        schema = ckpt.recorded_schema(path)
+        legacy = None if schema is None else "rid_b" in schema.fieldNames()
+        groups.setdefault(legacy, []).append(path)
+    parts = []
+    for group in groups.values():
+        df = ckpt.read_parquet(spark, *group).drop("th32")
+        if "rid_b" in df.columns:
+            df = df.withColumn("rid", F.col("rid_b")).drop("rid_b")
+        parts.append(df)
+    return reduce(DataFrame.unionByName, parts)
 
 
 def load_catalog_state(spark: SparkSession, run_dir: str) -> CatalogState:

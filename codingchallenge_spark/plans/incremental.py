@@ -179,8 +179,7 @@ def incremental_token_pairs_state(
         )
     else:
         old_cold = (
-            state.norm.select(F.col("rid_b").alias("rid"), "tokens")
-            .select("rid", F.explode("tokens").alias("tok"))
+            state.norm.select("rid", F.explode("tokens").alias("tok"))
             .join(F.broadcast(delta_toks), "tok")
             .withColumn("is_new", F.lit(False))
         )
@@ -486,7 +485,7 @@ def delta_attrs(
         .distinct()
     )
     return (
-        state.norm.select(F.col("rid_b").alias("rid"), "name_norm", "th")
+        state.norm.select("rid", "name_norm", "th")
         .unionByName(work_new.select("rid", "name_norm", "th"))
         .join(touched_rids, "rid", "left_semi")
     )
@@ -585,24 +584,20 @@ def normalize_delta_stage(
 ) -> DataFrame:
     """The delta graph's first stage: the delta normalized like the catalog.
 
+    Its one id column is the binary ``rid``, as in the catalog's.
     Idempotent ingest: delta rows whose rid (derived from the natural key)
-    is already in the catalog's labels are dropped — the catalog row wins
-    (the labels are binary, the normalized rid hex). The same key is
-    deduped WITHIN the batch too: one delta replaying a row twice (same
-    repo/path/commit) must not emit duplicate rid rows.
+    is already in the catalog's binary labels are dropped — the catalog row
+    wins. The same key is deduped WITHIN the batch too: one delta replaying
+    a row twice (same repo/path/commit) must not emit duplicate rid rows.
     """
 
     def build() -> DataFrame:
-        nd = (
+        return with_token_hashes(
             normalize_records(delta_records.select(*INPUT_COLUMNS))
             .dropDuplicates(["rid"])
-            .join(
-                state.labels.select(F.lower(F.hex("rid")).alias("rid")),
-                "rid",
-                "left_anti",
-            )
+            .withColumn("rid", F.unhex("rid"))
+            .join(state.labels.select("rid"), "rid", "left_anti")
         )
-        return with_token_hashes(nd).withColumn("rid_b", F.unhex("rid"))
 
     return stage("normalize_delta", [], build)
 

@@ -118,28 +118,26 @@ def candidate_pairs(records_norm: DataFrame, cfg: MatcherConfig) -> DataFrame:
 def emit_entities(norm: DataFrame, labels: DataFrame) -> DataFrame:
     """Join CC labels back onto the full rows and restore string ids.
 
-    The one place the binary-rid emit contract lives (shared by the
-    in-memory plan and the checkpointed pipeline): ``labels`` carries
-    binary ``(rid, entity_id)``, ``norm`` carries the full rows plus the
-    narrow-stage columns and ``rid_b``; the output drops the narrow
-    columns, joins on the binary key, re-hexes ``entity_id``, and keeps
-    ``rid`` first — the column order the string-keyed join (USING rid)
-    used to produce, kept stable for downstream consumers.
+    The one place ids go back to hex (shared by the in-memory plan and the
+    checkpointed pipeline): ``norm`` carries the full rows plus the
+    narrow-stage columns, and ``labels`` the CC's ``(rid, entity_id)``,
+    both keyed on the binary ``rid``. The output drops the narrow columns,
+    joins USING rid (so ``rid`` comes first) and re-hexes ``rid`` and
+    ``entity_id``.
     """
-    out = (
+    return (
         norm.drop("name_norm", "tokens", "th")
-        .join(labels.withColumnRenamed("rid", "rid_b"), "rid_b")
-        .drop("rid_b")
+        .join(labels, "rid")
+        .withColumn("rid", F.lower(F.hex("rid")))
         .withColumn("entity_id", F.lower(F.hex("entity_id")))
     )
-    return out.select("rid", *[c for c in out.columns if c != "rid"])
 
 
 def normalize_stage(stage, records: DataFrame) -> DataFrame:
     """The batch graph's first stage. ``th`` (token-hash fingerprints) is
     interpreted-eval, so the stage exists to be materialized once — by the
     parquet sink, or by the in-memory sink's pin — and never recomputed per
-    consumer; ``rid_b`` halves the record-id shuffle bytes
+    consumer; its one id column is the binary ``rid``
     (normalize.normalize_for_matching)."""
     return stage("normalize", [], lambda: normalize_for_matching(records))
 

@@ -173,11 +173,8 @@ def current_entities(spark: SparkSession, run_dir: str) -> DataFrame:
 # Bump whenever any stage's OUTPUT SCHEMA or on-disk semantics change: the
 # token is folded into every stage fingerprint, so --resume against a run_dir
 # written by older code rebuilds instead of loading a stale-schema checkpoint
-# (e.g. v2 added the `th` column to the normalize stage — resuming a v1
-# run_dir would otherwise fail on norm.select(..., 'th'); v3 switched the
-# blocking/scoring/cc stages to 32-byte binary rids; v4 switched the
-# sn_index stage to bucket-local positions + manifest sn_chain overlays).
-PIPELINE_SCHEMA_VERSION = 4
+# (v5: the normalize stages store one id column, the binary rid).
+PIPELINE_SCHEMA_VERSION = 5
 
 
 def _fingerprint(cfg: MatcherConfig, input_id: str, upstream: str, stage: str) -> str:
@@ -423,8 +420,8 @@ def run_delta_pipeline(
 
     norm_delta = inc.normalize_delta_stage(stage, state, delta_records)
 
-    def maintenance() -> tuple[list[int], list[str] | None]:
-        """The next state's relations; returns (touched sn buckets, next
+    def maintenance() -> tuple[list[dict], list[str] | None]:
+        """The next state's relations; returns the next (sn_chain,
         tok_chain)."""
         stage(
             "token_df",
@@ -463,16 +460,21 @@ def run_delta_pipeline(
                 ckpt.stage_path(run_dir, "tok_index")
             ]
         # Touched-bucket ids for the manifest, from the PERSISTED element
-        # (delta-proportional distinct over a delta-sized stage).
+        # (delta-proportional distinct over a delta-sized stage). An element
+        # touching every bucket (one sn_bounds row each) is the new base.
         touched_ids = sorted(
             r.bucket
             for r in idx_touched.select("bucket").distinct().collect()
         )
-        return touched_ids, tok_chain_next
+        path = ckpt.stage_path(run_dir, "sn_index")
+        if len(touched_ids) == ckpt.read_marker(run_dir, "sn_bounds")["rows"]:
+            return [{"path": path, "buckets": None}], tok_chain_next
+        element = {"path": path, "buckets": touched_ids}
+        return list(state.sn_chain) + [element], tok_chain_next
 
     # The maintenance branch depends only on normalize_delta and the prior
     # state.
-    entities, (touched_ids, tok_chain_next) = ckpt.run_parallel(
+    entities, (sn_chain_next, tok_chain_next) = ckpt.run_parallel(
         spark,
         lambda: inc.delta_stages(stage, state, norm_delta, cfg, sn=sn, emit=emit),
         maintenance,
@@ -481,13 +483,7 @@ def run_delta_pipeline(
         run_dir,
         (state.norm_paths or [])
         + [ckpt.stage_path(run_dir, "normalize_delta")],
-        sn_chain=list(state.sn_chain)
-        + [
-            {
-                "path": ckpt.stage_path(run_dir, "sn_index"),
-                "buckets": touched_ids,
-            }
-        ],
+        sn_chain=sn_chain_next,
         # cc_delta IS the labels-chain upsert element: new rids + every
         # member of a touched catalog entity, relabeled — exactly the set
         # whose labels the next chain read must override.

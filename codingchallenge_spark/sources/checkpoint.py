@@ -92,7 +92,7 @@ def is_done(run_dir: str, stage: str, fingerprint: str) -> bool:
     return meta.get("fingerprint") == fingerprint
 
 
-def _recorded_schema(path: str) -> StructType | None:
+def recorded_schema(path: str) -> StructType | None:
     m = Path(path) / MARKER
     if not m.exists():
         return None
@@ -120,7 +120,7 @@ def read_parquet(spark: SparkSession, *paths: str) -> DataFrame:
     any path has no recorded schema (written before markers carried one, or
     not by :func:`write_stage`) or when the paths disagree on a column's
     name or type."""
-    schemas = [_recorded_schema(p) for p in paths]
+    schemas = [recorded_schema(p) for p in paths]
     first = schemas[0]
     if first is None or any(
         s is None or _columns(s) != _columns(first) for s in schemas[1:]

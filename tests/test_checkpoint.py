@@ -83,6 +83,35 @@ def test_recorded_schema_matches_inferred(spark, done_run):
         ), s
 
 
+def test_norm_markers_record_one_binary_id(
+    spark, tiny_records, done_run, tmp_path
+):
+    """Every normalized relation stores its record id once, as the binary
+    ``rid``: the batch ``normalize``, the in-run ``catalog_norm`` and the
+    ``normalize_delta`` markers record no second id column."""
+    from codingchallenge_spark.plans.pipeline import (
+        catalog_entities_path,
+        run_delta_pipeline,
+    )
+
+    delta = tiny_records.limit(20).withColumn("commit", F.lit("delta-commit"))
+    rd = str(tmp_path / "derived")
+    run_delta_pipeline(
+        spark, ckpt.read_parquet(spark, catalog_entities_path(done_run)),
+        delta, rd, MatcherConfig(), input_id="derived", emit="delta",
+    )
+    for run_dir, stage in (
+        (done_run, "normalize"), (rd, "catalog_norm"), (rd, "normalize_delta")
+    ):
+        schema = ckpt.recorded_schema(ckpt.stage_path(run_dir, stage))
+        ids = {
+            f.name: f.dataType.simpleString()
+            for f in schema.fields
+            if f.name.startswith("rid")
+        }
+        assert ids == {"rid": "binary"}, (stage, ids)
+
+
 def test_marker_without_schema_loads_and_resumes(
     spark, tiny_records, done_run, tmp_path
 ):

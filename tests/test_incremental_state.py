@@ -81,7 +81,7 @@ def state(spark, catalog, tmp_path_factory):
     tmp = tmp_path_factory.mktemp("catstate")
     norm = with_token_hashes(
         normalize_records(catalog.select("repo", "path", "commit", "lang", "content"))
-    ).withColumn("rid_b", F.unhex("rid"))
+    ).withColumn("rid", F.unhex("rid"))
     norm.write.parquet(str(tmp / "norm"))
     normp = spark.read.parquet(str(tmp / "norm"))
     cstate.build_token_df(normp).write.parquet(str(tmp / "token_df"))
@@ -124,9 +124,9 @@ def work_new(spark, catalog, split_corpus):
         .dropDuplicates(["rid"])
         .join(catalog.select("rid"), "rid", "left_anti")
     )
-    nn = with_token_hashes(nn).withColumn("rid_b", F.unhex("rid")).cache()
+    nn = with_token_hashes(nn).withColumn("rid", F.unhex("rid")).cache()
     nn.count()
-    return nn.select(F.col("rid_b").alias("rid"), "name_norm", "tokens", "th")
+    return nn.select("rid", "name_norm", "tokens", "th")
 
 
 @pytest.fixture(scope="module")
@@ -171,8 +171,7 @@ def _pair_rows(df) -> list[tuple[str, str, str]]:
 
 def _union_work(st, work_new):
     return st.norm.select(
-        F.col("rid_b").alias("rid"), "name_norm", "tokens",
-        F.lit(False).alias("is_new"),
+        "rid", "name_norm", "tokens", F.lit(False).alias("is_new"),
     ).unionByName(
         work_new.select("rid", "name_norm", "tokens").withColumn(
             "is_new", F.lit(True)
@@ -317,10 +316,10 @@ def test_updated_state_equals_rebuild(spark, state, catalog, split_corpus, tmp_p
         with_token_hashes(
             normalize_records(new).join(catalog.select("rid"), "rid", "left_anti")
         )
-        .withColumn("rid_b", F.unhex("rid"))
+        .withColumn("rid", F.unhex("rid"))
     )
-    union_norm = st.norm.select("rid_b", "tokens", "name_norm").unionByName(
-        norm_new.select("rid_b", "tokens", "name_norm")
+    union_norm = st.norm.select("rid", "tokens", "name_norm").unionByName(
+        norm_new.select("rid", "tokens", "name_norm")
     )
     got = {
         (r.tok, r.df)
@@ -362,7 +361,7 @@ def test_maintenance_plan_is_bucket_local(spark, state, catalog, split_corpus):
         with_token_hashes(
             normalize_records(new).join(catalog.select("rid"), "rid", "left_anti")
         )
-        .withColumn("rid_b", F.unhex("rid"))
+        .withColumn("rid", F.unhex("rid"))
     )
     plan = _plan(cstate.merge_sn_buckets(st, norm_new))
     assert "rangepartitioning" not in plan
@@ -370,7 +369,7 @@ def test_maintenance_plan_is_bucket_local(spark, state, catalog, split_corpus):
     # the touched-bucket predicate reaches the parquet scan
     assert "In(bucket" in plan, "stored-index scan must be bucket-pruned"
 
-    work = norm_new.select(F.col("rid_b").alias("rid"), "name_norm")
+    work = norm_new.select("rid", "name_norm")
     cand_plan = _plan(_delta_sn_candidates(st, work, SN_WINDOW))
     assert "BroadcastNestedLoopJoin" not in cand_plan
 

@@ -292,9 +292,7 @@ def test_compact_state_builds_and_rebuckets_tok_index(
     assert st1.tok_buckets == MatcherConfig().tok_buckets
     # postings content = explode of the folded norm's tokens
     want = (
-        st1.norm.select(
-            F.col("rid_b").alias("rid"), F.explode("tokens").alias("tok")
-        )
+        st1.norm.select("rid", F.explode("tokens").alias("tok"))
         .groupBy()
         .count()
         .collect()[0][0]
@@ -377,3 +375,138 @@ def test_legacy_th32_catalog_takes_a_delta(spark, corpus3, catalog_run, tmp_path
     compacted = str(tmp_path / "c")
     cstate.compact_state(spark, legacy, compacted, num_buckets=8)
     assert "th32" not in cstate.load_catalog_state(spark, compacted).norm.columns
+
+
+def test_parent_layout_norm_takes_deltas_and_a_compaction(
+    spark, corpus3, catalog_run, delta_chain, tmp_path, monkeypatch
+):
+    """A catalog whose persisted normalize stage stores the id twice — the
+    hex ``rid`` next to a binary ``rid_b``, as engines before the single
+    binary id column wrote it — takes two deltas, so the second loads a
+    chain that mixes both layouts, and a forced compaction. Loading the
+    mixed chain starts no Spark job, and labels and entities equal those of
+    the same deltas chained from the unmodified catalog."""
+    import shutil
+
+    from pyspark.sql import functions as F
+
+    from codingchallenge_spark.sources import checkpoint as ckpt
+
+    legacy = str(tmp_path / "legacy_rid")
+    shutil.copytree(catalog_run, legacy)
+    norm_tmp = str(tmp_path / "norm_tmp")
+    ckpt.load_stage(spark, legacy, "normalize").withColumn(
+        "rid_b", F.col("rid")
+    ).withColumn("rid", F.lower(F.hex("rid"))).write.parquet(norm_tmp)
+    fingerprint = ckpt.read_marker(legacy, "normalize")["fingerprint"]
+    ckpt.write_stage(
+        spark.read.parquet(norm_tmp), legacy, "normalize", fingerprint
+    )
+    recorded = ckpt.recorded_schema(ckpt.stage_path(legacy, "normalize"))
+    assert recorded["rid"].dataType.simpleString() == "string"
+    assert recorded["rid_b"].dataType.simpleString() == "binary"
+    mpath = Path(legacy) / "state.json"
+    manifest = json.loads(mpath.read_text())
+    manifest["norm_paths"] = [ckpt.stage_path(legacy, "normalize")]
+    mpath.write_text(json.dumps(manifest))
+
+    _, da, db, _ = corpus3
+    l1, l2 = str(tmp_path / "l1"), str(tmp_path / "l2")
+    run_delta_pipeline(
+        spark, None, da, l1, CFG, input_id="d1",
+        state=cstate.load_catalog_state(spark, legacy), emit="delta",
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("mixed-norm-load", "count the jobs a mixed load starts")
+    try:
+        state = cstate.load_catalog_state(spark, l1)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sc.statusTracker().getJobIdsForGroup("mixed-norm-load") == []
+    assert dict(state.norm.dtypes)["rid"] == "binary"
+    assert "rid_b" not in state.norm.columns
+    run_delta_pipeline(
+        spark, None, db, l2, CFG, input_id="d2", state=state, emit="delta",
+    )
+    compacted = str(tmp_path / "compact")
+    with monkeypatch.context() as m:
+        m.setattr(cstate, "FOLD_RATIO", 0.0)
+        cstate.compact_state(spark, l2, compacted)
+
+    def rows(df):
+        return df.columns, sorted(map(tuple, df.collect()))
+
+    def hex_labels(run_dir):
+        labels = cstate.load_catalog_state(spark, run_dir).labels
+        return sorted(
+            (bytes(r.rid).hex(), bytes(r.entity_id).hex())
+            for r in labels.collect()
+        )
+
+    _, d2 = delta_chain
+    want = rows(current_entities(spark, d2))
+    want_labels = hex_labels(d2)
+    for run_dir in (l2, compacted):
+        assert rows(current_entities(spark, run_dir)) == want, run_dir
+        assert hex_labels(run_dir) == want_labels, run_dir
+
+
+@pytest.fixture(scope="module")
+def two_bucket_catalog(spark, corpus3, tmp_path_factory):
+    rd = str(tmp_path_factory.mktemp("sn2") / "cat")
+    run_pipeline(spark, corpus3[0], rd, MatcherConfig(sn_buckets=2), input_id="sn2")
+    return rd
+
+
+@pytest.mark.parametrize("touched", ["every", "half"])
+def test_delta_touching_half_the_sn_buckets_becomes_the_sn_base(
+    spark, corpus3, two_bucket_catalog, tmp_path, touched
+):
+    """A delta whose keys land in at least half of the sn buckets merges
+    every bucket, so its element replaces the sn chain instead of extending
+    it (and compaction has nothing to fold); the index it resolves to
+    equals one built from scratch over the union. The delta is the catalog
+    re-committed, so each key lands next to its catalog twin: all of it
+    touches every bucket, its rows named below the second bucket's first
+    key touch only the first."""
+    from pyspark.sql import functions as F
+
+    from codingchallenge_spark.functions.normalize import normalize_records
+    from codingchallenge_spark.sources import checkpoint as ckpt
+
+    cat = corpus3[0]
+    if touched == "half":
+        bounds = ckpt.load_stage(spark, two_bucket_catalog, "sn_bounds")
+        second = bounds.orderBy(F.desc("start_pos")).first().min_name
+        cat = normalize_records(cat).filter(F.col("name_norm") < second)
+        cat = cat.select(*corpus3[0].columns)
+    delta = cat.withColumn("commit", F.lit("recommitted"))
+    if touched == "half":
+        keys = normalize_records(delta).select(
+            F.unhex("rid").alias("rid"), "name_norm"
+        )
+        landed = cstate.assign_buckets(keys, cstate.collect_bounds(bounds))
+        assert landed.select("bucket").distinct().count() == 1
+    d = str(tmp_path / "d")
+    run_delta_pipeline(
+        spark, None, delta, d, MatcherConfig(sn_buckets=2), input_id=touched,
+        state=cstate.load_catalog_state(spark, two_bucket_catalog),
+        emit="delta",
+    )
+    manifest = json.loads((Path(d) / "state.json").read_text())
+    assert manifest["sn_chain"] == [
+        {"path": str(Path(d) / "sn_index"), "buckets": None}
+    ]
+
+    def positions(index):
+        return sorted(
+            (r.pos, r.name_norm, bytes(r.rid))
+            for r in index.select("pos", "name_norm", "rid").collect()
+        )
+
+    state = cstate.load_catalog_state(spark, d)
+    stored, bounds = cstate.build_sn_index(state.norm, num_buckets=2)
+    want = positions(cstate.resolve_sn_index(stored, bounds))
+    assert len(want) == corpus3[0].count() + delta.count()
+    assert positions(state.sn_index) == want

@@ -330,9 +330,9 @@ def test_incremental_token_join_guarded(spark, tiny_records, tmp_path):
     )
 
     norm = with_token_hashes(normalize_records(tiny_records)).withColumn(
-        "rid_b", F.unhex("rid")
+        "rid", F.unhex("rid")
     )
-    is_new = F.crc32("rid") % 7 == 0
+    is_new = F.crc32(F.lower(F.hex("rid"))) % 7 == 0
     norm_path, idx_path = str(tmp_path / "norm"), str(tmp_path / "tok_index")
     norm.filter(~is_new).write.parquet(norm_path)
     cat = spark.read.parquet(norm_path)
