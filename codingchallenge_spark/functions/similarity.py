@@ -1,12 +1,18 @@
-"""Vectorized similarity kernels — V1-V3 (SURVEY.md §2.8).
+"""Similarity kernels — V1-V3 (SURVEY.md §2.8).
 
 Spec: BASELINE.json:6 — "pairwise scoring with vectorized pandas/Arrow UDFs
 computing batched Jaro-Winkler/Levenshtein and token-Jaccard similarities";
 BASELINE.json:15 — "no per-row Python". No string-similarity library exists in
-this environment (SURVEY.md §0), so the kernels are implemented in numpy,
-vectorized across the *batch* dimension: every loop below is over string
-POSITIONS (bounded by MAX_LEN), never over rows. Each iteration is one numpy
-op over the whole Arrow batch.
+this environment (SURVEY.md §0), so the jw/lev kernels are implemented in
+numpy, vectorized across the *batch* dimension: every loop below is over
+string POSITIONS (bounded by MAX_LEN), never over rows. Each iteration is one
+numpy op over the whole Arrow batch.
+
+Token Jaccard needs no Python: over distinct-element arrays it is one
+``array_intersect`` count and one division, exact in the JVM
+(:func:`token_jaccard`). So the only scoring crossing into Python is jw/lev
+over name keys; the token arrays never leave the JVM.
+:func:`token_jaccard_udf` is its pandas twin, tested equal.
 
 Kernels operate on the normalized name keys (short strings); inputs are
 truncated to MAX_LEN (=64) chars — name keys beyond that contribute no
@@ -213,109 +219,59 @@ def jaro_winkler_batch(s1, s2, max_len: int = MAX_LEN) -> np.ndarray:
     return _chunked(_jaro_winkler_block, s1, s2, np.float64, max_len)
 
 
+def _col(c: Column | str) -> Column:
+    return F.col(c) if isinstance(c, str) else c
+
+
+def array_size(c: Column | str) -> Column:
+    """Element count of an array column, 0 for a null array. ``size(null)``
+    is −1 with ANSI mode off and null with it on; neither may reach a
+    Jaccard count."""
+    c = _col(c)
+    return F.when(c.isNotNull(), F.size(c)).otherwise(F.lit(0))
+
+
+def intersect_size(c1: Column | str, c2: Column | str) -> Column:
+    """|A∩B| of two distinct-element arrays; a null side counts as empty."""
+    a, b = _col(c1), _col(c2)
+    return F.when(
+        a.isNotNull() & b.isNotNull(), F.size(F.array_intersect(a, b))
+    ).otherwise(F.lit(0))
+
+
+def jaccard_from_counts(i: Column, n1: Column, n2: Column) -> Column:
+    """|A∩B| / |A∪B| from the three counts, both-empty → 1.0. For
+    distinct arrays |A∪B| = n1 + n2 − i exactly, so this is the same
+    integer division (one IEEE double divide) as any set-based Jaccard."""
+    u = n1 + n2 - i
+    return F.when(u > 0, i / u).otherwise(F.lit(1.0))
+
+
 def token_jaccard(c1: Column | str, c2: Column | str) -> Column:
-    """V3 native form — JVM-side, whole-stage-codegen'd Jaccard over token
-    arrays. Primary scoring path for token similarity (zero Python crossing)."""
-    a = F.col(c1) if isinstance(c1, str) else c1
-    b = F.col(c2) if isinstance(c2, str) else c2
-    uni = F.size(F.array_union(a, b))
-    inter = F.size(F.array_intersect(a, b))
-    return F.when(uni > 0, inter / uni).otherwise(F.lit(1.0))
+    """V3 native form — JVM-side, codegen'd Jaccard over two distinct-element
+    arrays (token strings or their hashes); a null array counts as empty,
+    with ANSI mode on or off. No Python crossing."""
+    return jaccard_from_counts(
+        intersect_size(c1, c2), array_size(c1), array_size(c2)
+    )
 
 
 def token_hashes(col: Column | str = "tokens") -> Column:
     """Per-record sorted xxhash64 fingerprints of a distinct token array.
 
     Precomputed once per record (NOT per pair) so the pair fan-in join ships
-    8-byte longs instead of full token strings, and the batched Jaccard
-    kernel (:func:`hashed_jaccard_batch`) runs on primitive arrays.
-    Deterministic (seeded xxhash64). In-array collisions would need two of a
-    record's ~10² tokens to collide in 64 bits (~10⁻¹⁵ per record).
+    8-byte longs instead of full token strings, and the scorer's
+    ``array_intersect`` compares primitive longs. Deterministic (seeded
+    xxhash64). In-array collisions would need two of a record's ~10² tokens
+    to collide in 64 bits (~10⁻¹⁵ per record).
     """
-    c = F.col(col) if isinstance(col, str) else col
-    return F.array_sort(F.transform(c, lambda t: F.xxhash64(t)))
-
-
-def hashed_jaccard_batch(a: pd.Series, b: pd.Series) -> np.ndarray:
-    """V3 batched form — exact Jaccard over 64-bit pre-hashed
-    (distinct-element) arrays, vectorized across the whole Arrow batch.
-
-    Each pair's hashes are scattered into one padded row of an (n, L) int64
-    matrix, sorted along axis=1 (a single vectorized C sort — no per-row
-    Python, no global lexsort over keyed pairs), and |A∩B| is the count of
-    adjacent equal values per row: both sides are distinct-within-side, so a
-    value appears at most twice per row. Pads are position-distinct sentinels
-    (int64 max − column) so they never form an adjacent-equal pair with each
-    other; a DATA value inside the top-L hash range could still equal a pad
-    (~L/2^64 per element), so rows containing any value in that range are
-    detected up front and recomputed exactly with sets — the sentinel trick
-    is then an optimization, never an approximation. Rows are processed in
-    4096-row slices to keep the matrices cache-resident — the same
-    DRAM-traffic discipline as the jw/lev kernels.
-    """
-    n = len(a)
-    if n == 0:
-        return np.empty(0, dtype=np.float64)
-    empty = np.empty(0, dtype=np.int64)
-    dmax = np.iinfo(np.int64).max
-    av = [np.asarray(x, dtype=np.int64) if x is not None else empty for x in a]
-    bv = [np.asarray(x, dtype=np.int64) if x is not None else empty for x in b]
-    la = np.fromiter((x.size for x in av), dtype=np.int64, count=n)
-    lb = np.fromiter((x.size for x in bv), dtype=np.int64, count=n)
-    tot = la + lb
-    inter = np.zeros(n, dtype=np.int64)
-    CHUNK = 4096
-    for lo in range(0, n, CHUNK):
-        hi = min(lo + CHUNK, n)
-        m = hi - lo
-        L = int(tot[lo:hi].max(initial=0))
-        if L == 0:
-            continue
-        pads = np.int64(dmax) - np.arange(L, dtype=np.int64)
-        M = np.tile(pads, (m, 1))
-        lens_a, lens_b = la[lo:hi], lb[lo:hi]
-        ridx = np.arange(m)
-        flat_a = np.concatenate(av[lo:hi]) if lens_a.sum() else empty
-        flat_b = np.concatenate(bv[lo:hi]) if lens_b.sum() else empty
-        rows_a = np.repeat(ridx, lens_a)
-        rows_b = np.repeat(ridx, lens_b)
-        offs_a = np.concatenate([[0], np.cumsum(lens_a)[:-1]])
-        offs_b = np.concatenate([[0], np.cumsum(lens_b)[:-1]])
-        cols_a = np.arange(flat_a.size) - np.repeat(offs_a, lens_a)
-        cols_b = (
-            np.arange(flat_b.size)
-            - np.repeat(offs_b, lens_b)
-            + np.repeat(lens_a, lens_b)
-        )
-        M[rows_a, cols_a] = flat_a
-        M[rows_b, cols_b] = flat_b
-        M.sort(axis=1)
-        inter[lo:hi] = (M[:, 1:] == M[:, :-1]).sum(axis=1)
-        # Pad-collision guard: any data value inside the sentinel range
-        # [MAX−L+1, MAX] could equal a pad and inflate the adjacent-equal
-        # count. Recompute those (rare) rows exactly.
-        pad_floor = np.int64(dmax) - np.int64(L - 1)
-        risky = np.union1d(
-            rows_a[flat_a >= pad_floor] if flat_a.size else empty,
-            rows_b[flat_b >= pad_floor] if flat_b.size else empty,
-        )
-        for r in risky:
-            inter[lo + r] = len(set(av[lo + r]) & set(bv[lo + r]))
-    union = tot - inter
-    out = np.ones(n, dtype=np.float64)  # both-empty → 1.0
-    np.divide(inter, union, out=out, where=union > 0)
-    return out
+    return F.array_sort(F.transform(_col(col), lambda t: F.xxhash64(t)))
 
 
 # ---------------------------------------------------------------------------
 # Arrow-batched pandas UDFs (scalar): adjacent UDFs in one projection are
 # evaluated in a single ArrowEvalPython pass (one JVM↔Python crossing).
 # ---------------------------------------------------------------------------
-
-
-@pandas_udf(DoubleType())
-def hashed_jaccard_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    return pd.Series(hashed_jaccard_batch(a, b))
 
 
 @pandas_udf(DoubleType())

@@ -8,11 +8,11 @@ One production scorer, :func:`score_pairs_fused`:
   cand_pairs ⋈ records_norm(rid1) ⋈ records_norm(rid2)   (attribute fan-in,
     one join round per side shipping (name_norm, token-hashes) together)
   → codegen'd size-ratio pre-prune
-  → narrow ArrowEvalPython crossing A: batched hashed Jaccard (ships th only)
+  → native Jaccard: one array_intersect count per pair, in the JVM
   → codegen'd exact score-bound filter
-  → narrow ArrowEvalPython crossing B: jw + lev on survivor names only
+  → ONE narrow ArrowEvalPython crossing: jw + lev on survivor names only
   → codegen'd weighted blend + threshold.
-rids and the jaccard column never cross into Python at all.
+rids, token hashes and the jaccard column never cross into Python.
 
 :func:`attach_pair_attrs` + :func:`score_pairs` are the unpruned REFERENCE
 scorer: every candidate pair scored, jaccard over the token strings. Tests
@@ -31,7 +31,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from codingchallenge_spark.functions.similarity import (
-    hashed_jaccard_udf,
+    array_size,
+    intersect_size,
+    jaccard_from_counts,
     jaro_winkler_udf,
     levenshtein_ratio_udf,
     token_jaccard,
@@ -140,47 +142,54 @@ def fused_score_from_attrs(
     weights: dict[str, float] | None = None,
     threshold: float = DEFAULT_THRESHOLD,
 ) -> DataFrame:
-    """Production scoring body over :func:`fused_pair_attrs` output: two
-    NARROW Arrow crossings, each shipping only the columns its kernel reads.
+    """Production scoring body over :func:`fused_pair_attrs` output: the
+    Jaccard is native, and one NARROW Arrow crossing ships only the
+    survivors' name keys.
 
     Plan (all steps in one stage — the filters are narrow):
       1. exact SIZE-RATIO pre-prune, codegen'd: jaccard ≤ min(n1,n2)/max(n1,n2)
-         from two ints, before anything is serialized to Arrow;
-      2. crossing A — scalar pandas UDF computes batched hashed Jaccard.
-         ArrowEvalPython ships ONLY its argument columns to Python (th1, th2)
-         and joins the resulting double back positionally: rids and names
-         never cross here;
+         from two ints;
+      2. native Jaccard (:func:`jaccard_from_counts`): ``array_intersect``
+         of th1/th2 is counted ONCE per surviving pair;
       3. codegen'd filter on the exact score upper bound
          (score ≤ w_jw + w_lev + w_jac·jaccard < threshold → drop);
-      4. crossing B — adjacent jw/lev scalar UDFs (one ArrowEvalPython node)
-         over the SURVIVORS' name keys only;
+      4. the one crossing — adjacent jw/lev scalar UDFs (one ArrowEvalPython
+         node) over the SURVIVORS' name keys only;
       5. codegen'd weighted blend.
 
-    Versus a single mapInPandas kernel: mapInPandas round-trips the WHOLE
-    row through Arrow — rids and name keys pay the serialization toll for
-    every candidate pair even though the jaccard kernel never reads them. The
-    narrow-crossing plan ships th once, names only for survivors, rids never
-    — measured 1.33×/1.40×/1.11× faster at 2/8/32 cores over the 7.2M-pair
-    exhaustive bench set (BENCH/BASELINE.md). Worker-spawn serialization
-    (SparkEnv.createPythonWorker is JVM-global) made two-crossing plans stall
-    cold in round 1; the preloading daemon (session.py) amortized that, which
-    is what makes this plan the right one now.
+    ArrowEvalPython ships only its UDFs' argument columns, so rids, th and
+    jaccard stay in the JVM: th is the widest column of a pair (two 64-bit
+    hash arrays), and its Arrow transfer would cost more than the count.
+
+    The intersect count is bound through ``explode(array(i))``: Catalyst
+    cannot push the bound filter or collapse a projection through a
+    Generate, so the filter, the jaccard column and the blend all read the
+    one count. Written as a plain column, the count is inlined into the join
+    condition three times and into the projection once more.
     """
     w = weights or DEFAULT_WEIGHTS
     keep = [c for c in ("rid1", "rid2", "block_key") if c in joined.columns]
     min_jac = 0.0
     if w["jaccard"] > 0:
         min_jac = (threshold - w["jw"] - w["lev"]) / w["jaccard"]
-        if min_jac > 0:
-            n1, n2 = F.size("th1"), F.size("th2")
-            # Exact: every row dropped here fails step-3's jaccard bound too
-            # (both-empty pairs pass 0 ≥ 0 and keep their jaccard=1.0 path).
-            joined = joined.filter(
-                F.least(n1, n2) >= F.lit(min_jac) * F.greatest(n1, n2)
-            )
-    scored = joined.withColumn(
-        "jaccard", hashed_jaccard_udf("th1", "th2")
-    ).drop("th1", "th2")
+    n1, n2 = array_size("th1"), array_size("th2")
+    if min_jac > 0:
+        # Exact: every row dropped here fails step-3's jaccard bound too
+        # (both-empty pairs pass 0 ≥ 0 and keep their jaccard=1.0 path).
+        joined = joined.filter(
+            F.least(n1, n2) >= F.lit(min_jac) * F.greatest(n1, n2)
+        )
+    scored = joined.select(
+        *keep,
+        "name1",
+        "name2",
+        n1.alias("_n1"),
+        n2.alias("_n2"),
+        F.explode(F.array(intersect_size("th1", "th2"))).alias("_i"),
+    )
+    scored = scored.withColumn(
+        "jaccard", jaccard_from_counts(F.col("_i"), F.col("_n1"), F.col("_n2"))
+    )
     if min_jac > 0:
         scored = scored.filter(F.col("jaccard") >= F.lit(min_jac))
     scored = scored.withColumns(

@@ -214,7 +214,11 @@ def _delta_sn_candidates(
     # counts, with O(log B) vectorized searchsorted (plan-gated: no BNLJ
     # node in this derivation).
     bidx = cstate.collect_bounds(state.sn_bounds)
-    assigned = cstate.assign_buckets(delta_keys, bidx)
+    # Pinned: `touched`, `u` and `ins_keys` all read `assigned`, and unpinned
+    # each would re-run the bucket_of pandas UDF over the same delta keys.
+    assigned = cstate.assign_buckets(delta_keys, bidx).localCheckpoint(
+        eager=False
+    )
     # ins_keys below still needs start_pos by bucket — a broadcast HASH join
     # on the metadata-sized bounds relation (aliased so joins against a
     # bounds derived from the index are never ambiguous self-joins).

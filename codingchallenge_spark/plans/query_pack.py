@@ -25,10 +25,7 @@ from codingchallenge_spark.functions.normalize import (
     name_norm,
     partition_floor,
 )
-from codingchallenge_spark.functions.similarity import (
-    jaro_winkler_udf,
-    token_jaccard,
-)
+from codingchallenge_spark.functions.similarity import jaro_winkler_udf
 from codingchallenge_spark.functions.text import (
     LANG_LEXICONS,
     bpe_ish_token_count,
@@ -610,8 +607,8 @@ SQL_JARO_WINKLER = (
 def q_jaccard_pairs(spark, sf_dir):
     # Round 6: (a) partition floor — the blocked self-join's per-pair work ran
     # on the single-row-group scan's one task; (b) one set operation per pair
-    # instead of three. token_jaccard evaluates array_union TWICE (once in the
-    # CASE guard, once in the divisor) plus array_intersect; for DISTINCT
+    # instead of three. The union form evaluates array_union TWICE (once in
+    # the CASE guard, once in the divisor) plus array_intersect; for DISTINCT
     # arrays |A∪B| = |A|+|B| − |A∩B| exactly, and the per-record sizes are
     # computed once before the join — so the pair kernel is a single
     # array_intersect and the jaccard double is the SAME integer division

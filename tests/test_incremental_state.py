@@ -21,6 +21,7 @@ from __future__ import annotations
 import re
 import shutil
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -234,6 +235,31 @@ def test_candidate_set_is_delta_proportional(spark, state, work_new):
         st, work_new.select("rid", "name_norm"), SN_WINDOW
     ).count()
     assert s_rows <= n_delta * (2 * SN_WINDOW - 1), (s_rows, n_delta)
+
+
+def test_bucket_of_runs_once_per_call(spark, state, work_new, monkeypatch):
+    """The SN candidate derivation reads the delta keys' bucket assignment
+    three times (touched buckets, the ranked union, the insertion points);
+    the bucket_of pandas UDF still evaluates each delta key exactly once per
+    call, not once per consumer."""
+    st, _ = state
+    seen = spark.sparkContext.accumulator(0)
+    real = cstate.bucket_of_column
+
+    def counting(bidx):
+        f = real(bidx).func
+
+        @F.pandas_udf("int")
+        def _bucket_of(name: pd.Series, rid: pd.Series) -> pd.Series:
+            seen.add(len(name))
+            return f(name, rid)
+
+        return _bucket_of
+
+    monkeypatch.setattr(cstate, "bucket_of_column", counting)
+    keys = work_new.select("rid", "name_norm")
+    _delta_sn_candidates(st, keys, SN_WINDOW).collect()
+    assert seen.value == keys.count()
 
 
 def test_blocking_plan_reads_no_catalog_content(spark, state, work_new):

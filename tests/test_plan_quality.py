@@ -99,10 +99,11 @@ def test_content_never_enters_blocking_or_scoring(spark, tiny_records):
 
 
 def test_scoring_python_crossings_bounded(spark, tiny_records):
-    """The production (fused) scoring plan has exactly TWO narrow
-    ArrowEvalPython crossings — jaccard over (th1, th2), then jw/lev over
-    survivor names — and NO mapInPandas: ArrowEvalPython ships only the UDF
-    argument columns, so rids/jaccard never enter Python."""
+    """The production (fused) scoring plan has exactly ONE narrow
+    ArrowEvalPython crossing — jw/lev over survivor names — and NO
+    mapInPandas: the Jaccard is native, so no Python UDF reads th1/th2, and
+    ArrowEvalPython ships only the UDF argument columns, so rids/jaccard
+    never enter Python either."""
     cfg = MatcherConfig()
     norm = with_token_hashes(normalize_records(tiny_records)).select(
         "rid", "name_norm", "tokens", "th"
@@ -114,13 +115,24 @@ def test_scoring_python_crossings_bounded(spark, tiny_records):
     plan = _plan(fused)
     # formatted explain prints each node in the tree AND the detail section —
     # count detail headers "(NN) ArrowEvalPython".
-    assert len(re.findall(r"\(\d+\) ArrowEvalPython", plan)) == 2, plan
+    assert len(re.findall(r"\(\d+\) ArrowEvalPython", plan)) == 1, plan
     assert "MapInPandas" not in plan, plan
     assert "BatchEvalPython" not in plan  # no row-at-a-time Python anywhere
+    tree = fused._jdf.queryExecution().executedPlan().toString()
+    (node,) = [ln for ln in tree.splitlines() if "ArrowEvalPython [" in ln]
+    udfs = re.findall(r"(\w+)\(([^()]*)\)#\d+", node)
+    assert sorted(name for name, _ in udfs) == [
+        "jaro_winkler_udf", "levenshtein_ratio_udf"
+    ], node
+    for _, args in udfs:
+        assert [a.split("#")[0] for a in args.split(", ")] == [
+            "name1", "name2"
+        ], node
+    assert not re.search(r"\bth[12]#", node), node
 
 
 def test_production_scorer_equals_reference(spark, tiny_records):
-    """The production scorer (exact bound prune + hashed jaccard) against
+    """The production scorer (exact bound prune + native jaccard) against
     the unpruned reference (score_pairs over the token strings): the same
     edge set, and every row production emits equals the reference row of
     the same pair."""

@@ -153,11 +153,10 @@ def test_udf_parity_and_single_crossing(spark):
 
 
 # ---------------------------------------------------------------------------
-# Hashed-Jaccard kernel: exact against set Jaccard
+# Native Jaccard over hashed tokens: exact against set Jaccard
 # ---------------------------------------------------------------------------
 
-# Values near the int64 maximum land in the kernel's pad-sentinel range and
-# exercise its exact recompute path.
+# Values near the int64 maximum keep the edge of the bigint range covered.
 hash_sets = st.lists(
     st.one_of(
         st.integers(min_value=-(2**63), max_value=2**63 - 1),
@@ -168,20 +167,72 @@ hash_sets = st.lists(
 
 
 def _set_jaccard(a, b):
-    sa, sb = set(a), set(b)
+    sa, sb = set(a or ()), set(b or ())
     u = len(sa | sb)
     return (len(sa & sb) / u) if u else 1.0
 
 
 @settings(max_examples=200, deadline=None)
 @given(st.lists(st.tuples(hash_sets, hash_sets), min_size=1, max_size=20))
-def test_hashed_jaccard_matches_set_jaccard(pairs):
-    """The batched sort-and-count kernel equals set Jaccard on every pair,
-    including both-empty pairs (1.0) and values that collide with pads."""
-    from codingchallenge_spark.functions.similarity import hashed_jaccard_batch
+def test_hashed_jaccard_matches_set_jaccard(spark, pairs):
+    """The native Jaccard the production scorer runs over token hashes
+    (``token_jaccard``, one array_intersect count) equals set Jaccard on
+    every pair, including empty sides and both-empty pairs (1.0)."""
+    from codingchallenge_spark.functions.similarity import token_jaccard
 
-    got = hashed_jaccard_batch(
-        pd.Series([a for a, _ in pairs]), pd.Series([b for _, b in pairs])
+    rows = [(i, a, b) for i, (a, b) in enumerate(pairs)]
+    df = spark.createDataFrame(  # one slice: one task per example
+        spark.sparkContext.parallelize(rows, 1),
+        "i int, a array<bigint>, b array<bigint>",
     )
+    got = dict(df.select("i", token_jaccard("a", "b").alias("j")).collect())
     for i, (a, b) in enumerate(pairs):
         assert got[i] == pytest.approx(_set_jaccard(a, b))
+
+
+@pytest.mark.parametrize("ansi", ["true", "false"])
+def test_jaccard_null_array_is_empty_under_either_ansi_mode(spark, ansi):
+    """A null array counts as the empty array in the native Jaccard and in
+    the production scorer's size-ratio prune, whatever ANSI mode says
+    ``size(null)`` is (null when on, −1 when off)."""
+    from pyspark.sql import functions as F
+
+    from codingchallenge_spark.functions.similarity import token_jaccard
+    from codingchallenge_spark.operators.scoring import fused_score_from_attrs
+
+    sides = [None, [], [1, 2], [2, 3]]
+    rows = [
+        (str(i), str(j), "same name", "same name", a, b)
+        for i, a in enumerate(sides)
+        for j, b in enumerate(sides)
+    ]
+    schema = (
+        "rid1 string, rid2 string, name1 string, name2 string, "
+        "th1 array<bigint>, th2 array<bigint>"
+    )
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", ansi)
+    try:
+        joined = spark.createDataFrame(rows, schema)
+        got = {
+            (r.rid1, r.rid2): r.j
+            for r in joined.select(
+                "rid1", "rid2", token_jaccard("th1", "th2").alias("j")
+            ).collect()
+        }
+        assert got == {(r[0], r[1]): _set_jaccard(r[4], r[5]) for r in rows}
+        # The scorer on null arrays emits exactly what it emits on the
+        # same pairs with the nulls replaced by empty arrays.
+        empties = joined.withColumns(
+            {c: F.coalesce(c, F.array().cast("array<bigint>"))
+             for c in ("th1", "th2")}
+        )
+
+        def scored(df):
+            return sorted(map(tuple, fused_score_from_attrs(df).collect()))
+
+        with_nulls = scored(joined)
+        assert with_nulls == scored(empties)
+        assert ("0", "0") in {r[:2] for r in with_nulls}  # null vs null: 1.0
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
