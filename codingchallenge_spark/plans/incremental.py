@@ -13,9 +13,10 @@ One cost regime. The delta graph (:func:`normalize_delta_stage`,
 :func:`delta_stages`) links against a catalog state (plans.catalog_state):
 the catalog run's PERSISTED normalize/th stage is reused (no content is
 ever re-normalized), document frequencies are maintained incrementally
-(df' = df + delta counts, exact), the sorted-neighborhood pass range-joins
-delta keys into the persisted (name_norm, rid) key index instead of
-re-sorting the union corpus, and the catalog side of the token pass reads
+(df' = df + delta counts, exact), the delta's keys are merged into the
+persisted (name_norm, rid) key index bucket-locally and the
+sorted-neighborhood pass reads its pairs off the merged positions instead
+of re-sorting the union corpus, and the catalog side of the token pass reads
 the persisted inverted postings (catalog_state.build_tok_postings),
 bucket-pruned by the delta's token hash-buckets; pre-postings state dirs
 fall back to the norm-chain explode. Remaining corpus-proportional work:
@@ -24,7 +25,10 @@ to emit only new + possibly-relabeled rows, i.e. an upsert set).
 
 The graph is defined once and run through a stage sink, like the batch
 graph (plans.matcher): :func:`resolve_entities_incremental` runs it in
-memory, plans.pipeline.run_delta_pipeline through parquet stages. A caller
+memory, plans.pipeline.run_delta_pipeline through parquet stages. Its
+stages are normalize_delta → sn_index → sn_bounds → pairs_delta →
+score_delta → edges_delta → cc_delta → entities_delta; the parquet run
+adds the token-state maintenance (token_df, tok_index) beside them. A caller
 with no state derives one from the catalog entities table first
 (:func:`catalog_side`) — a corpus-proportional pass, paid once per catalog
 by the checkpointed run.
@@ -40,11 +44,14 @@ tests/test_incremental_state.py):
   (entity_id = global min rid over the merged component).
 - **Delta-touching pairs are scored exactly as the batch matcher would.**
   Token document frequencies (the hot-key cap) are computed over the FULL
-  union corpus and the sorted-neighborhood pass reproduces the full union
-  sort order (analytically, via the key index — provably the same pair
-  set, see delta_sn_pairs), so the candidate set equals the batch
-  run's candidate set restricted to pairs with ≥ 1 new side — same blocking
-  keys, same meta-blocking overlap counts, same kernels, same threshold.
+  union corpus. The sorted-neighborhood pass reads the full union sort
+  order off the updated key index, whose merged touched buckets and new
+  bounds give every union row its exact position; each new row then pairs
+  with the rows within w − 1 positions of it, the batch SN rule (provably
+  the same pair set and block keys, see delta_sn_pairs). So the candidate
+  set equals the batch run's candidate set restricted to pairs with ≥ 1
+  new side — same blocking keys, same meta-blocking overlap counts, same
+  kernels, same threshold.
 - **Relation to a from-scratch batch run** (tests assert both directions on
   the driver corpus): the incremental partition is the batch partition of
   the union corpus, *coarsened* by any old-old merges the catalog already
@@ -64,9 +71,11 @@ All shuffles run on 32-byte binary rids, like the batch pipeline.
 
 from __future__ import annotations
 
-from dataclasses import replace
+import logging
+from dataclasses import dataclass, replace
+from functools import cache
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
 
 from codingchallenge_spark.functions.normalize import (
@@ -76,11 +85,7 @@ from codingchallenge_spark.functions.normalize import (
     with_token_hashes,
     work_projection,
 )
-from codingchallenge_spark.operators.blocking import (
-    canonical_pairs,
-    sn_window_pairs,
-    union_candidates_meta,
-)
+from codingchallenge_spark.operators.blocking import union_candidates_meta
 from codingchallenge_spark.operators.cc import connected_components
 from codingchallenge_spark.operators.scoring import (
     edges_from_scores,
@@ -95,6 +100,8 @@ from codingchallenge_spark.plans.matcher import (
 )
 from codingchallenge_spark.sources.checkpoint import run_parallel
 from codingchallenge_spark.sources.records import INPUT_COLUMNS
+
+log = logging.getLogger(__name__)
 
 
 def incremental_token_pairs_state(
@@ -146,7 +153,7 @@ def incremental_token_pairs_state(
     # above joins the FULL vocabulary token_df, and the postings branch
     # below adds a driver-side collect (tbs) on top of the main action —
     # without the pin each action would recompute that vocab-sized join.
-    # Same pattern as the S pin in delta_sn_pairs / blocking's seam pin.
+    # Same pattern as the probe pin in delta_sn_pairs / blocking's seam pin.
     # Lazy (eager=False) like every other pin in this repo (ADVICE r05): the
     # eager default fired a Spark job at DataFrame-CONSTRUCTION time even if
     # the caller never executed the plan; the tbs collect just below (or the
@@ -171,6 +178,7 @@ def incremental_token_pairs_state(
             .distinct()
             .collect()
         )
+        log.debug("delta collect: %d token buckets (tbs, pairs_delta)", len(tbs))
         old_cold = (
             state.tok_postings.filter(F.col("tbucket").isin(tbs))
             .join(F.broadcast(delta_toks), "tok")
@@ -196,281 +204,168 @@ def incremental_token_pairs_state(
     )
 
 
-def _delta_sn_candidates(
-    state: CatalogState, delta_keys: DataFrame, window: int
+@dataclass
+class SnUpdate:
+    """One delta's update of the sn index: ``element`` is the sn_index
+    stage (the merged touched buckets, stored form), ``bounds`` the new
+    bounds rows in position order, and ``touched`` the bucket ids the
+    element rewrites."""
+
+    element: DataFrame
+    bounds: list[Row]
+    touched: list[int]
+
+
+def sn_index_stages(stage, state: CatalogState, norm_delta: DataFrame) -> SnUpdate:
+    """The delta's sn_index and sn_bounds stages (plans.catalog_state's
+    bucket-local merge). The old bounds are collected once, the delta keys
+    assigned to buckets once, and the touched-bucket counts collected once
+    — also when a resumed run skips one of the two stages."""
+    bounds = cstate.collect_bounds(state.sn_bounds)
+    log.debug("delta collect: %d old sn_bounds rows (sn_index)", len(bounds))
+    assigned = cstate.assign_buckets(norm_delta.select("rid", "name_norm"), bounds)
+    counts = cache(lambda: cstate.touched_buckets(assigned, bounds))
+    element = stage(
+        "sn_index",
+        ["normalize_delta"],
+        lambda: cstate.merge_sn_buckets(state, assigned, list(counts())),
+    )
+    new_bounds: list[Row] = []
+
+    def build_bounds() -> DataFrame:
+        new_bounds[:] = cstate.merged_bounds(bounds, counts(), element)
+        return cstate.bounds_frame(element.sparkSession, new_bounds)
+
+    bounds_df = stage("sn_bounds", ["sn_index"], build_bounds)
+    if not new_bounds:  # a resumed run loaded the stage instead
+        new_bounds = cstate.collect_bounds(bounds_df)
+        log.debug("delta collect: %d new sn_bounds rows (pairs_delta)", len(new_bounds))
+    return SnUpdate(element=element, bounds=new_bounds, touched=sorted(counts()))
+
+
+def _probe_buckets(bounds: list[Row], touched: set[int], reach: int) -> list[int]:
+    """Buckets holding a row within ``reach`` merged positions of a row of
+    a touched bucket. Bucket position ranges tile 1..N in bounds order, so
+    the walk from each touched bucket stops at the first bucket out of
+    reach."""
+    keep: set[int] = set()
+    for i, b in enumerate(bounds):
+        if b.bucket not in touched:
+            continue
+        lo, hi = b.start_pos - reach, b.start_pos + b.n - 1 + reach
+        j = i
+        while j >= 0 and bounds[j].start_pos + bounds[j].n - 1 >= lo:
+            keep.add(bounds[j].bucket)
+            j -= 1
+        j = i + 1
+        while j < len(bounds) and bounds[j].start_pos <= hi:
+            keep.add(bounds[j].bucket)
+            j += 1
+    return sorted(keep)
+
+
+def sn_probe_index(
+    state: CatalogState, sn: SnUpdate, delta_keys: DataFrame, window: int
 ) -> DataFrame:
-    """The delta-proportional candidate set S for the sorted-catalog SN pass:
-    delta keys ∪ catalog rows within ``window - 1`` catalog positions of any
-    delta insertion point. Returns [rid, name_norm, is_new, left, right]
-    where [left, right] encode the merged-order gap rule (see
-    :func:`delta_sn_pairs`). Exposed for the delta-proportionality test
-    (|S| ≤ |delta| · (2·window − 1))."""
-    # Containing bucket (max bucket whose min key ≤ k; keys below every
-    # minimum fall into the first bucket): binary search over the
-    # driver-collected bounds table (catalog_state.BoundsIndex) — VERDICT
-    # r04 #4 replaced the BroadcastNestedLoopJoin forms (bmin <= k and the
-    # interval-overlap theta join below), whose ~B/2 comparisons per delta
-    # key were free at 32 buckets and quadratic death at production bucket
-    # counts, with O(log B) vectorized searchsorted (plan-gated: no BNLJ
-    # node in this derivation).
-    bidx = cstate.collect_bounds(state.sn_bounds)
-    # Pinned: `touched`, `u` and `ins_keys` all read `assigned`, and unpinned
-    # each would re-run the bucket_of pandas UDF over the same delta keys.
-    assigned = cstate.assign_buckets(delta_keys, bidx).localCheckpoint(
-        eager=False
-    )
-    # ins_keys below still needs start_pos by bucket — a broadcast HASH join
-    # on the metadata-sized bounds relation (aliased so joins against a
-    # bounds derived from the index are never ambiguous self-joins).
-    bounds = state.sn_bounds.select(
-        F.col("bucket").alias("_bb"),
-        F.col("start_pos").alias("_bstart"),
-    )
-    touched = assigned.select("bucket").distinct()
-    idx_t = state.sn_index.join(
-        F.broadcast(touched.withColumnRenamed("bucket", "_tb")),
-        F.col("bucket") == F.col("_tb"),
-    ).drop("_tb")
-    u = idx_t.select(
-        "bucket", "rid", "name_norm", "pos", F.lit(False).alias("is_new")
-    ).unionByName(
-        assigned.select(
-            "bucket",
-            "rid",
-            "name_norm",
-            F.lit(None).cast("long").alias("pos"),
-            F.lit(True).alias("is_new"),
-        )
-    )
-    w = Window.partitionBy("bucket").orderBy("name_norm", "rid")
-    ranked = u.withColumn("_r", F.row_number().over(w)).withColumn(
-        "_j",
-        F.sum(F.col("is_new").cast("long")).over(
-            w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        ),
-    )
-    # ins = global # catalog keys < k = (bucket start − 1) + old rows before
-    # k within its bucket. Exact for any bucket balance: start offsets come
-    # from real counts (catalog_state.build_sn_index).
-    # Left join + coalesce: an EMPTY catalog has no bounds rows — every
-    # delta key then gets ins = (r − j) = 0, which degrades exactly to plain
-    # SN over the delta alone.
-    ins_keys = (
-        ranked.filter("is_new")
-        .join(
-            F.broadcast(bounds.select("_bb", "_bstart")),
-            F.col("bucket") == F.col("_bb"),
-            "left",
-        )
-        .select(
-            "rid",
-            "name_norm",
-            (
-                F.coalesce(F.col("_bstart") - 1, F.lit(0))
-                + (F.col("_r") - F.col("_j"))
-            ).alias("ins"),
-        )
-    )
-    # Candidate old rows: pos ∈ [ins − (w−2), ins + (w−1)] for some delta
-    # key. Buckets overlapping each interval come from two binary searches
-    # over the collected bounds (bucket position ranges tile 1..N
-    # contiguously — catalog_state.overlap_buckets_column; handles windows
-    # spanning bucket edges and buckets smaller than the window); the index
-    # join stays hash on bucket + residual pos-range filter.
-    ivals = ins_keys.select(
-        (F.col("ins") - (window - 2)).alias("lo"),
-        (F.col("ins") + (window - 1)).alias("hi"),
-    ).distinct()
-    if len(bidx):
-        _overlap = cstate.overlap_buckets_column(bidx)
-        ival_buckets = ivals.select(
-            F.explode(_overlap(F.col("lo"), F.col("hi"))).alias("_ib"),
-            "lo",
-            "hi",
-        )
-    else:  # empty catalog: no buckets can overlap anything
-        ival_buckets = ivals.select(
-            F.lit(0).alias("_ib"), "lo", "hi"
-        ).filter(F.lit(False))
-    cands = (
-        state.sn_index.join(
-            F.broadcast(ival_buckets),
-            (F.col("bucket") == F.col("_ib"))
-            & F.col("pos").between(F.col("lo"), F.col("hi")),
-        )
-        .select("rid", "name_norm", "pos")
-        .distinct()
-    )
-    return cands.select(
+    """The rows of the UPDATED index the delta SN probe reads, with their
+    merged positions: (rid, name_norm, pos, is_new) of the touched buckets
+    (the merged element) and of every bucket within ``window - 1``
+    positions of one (the prior chain, bucket-pruned by a literal IN).
+    ``pos = start_pos' + lpos − 1`` with the new start offsets inlined as a
+    literal map — no bounds join; ``is_new`` (true, else null) marks the
+    delta's rows, by a broadcast of the delta rids."""
+    touched = set(sn.touched)
+    near = [b for b in _probe_buckets(sn.bounds, touched, window - 1) if b not in touched]
+    start = F.create_map(
+        *[x for b in sn.bounds for x in (F.lit(b.bucket), F.lit(b.start_pos))]
+    ).cast("map<int,bigint>")
+    rows = state.sn_stored.filter(F.col("bucket").isin(near)).unionByName(sn.element)
+    return rows.select(
+        "rid", "name_norm", (start[F.col("bucket")] + F.col("lpos") - 1).alias("pos")
+    ).join(
+        F.broadcast(delta_keys.select("rid", F.lit(True).alias("is_new"))),
         "rid",
-        "name_norm",
-        F.lit(False).alias("is_new"),
-        (F.col("pos") - 1).alias("left"),
-        F.col("pos").alias("right"),
-    ).unionByName(
-        ins_keys.select(
-            "rid",
-            "name_norm",
-            F.lit(True).alias("is_new"),
-            F.col("ins").alias("left"),
-            F.col("ins").alias("right"),
-        )
+        "left",
     )
 
 
 def delta_sn_pairs(
-    state: CatalogState,
-    delta_keys: DataFrame,
-    window: int,
+    state: CatalogState, sn: SnUpdate, delta_keys: DataFrame, window: int
 ) -> DataFrame:
-    """Sorted-neighborhood pairs with ≥ 1 new side, WITHOUT re-sorting the
-    union corpus: range-join delta keys into the persisted catalog key index.
+    """Sorted-neighborhood pairs with ≥ 1 new side, read off the updated
+    index (``sn``, :func:`sn_index_stages`) instead of re-sorting the union.
 
     Exactness argument (vs. the full union sort restricted to delta-touching
     pairs — property-tested in tests/test_incremental_state.py):
 
-    1. Every true pair lies inside S (:func:`_delta_sn_candidates`): a pair
-       (new k, x) at merged distance d ≤ w−1 forces every catalog row
-       between them — and x itself if old — within w−1 catalog positions of
-       ins(k), which is exactly the candidate window.
-    2. Within S sorted by (name_norm, rid), a GAP between consecutive rows
-       (next.left > cur.right, with old rows carrying [pos−1, pos] and new
-       rows [ins, ins]) marks ≥ 1 catalog row missing from S between them.
-       Inside a gap-free stretch, S order IS merged order contiguously
-       (all delta rows are in S), so merged distance = S distance: windowing
-       each stretch with the batch SN kernel (blocking.sn_window_pairs)
-       yields exactly the merged-order pairs, no spurious cross-gap pairs.
-    3. Old-old pairs are dropped: their catalog distance ≤ merged distance,
-       so the catalog run already considered them.
+    1. The updated index gives every union row its exact position in the
+       union's (name_norm, rid) order: pos = start_pos' + lpos − 1 over the
+       merged touched buckets and the untouched chain
+       (test_updated_state_equals_rebuild).
+    2. Batch SN pairs rows x, y iff 0 < pos(y) − pos(x) ≤ w − 1, with block
+       key 'sn:' || name_norm of x, the earlier row. So the pairs touching a
+       new row k are k's 2(w − 1) neighbour positions: each new row probes
+       pos ± d, d = 1..w−1, by an equi-join on pos.
+    3. Every neighbour lies in a bucket whose position range is within
+       w − 1 of k's (touched) bucket: those are the buckets the probe reads
+       (:func:`sn_probe_index`).
+    4. Each pair is emitted once: a successor probe (d > 0) emits the pair
+       under k's name whatever the neighbour is; a predecessor probe emits
+       it under the neighbour's name only when the neighbour is old — a new
+       predecessor already emitted it as its successor.
 
-    gap_id is computed with the bucketed two-level form (per-partition lag +
-    a broadcast metadata-size offsets table) — no single-partition window;
-    the one range sort here is over S, which is delta-proportional
-    (|S| ≤ |delta| · (2w − 1)). The bucketed relation is pinned
-    (localCheckpoint) for the same boundary-nondeterminism reason as
-    operators.blocking.sorted_neighborhood.
+    The probed rows are pinned (lazy localCheckpoint): the probes and the
+    neighbours both read them, so they are scanned and flagged once. The
+    probes (|delta| · 2(w − 1) rows) are broadcast into the equi-join. No
+    range sort, no nested-loop join, no Python worker.
     """
-    spark = delta_keys.sparkSession
-    num_parts = spark.sparkContext.defaultParallelism
-    s = _delta_sn_candidates(state, delta_keys, window)
-    s2 = (
-        s.repartitionByRange(num_parts, "name_norm", "rid")
-        .withColumn("part", F.spark_partition_id())
-        .localCheckpoint(eager=False)
+    reach = window - 1
+    idx = sn_probe_index(state, sn, delta_keys, window).localCheckpoint(eager=False)
+    offsets = F.array(*[F.lit(d) for d in range(-reach, reach + 1) if d])
+    probes = idx.filter("is_new").select(
+        F.col("rid").alias("a"),
+        F.col("name_norm").alias("a_name"),
+        F.explode(offsets).alias("d"),
+        "pos",
+    ).withColumn("pos", F.col("pos") + F.col("d"))
+    nbrs = idx.select(
+        "pos",
+        F.col("rid").alias("b"),
+        F.col("name_norm").alias("b_name"),
+        F.col("is_new").alias("b_new"),
     )
-    wp = Window.partitionBy("part").orderBy("name_norm", "rid")
-    prev_right = F.lag("right").over(wp)
-    flagged = s2.withColumn(
-        "_flag",
-        F.when(prev_right.isNull(), F.lit(0)).otherwise(
-            (F.col("left") > prev_right).cast("long")
-        ),
-    ).withColumn(
-        "_cum",
-        F.sum("_flag").over(
-            wp.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        ),
+    hits = F.broadcast(probes).join(nbrs, "pos")
+    return hits.filter((F.col("d") > 0) | F.col("b_new").isNull()).select(
+        F.least("a", "b").alias("rid1"),
+        F.greatest("a", "b").alias("rid2"),
+        F.concat(
+            F.lit("sn:"),
+            F.when(F.col("d") > 0, F.col("a_name")).otherwise(F.col("b_name")),
+        ).alias("block_key"),
     )
-    key = F.struct(F.col("name_norm"), F.col("rid"))
-    pstats = flagged.groupBy("part").agg(
-        F.max("_cum").alias("tot"),
-        F.min_by("left", key).alias("first_left"),
-        F.max_by("right", key).alias("last_right"),
-    )
-    # Cross-partition boundary flag: first row of part p opens a new stretch
-    # iff its left exceeds the previous non-empty partition's last right.
-    prev = pstats.select(
-        F.col("part").alias("q"),
-        F.col("last_right").alias("q_last"),
-        F.col("tot").alias("q_tot"),
-    )
-    bflag = (
-        pstats.join(F.broadcast(prev), F.col("q") < F.col("part"), "left")
-        .groupBy("part", "tot", "first_left")
-        .agg(F.max_by("q_last", "q").alias("prev_last"))
-        .withColumn(
-            "bflag",
-            F.when(
-                F.col("prev_last").isNotNull()
-                & (F.col("first_left") > F.col("prev_last")),
-                F.lit(1),
-            ).otherwise(F.lit(0)),
-        )
-        .select("part", "tot", "bflag")
-    )
-    prior2 = bflag.select(
-        F.col("part").alias("q"), F.col("tot").alias("q_tot"),
-        F.col("bflag").alias("q_b"),
-    )
-    offsets = (
-        bflag.join(F.broadcast(prior2), F.col("q") <= F.col("part"), "left")
-        .groupBy("part")
-        .agg(
-            F.coalesce(
-                F.sum(
-                    F.when(F.col("q") < F.col("part"), F.col("q_tot")).otherwise(
-                        F.lit(0)
-                    )
-                    + F.col("q_b")
-                ),
-                F.lit(0),
-            ).alias("offset")
-        )
-    )
-    gapped = flagged.join(F.broadcast(offsets), "part").select(
-        "rid",
-        "name_norm",
-        "is_new",
-        (F.col("offset") + F.col("_cum")).alias("gap_id"),
-    )
-    pairs = sn_window_pairs(gapped, "gap_id", window)
-    flags = gapped.select("rid", "is_new")
-    f1 = flags.select(F.col("rid").alias("rid1"), F.col("is_new").alias("_n1"))
-    f2 = flags.select(F.col("rid").alias("rid2"), F.col("is_new").alias("_n2"))
-    kept = (
-        pairs.join(f1, "rid1")
-        .join(f2, "rid2")
-        .filter(F.col("_n1") | F.col("_n2"))
-        .select("rid1", "rid2", "block_key")
-    )
-    return canonical_pairs(kept, dedupe=False)
 
 
 def incremental_candidate_pairs(
     state: CatalogState,
     work_new: DataFrame,
     cfg: MatcherConfig,
-    sn: bool = True,
+    tok_pairs: DataFrame,
+    sn: SnUpdate | None = None,
 ) -> DataFrame:
-    """Multi-pass delta blocking: restricted token pass ∪ delta-touching
-    sorted-neighborhood pairs, merged through the same single-shuffle
-    meta-union as the batch matcher (identical overlap semantics). Both
-    passes are delta-proportional: maintained dfs + index range-join
-    (:func:`incremental_token_pairs_state`, :func:`delta_sn_pairs`).
-    ``sn=False`` drops the sorted-neighborhood pass entirely — the recall
-    path for name-similar-but-token-poor records folds into the periodic
-    full re-resolution instead."""
-
-    def tok() -> DataFrame:
-        return incremental_token_pairs_state(
-            state, work_new, df_cap=cfg.token_df_cap
-        )
-
-    if sn:
-        # Building either pass runs driver-side collects (the token pass's
-        # hash-bucket list, the SN pass's bounds table); the two are
-        # independent, so their jobs overlap.
-        tok_pairs, sn_pairs = run_parallel(
-            work_new.sparkSession,
-            tok,
-            lambda: delta_sn_pairs(
-                state, work_new.select("rid", "name_norm"),
-                window=cfg.sn_window,
-            ),
-        )
-    else:
-        tok_pairs = tok()
+    """Multi-pass delta blocking: the restricted token pass ``tok_pairs``
+    (:func:`incremental_token_pairs_state`) ∪ delta-touching
+    sorted-neighborhood pairs read off the sn-index update ``sn``
+    (:func:`delta_sn_pairs`), merged through the same single-shuffle
+    meta-union as the batch matcher (identical overlap semantics). Without
+    ``sn`` the sorted-neighborhood pass is dropped — the recall path for
+    name-similar-but-token-poor records folds into the periodic full
+    re-resolution instead."""
+    if sn is None:
         sn_pairs = tok_pairs.filter(F.lit(False))
+    else:
+        sn_pairs = delta_sn_pairs(
+            state, sn, work_new.select("rid", "name_norm"), window=cfg.sn_window
+        )
     return union_candidates_meta(
         tok_pairs, sn_pairs, min_token_overlap=cfg.min_token_overlap
     )
@@ -613,15 +508,33 @@ def delta_stages(
     cfg: MatcherConfig,
     sn: bool = True,
     emit: str = "full",
-) -> DataFrame:
-    """The delta graph after normalize_delta: pairs_delta → score_delta →
-    edges_delta → cc_delta → entities_delta, each stage through the sink
-    ``stage`` (plans.matcher documents the sinks)."""
+    maintain: bool = False,
+) -> tuple[DataFrame, SnUpdate | None]:
+    """The delta graph after normalize_delta, each stage through the sink
+    ``stage`` (plans.matcher documents the sinks)::
+
+        sn_index → sn_bounds → pairs_delta → score_delta → edges_delta
+        → cc_delta → entities_delta
+
+    The sn stages run when the SN pass needs them (``sn``) or the caller
+    maintains the state (``maintain``). The token pass is built beside
+    them: its hash-bucket collect overlaps the merge. Returns the entities
+    stage and the sn-index update (None when the sn stages did not run).
+    """
     work_new = work_projection(norm_delta)
+    tok_pairs, sn_update = run_parallel(
+        norm_delta.sparkSession,
+        lambda: incremental_token_pairs_state(
+            state, work_new, df_cap=cfg.token_df_cap
+        ),
+        lambda: sn_index_stages(stage, state, norm_delta) if sn or maintain else None,
+    )
     pairs = stage(
         "pairs_delta",
-        ["normalize_delta"],
-        lambda: incremental_candidate_pairs(state, work_new, cfg, sn=sn),
+        ["normalize_delta"] + (["sn_index", "sn_bounds"] if sn else []),
+        lambda: incremental_candidate_pairs(
+            state, work_new, cfg, tok_pairs, sn=sn_update if sn else None
+        ),
     )
     scored = stage(
         "score_delta",
@@ -665,9 +578,10 @@ def delta_stages(
             norm_union, labels_touched.unionByName(labels_rest)
         )
 
-    return stage(
+    entities = stage(
         "entities_delta", ["cc_delta", "normalize_delta"], build_entities
     )
+    return entities, sn_update
 
 
 def resolve_entities_incremental(
@@ -695,17 +609,19 @@ def resolve_entities_incremental(
     if emit not in ("full", "delta"):
         raise ValueError(f"emit must be 'full' or 'delta', got {emit!r}")
     # The pins: catalog_norm feeds every catalog-state relation and the
-    # emit; `pairs_delta` feeds the touched-rid derivation AND both
-    # attribute fan-in sides; `edges_delta` feeds the touched-entity
-    # derivation AND CC — left lazy, each consumer would re-run the whole
-    # blocking plan per evaluation. The delta relations are delta-sized, so
-    # the pins are cheap by construction (the parquet sink gets the same
-    # effect from its stage writes).
+    # emit; `sn_index` feeds the bounds collect AND the SN probe;
+    # `pairs_delta` feeds the touched-rid derivation AND both attribute
+    # fan-in sides; `edges_delta` feeds the touched-entity derivation AND
+    # CC — left lazy, each consumer would re-run the whole upstream plan
+    # per evaluation. The delta relations are delta-sized, so the pins are
+    # cheap by construction (the parquet sink gets the same effect from its
+    # stage writes).
     stage = _InMemorySink(
-        "catalog_norm", "normalize_delta", "pairs_delta", "edges_delta"
+        "catalog_norm", "normalize_delta", "sn_index", "pairs_delta",
+        "edges_delta",
     ).stage
     state = catalog_side(
         stage, state, catalog, cfg, "resolve_entities_incremental"
     )
     norm_delta = normalize_delta_stage(stage, state, new_records)
-    return delta_stages(stage, state, norm_delta, cfg, sn=sn, emit=emit)
+    return delta_stages(stage, state, norm_delta, cfg, sn=sn, emit=emit)[0]

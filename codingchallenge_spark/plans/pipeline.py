@@ -36,6 +36,7 @@ from __future__ import annotations
 
 import hashlib
 import json
+import logging
 import re
 from dataclasses import asdict, dataclass, replace
 from pathlib import Path
@@ -51,6 +52,8 @@ from codingchallenge_spark.plans.matcher import (
     normalize_stage,
 )
 from codingchallenge_spark.sources import checkpoint as ckpt
+
+log = logging.getLogger(__name__)
 
 STAGES = [
     "normalize",
@@ -70,6 +73,8 @@ STAGES = [
 
 DELTA_STAGES = [
     "normalize_delta",
+    "sn_index",
+    "sn_bounds",
     "pairs_delta",
     "score_delta",
     "edges_delta",
@@ -78,7 +83,8 @@ DELTA_STAGES = [
 ]
 
 # The declared order of every stage a delta run can write: the in-run
-# catalog derivation, the delta chain, then the state maintenance.
+# catalog derivation, the delta chain (its sn-index stages first), then the
+# token-state maintenance.
 _DELTA_ORDER = [
     "catalog_norm",
     "token_df_cat",
@@ -87,8 +93,6 @@ _DELTA_ORDER = [
     "labels_cat",
     *DELTA_STAGES,
     "token_df",
-    "sn_index",
-    "sn_bounds",
     "tok_index",
 ]
 
@@ -362,19 +366,22 @@ def run_delta_pipeline(
         [catalog_norm → token_df_cat, sn_index_cat, tok_index_cat,
          labels_cat]              (only when no persisted state is passed —
                                    plans.catalog_state builds one in-run)
-        normalize_delta ─┬→ pairs_delta → score_delta → edges_delta
-                         │  → cc_delta → entities_delta
+        normalize_delta ─┬→ sn_index → sn_bounds ─┬→ pairs_delta
+                         │  ║ token pass (tbs) ─────┘
+                         │  → score_delta → edges_delta → cc_delta
+                         │  → entities_delta
                          ║
-                         └→ token_df, sn_index → sn_bounds, tok_index,
-                            touched-bucket ids
+                         └→ token_df, tok_index
         → state.json, once both branches are written
 
     The run_dir becomes a valid catalog state for the NEXT delta (norm
-    chain = catalog paths + this delta's). The maintenance branch reads
-    only normalize_delta and the prior state, and its stages are not
-    consumed by the delta chain, so the two overlap; the manifest is written
-    only after both succeed, so a failure on either side leaves no
-    state.json and a ``resume=True`` rerun completes it.
+    chain = catalog paths + this delta's). The delta SN pass reads its
+    pairs off the merged index, so sn_index and sn_bounds sit upstream of
+    pairs_delta; the token pass's bucket collect overlaps them. The token
+    branch reads only normalize_delta and the prior state, and its stages
+    are not consumed by the delta chain, so the two overlap; the manifest
+    is written only after both succeed, so a failure on either side leaves
+    no state.json and a ``resume=True`` rerun completes it.
 
     ``input_id`` must identify BOTH the catalog and the delta (the CLI folds
     both paths plus the sn/emit flags) so fingerprints invalidate when either
@@ -420,65 +427,50 @@ def run_delta_pipeline(
 
     norm_delta = inc.normalize_delta_stage(stage, state, delta_records)
 
-    def maintenance() -> tuple[list[dict], list[str] | None]:
-        """The next state's relations; returns the next (sn_chain,
-        tok_chain)."""
+    def maintenance() -> list[str] | None:
+        """The next state's token relations; returns the next tok_chain."""
         stage(
             "token_df",
             ["normalize_delta"],
             lambda: cstate.updated_token_df(state.token_df, norm_delta),
         )
-        # Bucket-local maintenance (VERDICT r04 #2): the sn_index stage holds
-        # ONLY the merged touched buckets; untouched buckets stay in the
-        # prior chain elements (manifest sn_chain, latest-covering wins).
-        # The global-position shift an insertion causes lives in the
-        # recomputed metadata-sized bounds stage — no corpus re-sort.
-        idx_touched = stage(
-            "sn_index",
-            ["normalize_delta"],
-            lambda: cstate.merge_sn_buckets(state, norm_delta),
-        )
-        stage(
-            "sn_bounds",
-            ["sn_index"],
-            lambda: cstate.merged_bounds(state.sn_bounds, idx_touched),
-        )
         # Inverted-postings maintenance: APPEND-ONLY — the delta's own
         # postings become a delta-sized chain element; no catalog posting is
         # ever rewritten (only catalogs that carry a postings chain maintain
         # one — pre-postings state dirs keep the norm-explode fallback).
-        tok_chain_next = None
-        if state.tok_chain is not None and state.tok_buckets:
-            stage(
-                "tok_index",
-                ["normalize_delta"],
-                lambda: cstate.build_tok_postings(
-                    norm_delta, state.tok_buckets
-                ),
-            )
-            tok_chain_next = list(state.tok_chain) + [
-                ckpt.stage_path(run_dir, "tok_index")
-            ]
-        # Touched-bucket ids for the manifest, from the PERSISTED element
-        # (delta-proportional distinct over a delta-sized stage). An element
-        # touching every bucket (one sn_bounds row each) is the new base.
-        touched_ids = sorted(
-            r.bucket
-            for r in idx_touched.select("bucket").distinct().collect()
+        if state.tok_chain is None or not state.tok_buckets:
+            return None
+        stage(
+            "tok_index",
+            ["normalize_delta"],
+            lambda: cstate.build_tok_postings(norm_delta, state.tok_buckets),
         )
-        path = ckpt.stage_path(run_dir, "sn_index")
-        if len(touched_ids) == ckpt.read_marker(run_dir, "sn_bounds")["rows"]:
-            return [{"path": path, "buckets": None}], tok_chain_next
-        element = {"path": path, "buckets": touched_ids}
-        return list(state.sn_chain) + [element], tok_chain_next
+        return list(state.tok_chain) + [ckpt.stage_path(run_dir, "tok_index")]
 
-    # The maintenance branch depends only on normalize_delta and the prior
-    # state.
-    entities, (sn_chain_next, tok_chain_next) = ckpt.run_parallel(
+    # The token branch depends only on normalize_delta and the prior state;
+    # the delta graph maintains the sn index itself (sn_index, sn_bounds).
+    (entities, sn_update), tok_chain_next = ckpt.run_parallel(
         spark,
-        lambda: inc.delta_stages(stage, state, norm_delta, cfg, sn=sn, emit=emit),
+        lambda: inc.delta_stages(
+            stage, state, norm_delta, cfg, sn=sn, emit=emit, maintain=True
+        ),
         maintenance,
     )
+    log.debug(
+        "delta run %s: %d delta edges into cc_delta",
+        run_dir, ckpt.read_marker(run_dir, "edges_delta")["rows"],
+    )
+    # Bucket-local maintenance (VERDICT r04 #2): the sn_index stage holds
+    # ONLY the merged touched buckets; untouched buckets stay in the prior
+    # chain elements (manifest sn_chain, latest-covering wins). An element
+    # touching every bucket is the new base.
+    element = ckpt.stage_path(run_dir, "sn_index")
+    if len(sn_update.touched) == len(sn_update.bounds):
+        sn_chain_next = [{"path": element, "buckets": None}]
+    else:
+        sn_chain_next = list(state.sn_chain) + [
+            {"path": element, "buckets": sn_update.touched}
+        ]
     cstate.write_state_manifest(
         run_dir,
         (state.norm_paths or [])

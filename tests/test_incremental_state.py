@@ -8,9 +8,11 @@ Contract under test:
 - the state path produces EXACTLY the batch entity table over catalog ∪
   delta (test_incremental.py shows the two agree on this split);
 - the token pass reproduces batch token blocking over the union, and the
-  sorted-catalog SN pass the full-union-sort pair set, each restricted to
-  delta-touching pairs, without sorting the corpus;
-- the candidate set S is delta-proportional (|S| ≤ |delta| · (2w − 1));
+  SN probe of the updated key index the full-union-sort pair set, each
+  restricted to delta-touching pairs, without sorting the corpus — also on
+  the edge cases of the bucket layout;
+- the SN probe reads only the touched buckets and their neighbours, and
+  bucket assignment is native and evaluated once;
 - maintained state (token_df / sn_index) equals a from-scratch rebuild;
 - the blocking plan never reads the catalog's content column (plan gate);
 - the staged delta pipeline resumes after an interruption.
@@ -18,10 +20,11 @@ Contract under test:
 
 from __future__ import annotations
 
+import hashlib
+import random
 import re
 import shutil
 
-import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -35,13 +38,18 @@ from codingchallenge_spark.operators.blocking import (
 )
 from codingchallenge_spark.plans import catalog_state as cstate
 from codingchallenge_spark.plans.incremental import (
-    _delta_sn_candidates,
     delta_sn_pairs,
     incremental_candidate_pairs,
     incremental_token_pairs_state,
     resolve_entities_incremental,
+    sn_index_stages,
+    sn_probe_index,
 )
-from codingchallenge_spark.plans.matcher import MatcherConfig, resolve_entities
+from codingchallenge_spark.plans.matcher import (
+    MatcherConfig,
+    _InMemorySink,
+    resolve_entities,
+)
 
 SN_WINDOW = 4
 
@@ -57,6 +65,27 @@ def _plan(df) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted"
     )
+
+
+def _sn_update(st, delta_norm, root=None):
+    """The delta's sn_index/sn_bounds stages, in memory or (``root``) each
+    written to parquet and read back, as the pipeline's sink does."""
+    if root is None:
+        return sn_index_stages(_InMemorySink("sn_index").stage, st, delta_norm)
+    spark = delta_norm.sparkSession
+
+    def stage(name, upstream, build):
+        build().write.parquet(str(root / name))
+        return spark.read.parquet(str(root / name))
+
+    return sn_index_stages(stage, st, delta_norm)
+
+
+def _assigned(st, delta_norm):
+    """Old bounds, pinned bucket assignment and touched-bucket counts."""
+    bounds = cstate.collect_bounds(st.sn_bounds)
+    assigned = cstate.assign_buckets(delta_norm.select("rid", "name_norm"), bounds)
+    return bounds, assigned, cstate.touched_buckets(assigned, bounds)
 
 
 @pytest.fixture(scope="module")
@@ -215,58 +244,158 @@ def test_delta_token_pairs_exact(spark, state, work_new):
 
 
 def test_delta_sn_pairs_exact(spark, catalog, split_corpus, state, work_new):
-    """The sorted-catalog SN pass = full union sort restricted to pairs with
-    ≥ 1 new side — pair-level equality, the strongest form of the claim."""
+    """The SN probe of the updated key index = full union sort restricted
+    to pairs with ≥ 1 new side — pair-level equality, the strongest form of
+    the claim."""
     st, _ = state
     union_work = _union_work(st, work_new)
     batch = sorted_neighborhood(union_work, window=SN_WINDOW, dedupe=True)
     got = delta_sn_pairs(
-        st, work_new.select("rid", "name_norm"), window=SN_WINDOW
+        st, _sn_update(st, work_new), work_new.select("rid", "name_norm"),
+        window=SN_WINDOW,
     ).dropDuplicates(["rid1", "rid2"])
     assert _pair_rows(got) == _pair_rows(_touching_new(batch, union_work))
 
 
-def test_candidate_set_is_delta_proportional(spark, state, work_new):
-    """|S| ≤ |delta| · (2w − 1): the runtime witness that the SN delta pass
-    reads a bounded neighborhood of the index, not the corpus."""
+def _enc(name: str, rid: bytes) -> tuple[bytes, bytes]:
+    return name.encode(), bytes(rid)
+
+
+def _rid(i: int) -> bytes:
+    return hashlib.sha256(str(i).encode()).digest()
+
+
+def _hand_state(spark, keys, sizes) -> cstate.CatalogState:
+    """A catalog key index with the given bucket sizes, in key order (the
+    buckets are hand-cut, so a bucket can hold fewer than w − 1 rows)."""
+    keys = sorted(keys, key=lambda k: _enc(*k))
+    assert sum(sizes) == len(keys)
+    rows, i = [], 0
+    for bucket, size in enumerate(sizes):
+        for lpos in range(1, size + 1):
+            name, rid = keys[i]
+            rows.append((bucket, rid, name, lpos))
+            i += 1
+    stored = spark.createDataFrame(
+        rows, "bucket int, rid binary, name_norm string, lpos int"
+    )
+    bounds = cstate.bounds_from_index(stored)
+    norm = spark.createDataFrame(keys, "name_norm string, rid binary")
+    return cstate.CatalogState(
+        norm=norm, token_df=None, sn_index=cstate.resolve_sn_index(stored, bounds),
+        sn_bounds=bounds, sn_stored=stored,
+    )
+
+
+def _random_case(seed: int):
+    """Short names over a two-letter alphabet: prefixes of each other and
+    equal names with different rids are the common case."""
+    rng = random.Random(seed)
+    names = ["".join(rng.choice("ab") for _ in range(rng.randint(0, 3)))
+             for _ in range(40)]
+    keys = [(n, _rid(1000 * seed + i)) for i, n in enumerate(names)]
+    cut = sorted(rng.sample(range(1, 30), 4))
+    sizes = [b - a for a, b in zip([0] + cut, cut + [30])]
+    return keys[:30], sizes, keys[30:]
+
+
+def _edge_cases():
+    m = [(f"m{c}", _rid(i)) for i, c in enumerate("abcdefghijkl")]
+    yield "below_first_min", m, [3, 3, 3, 3], [("a", _rid(100)), ("b", _rid(101))]
+    yield "above_last_key", m, [3, 3, 3, 3], [("z", _rid(100)), ("zz", _rid(101))]
+    yield "buckets_below_window", m, [5, 1, 2, 4], [
+        ("mf", _rid(100)), ("mg0", _rid(101)), ("mgz", _rid(102)),
+    ]
+    # One key after the last row of the second bucket: only that bucket is
+    # touched, and its successor pairs come from the neighbour scan.
+    yield "one_bucket_neighbours", m, [4, 2, 3, 3], [("mfz", _rid(100))]
+    yield "empty_catalog", [], [], [("a", _rid(100)), ("b", _rid(101)), ("c", _rid(102))]
+    p = [("a", _rid(1)), ("ab", _rid(2)), ("ab", _rid(3)), ("abc", _rid(4)),
+         ("abc", _rid(5)), ("b", _rid(6)), ("ba", _rid(7)), ("bab", _rid(8))]
+    yield "prefixes_and_equal_names", p, [3, 1, 4], [
+        ("ab", bytes(32)), ("ab", b"\xff" * 32), ("abc", _rid(9)), ("", _rid(10)),
+    ]
+    for seed in (1, 2, 3):
+        yield (f"random_{seed}", *_random_case(seed))
+
+
+@pytest.mark.parametrize(
+    "case", list(_edge_cases()), ids=lambda c: c[0]
+)
+def test_delta_sn_pairs_exact_edge_cases(spark, case):
+    """The delta SN pairs, block keys included, equal batch SN over the
+    union restricted to pairs with ≥ 1 new side on the edge cases of the
+    bucket layout; and the native bucket assignment equals a brute-force
+    Python one by (UTF-8 name bytes, rid bytes)."""
+    name, cat_keys, sizes, delta = case
+    st = _hand_state(spark, cat_keys, sizes)
+    keys = spark.createDataFrame(delta, "name_norm string, rid binary")
+
+    bounds = cstate.collect_bounds(st.sn_bounds)
+    got_buckets = {
+        (r.name_norm, bytes(r.rid)): r.bucket
+        for r in cstate.assign_buckets(keys, bounds).collect()
+    }
+    for n, rid in delta:
+        below = [b.bucket for b in bounds if _enc(b.min_name, b.min_rid) <= _enc(n, rid)]
+        want = below[-1] if below else (bounds[0].bucket if bounds else 0)
+        assert got_buckets[(n, rid)] == want, (name, n)
+
+    upd = _sn_update(st, keys)
+    if name == "one_bucket_neighbours":
+        assert upd.touched == [1]
+    union = st.norm.select("rid", "name_norm", F.lit(False).alias("is_new")).unionByName(
+        keys.select("rid", "name_norm", F.lit(True).alias("is_new"))
+    )
+    batch = sorted_neighborhood(union, window=SN_WINDOW, dedupe=True)
+    want_pairs = _pair_rows(_touching_new(batch, union))
+    got = _pair_rows(delta_sn_pairs(st, upd, keys, window=SN_WINDOW))
+    assert got == want_pairs, name
+    assert got, name  # every case has delta-touching pairs
+
+
+def test_sn_probe_reads_touched_and_neighbour_buckets(spark, state, work_new):
+    """The SN probe reads the touched buckets and the buckets within w − 1
+    positions of one — here fewer rows than the index holds."""
     st, _ = state
-    n_delta = work_new.count()
-    s_rows = _delta_sn_candidates(
-        st, work_new.select("rid", "name_norm"), SN_WINDOW
-    ).count()
-    assert s_rows <= n_delta * (2 * SN_WINDOW - 1), (s_rows, n_delta)
+    small = work_new.orderBy("rid").limit(2)
+    upd = _sn_update(st, small)
+    read = sn_probe_index(st, upd, small.select("rid"), SN_WINDOW).count()
+    reach = SN_WINDOW - 1
+    spans = [
+        (b.start_pos - reach, b.start_pos + b.n - 1 + reach)
+        for b in upd.bounds if b.bucket in upd.touched
+    ]
+    near = [
+        b for b in upd.bounds
+        if any(b.start_pos <= hi and b.start_pos + b.n - 1 >= lo for lo, hi in spans)
+    ]
+    assert read == sum(b.n for b in near)
+    assert read < sum(b.n for b in upd.bounds), (read, upd.bounds)
 
 
-def test_bucket_of_runs_once_per_call(spark, state, work_new, monkeypatch):
-    """The SN candidate derivation reads the delta keys' bucket assignment
-    three times (touched buckets, the ranked union, the insertion points);
-    the bucket_of pandas UDF still evaluates each delta key exactly once per
-    call, not once per consumer."""
+def test_bucket_assignment_evaluated_once_per_operation(spark, state, work_new):
+    """The sn-index stages read the delta keys' bucket assignment three
+    times (touched buckets, the merge, the merged element's minima); the
+    delta keys are still evaluated exactly once."""
     st, _ = state
     seen = spark.sparkContext.accumulator(0)
-    real = cstate.bucket_of_column
 
-    def counting(bidx):
-        f = real(bidx).func
+    def counted(row):
+        seen.add(1)
+        return row
 
-        @F.pandas_udf("int")
-        def _bucket_of(name: pd.Series, rid: pd.Series) -> pd.Series:
-            seen.add(len(name))
-            return f(name, rid)
-
-        return _bucket_of
-
-    monkeypatch.setattr(cstate, "bucket_of_column", counting)
     keys = work_new.select("rid", "name_norm")
-    _delta_sn_candidates(st, keys, SN_WINDOW).collect()
+    upd = _sn_update(st, spark.createDataFrame(keys.rdd.map(counted), keys.schema))
+    assert upd.touched
     assert seen.value == keys.count()
 
 
-def test_blocking_plan_reads_no_catalog_content(spark, state, work_new):
+def test_blocking_plan_reads_no_catalog_content(spark, state, work_new, tmp_path):
     """VERDICT gate: the state-path pairs plan must not scan the catalog's
-    content column (no re-normalize — the persisted narrow columns only),
-    and its one range sort is over the delta-proportional candidate set,
-    driven by the persisted key index."""
+    content column (no re-normalize — the persisted narrow columns only).
+    The SN probe reads the persisted key index with no range sort, no
+    nested-loop join and no Python worker."""
     st, norm_path = state
 
     def norm_scan_cols(plan: str):
@@ -277,10 +406,11 @@ def test_blocking_plan_reads_no_catalog_content(spark, state, work_new):
         ):
             yield {c.split(":")[0] for c in m.group(1).split(",") if c}
 
-    for sn in (False, True):
-        pairs = incremental_candidate_pairs(
-            st, work_new, MatcherConfig(), sn=sn
-        )
+    upd = _sn_update(st, work_new, tmp_path)
+    cfg = MatcherConfig()
+    tok = incremental_token_pairs_state(st, work_new, df_cap=cfg.token_df_cap)
+    for sn in (None, upd):
+        pairs = incremental_candidate_pairs(st, work_new, cfg, tok, sn=sn)
         plan = _plan(pairs)
         for cols in norm_scan_cols(plan):
             assert "content" not in cols, (sn, cols)
@@ -288,19 +418,19 @@ def test_blocking_plan_reads_no_catalog_content(spark, state, work_new):
         # is never re-normalized; the delta side arrives pre-normalized).
         assert "sha2" not in plan, sn
 
-    # The SN candidate derivation (pre-pin: delta_sn_pairs localCheckpoints
-    # S, which truncates lineage out of the pairs plan above) must consume
-    # the persisted key index WITHOUT any range sort — the only range
-    # exchange in the whole SN delta pass is over S itself, whose
-    # delta-proportionality the |S| bound test witnesses at runtime.
-    cand_plan = _plan(
-        _delta_sn_candidates(st, work_new.select("rid", "name_norm"), SN_WINDOW)
-    )
-    assert "sn_index" in cand_plan, "SN pass must consume the key index"
-    assert "rangepartitioning" not in cand_plan
-    assert "sha2" not in cand_plan
-    for cols in norm_scan_cols(cand_plan):
-        assert "content" not in cols, cols
+    # The probe pins the index rows it reads, which truncates their lineage
+    # out of the pairs plan: both plans are checked.
+    keys = work_new.select("rid", "name_norm")
+    probe_plan = _plan(sn_probe_index(st, upd, keys, SN_WINDOW))
+    assert "sn_index" in probe_plan, "SN pass must consume the key index"
+    for p in (probe_plan, _plan(delta_sn_pairs(st, upd, keys, SN_WINDOW))):
+        for banned in (
+            "rangepartitioning", "sha2", "BroadcastNestedLoopJoin",
+            "ArrowEvalPython",
+        ):
+            assert banned not in p, banned
+        for cols in norm_scan_cols(p):
+            assert "content" not in cols, cols
 
 
 def test_tok_postings_path_equals_fallback(spark, state, work_new):
@@ -355,10 +485,13 @@ def test_updated_state_equals_rebuild(spark, state, catalog, split_corpus, tmp_p
     assert got == want
 
     # bucket-local merge, persisted like the pipeline stage would persist it
-    merged = cstate.merge_sn_buckets(st, norm_new)
+    bounds, assigned, counts = _assigned(st, norm_new)
+    merged = cstate.merge_sn_buckets(st, assigned, list(counts))
     merged.write.parquet(str(tmp_path / "sn_touched"))
     touched = spark.read.parquet(str(tmp_path / "sn_touched"))
-    bounds2 = cstate.merged_bounds(st.sn_bounds, touched)
+    bounds2 = cstate.bounds_frame(
+        spark, cstate.merged_bounds(bounds, counts, touched)
+    )
     touched_ids = {r.bucket for r in touched.select("bucket").distinct().collect()}
     stored2 = st.sn_stored.filter(
         ~F.col("bucket").isin(sorted(touched_ids))
@@ -379,8 +512,8 @@ def test_maintenance_plan_is_bucket_local(spark, state, catalog, split_corpus):
     """VERDICT r04 #2 plan gates: the maintenance plan contains NO range
     sort (the corpus re-sort the old full rebuild paid per delta) and scans
     the stored index WITH a bucket pruning filter; and VERDICT r04 #4: the
-    SN candidate derivation contains no BroadcastNestedLoopJoin (the old
-    non-equi bounds joins)."""
+    bucket assignment and the SN probe contain no BroadcastNestedLoopJoin
+    (the old non-equi bounds joins) and no Python worker."""
     _, new = split_corpus
     st, _ = state
     norm_new = (
@@ -389,15 +522,23 @@ def test_maintenance_plan_is_bucket_local(spark, state, catalog, split_corpus):
         )
         .withColumn("rid", F.unhex("rid"))
     )
-    plan = _plan(cstate.merge_sn_buckets(st, norm_new))
+    bounds, assigned, counts = _assigned(st, norm_new)
+    plan = _plan(cstate.merge_sn_buckets(st, assigned, list(counts)))
     assert "rangepartitioning" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     # the touched-bucket predicate reaches the parquet scan
     assert "In(bucket" in plan, "stored-index scan must be bucket-pruned"
 
     work = norm_new.select("rid", "name_norm")
-    cand_plan = _plan(_delta_sn_candidates(st, work, SN_WINDOW))
-    assert "BroadcastNestedLoopJoin" not in cand_plan
+    assign_plan = _plan(
+        work.select("rid", cstate.bucket_column(bounds).alias("bucket"))
+    )
+    upd = _sn_update(st, norm_new)
+    probe_plan = _plan(sn_probe_index(st, upd, work, SN_WINDOW))
+    sn_plan = _plan(delta_sn_pairs(st, upd, work, SN_WINDOW))
+    for p in (assign_plan, probe_plan, sn_plan):
+        assert "BroadcastNestedLoopJoin" not in p
+        assert "ArrowEvalPython" not in p
 
 
 def test_emit_delta_is_exact_upsert(spark, catalog, split_corpus, state, batch_union):

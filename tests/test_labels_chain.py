@@ -486,8 +486,8 @@ def test_delta_touching_half_the_sn_buckets_becomes_the_sn_base(
         keys = normalize_records(delta).select(
             F.unhex("rid").alias("rid"), "name_norm"
         )
-        landed = cstate.assign_buckets(keys, cstate.collect_bounds(bounds))
-        assert landed.select("bucket").distinct().count() == 1
+        landed = keys.select(cstate.bucket_column(cstate.collect_bounds(bounds)))
+        assert landed.distinct().count() == 1
     d = str(tmp_path / "d")
     run_delta_pipeline(
         spark, None, delta, d, MatcherConfig(sn_buckets=2), input_id=touched,

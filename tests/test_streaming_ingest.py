@@ -41,6 +41,9 @@ from codingchallenge_spark.streaming.ingest import (
 
 CFG = MatcherConfig()
 AWAIT_SECS = 600
+# Spark jobs of one ingest_batch(compact_every=1) on the tiny fixture,
+# measured (test_ingest_job_count_guard).
+JOBS_MEASURED = 54
 
 
 @pytest.fixture(scope="module")
@@ -314,9 +317,9 @@ def test_ingest_releases_cached_relations(spark, corpus3, catalog_run, tmp_path)
 def test_failed_branch_leaves_no_state_then_resume_completes(
     spark, corpus3, catalog_run, tmp_path, monkeypatch
 ):
-    """A raise in the state-maintenance branch fails the delta run after
-    the delta chain has finished, and writes no state.json; a resume=True
-    rerun skips what was written and completes the state."""
+    """A raise in the token-state branch (tok_index) fails the delta run
+    after the delta chain has finished, and writes no state.json; a
+    resume=True rerun skips what was written and completes the state."""
     _, da, _ = corpus3
     delta = spark.createDataFrame(da)
     rd = str(tmp_path / "d")
@@ -327,26 +330,48 @@ def test_failed_branch_leaves_no_state_then_resume_completes(
             state=cstate.load_catalog_state(spark, catalog_run), emit="delta",
         )
 
-    def boom(state, delta_norm):
-        raise RuntimeError("sn merge failed")
+    def boom(norm, num_buckets):
+        raise RuntimeError("tok_index failed")
 
     with monkeypatch.context() as m:
-        m.setattr(cstate, "merge_sn_buckets", boom)
-        with pytest.raises(RuntimeError, match="sn merge failed"):
+        m.setattr(cstate, "build_tok_postings", boom)
+        with pytest.raises(RuntimeError, match="tok_index failed"):
             run()
     assert not cstate.has_state(rd)
     assert Path(rd, "entities_delta", "_STAGE_DONE").exists()
 
     res = run()
     assert res.skipped == [
-        "normalize_delta", "pairs_delta", "score_delta", "edges_delta",
-        "cc_delta", "entities_delta", "token_df",
+        "normalize_delta", "sn_index", "sn_bounds", "pairs_delta",
+        "score_delta", "edges_delta", "cc_delta", "entities_delta", "token_df",
     ]
-    assert res.executed == ["sn_index", "sn_bounds", "tok_index"]
+    assert res.executed == ["tok_index"]
     assert cstate.has_state(rd)
     assert current_entities(spark, rd).count() == (
         current_entities(spark, catalog_run).count() + len(da)
     )
+
+
+def test_ingest_job_count_guard(spark, corpus3, catalog_run, tmp_path):
+    """Round-trip guard: one ingest_batch with compaction runs at most the
+    measured number of Spark jobs plus 25% (measured: JOBS_MEASURED on the
+    tiny fixture). Jobs of the run's concurrent branches inherit its job
+    group (sources.checkpoint.run_parallel)."""
+    _, da, _ = corpus3
+    sc = spark.sparkContext
+    group = "ingest-job-count-guard"
+    delta = spark.createDataFrame(da)
+    sc.setJobGroup(group, "count the jobs of one ingest_batch")
+    try:
+        ingest_batch(
+            spark, delta, 0, str(tmp_path / "out"), catalog_run, CFG,
+            compact_every=1,
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs <= JOBS_MEASURED * 1.25, jobs
 
 
 def test_out_dir_reuse_refused(spark, corpus3, catalog_run, tmp_path):
