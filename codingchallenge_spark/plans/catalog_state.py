@@ -4,15 +4,9 @@ Spec motivation (BASELINE.json:6's 10^12-file clause + :14 "resumable from
 checkpoint"): a high-frequency ingest deployment cannot pay a corpus-
 proportional normalize / token-count / range-sort per delta. The batch
 pipeline (plans.pipeline) already persists its normalize stage; this module
-adds the two derived relations a delta run needs to avoid every full-corpus
+adds the derived relations a delta run needs to avoid every full-corpus
 pass the round-3 incremental path still paid:
 
-- ``token_df`` — (tok, df) document frequencies over the catalog. A delta
-  run maintains it incrementally: df' = df + delta counts (EXACT — tokens
-  are distinct per record by functions.normalize.tokenize, and catalog/delta
-  rid sets are disjoint after the idempotent anti-join, so document
-  frequencies simply add; they never shrink under insertion, the property
-  the incremental refinement contract already leans on).
 - ``sn_index`` / ``sn_bounds`` — the catalog's (name_norm, rid) sort order,
   materialized ONCE and maintained BUCKET-LOCALLY. The stored relation is
   [bucket, rid(binary), name_norm, lpos] with bucket-LOCAL positions, and
@@ -35,10 +29,16 @@ pass the round-3 incremental path still paid:
   side of the delta token pass pre-exploded ONCE (round 5 — removes the
   last corpus-proportional term in pairs_delta: the per-batch re-explode of
   every catalog row's token array). Query: bucket-pruned scan via a literal
-  IN over the delta's token hash-buckets. Maintenance: APPEND-ONLY chain —
+  IN over the delta's token hash-buckets. The postings are also the
+  catalog's document frequencies: a token's catalog df is its number of
+  postings rows (tokenize emits distinct tokens per record), so a delta
+  token's union df is that count plus its delta count — exact, because
+  catalog and delta rid sets are disjoint after the idempotent anti-join.
+  No separate frequency relation is kept. Maintenance: APPEND-ONLY chain —
   postings are facts about existing rids, insertion never rewrites one, so
-  a delta contributes a delta-sized element, and compaction re-folds the
-  chain once its tail has grown.
+  a delta contributes a delta-sized, unsorted element; the base is
+  clustered by (tbucket, tok) where it is written (:func:`clustered_postings`:
+  the catalog build and a compaction fold).
 
 - ``labels`` — the catalog's resolved (rid, entity_id) assignment, as an
   overlay CHAIN of per-batch upsert sets ("latest element containing a rid
@@ -51,11 +51,12 @@ pass the round-3 incremental path still paid:
 
 On disk the state lives inside a pipeline run_dir next to the stage sinks,
 plus a ``state.json`` manifest listing (a) the normalize-stage parquet
-paths, (b) the ``sn_chain`` — the sn_index overlay chain — and (c) the
-``labels_chain``. All three are CHAINS: a maintained delta run appends its
-own delta-normalize path, its touched-bucket index element, and its
-touched-label element instead of rewriting the corpus. The full normalized
-relation is the union of the norm chain; the full index is resolved per
+paths, (b) the ``sn_chain`` — the sn_index overlay chain —, (c) the
+``labels_chain`` and (d) the ``tok_chain`` of postings. All are CHAINS: a
+maintained delta run appends its own delta-normalize path, its
+touched-bucket index element, its postings and its touched-label element
+instead of rewriting the corpus. The full normalized relation is the union
+of the norm chain; the full index is resolved per
 bucket by "latest chain element covering that bucket wins"
 (:func:`_read_sn_chain`); the full label assignment by "latest element
 containing the rid wins". :func:`compact_state` runs at whatever cadence
@@ -77,6 +78,7 @@ relation, nothing corpus-proportional.
 
 from __future__ import annotations
 
+import base64
 import json
 import logging
 from dataclasses import dataclass
@@ -109,7 +111,6 @@ class CatalogState:
     """In-memory handle on a catalog's persisted derived relations."""
 
     norm: DataFrame  # normalize-stage rows: full cols + name_norm/tokens/th, binary rid
-    token_df: DataFrame  # (tok, df)
     sn_index: DataFrame  # RESOLVED view: (bucket, rid: binary, name_norm, pos)
     sn_bounds: DataFrame  # (bucket, n, start_pos, min_name, min_rid) — tiny
     sn_stored: DataFrame | None = None  # stored form: (bucket, rid, name_norm, lpos)
@@ -127,43 +128,37 @@ class CatalogState:
     tok_buckets: int | None = None  # hash-bucket modulus the chain was built with
 
 
-def build_token_df(norm: DataFrame) -> DataFrame:
-    """(tok, df) over a normalized relation. df = document frequency exactly
-    (tokenize emits distinct tokens per record)."""
-    return (
-        norm.select(F.explode("tokens").alias("tok"))
-        .groupBy("tok")
-        .agg(F.count("*").alias("df"))
-    )
-
-
 def build_tok_postings(norm: DataFrame, num_buckets: int) -> DataFrame:
-    """Inverted token postings (tbucket, tok, rid) over a normalized relation.
+    """Inverted token postings (tbucket, tok, rid) over a normalized relation,
+    unsorted.
 
     The explode the delta token pass would otherwise pay per batch over the
     whole catalog, paid ONCE at catalog build (and per delta for the delta's
     own rows). ``tbucket = pmod(xxhash64(tok), num_buckets)`` so a delta's
     probe tokens prune the scan to their buckets with a small literal IN
-    (the sn_index ``In(bucket`` precedent); ``repartitionByRange`` clusters
-    each bucket into a contiguous file range so parquet file/row-group stats
-    make the prune real. Production shape: num_buckets sized so one bucket
-    ≈ one healthy parquet file (~64 MB of postings), count growing with the
-    corpus — scan cost per batch is then |delta tokens| · bucket bytes,
-    independent of corpus size. Maintenance is APPEND-ONLY (postings are
-    facts about existing rids — insertion never rewrites one), so a delta
-    contributes a delta-sized chain element; :func:`compact_state` re-folds
-    the chain once its tail has grown.
+    (the sn_index ``In(bucket`` precedent). Production shape: num_buckets
+    sized so one bucket ≈ one healthy parquet file (~64 MB of postings),
+    count growing with the corpus — scan cost per batch is then |delta
+    tokens| · bucket bytes, independent of corpus size. Maintenance is
+    APPEND-ONLY (postings are facts about existing rids — insertion never
+    rewrites one), so a delta contributes a delta-sized chain element,
+    written as it comes: a range sort of a delta-sized element costs a
+    sampling job and a shuffle and prunes nothing below one row group.
     """
-    parallelism = norm.sparkSession.sparkContext.defaultParallelism
-    return (
-        norm.select("rid", F.explode("tokens").alias("tok"))
-        .withColumn(
-            "tbucket",
-            F.pmod(F.xxhash64("tok"), F.lit(num_buckets)).cast("int"),
-        )
-        .repartitionByRange(parallelism, "tbucket", "tok")
-        .select("tbucket", "tok", "rid")
+    return norm.select("rid", F.explode("tokens").alias("tok")).select(
+        F.pmod(F.xxhash64("tok"), F.lit(num_buckets)).cast("int").alias("tbucket"),
+        "tok",
+        "rid",
     )
+
+
+def clustered_postings(postings: DataFrame) -> DataFrame:
+    """Postings clustered by (tbucket, tok) into contiguous file ranges, so
+    parquet file and row-group statistics make the bucket prune real. Paid
+    where a postings base is written: the catalog build and a compaction
+    fold of the chain."""
+    parallelism = postings.sparkSession.sparkContext.defaultParallelism
+    return postings.repartitionByRange(parallelism, "tbucket", "tok")
 
 
 def _with_start_pos(parts: DataFrame) -> DataFrame:
@@ -243,18 +238,6 @@ def bounds_from_index(sn_stored: DataFrame) -> DataFrame:
     return _with_start_pos(_bucket_stats(sn_stored))
 
 
-def updated_token_df(token_df: DataFrame, delta_norm: DataFrame) -> DataFrame:
-    """df' = df + delta document counts (exact under disjoint rid sets)."""
-    dn = build_token_df(delta_norm).withColumnRenamed("df", "dfn")
-    return (
-        token_df.join(dn, "tok", "full_outer")
-        .select(
-            "tok",
-            (F.coalesce("df", F.lit(0)) + F.coalesce("dfn", F.lit(0))).alias("df"),
-        )
-    )
-
-
 def derive_catalog_state(
     stage,
     norm: DataFrame,
@@ -264,21 +247,22 @@ def derive_catalog_state(
     labels: DataFrame | None = None,
 ) -> CatalogState:
     """Build a catalog state from a normalize relation through the stage
-    sink ``stage`` (plans.matcher): stages ``token_df``, ``sn_index``,
-    ``tok_index`` (named with ``suffix``, upstream ``norm_stage``) and, when
+    sink ``stage`` (plans.matcher): stages ``sn_index`` and ``tok_index``
+    (named with ``suffix``, upstream ``norm_stage``) and, when
     binary ``labels`` are given, ``labels``. The bounds are derived from the
     index stage's output, so both describe one materialization. The state
     carries no chain paths; a parquet-backed caller records them.
     """
     up = [norm_stage]
-    token_df = stage("token_df" + suffix, up, lambda: build_token_df(norm))
     stored = stage(
         "sn_index" + suffix,
         up,
         lambda: build_sn_index(norm, num_buckets=cfg.sn_buckets)[0],
     )
     postings = stage(
-        "tok_index" + suffix, up, lambda: build_tok_postings(norm, cfg.tok_buckets)
+        "tok_index" + suffix,
+        up,
+        lambda: clustered_postings(build_tok_postings(norm, cfg.tok_buckets)),
     )
     labels_out = None
     if labels is not None:
@@ -286,7 +270,6 @@ def derive_catalog_state(
     bounds = bounds_from_index(stored)
     return CatalogState(
         norm=norm,
-        token_df=token_df,
         sn_index=resolve_sn_index(stored, bounds),
         sn_bounds=bounds,
         sn_stored=stored,
@@ -313,28 +296,37 @@ def collect_bounds(sn_bounds: DataFrame) -> list[Row]:
     )
 
 
+def json_literal(value, schema: str) -> Column:
+    """``value`` as one constant column of type ``schema``: a single JSON
+    string literal parsed in the JVM (``from_json``, constant-folded at
+    planning). Building the same constant from per-field ``F.lit`` calls
+    costs one Py4J round trip per field. ``binary`` fields are passed as
+    base64 text, which the JSON reader decodes."""
+    return F.from_json(F.lit(json.dumps(value)), schema)
+
+
+def _b64(rid) -> str:
+    return base64.b64encode(bytes(rid)).decode("ascii")
+
+
 def bucket_column(bounds: list[Row]) -> Column:
     """The bucket containing key ``(name_norm, rid)``: the last bound whose
     ``(min_name, min_rid)`` is at most the key; keys below every minimum
     land in the first bucket. One native expression over the bounds,
-    inlined as a literal array of structs, so no Python worker runs and no
-    join is planned. Struct order compares the name by its UTF-8 bytes and
-    then the rid bytewise, the order of ``ORDER BY name_norm, rid``. The
-    filter is linear in the bucket count (32 by default). With no bounds
-    (an empty catalog) every key lands in bucket 0."""
+    inlined as one literal array of structs (:func:`json_literal`), so no
+    Python worker runs and no join is planned. Struct order compares the
+    name by its UTF-8 bytes and then the rid bytewise, the order of
+    ``ORDER BY name_norm, rid``. The filter is linear in the bucket count
+    (32 by default). With no bounds (an empty catalog) every key lands in
+    bucket 0."""
     if not bounds:
         return F.lit(0)
-    lits = F.array(
-        *[
-            F.struct(
-                F.struct(
-                    F.lit(b.min_name).alias("name_norm"),
-                    F.lit(bytes(b.min_rid)).alias("rid"),
-                ).alias("k"),
-                F.lit(b.bucket).alias("b"),
-            )
+    lits = json_literal(
+        [
+            {"k": {"name_norm": b.min_name, "rid": _b64(b.min_rid)}, "b": b.bucket}
             for b in bounds
-        ]
+        ],
+        "array<struct<k: struct<name_norm: string, rid: binary>, b: int>>",
     )
     key = F.struct("name_norm", "rid")
     last = F.try_element_at(F.filter(lits, lambda x: x["k"] <= key), F.lit(-1))
@@ -434,17 +426,13 @@ def merged_bounds(
 
 def bounds_frame(spark: SparkSession, bounds: list[Row]) -> DataFrame:
     """Driver-side bounds rows as the ``sn_bounds`` relation, with the
-    schema :func:`bounds_from_index` derives. The rows are inlined as
-    literals, so writing them is one single-task job that starts no Python
-    worker (``createDataFrame`` of a list would)."""
-    if not bounds:
-        return spark.createDataFrame([], BOUNDS_SCHEMA)
-    cols = [f.split() for f in BOUNDS_SCHEMA.split(", ")]
-    rows = [
-        F.struct(*[F.lit(v).cast(t).alias(c) for v, (c, t) in zip(b, cols)])
-        for b in bounds
-    ]
-    return spark.range(1).select(F.inline(F.array(*rows)))
+    schema :func:`bounds_from_index` derives. The rows are one JSON literal
+    (:func:`json_literal`), so writing them is one single-task job that
+    starts no Python worker (``createDataFrame`` of a list would)."""
+    rows = [{**b.asDict(), "min_rid": _b64(b.min_rid)} for b in bounds]
+    return spark.range(1).select(
+        F.inline(json_literal(rows, f"array<struct<{BOUNDS_SCHEMA}>>"))
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -566,7 +554,9 @@ def _read_norm(spark: SparkSession, *paths: str) -> DataFrame:
 
 
 def load_catalog_state(spark: SparkSession, run_dir: str) -> CatalogState:
-    """Read a persisted state (batch run_dir or maintained delta run_dir)."""
+    """Read a persisted state (batch run_dir or maintained delta run_dir).
+    A ``token_df`` directory that older code wrote next to the manifest is
+    ignored: the postings chain answers every document frequency."""
     manifest = json.loads((Path(run_dir) / STATE_MANIFEST).read_text())
     if manifest.get("version", 1) < STATE_VERSION or "labels_chain" not in manifest:
         raise ValueError(
@@ -586,7 +576,6 @@ def load_catalog_state(spark: SparkSession, run_dir: str) -> CatalogState:
     )  # append-only overlay: plain union, no shadowing
     return CatalogState(
         norm=_read_norm(spark, *norm_paths),
-        token_df=ckpt.read_parquet(spark, str(Path(run_dir) / "token_df")),
         sn_index=resolve_sn_index(stored, bounds),
         sn_bounds=bounds,
         sn_stored=stored,
@@ -602,8 +591,8 @@ def load_catalog_state(spark: SparkSession, run_dir: str) -> CatalogState:
 
 def manifest_paths(run_dir: str) -> list[str]:
     """Every chain element the state manifest at ``run_dir`` references
-    (norm, sn, labels and postings chains). The state's ``token_df`` and
-    ``sn_bounds`` sit at fixed paths inside ``run_dir`` and are not listed."""
+    (norm, sn, labels and postings chains). The state's ``sn_bounds`` sits
+    at a fixed path inside ``run_dir`` and is not listed."""
     m = json.loads((Path(run_dir) / STATE_MANIFEST).read_text())
     return (
         m["norm_paths"]
@@ -648,19 +637,20 @@ def compact_state(
     chain resolved to one relation, and the sn_index RE-BUCKETED over the
     full norm (build_sn_index — this is where bucket balance is restored
     after many bucket-local merges), with fresh bounds derived from the
-    persisted index. ``token_df`` and ``sn_bounds`` live at fixed paths in
-    ``out_dir`` and are always written (copied when the sn chain does not
-    fold). The relations depend only on the loaded state, so they are
-    written concurrently (sources.checkpoint.run_parallel); the manifest is
-    written after all of them, so a failed compaction leaves no state.
+    persisted index. ``sn_bounds`` lives at a fixed path in ``out_dir`` and
+    is always written (copied when the sn chain does not fold). The
+    relations depend only on the loaded state, so they are written
+    concurrently (sources.checkpoint.run_parallel); the manifest is written
+    after all of them, so a failed compaction leaves no state.
 
     ``num_buckets`` is the sn_index bucket count and ``tok_buckets`` the
     postings' hash-bucket modulus; each defaults to the state's own, and a
     value equal to the state's forces no fold. A folded postings chain with
     an unchanged modulus is only re-clustered (every stored ``tbucket``
     stays valid); another modulus, or a state without postings, rebuilds
-    them from the full norm. A value below 1 raises ``ValueError`` before
-    anything is written.
+    them from the full norm. Either way the new base is clustered
+    (:func:`clustered_postings`). A value below 1 raises ``ValueError``
+    before anything is written.
     """
     for name, value in (("num_buckets", num_buckets), ("tok_buckets", tok_buckets)):
         if value is not None and value < 1:
@@ -714,23 +704,19 @@ def compact_state(
 
     def tok_chain() -> list[str]:
         if state.tok_postings is None or tok_buckets != state.tok_buckets:
-            return write("tok_index", build_tok_postings(state.norm, tok_buckets))
-        if _tail_is_large(state.tok_chain):
-            # Many appended elements each cover the whole tbucket range; one
-            # re-clustered parquet restores the clustering bucket pruning
-            # relies on.
-            return write(
-                "tok_index",
-                state.tok_postings.repartitionByRange(
-                    spark.sparkContext.defaultParallelism, "tbucket", "tok"
-                ),
-            )
-        return state.tok_chain
+            postings = build_tok_postings(state.norm, tok_buckets)
+        elif _tail_is_large(state.tok_chain):
+            # Appended elements are unsorted and each covers the whole
+            # tbucket range; one clustered base restores the clustering
+            # bucket pruning relies on.
+            postings = state.tok_postings
+        else:
+            return state.tok_chain
+        return write("tok_index", clustered_postings(postings))
 
     # The relations are independent of each other: written concurrently.
-    norm_paths, sn, labels, toks, _ = ckpt.run_parallel(
-        spark, norm_chain, sn_chain, labels_chain, tok_chain,
-        lambda: write("token_df", state.token_df),
+    norm_paths, sn, labels, toks = ckpt.run_parallel(
+        spark, norm_chain, sn_chain, labels_chain, tok_chain
     )
     write_state_manifest(
         str(out), norm_paths, sn_chain=sn, labels_chain=labels, emit="full",

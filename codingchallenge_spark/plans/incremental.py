@@ -12,23 +12,24 @@ extra CC rounds.
 One cost regime. The delta graph (:func:`normalize_delta_stage`,
 :func:`delta_stages`) links against a catalog state (plans.catalog_state):
 the catalog run's PERSISTED normalize/th stage is reused (no content is
-ever re-normalized), document frequencies are maintained incrementally
-(df' = df + delta counts, exact), the delta's keys are merged into the
-persisted (name_norm, rid) key index bucket-locally and the
-sorted-neighborhood pass reads its pairs off the merged positions instead
-of re-sorting the union corpus, and the catalog side of the token pass reads
-the persisted inverted postings (catalog_state.build_tok_postings),
-bucket-pruned by the delta's token hash-buckets; pre-postings state dirs
-fall back to the norm-chain explode. Remaining corpus-proportional work:
-only the final full-table emit when ``emit="full"`` (use ``emit="delta"``
-to emit only new + possibly-relabeled rows, i.e. an upsert set).
+ever re-normalized), the delta's keys are merged into the persisted
+(name_norm, rid) key index bucket-locally and the sorted-neighborhood pass
+reads its pairs off the merged positions instead of re-sorting the union
+corpus, and the catalog side of the token pass reads the persisted inverted
+postings (catalog_state.build_tok_postings), bucket-pruned by the delta's
+token hash-buckets. The same postings give the document frequencies: a
+delta token's union df = its catalog postings count + its delta count,
+exact. Pre-postings state dirs fall back to the norm-chain explode.
+Remaining corpus-proportional work: only the final full-table emit when
+``emit="full"`` (use ``emit="delta"`` to emit only new + possibly-relabeled
+rows, i.e. an upsert set).
 
 The graph is defined once and run through a stage sink, like the batch
 graph (plans.matcher): :func:`resolve_entities_incremental` runs it in
 memory, plans.pipeline.run_delta_pipeline through parquet stages. Its
 stages are normalize_delta → sn_index → sn_bounds → pairs_delta →
 score_delta → edges_delta → cc_delta → entities_delta; the parquet run
-adds the token-state maintenance (token_df, tok_index) beside them. A caller
+adds the postings maintenance (tok_index) beside them. A caller
 with no state derives one from the catalog entities table first
 (:func:`catalog_side`) — a corpus-proportional pass, paid once per catalog
 by the checkpointed run.
@@ -44,11 +45,12 @@ tests/test_incremental_state.py):
   (entity_id = global min rid over the merged component).
 - **Delta-touching pairs are scored exactly as the batch matcher would.**
   Token document frequencies (the hot-key cap) are computed over the FULL
-  union corpus. The sorted-neighborhood pass reads the full union sort
-  order off the updated key index, whose merged touched buckets and new
-  bounds give every union row its exact position; each new row then pairs
-  with the rows within w − 1 positions of it, the batch SN rule (provably
-  the same pair set and block keys, see delta_sn_pairs). So the candidate
+  union corpus: catalog postings count + delta count per delta token. The
+  sorted-neighborhood pass reads the full union sort order off the updated
+  key index, whose merged touched buckets and new bounds give every union
+  row its exact position; each new row then pairs with the rows within
+  w − 1 positions of it, the batch SN rule (provably the same pair set
+  and block keys, see delta_sn_pairs). So the candidate
   set equals the batch run's candidate set restricted to pairs with ≥ 1
   new side — same blocking keys, same meta-blocking overlap counts, same
   kernels, same threshold.
@@ -75,7 +77,7 @@ import logging
 from dataclasses import dataclass, replace
 from functools import cache
 
-from pyspark.sql import DataFrame, Row
+from pyspark.sql import Column, DataFrame, Row
 from pyspark.sql import functions as F
 
 from codingchallenge_spark.functions.normalize import (
@@ -107,70 +109,37 @@ log = logging.getLogger(__name__)
 def incremental_token_pairs_state(
     state: CatalogState, work_new: DataFrame, df_cap: int
 ) -> DataFrame:
-    """Token pass restricted to pairs touching ≥ 1 new record, using the
-    MAINTAINED document-frequency relation.
+    """Token pass restricted to pairs touching ≥ 1 new record.
 
     Same pair multiset as batch token blocking over the union corpus,
     restricted to pairs with ≥ 1 new side (tested equal): each unordered
     delta-touching pair once per shared cold token (NON-deduped — exactly
-    the multiplicity union_candidates_meta counts as token overlap). The hot
-    set is derived from df_union = state.token_df + delta counts — exact, because tokenize emits
-    distinct tokens per record and catalog/delta rid sets are disjoint — and
-    the catalog side of the join is filtered to the delta's cold-token set
-    BEFORE the exchange (broadcast probe: tokens absent from the delta can
-    produce no delta-touching pair). With a postings chain
-    (state.tok_postings) the catalog side is the persisted inverted index,
-    bucket-pruned to the delta's token hash-buckets — no corpus token array
-    is re-exploded; without one it falls back to exploding the norm chain's
-    token arrays. The catalog's content column is never read, nothing
-    corpus-sized is re-aggregated.
+    the multiplicity union_candidates_meta counts as token overlap).
+
+    The catalog side is the persisted inverted postings (state.tok_postings),
+    bucket-pruned to the hash-buckets of the delta's tokens (``tbs``, one
+    delta-sized collect) and joined to a broadcast of the delta's distinct
+    tokens; without postings it falls back to exploding the norm chain's
+    token arrays. The hot set is taken over the UNION dfs: a token's
+    catalog df is its number of catalog postings rows, its delta df its
+    number of delta postings rows, and it is hot when their sum exceeds
+    ``df_cap``. Exact: tokenize emits distinct tokens per record, and
+    catalog and delta rid sets are disjoint. Catalog-only tokens cannot
+    pair with a delta record, so they need no df.
+
+    The delta's cold postings are pinned and broadcast; the catalog
+    postings stream through the broadcast with no exchange (old–new
+    pairs), and new–new pairs come from a broadcast self-join of the delta
+    side. The broadcast holds |delta| × tokens per record rows — a
+    delta-sized bound, like the SN probes'. The catalog's content column is
+    never read and nothing corpus-sized is shuffled.
     """
     tok_new = work_new.select("rid", F.explode("tokens").alias("tok"))
-    df_new = tok_new.groupBy("tok").agg(F.count("*").alias("dfn"))
-    # Hot set over the UNION dfs. Only delta-present tokens can matter, so
-    # semi-filter the vocabulary FIRST with a broadcast of the delta's
-    # (distinct, delta-sized) token list — one narrow vocab scan, no
-    # shuffle — then take the union-df threshold over two delta-sized
-    # relations (the earlier full-outer here shuffled the whole vocabulary
-    # per batch: vocab-proportional exchange, measured ~1 s/batch at a
-    # 1.27M-token vocab). Union-wide correct for every delta token: its
-    # catalog df rides in via the semi-filtered slice, catalog-only tokens
-    # can never be hot-for-the-delta because they never join anything.
-    tok_df_delta = state.token_df.join(
-        F.broadcast(df_new.select("tok")), "tok"
-    )
-    hot = (
-        df_new.join(tok_df_delta, "tok", "left")
-        .filter(
-            (F.coalesce("df", F.lit(0)) + F.col("dfn")) > df_cap
-        )
-        .select("tok")
-    )
-    new_cold = tok_new.join(F.broadcast(hot), "tok", "left_anti").withColumn(
-        "is_new", F.lit(True)
-    )
-    # Pin the delta's cold postings (delta-sized): the hot-set derivation
-    # above joins the FULL vocabulary token_df, and the postings branch
-    # below adds a driver-side collect (tbs) on top of the main action —
-    # without the pin each action would recompute that vocab-sized join.
-    # Same pattern as the probe pin in delta_sn_pairs / blocking's seam pin.
-    # Lazy (eager=False) like every other pin in this repo (ADVICE r05): the
-    # eager default fired a Spark job at DataFrame-CONSTRUCTION time even if
-    # the caller never executed the plan; the tbs collect just below (or the
-    # first downstream action on the non-postings path) materializes it once.
-    new_cold = new_cold.localCheckpoint(eager=False)
-    delta_toks = new_cold.select("tok").distinct()
     if state.tok_postings is not None and state.tok_buckets:
-        # Inverted-postings catalog side (round 5): scan the persisted
-        # (tbucket, tok, rid) chain bucket-pruned to the delta's token
-        # hash-buckets — a literal IN over ≤ min(|delta tokens|, B) ids,
-        # collected driver-side (delta-sized job; the merge_sn_buckets
-        # precedent) — instead of re-exploding every catalog token array.
-        # Exact: any tok in delta_toks has its tbucket in the IN list by
-        # construction, so the prune is lossless before the tok equi-join.
+        # Exact prune: every delta token's bucket is in the IN list.
         tbs = sorted(
             r.tbucket
-            for r in delta_toks.select(
+            for r in tok_new.select(
                 F.pmod(F.xxhash64("tok"), F.lit(state.tok_buckets))
                 .cast("int")
                 .alias("tbucket")
@@ -179,28 +148,44 @@ def incremental_token_pairs_state(
             .collect()
         )
         log.debug("delta collect: %d token buckets (tbs, pairs_delta)", len(tbs))
-        old_cold = (
-            state.tok_postings.filter(F.col("tbucket").isin(tbs))
-            .join(F.broadcast(delta_toks), "tok")
-            .select("rid", "tok")
-            .withColumn("is_new", F.lit(False))
+        old = state.tok_postings.filter(F.col("tbucket").isin(tbs)).select(
+            "tok", "rid"
         )
     else:
-        old_cold = (
-            state.norm.select("rid", F.explode("tokens").alias("tok"))
-            .join(F.broadcast(delta_toks), "tok")
-            .withColumn("is_new", F.lit(False))
+        old = state.norm.select("rid", F.explode("tokens").alias("tok"))
+    df_cat = (
+        old.join(F.broadcast(tok_new.select("tok").distinct()), "tok")
+        .groupBy("tok")
+        .agg(F.count("*").alias("df"))
+    )
+    hot = (
+        tok_new.groupBy("tok")
+        .agg(F.count("*").alias("dfn"))
+        .join(df_cat, "tok", "left")
+        .filter((F.coalesce("df", F.lit(0)) + F.col("dfn")) > df_cap)
+        .select("tok")
+    )
+    # Pinned (lazy): both joins below read the cold delta postings, and the
+    # hot set behind them scans the catalog postings.
+    new_cold = tok_new.join(F.broadcast(hot), "tok", "left_anti").localCheckpoint(
+        eager=False
+    )
+    b = F.broadcast(new_cold).alias("b")
+
+    def pairs(a: DataFrame, keep: Column) -> DataFrame:
+        return (
+            a.alias("a")
+            .join(b, "tok")
+            .filter(keep)
+            .select(
+                F.least(F.col("a.rid"), F.col("b.rid")).alias("rid1"),
+                F.greatest(F.col("a.rid"), F.col("b.rid")).alias("rid2"),
+                F.col("tok").alias("block_key"),
+            )
         )
-    b_side = old_cold.unionByName(new_cold)
-    a, b = new_cold.alias("a"), b_side.hint("shuffle_hash").alias("b")
-    return (
-        a.join(b, "tok")
-        .filter((~F.col("b.is_new")) | (F.col("a.rid") < F.col("b.rid")))
-        .select(
-            F.least(F.col("a.rid"), F.col("b.rid")).alias("rid1"),
-            F.greatest(F.col("a.rid"), F.col("b.rid")).alias("rid2"),
-            F.col("tok").alias("block_key"),
-        )
+
+    return pairs(old, F.lit(True)).unionByName(
+        pairs(new_cold, F.col("a.rid") < F.col("b.rid"))
     )
 
 
@@ -271,18 +256,18 @@ def sn_probe_index(
     merged positions: (rid, name_norm, pos, is_new) of the touched buckets
     (the merged element) and of every bucket within ``window - 1``
     positions of one (the prior chain, bucket-pruned by a literal IN).
-    ``pos = start_pos' + lpos − 1`` with the new start offsets inlined as a
-    literal map — no bounds join; ``is_new`` (true, else null) marks the
-    delta's rows, by a broadcast of the delta rids."""
+    ``pos = start_pos' + lpos − 1`` with the new start offsets inlined as
+    one literal map (catalog_state.json_literal) — no bounds join;
+    ``is_new`` (true, else null) marks the delta's rows, by a broadcast of
+    the delta rids."""
     touched = set(sn.touched)
     near = [b for b in _probe_buckets(sn.bounds, touched, window - 1) if b not in touched]
-    start = F.create_map(
-        *[x for b in sn.bounds for x in (F.lit(b.bucket), F.lit(b.start_pos))]
-    ).cast("map<int,bigint>")
+    start = cstate.json_literal(
+        {str(b.bucket): b.start_pos for b in sn.bounds}, "map<string, bigint>"
+    )
     rows = state.sn_stored.filter(F.col("bucket").isin(near)).unionByName(sn.element)
-    return rows.select(
-        "rid", "name_norm", (start[F.col("bucket")] + F.col("lpos") - 1).alias("pos")
-    ).join(
+    pos = start[F.col("bucket").cast("string")] + F.col("lpos") - 1
+    return rows.select("rid", "name_norm", pos.alias("pos")).join(
         F.broadcast(delta_keys.select("rid", F.lit(True).alias("is_new"))),
         "rid",
         "left",
@@ -446,8 +431,7 @@ def catalog_side(
     ``state`` as given when it carries labels; a state without labels takes
     them from the ``catalog`` entities table; with no state, one is derived
     from ``catalog`` through the sink ``stage``: ``catalog_norm``, then
-    ``token_df_cat``, ``sn_index_cat``, ``tok_index_cat`` and
-    ``labels_cat`` (plans.catalog_state.derive_catalog_state). ``caller``
+    ``sn_index_cat``, ``tok_index_cat`` and ``labels_cat`` (plans.catalog_state.derive_catalog_state). ``caller``
     names the entry point in errors.
     """
     if state is not None and state.labels is not None:
@@ -599,7 +583,7 @@ def resolve_entities_incremental(
     input columns + content_sha + entity_id, entity_id = min rid per
     cluster). ``new_records`` is a raw delta with the five input columns.
     ``state`` supplies the catalog run's persisted normalize stage +
-    maintained token-df + key index + labels (plans.catalog_state); without
+    postings + key index + labels (plans.catalog_state); without
     it one is derived in memory from the catalog rows.
     ``emit="delta"`` returns only rows whose label could have changed (new
     rows + members of touched entities — an upsert set); ``"full"`` returns

@@ -13,7 +13,7 @@ concurrently, sources.checkpoint.run_parallel):
                │  ║             ├→ pairs → score → edges → cc → entities
                │  └ block_sn ───┘
                ║
-               └→ token_df, sn_index → sn_bounds, tok_index  (catalog state)
+               └→ sn_index → sn_bounds, tok_index  (catalog state)
     → state.json, once both branches are written
 
 Every stage materializes to ``run_dir/<stage>/`` with a fingerprinted
@@ -65,7 +65,6 @@ STAGES = [
     "cc",
     "entities",
     # catalog-state sinks consumed by --delta runs (plans.catalog_state)
-    "token_df",
     "sn_index",
     "sn_bounds",
     "tok_index",
@@ -84,15 +83,13 @@ DELTA_STAGES = [
 
 # The declared order of every stage a delta run can write: the in-run
 # catalog derivation, the delta chain (its sn-index stages first), then the
-# token-state maintenance.
+# postings maintenance.
 _DELTA_ORDER = [
     "catalog_norm",
-    "token_df_cat",
     "sn_index_cat",
     "tok_index_cat",
     "labels_cat",
     *DELTA_STAGES,
-    "token_df",
     "tok_index",
 ]
 
@@ -363,23 +360,23 @@ def run_delta_pipeline(
     resumes after the last completed stage; ``║`` marks branches that run
     concurrently, sources.checkpoint.run_parallel):
 
-        [catalog_norm → token_df_cat, sn_index_cat, tok_index_cat,
-         labels_cat]              (only when no persisted state is passed —
+        [catalog_norm → sn_index_cat, tok_index_cat, labels_cat]
+                                  (only when no persisted state is passed —
                                    plans.catalog_state builds one in-run)
         normalize_delta ─┬→ sn_index → sn_bounds ─┬→ pairs_delta
                          │  ║ token pass (tbs) ─────┘
                          │  → score_delta → edges_delta → cc_delta
                          │  → entities_delta
                          ║
-                         └→ token_df, tok_index
+                         └→ tok_index  (the delta's postings, unsorted)
         → state.json, once both branches are written
 
     The run_dir becomes a valid catalog state for the NEXT delta (norm
     chain = catalog paths + this delta's). The delta SN pass reads its
     pairs off the merged index, so sn_index and sn_bounds sit upstream of
-    pairs_delta; the token pass's bucket collect overlaps them. The token
-    branch reads only normalize_delta and the prior state, and its stages
-    are not consumed by the delta chain, so the two overlap; the manifest
+    pairs_delta; the token pass's bucket collect overlaps them. The postings
+    branch reads only normalize_delta, and its stage is not consumed by the
+    delta chain, so the two overlap; the manifest
     is written only after both succeed, so a failure on either side leaves
     no state.json and a ``resume=True`` rerun completes it.
 
@@ -428,12 +425,7 @@ def run_delta_pipeline(
     norm_delta = inc.normalize_delta_stage(stage, state, delta_records)
 
     def maintenance() -> list[str] | None:
-        """The next state's token relations; returns the next tok_chain."""
-        stage(
-            "token_df",
-            ["normalize_delta"],
-            lambda: cstate.updated_token_df(state.token_df, norm_delta),
-        )
+        """The next state's postings; returns the next tok_chain."""
         # Inverted-postings maintenance: APPEND-ONLY — the delta's own
         # postings become a delta-sized chain element; no catalog posting is
         # ever rewritten (only catalogs that carry a postings chain maintain
@@ -447,7 +439,7 @@ def run_delta_pipeline(
         )
         return list(state.tok_chain) + [ckpt.stage_path(run_dir, "tok_index")]
 
-    # The token branch depends only on normalize_delta and the prior state;
+    # The postings branch depends only on normalize_delta and the state;
     # the delta graph maintains the sn index itself (sn_index, sn_bounds).
     (entities, sn_update), tok_chain_next = ckpt.run_parallel(
         spark,

@@ -37,7 +37,7 @@ Exactly-once story (the part worth reading):
 
 Per-batch work AND writes are delta-proportional: the catalog pointer names
 a run_dir carrying persisted catalog state (plans.catalog_state — reused
-normalize chain, maintained token dfs, materialized SN key index, labels
+normalize chain, token postings, materialized SN key index, labels
 overlay chain), measured FLAT across a 10× catalog in BENCH/BASELINE.md.
 Each batch runs ``emit="delta"`` (VERDICT r04 #3): it writes its upsert set
 (entities_delta), its touched-label element (cc_delta — the labels chain

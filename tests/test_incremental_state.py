@@ -13,7 +13,7 @@ Contract under test:
   the edge cases of the bucket layout;
 - the SN probe reads only the touched buckets and their neighbours, and
   bucket assignment is native and evaluated once;
-- maintained state (token_df / sn_index) equals a from-scratch rebuild;
+- maintained state (postings / sn_index) equals a from-scratch rebuild;
 - the blocking plan never reads the catalog's content column (plan gate);
 - the staged delta pipeline resumes after an interruption.
 """
@@ -114,7 +114,6 @@ def state(spark, catalog, tmp_path_factory):
     ).withColumn("rid", F.unhex("rid"))
     norm.write.parquet(str(tmp / "norm"))
     normp = spark.read.parquet(str(tmp / "norm"))
-    cstate.build_token_df(normp).write.parquet(str(tmp / "token_df"))
     stored, _ = cstate.build_sn_index(normp, num_buckets=8)
     stored.write.parquet(str(tmp / "sn_index"))
     idxp = spark.read.parquet(str(tmp / "sn_index"))
@@ -132,7 +131,6 @@ def state(spark, catalog, tmp_path_factory):
     cstate.build_tok_postings(normp, 16).write.parquet(str(tmp / "tok_index"))
     return cstate.CatalogState(
         norm=normp,
-        token_df=spark.read.parquet(str(tmp / "token_df")),
         sn_index=cstate.resolve_sn_index(idxp, bounds),
         sn_bounds=bounds,
         sn_stored=idxp,
@@ -282,7 +280,7 @@ def _hand_state(spark, keys, sizes) -> cstate.CatalogState:
     bounds = cstate.bounds_from_index(stored)
     norm = spark.createDataFrame(keys, "name_norm string, rid binary")
     return cstate.CatalogState(
-        norm=norm, token_df=None, sn_index=cstate.resolve_sn_index(stored, bounds),
+        norm=norm, sn_index=cstate.resolve_sn_index(stored, bounds),
         sn_bounds=bounds, sn_stored=stored,
     )
 
@@ -314,6 +312,15 @@ def _edge_cases():
          ("abc", _rid(5)), ("b", _rid(6)), ("ba", _rid(7)), ("bab", _rid(8))]
     yield "prefixes_and_equal_names", p, [3, 1, 4], [
         ("ab", bytes(32)), ("ab", b"\xff" * 32), ("abc", _rid(9)), ("", _rid(10)),
+    ]
+    # Bucket minima with quotes, a backslash and non-ASCII characters: the
+    # bounds reach the JVM as one JSON literal.
+    q = [(n, _rid(20 + i)) for i, n in enumerate(
+        ['a"b', "a'b", "a\\b", "ab", "é", "éa", "日本", "😀x"]
+    )]
+    yield "quotes_and_non_ascii", q, [1, 1, 2, 1, 3], [
+        ("a'", _rid(30)), ('a"c', _rid(31)), ("a\\", _rid(32)), ("ö", _rid(33)),
+        ("😀", _rid(34)),
     ]
     for seed in (1, 2, 3):
         yield (f"random_{seed}", *_random_case(seed))
@@ -448,6 +455,52 @@ def test_tok_postings_path_equals_fallback(spark, state, work_new):
     assert len(got) > 0  # non-vacuous on this corpus
 
 
+def _cap_case(spark):
+    """A catalog and a delta around the df cap (3): ``at_cap`` has catalog
+    df = cap and the delta adds one (hot over the union), ``below_cap`` has
+    catalog df = cap − 1 and the delta adds one (stays cold), ``delta_only``
+    and ``delta_hot`` appear only in the delta (cold, and hot by the delta's
+    own count)."""
+    cat = [
+        (_rid(1), "c1", ["at_cap", "below_cap", "shared"]),
+        (_rid(2), "c2", ["at_cap", "below_cap"]),
+        (_rid(3), "c3", ["at_cap", "catalog_only"]),
+        (_rid(4), "c4", ["shared", "catalog_only"]),
+    ]
+    delta = [
+        (_rid(10), "d1", ["at_cap", "below_cap", "delta_only", "delta_hot"]),
+        (_rid(11), "d2", ["delta_only", "delta_hot", "shared"]),
+        (_rid(12), "d3", ["delta_hot"]),
+        (_rid(13), "d4", ["delta_hot"]),
+    ]
+    schema = "rid binary, name_norm string, tokens array<string>"
+    norm = spark.createDataFrame(cat, schema)
+    st = cstate.CatalogState(
+        norm=norm, sn_index=None, sn_bounds=None,
+        tok_postings=cstate.build_tok_postings(norm, 4), tok_buckets=4,
+    )
+    return st, spark.createDataFrame(delta, schema)
+
+
+def test_delta_token_pairs_exact_at_the_cap(spark):
+    """At the df cap the delta pairs, block keys included, equal batch
+    token blocking over the union restricted to pairs with ≥ 1 new side —
+    on the postings path and on the norm-explode fallback."""
+    import dataclasses
+
+    st, work = _cap_case(spark)
+    union = _union_work(st, work)
+    want = _pair_rows(_touching_new(token_blocking(union, df_cap=3, dedupe=False), union))
+    keys = {k for _, _, k in want}
+    assert keys == {"below_cap", "delta_only", "shared"}, keys
+    for label, s in (
+        ("postings", st),
+        ("fallback", dataclasses.replace(st, tok_postings=None, tok_buckets=None)),
+    ):
+        got = _pair_rows(incremental_token_pairs_state(s, work, df_cap=3))
+        assert got == want, label
+
+
 def test_token_pass_plan_is_bucket_pruned(spark, state, work_new):
     """Plan gate (round 5): with a postings chain the token pass scans the
     tok_index parquet with the tbucket IN literal REACHING the scan, and the
@@ -461,8 +514,9 @@ def test_token_pass_plan_is_bucket_pruned(spark, state, work_new):
 
 
 def test_updated_state_equals_rebuild(spark, state, catalog, split_corpus, tmp_path):
-    """Incremental maintenance is exact: df' = df + delta counts equals a
-    from-scratch df over the union, and the BUCKET-LOCAL merge (touched
+    """Incremental maintenance is exact: the postings count per token over
+    the catalog postings plus the delta's element equals a from-scratch df
+    over the union, and the BUCKET-LOCAL merge (touched
     buckets rewritten, untouched untouched, bounds re-prefix-summed)
     resolves to the union order re-materialized (same keys, contiguous
     1..N positions) — without any corpus re-sort (plan gate below)."""
@@ -477,11 +531,15 @@ def test_updated_state_equals_rebuild(spark, state, catalog, split_corpus, tmp_p
     union_norm = st.norm.select("rid", "tokens", "name_norm").unionByName(
         norm_new.select("rid", "tokens", "name_norm")
     )
-    got = {
-        (r.tok, r.df)
-        for r in cstate.updated_token_df(st.token_df, norm_new).collect()
+    postings = st.tok_postings.unionByName(
+        cstate.build_tok_postings(norm_new, st.tok_buckets)
+    )
+    got = {tuple(r) for r in postings.groupBy("tok").count().collect()}
+    want = {
+        tuple(r)
+        for r in union_norm.select(F.explode("tokens").alias("tok"))
+        .groupBy("tok").count().collect()
     }
-    want = {(r.tok, r.df) for r in cstate.build_token_df(union_norm).collect()}
     assert got == want
 
     # bucket-local merge, persisted like the pipeline stage would persist it
@@ -489,8 +547,12 @@ def test_updated_state_equals_rebuild(spark, state, catalog, split_corpus, tmp_p
     merged = cstate.merge_sn_buckets(st, assigned, list(counts))
     merged.write.parquet(str(tmp_path / "sn_touched"))
     touched = spark.read.parquet(str(tmp_path / "sn_touched"))
-    bounds2 = cstate.bounds_frame(
-        spark, cstate.merged_bounds(bounds, counts, touched)
+    new_bounds = cstate.merged_bounds(bounds, counts, touched)
+    bounds2 = cstate.bounds_frame(spark, new_bounds)
+    # the driver-side rows round-trip through the JSON literal unchanged
+    assert bounds2.dtypes == st.sn_bounds.dtypes
+    assert list(map(tuple, cstate.collect_bounds(bounds2))) == list(
+        map(tuple, new_bounds)
     )
     touched_ids = {r.bucket for r in touched.select("bucket").distinct().collect()}
     stored2 = st.sn_stored.filter(

@@ -222,7 +222,7 @@ def test_compact_state_keeps_the_state_bucket_counts(spark, catalog_run, tmp_pat
         assert manifest["tok_buckets"] == CFG.tok_buckets
         assert ckpt.read_marker(out, "sn_bounds")["rows"] == buckets
         assert sorted(p.name for p in Path(out).iterdir()) == [
-            "sn_bounds", "stage_metrics.jsonl", "state.json", "token_df",
+            "sn_bounds", "stage_metrics.jsonl", "state.json",
         ]
 
 
@@ -375,6 +375,45 @@ def test_legacy_th32_catalog_takes_a_delta(spark, corpus3, catalog_run, tmp_path
     compacted = str(tmp_path / "c")
     cstate.compact_state(spark, legacy, compacted, num_buckets=8)
     assert "th32" not in cstate.load_catalog_state(spark, compacted).norm.columns
+
+
+def test_parent_state_with_token_df_takes_a_delta(
+    spark, corpus3, catalog_run, tmp_path
+):
+    """A state dir written while the state still kept a ``token_df``
+    relation next to its manifest loads (the relation is ignored), takes a
+    delta with the labels the unmodified catalog gives, and compacts into a
+    dir without it."""
+    import shutil
+
+    from pyspark.sql import functions as F
+
+    from codingchallenge_spark.sources import checkpoint as ckpt
+
+    legacy = str(tmp_path / "legacy_df")
+    shutil.copytree(catalog_run, legacy)
+    norm = ckpt.load_stage(spark, legacy, "normalize")
+    token_df = norm.select(F.explode("tokens").alias("tok")).groupBy("tok").agg(
+        F.count("*").alias("df")
+    )
+    ckpt.write_stage(token_df, legacy, "token_df", "parent")
+    assert (Path(legacy) / "token_df" / "_STAGE_DONE").exists()
+
+    da = corpus3[1]
+    got, want = (
+        run_delta_pipeline(
+            spark, None, da, str(tmp_path / name), CFG, input_id="df",
+            state=cstate.load_catalog_state(spark, src), emit="delta",
+        )
+        for name, src in (("d", legacy), ("ref", catalog_run))
+    )
+    assert not (Path(got.run_dir) / "token_df").exists()
+    assert _labels(current_entities(spark, got.run_dir)) == _labels(
+        current_entities(spark, want.run_dir)
+    )
+    out = str(tmp_path / "c")
+    cstate.compact_state(spark, legacy, out)
+    assert not (Path(out) / "token_df").exists()
 
 
 def test_parent_layout_norm_takes_deltas_and_a_compaction(

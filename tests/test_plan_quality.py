@@ -328,18 +328,11 @@ def _broadcast_subtrees(plan: str) -> list[str]:
     return out
 
 
-def test_incremental_token_join_guarded(spark, tiny_records, tmp_path):
-    """The delta⋈catalog token join has the exploded-relation shape whose
-    size estimate Catalyst gets wrong (commits ce2a8c6/05fcdda): it must
-    shuffle, and no broadcast may carry the catalog side — neither the
-    postings scan nor the norm scan the pre-postings fallback explodes."""
-    import dataclasses
-
+def _token_pass_state(spark, tiny_records, tmp_path):
+    """A parquet-backed catalog (norm + postings) and a delta split off the
+    tiny fixture: (state, delta work projection, norm path, postings path)."""
     from codingchallenge_spark.functions.normalize import work_projection
     from codingchallenge_spark.plans import catalog_state as cstate
-    from codingchallenge_spark.plans.incremental import (
-        incremental_token_pairs_state,
-    )
 
     norm = with_token_hashes(normalize_records(tiny_records)).withColumn(
         "rid", F.unhex("rid")
@@ -348,35 +341,73 @@ def test_incremental_token_join_guarded(spark, tiny_records, tmp_path):
     norm_path, idx_path = str(tmp_path / "norm"), str(tmp_path / "tok_index")
     norm.filter(~is_new).write.parquet(norm_path)
     cat = spark.read.parquet(norm_path)
-    cstate.build_token_df(cat).write.parquet(str(tmp_path / "token_df"))
     cstate.build_tok_postings(cat, 16).write.parquet(idx_path)
     st = cstate.CatalogState(
         norm=cat,
-        token_df=spark.read.parquet(str(tmp_path / "token_df")),
         sn_index=None,
         sn_bounds=None,
         tok_postings=spark.read.parquet(idx_path),
         tok_buckets=16,
     )
-    work_new = work_projection(norm.filter(is_new))
+    return st, work_projection(norm.filter(is_new)), norm_path, idx_path
+
+
+def test_incremental_token_join_guarded(spark, tiny_records, tmp_path):
+    """The delta⋈catalog token join broadcasts the delta side (|delta| ×
+    tokens per record rows) and streams the catalog side through it: the
+    join is a BroadcastHashJoin, no exchange on ``tok`` sits between the
+    catalog scan and it, and no broadcast carries a catalog scan — neither
+    the postings scan nor the norm scan the pre-postings fallback explodes
+    (Catalyst under-estimates exploded relations, commits ce2a8c6/05fcdda)."""
+    import dataclasses
+
+    from codingchallenge_spark.plans.incremental import (
+        incremental_token_pairs_state,
+    )
+
+    st, work_new, norm_path, idx_path = _token_pass_state(spark, tiny_records, tmp_path)
+    catalog_scan = re.compile(
+        re.escape(idx_path) + "|" + re.escape(norm_path)
+        + r"|FileScan parquet \[[^\]]*\b(tbucket|tokens)#"
+    )
     for label, s in (
         ("postings", st),
         ("norm fallback", dataclasses.replace(st, tok_postings=None)),
     ):
         plan = _simple_plan(incremental_token_pairs_state(s, work_new, df_cap=100))
-        assert "ShuffledHashJoin" in plan, f"{label}: tok join not shuffle-hash:\n{plan}"
+        assert "BroadcastHashJoin" in plan, f"{label}: tok join not broadcast:\n{plan}"
+        assert "ShuffledHashJoin" not in plan, label
         # A catalog scan is recognised by its path or, should the plan
         # string truncate the path, by the columns it reads.
-        catalog_scan = re.compile(
-            re.escape(idx_path) + "|" + re.escape(norm_path)
-            + r"|FileScan parquet \[[^\]]*\b(tbucket|tokens)#"
-        )
         for sub in _broadcast_subtrees(plan):
             assert not catalog_scan.search(sub), (
                 f"{label}: catalog scan on a broadcast build side:\n{sub}\n{plan}"
             )
+        # The path from the catalog scan up to its join: no exchange.
+        lines = plan.splitlines()
+        scan = next(i for i, ln in enumerate(lines) if catalog_scan.search(ln))
+        join = max(
+            i for i, ln in enumerate(lines[:scan]) if "BroadcastHashJoin" in ln
+        )
+        assert not any(
+            re.search(r"(?<!Broadcast)Exchange", ln) for ln in lines[join:scan]
+        ), (label, plan)
+        assert "Exchange hashpartitioning(tok" not in plan, (label, plan)
         assert "BroadcastNestedLoopJoin" not in plan, label
         assert "CartesianProduct" not in plan, label
+
+
+def test_delta_postings_plan_is_unsorted(spark, tiny_records, tmp_path):
+    """A delta's postings element is written as it comes: no range sort
+    (no sampling job, no shuffle); the catalog build clusters its base."""
+    from codingchallenge_spark.plans import catalog_state as cstate
+
+    st, _, _, _ = _token_pass_state(spark, tiny_records, tmp_path)
+    postings = cstate.build_tok_postings(st.norm, 16)
+    delta_plan = _plan(postings)
+    assert "rangepartitioning" not in delta_plan, delta_plan
+    assert "Exchange" not in delta_plan, delta_plan
+    assert "rangepartitioning" in _plan(cstate.clustered_postings(postings))
 
 
 def test_exchange_count_in_token_blocking(spark, tiny_records):

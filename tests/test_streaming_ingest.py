@@ -43,7 +43,7 @@ CFG = MatcherConfig()
 AWAIT_SECS = 600
 # Spark jobs of one ingest_batch(compact_every=1) on the tiny fixture,
 # measured (test_ingest_job_count_guard).
-JOBS_MEASURED = 54
+JOBS_MEASURED = 47
 
 
 @pytest.fixture(scope="module")
@@ -343,7 +343,7 @@ def test_failed_branch_leaves_no_state_then_resume_completes(
     res = run()
     assert res.skipped == [
         "normalize_delta", "sn_index", "sn_bounds", "pairs_delta",
-        "score_delta", "edges_delta", "cc_delta", "entities_delta", "token_df",
+        "score_delta", "edges_delta", "cc_delta", "entities_delta",
     ]
     assert res.executed == ["tok_index"]
     assert cstate.has_state(rd)
