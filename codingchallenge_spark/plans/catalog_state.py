@@ -11,19 +11,21 @@ pass the round-3 incremental path still paid:
   materialized ONCE and maintained BUCKET-LOCALLY. The stored relation is
   [bucket, rid(binary), name_norm, lpos] with bucket-LOCAL positions, and
   ``sn_bounds`` = [bucket, n, start_pos, min_name, min_rid] — one row per
-  bucket, small enough to broadcast/collect. Global positions are derived
-  at read time as ``pos = start_pos + lpos − 1`` (:func:`resolve_sn_index`):
+  bucket, kept as driver rows in ``state.json`` (the same driver-sized
+  assumption :func:`bucket_column` and the delta SN probe make when they
+  inline the bounds as literals). Global positions are derived at read
+  time as ``pos = start_pos + lpos − 1`` (:func:`resolve_sn_index`):
   inserting keys into one bucket shifts the global positions of every later
   bucket, but under the (bucket, lpos) decomposition that shift lives
-  ENTIRELY in the metadata-sized bounds table — the index rows of untouched
-  buckets never change. A delta run maintains the index by rewriting only
-  the buckets its keys land in (:func:`merge_sn_buckets`) — cost
-  ≤ |touched buckets| · bucket size, never a corpus re-sort — and then
-  reads its sorted-neighborhood pairs off the merged positions
-  (plans.incremental.delta_sn_pairs). It collects the old bounds once
-  (:func:`collect_bounds`), assigns its keys to buckets with one native
-  expression over them (:func:`bucket_column`; no Python UDF), and
-  computes the new bounds on the driver (:func:`merged_bounds`).
+  ENTIRELY in the bounds rows — the index rows of untouched buckets never
+  change. A delta run maintains the index by rewriting only the buckets its
+  keys land in (:func:`merge_sn_buckets`) — cost ≤ |touched buckets| ·
+  bucket size, never a corpus re-sort — and then reads its
+  sorted-neighborhood pairs off the merged positions
+  (plans.incremental.delta_sn_pairs). It assigns its keys to buckets with
+  one native expression over the bounds (:func:`bucket_column`; no Python
+  UDF), and computes the new bounds on the driver (:func:`merged_bounds`,
+  which also gives a freshly built index its bounds).
 
 - ``tok_index`` — inverted token postings (tbucket, tok, rid), the catalog
   side of the delta token pass pre-exploded ONCE (round 5 — removes the
@@ -51,8 +53,9 @@ pass the round-3 incremental path still paid:
 
 On disk the state lives inside a pipeline run_dir next to the stage sinks,
 plus a ``state.json`` manifest listing (a) the normalize-stage parquet
-paths, (b) the ``sn_chain`` — the sn_index overlay chain —, (c) the
-``labels_chain`` and (d) the ``tok_chain`` of postings. All are CHAINS: a
+paths, (b) the ``sn_chain`` — the sn_index overlay chain — and its
+``sn_bounds`` rows, (c) the ``labels_chain`` and (d) the ``tok_chain`` of
+postings. All four are CHAINS: a
 maintained delta run appends its own delta-normalize path, its
 touched-bucket index element, its postings and its touched-label element
 instead of rewriting the corpus. The full normalized relation is the union
@@ -64,16 +67,18 @@ the operator picks and is size-tiered: it folds a chain back into one
 element only once the chain's tail has grown to a fixed fraction of its
 base (:data:`FOLD_RATIO`), and otherwise re-references the chain's
 existing elements, so a compacted state may still point into older
-run_dirs.
+run_dirs. Older state layouts are read by :func:`compact_state` alone,
+which writes them out in the current one.
 
 Production shape: at 10^12 files ``sn_index`` buckets would be sized to
 ~64k rows (here: defaultParallelism buckets — a knob), bucket splits and
 chain compaction would ride the table format's maintenance (Iceberg
 rewrite_data_files / LSM merge), and the bucket lookup, a linear filter
 over the inlined bounds here, would become a binary search over a broadcast
-table. The bucket-local merge below is the real maintenance shape at that
-scale: per batch it touches ≤ |delta| buckets and the metadata-sized bounds
-relation, nothing corpus-proportional.
+table (and the bounds would leave the manifest for a table of their own).
+The bucket-local merge below is the real maintenance shape at that scale:
+per batch it touches ≤ |delta| buckets and the metadata-sized bounds,
+nothing corpus-proportional.
 """
 
 from __future__ import annotations
@@ -81,7 +86,7 @@ from __future__ import annotations
 import base64
 import json
 import logging
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 from functools import reduce
 from pathlib import Path
 
@@ -94,11 +99,13 @@ from codingchallenge_spark.sources import checkpoint as ckpt
 log = logging.getLogger(__name__)
 
 STATE_MANIFEST = "state.json"
-# v2: sn_index stored with bucket-LOCAL positions + manifest sn_chain
-# (round 5 — bucket-local maintenance). v1 run_dirs (global-pos index, no
+# v3: the sn bounds are rows of the manifest, and every chain (postings
+# included) is in the current layout. v2 (bounds as a parquet relation,
+# optional postings, older norm layouts) is refused by load_catalog_state
+# and migrated once by compact_state. v1 run_dirs (global-pos index, no
 # chain) are refused with a rebuild hint: silently resolving them would
 # mix incompatible position semantics.
-STATE_VERSION = 2
+STATE_VERSION = 3
 # compact_state folds a chain once the elements newer than its base hold at
 # least this fraction of the base's on-disk bytes; below it the chain is
 # re-referenced as it is. With deltas at ~10% of the base, a chain folds
@@ -111,21 +118,20 @@ class CatalogState:
     """In-memory handle on a catalog's persisted derived relations."""
 
     norm: DataFrame  # normalize-stage rows: full cols + name_norm/tokens/th, binary rid
-    sn_index: DataFrame  # RESOLVED view: (bucket, rid: binary, name_norm, pos)
-    sn_bounds: DataFrame  # (bucket, n, start_pos, min_name, min_rid) — tiny
-    sn_stored: DataFrame | None = None  # stored form: (bucket, rid, name_norm, lpos)
-    labels: DataFrame | None = None  # resolved (rid, entity_id), BINARY keys
-    norm_paths: list[str] | None = None  # manifest chain (None when in-memory)
-    sn_chain: list[dict] | None = None  # [{"path": str, "buckets": None|[int]}]
-    labels_chain: list[str] | None = None  # overlay: newest element wins per rid
+    sn_stored: DataFrame  # stored form: (bucket, rid, name_norm, lpos)
+    sn_bounds: list[Row]  # (bucket, n, start_pos, min_name, min_rid), position order
     # Inverted token postings (round 5): (tbucket, tok, rid) — the catalog
     # side of the delta token pass reads THIS, bucket-pruned to the delta's
     # token hash-buckets, instead of re-exploding the corpus token arrays
-    # per batch (the last corpus-proportional term in pairs_delta). None →
-    # the query path falls back to the norm-chain explode.
-    tok_postings: DataFrame | None = None
-    tok_chain: list[str] | None = None  # append-only (postings never change)
-    tok_buckets: int | None = None  # hash-bucket modulus the chain was built with
+    # per batch (the last corpus-proportional term in pairs_delta).
+    tok_postings: DataFrame
+    tok_buckets: int  # hash-bucket modulus the postings were built with
+    labels: DataFrame | None = None  # resolved (rid, entity_id), BINARY keys
+    # The manifest chains ([] when the state lives in memory only).
+    norm_paths: list[str] = field(default_factory=list)
+    sn_chain: list[dict] = field(default_factory=list)  # [{"path", "buckets": None|[int]}]
+    labels_chain: list[str] = field(default_factory=list)  # newest element wins per rid
+    tok_chain: list[str] = field(default_factory=list)  # append-only (postings never change)
 
 
 def build_tok_postings(norm: DataFrame, num_buckets: int) -> DataFrame:
@@ -161,19 +167,6 @@ def clustered_postings(postings: DataFrame) -> DataFrame:
     return postings.repartitionByRange(parallelism, "tbucket", "tok")
 
 
-def _with_start_pos(parts: DataFrame) -> DataFrame:
-    """start_pos = 1 + rows in all prior buckets, over a METADATA-sized
-    per-bucket stats relation (bucket, n, min_name, min_rid) — a non-equi
-    self-join over ≤ num_buckets rows, never a data pass."""
-    prior = parts.select(F.col("bucket").alias("q"), F.col("n").alias("qn"))
-    return (
-        parts.join(F.broadcast(prior), F.col("q") < F.col("bucket"), "left")
-        .groupBy("bucket", "n", "min_name", "min_rid")
-        .agg((F.coalesce(F.sum("qn"), F.lit(0)) + 1).alias("start_pos"))
-        .select("bucket", "n", "start_pos", "min_name", "min_rid")
-    )
-
-
 def _bucket_stats(stored: DataFrame) -> DataFrame:
     """Per-bucket (n, min_name, min_rid) from a stored-form index relation —
     consistent with it by construction (min at lpos = 1)."""
@@ -184,21 +177,20 @@ def _bucket_stats(stored: DataFrame) -> DataFrame:
     )
 
 
-def build_sn_index(
-    norm: DataFrame, num_buckets: int | None = None
-) -> tuple[DataFrame, DataFrame]:
-    """Materialize the catalog's (name_norm, rid) order in STORED form.
+def build_sn_index(norm: DataFrame, num_buckets: int | None = None) -> DataFrame:
+    """Materialize the catalog's (name_norm, rid) order in STORED form,
+    [bucket, rid, name_norm, lpos] with bucket-local 1-based positions.
+    Bucket ids are range-partition ids, so they follow key order; the
+    bounds come from the persisted result (:func:`merged_bounds` with no
+    old bounds), and global positions are exact for any bucket balance
+    because start offsets are prefix sums of real bucket counts.
 
-    One range sort — paid at CATALOG BUILD time, never per delta. Returns
-    (sn_stored, sn_bounds): sn_stored = [bucket, rid, name_norm, lpos] with
-    bucket-local 1-based positions; global positions are exact for any
-    bucket balance because bounds' start offsets come from real per-bucket
-    counts (:func:`_with_start_pos`), applied by :func:`resolve_sn_index`.
-
-    The bucketed relation is pinned with a lazy localCheckpoint for the same
+    One range sort — paid at CATALOG BUILD time, never per delta. The
+    bucketed relation is pinned with a lazy localCheckpoint for the same
     reason as operators.blocking.sorted_neighborhood: repartitionByRange
-    samples boundaries with a physical-RDD-id-derived seed, and the index
-    rows and the bounds table MUST observe identical boundaries.
+    samples boundaries with a physical-RDD-id-derived seed, and every read
+    of the index (in memory: the bounds collect and the probes) MUST
+    observe identical boundaries.
     """
     spark = norm.sparkSession
     if num_buckets is None:
@@ -210,32 +202,20 @@ def build_sn_index(
         .localCheckpoint(eager=False)
     )
     w = Window.partitionBy("bucket").orderBy("name_norm", "rid")
-    stored = bucketed.withColumn("lpos", F.row_number().over(w)).select(
+    return bucketed.withColumn("lpos", F.row_number().over(w)).select(
         "bucket", "rid", "name_norm", "lpos"
     )
-    return stored, _with_start_pos(_bucket_stats(stored))
 
 
-def resolve_sn_index(stored: DataFrame, bounds: DataFrame) -> DataFrame:
+def resolve_sn_index(stored: DataFrame, bounds: list[Row]) -> DataFrame:
     """Stored form → the logical (bucket, rid, name_norm, pos) view with
-    GLOBAL positions: pos = start_pos + lpos − 1, via a broadcast join on
-    the metadata-sized bounds table."""
-    return stored.join(
-        F.broadcast(bounds.select("bucket", "start_pos")), "bucket"
-    ).select(
-        "bucket",
-        "rid",
-        "name_norm",
-        (F.col("start_pos") + F.col("lpos") - 1).alias("pos"),
+    GLOBAL positions, pos = start_pos + lpos − 1. The start offsets are
+    inlined as one literal map (:func:`json_literal`): no bounds join."""
+    start = json_literal(
+        {str(b.bucket): b.start_pos for b in bounds}, "map<string, bigint>"
     )
-
-
-def bounds_from_index(sn_stored: DataFrame) -> DataFrame:
-    """Derive ``sn_bounds`` from a PERSISTED stored-form ``sn_index`` — used
-    by the pipeline's stage sinks so bounds and index provably describe the
-    same materialization (two independent build_sn_index calls could sample
-    different range boundaries; a parquet-backed index cannot)."""
-    return _with_start_pos(_bucket_stats(sn_stored))
+    pos = start[F.col("bucket").cast("string")] + F.col("lpos") - 1
+    return stored.select("bucket", "rid", "name_norm", pos.alias("pos"))
 
 
 def derive_catalog_state(
@@ -249,15 +229,15 @@ def derive_catalog_state(
     """Build a catalog state from a normalize relation through the stage
     sink ``stage`` (plans.matcher): stages ``sn_index`` and ``tok_index``
     (named with ``suffix``, upstream ``norm_stage``) and, when
-    binary ``labels`` are given, ``labels``. The bounds are derived from the
-    index stage's output, so both describe one materialization. The state
-    carries no chain paths; a parquet-backed caller records them.
+    binary ``labels`` are given, ``labels``. The bounds are one collect
+    over the index stage's output, so both describe one materialization.
+    The state carries no chain paths; a parquet-backed caller records them.
     """
     up = [norm_stage]
     stored = stage(
         "sn_index" + suffix,
         up,
-        lambda: build_sn_index(norm, num_buckets=cfg.sn_buckets)[0],
+        lambda: build_sn_index(norm, num_buckets=cfg.sn_buckets),
     )
     postings = stage(
         "tok_index" + suffix,
@@ -267,34 +247,19 @@ def derive_catalog_state(
     labels_out = None
     if labels is not None:
         labels_out = stage("labels" + suffix, [], lambda: labels)
-    bounds = bounds_from_index(stored)
     return CatalogState(
         norm=norm,
-        sn_index=resolve_sn_index(stored, bounds),
-        sn_bounds=bounds,
         sn_stored=stored,
-        labels=labels_out,
+        sn_bounds=merged_bounds([], stored),
         tok_postings=postings,
         tok_buckets=cfg.tok_buckets,
+        labels=labels_out,
     )
 
 
 # ---------------------------------------------------------------------------
 # Bucket-local maintenance (VERDICT r04 #2: no full-corpus re-sort per delta)
 # ---------------------------------------------------------------------------
-
-BOUNDS_SCHEMA = "bucket int, n bigint, start_pos bigint, min_name string, min_rid binary"
-
-
-def collect_bounds(sn_bounds: DataFrame) -> list[Row]:
-    """The ``sn_bounds`` rows (one per bucket, so at most ``sn_buckets``),
-    ordered by ``start_pos`` — which is also bucket key order. A delta run
-    makes this collect once, for the old bounds."""
-    return sorted(
-        sn_bounds.select("bucket", "n", "start_pos", "min_name", "min_rid").collect(),
-        key=lambda r: r.start_pos,
-    )
-
 
 def json_literal(value, schema: str) -> Column:
     """``value`` as one constant column of type ``schema``: a single JSON
@@ -342,19 +307,16 @@ def assign_buckets(delta_keys: DataFrame, bounds: list[Row]) -> DataFrame:
     ).localCheckpoint(eager=False)
 
 
-def touched_buckets(assigned: DataFrame, bounds: list[Row]) -> dict[int, int]:
-    """Delta rows per bucket the merge rewrites: one collect of at most
+def touched_buckets(assigned: DataFrame, bounds: list[Row]) -> list[int]:
+    """The buckets the merge rewrites: one collect of at most
     min(|delta|, buckets) rows. A delta landing in :data:`FOLD_RATIO` of
-    the buckets rewrites all of them (with count 0 where it lands nowhere):
-    its element is a whole index, the new base."""
-    counts = {
-        r.bucket: r["count"]
-        for r in assigned.groupBy("bucket").count().collect()
-    }
-    log.debug("delta collect: %d touched buckets (sn_index)", len(counts))
-    if bounds and len(counts) >= FOLD_RATIO * len(bounds):
-        counts = {b.bucket: counts.get(b.bucket, 0) for b in bounds}
-    return counts
+    the buckets rewrites all of them: its element is a whole index, the
+    new base."""
+    touched = [r.bucket for r in assigned.select("bucket").distinct().collect()]
+    log.debug("delta collect: %d touched buckets (sn_index)", len(touched))
+    if bounds and len(touched) >= FOLD_RATIO * len(bounds):
+        return [b.bucket for b in bounds]
+    return sorted(touched)
 
 
 def merge_sn_buckets(
@@ -381,11 +343,6 @@ def merge_sn_buckets(
     and :func:`resolve_sn_index` over (merged ∪ untouched, new bounds)
     equals a from-scratch rebuild's positions (property-tested).
     """
-    if state.sn_stored is None:
-        raise ValueError(
-            "merge_sn_buckets needs the stored-form index (state.sn_stored); "
-            "in-memory states built without one cannot be maintained"
-        )
     old_rows = state.sn_stored.filter(F.col("bucket").isin(sorted(touched)))
     merged = old_rows.select("bucket", "rid", "name_norm").unionByName(
         assigned.select("bucket", "rid", "name_norm")
@@ -394,45 +351,30 @@ def merge_sn_buckets(
     return merged.withColumn("lpos", F.row_number().over(w))
 
 
-def merged_bounds(
-    bounds: list[Row], counts: dict[int, int], element: DataFrame
-) -> list[Row]:
-    """New bounds after a bucket-local merge, computed on the driver. A
-    touched bucket's n grows by its delta rows (``counts``), and its
-    minimum is the merged ``element``'s lpos = 1 row — one collect of at
-    most |touched| rows from the merged element. Untouched buckets keep
-    their stats. A merge never reorders buckets, so start offsets are the
-    prefix sums of n in the old bounds order; an empty catalog's first
-    bucket comes after them."""
-    mins = {
-        r.bucket: (r.name_norm, r.rid)
-        for r in element.filter(F.col("lpos") == 1)
-        .select("bucket", "name_norm", "rid")
-        .collect()
-    }
-    log.debug("delta collect: %d touched-bucket minima (sn_bounds)", len(mins))
+def merged_bounds(bounds: list[Row], element: DataFrame) -> list[Row]:
+    """The bounds of an index with ``bounds`` after the stored-form
+    ``element`` replaces the buckets it holds, computed on the driver from
+    one collect of the element's per-bucket (n, min_name, min_rid) — at most
+    one row per bucket. Every other bucket keeps its row. A merge never
+    reorders buckets, so start offsets are the prefix sums of n in the old
+    bounds order, with buckets new to the bounds after them in id order.
+    With no old bounds, ``element`` is a whole index (the batch build, a
+    compaction re-bucket), whose range-partition bucket ids follow key
+    order."""
+    stats = {r.bucket: r for r in _bucket_stats(element).collect()}
+    log.debug("delta collect: %d bucket stats (sn_bounds)", len(stats))
     old = {b.bucket: b for b in bounds}
     out, start = [], 1
-    for bucket in list(old) + sorted(set(mins) - set(old)):
-        b = old.get(bucket)
-        n = (b.n if b else 0) + counts.get(bucket, 0)
-        name, rid = mins.get(bucket) or (b.min_name, b.min_rid)
+    for bucket in list(old) + sorted(set(stats) - set(old)):
+        b = stats.get(bucket) or old[bucket]
         out.append(
-            Row(bucket=bucket, n=n, start_pos=start, min_name=name, min_rid=rid)
+            Row(
+                bucket=bucket, n=b.n, start_pos=start, min_name=b.min_name,
+                min_rid=bytes(b.min_rid),
+            )
         )
-        start += n
+        start += b.n
     return out
-
-
-def bounds_frame(spark: SparkSession, bounds: list[Row]) -> DataFrame:
-    """Driver-side bounds rows as the ``sn_bounds`` relation, with the
-    schema :func:`bounds_from_index` derives. The rows are one JSON literal
-    (:func:`json_literal`), so writing them is one single-task job that
-    starts no Python worker (``createDataFrame`` of a list would)."""
-    rows = [{**b.asDict(), "min_rid": _b64(b.min_rid)} for b in bounds]
-    return spark.range(1).select(
-        F.inline(json_literal(rows, f"array<struct<{BOUNDS_SCHEMA}>>"))
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -440,40 +382,79 @@ def bounds_frame(spark: SparkSession, bounds: list[Row]) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+def _bounds_rows(rows: list[dict]) -> list[Row]:
+    return [
+        Row(**{**r, "min_rid": base64.b64decode(r["min_rid"])}) for r in rows
+    ]
+
+
 def write_state_manifest(
     run_dir: str,
+    *,
     norm_paths: list[str],
     sn_chain: list[dict],
+    sn_bounds: list[Row],
     labels_chain: list[str],
+    tok_chain: list[str],
+    tok_buckets: int,
     emit: str = "full",
-    tok_chain: list[str] | None = None,
-    tok_buckets: int | None = None,
 ) -> None:
     """``emit`` is RECORDED so consumers can tell a delta-emit run_dir's
     partial entities sink from a full one (ADVICE r04 — chaining itself no
-    longer cares, it reads the labels chain). ``tok_chain``/``tok_buckets``
-    record the inverted-postings overlay; absent (older v2 dirs) the query
-    path falls back to the norm-chain explode."""
+    longer cares, it reads the labels chain). The bounds rows are stored
+    with their ``min_rid`` as base64 text, as :func:`json_literal` passes
+    it to the JVM."""
     payload = {
         "version": STATE_VERSION,
         "norm_paths": norm_paths,
         "sn_chain": sn_chain,
+        "sn_bounds": [
+            {**b.asDict(), "min_rid": _b64(b.min_rid)} for b in sn_bounds
+        ],
         "labels_chain": labels_chain,
+        "tok_chain": tok_chain,
+        "tok_buckets": tok_buckets,
         "emit": emit,
     }
-    if tok_chain is not None:
-        payload["tok_chain"] = tok_chain
-        payload["tok_buckets"] = tok_buckets
     (Path(run_dir) / STATE_MANIFEST).write_text(json.dumps(payload, indent=1))
+
+
+def _raw_manifest(run_dir: str) -> dict:
+    return json.loads((Path(run_dir) / STATE_MANIFEST).read_text())
+
+
+def _is_v2(manifest: dict) -> bool:
+    return manifest.get("version") == 2 and "labels_chain" in manifest
+
+
+def read_manifest(run_dir: str) -> dict:
+    """The state manifest at ``run_dir``, refused with ``ValueError`` unless
+    it is in the current layout: a v2 state names its one-time migration
+    (:func:`compact_state`), an older one the rebuild."""
+    manifest = _raw_manifest(run_dir)
+    if _is_v2(manifest):
+        raise ValueError(
+            f"{run_dir!r} holds a v2 catalog state (sn bounds as a parquet "
+            "relation, optional postings) — migrate it once with "
+            "compact_state(spark, run_dir, out_dir) and chain deltas from "
+            "out_dir"
+        )
+    if manifest.get("version", 1) < STATE_VERSION:
+        raise ValueError(
+            f"{run_dir!r} holds a catalog state older than the labels chain "
+            "(global-position sn_index, no sn/labels chain) — rebuild the "
+            "catalog with the current pipeline (run_pipeline) before "
+            "chaining deltas"
+        )
+    return manifest
 
 
 def manifest_emit(run_dir: str) -> str | None:
     """The recorded emit mode of a run_dir's state manifest (None when the
     run_dir has no state)."""
-    p = Path(run_dir) / STATE_MANIFEST
-    if not p.exists():
+    if not has_state(run_dir):
         return None
-    return json.loads(p.read_text()).get("emit", "full")
+    return _raw_manifest(run_dir).get("emit", "full")
 
 
 def has_state(run_dir: str) -> bool:
@@ -532,74 +513,91 @@ def _read_labels_chain(spark: SparkSession, labels_chain: list[str]) -> DataFram
     return out
 
 
-def _read_norm(spark: SparkSession, *paths: str) -> DataFrame:
-    """Read a norm chain in the current layout. Older layouts are mapped
-    here, and only here: a retired ``th32`` column is dropped, and a hex
-    ``rid`` stored next to its binary ``rid_b`` gives way to it. One scan
-    cannot read ``rid`` as both string and binary, so paths are read in
-    groups by the layout their markers record (no Spark job), then
-    unioned; a current-layout chain is one read."""
+def load_catalog_state(spark: SparkSession, run_dir: str) -> CatalogState:
+    """Read a persisted state (batch run_dir, maintained delta run_dir or
+    compact dir) in the current layout; older layouts are refused
+    (:func:`read_manifest`)."""
+    m = read_manifest(run_dir)
+    return CatalogState(
+        norm=ckpt.read_parquet(spark, *m["norm_paths"]),
+        sn_stored=_read_sn_chain(spark, m["sn_chain"]),
+        sn_bounds=_bounds_rows(m["sn_bounds"]),
+        # append-only overlay: plain union, no shadowing
+        tok_postings=ckpt.read_parquet(spark, *m["tok_chain"]),
+        tok_buckets=m["tok_buckets"],
+        labels=_read_labels_chain(spark, m["labels_chain"]),
+        norm_paths=m["norm_paths"],
+        sn_chain=m["sn_chain"],
+        labels_chain=m["labels_chain"],
+        tok_chain=m["tok_chain"],
+    )
+
+
+def manifest_paths(run_dir: str) -> list[str]:
+    """Every chain element the state manifest at ``run_dir`` references
+    (norm, sn, labels and postings chains)."""
+    m = read_manifest(run_dir)
+    return (
+        m["norm_paths"]
+        + [e["path"] for e in m["sn_chain"]]
+        + m["labels_chain"]
+        + m["tok_chain"]
+    )
+
+
+def _read_v2_state(
+    spark: SparkSession, run_dir: str, manifest: dict
+) -> tuple[CatalogState, bool]:
+    """A v2 state dir mapped onto the current layout, for its migration by
+    :func:`compact_state`; also returns whether its norm chain must fold.
+
+    - Norm elements in an older layout: a retired ``th32`` column is
+      dropped, and a hex ``rid`` stored next to its binary ``rid_b`` gives
+      way to it. One scan cannot read ``rid`` as both string and binary, so
+      paths are read in groups by the layout their markers record (no Spark
+      job), then unioned. Any such element (or one without a recorded
+      schema) folds the chain.
+    - The ``sn_bounds`` parquet relation becomes driver rows (one collect).
+    - A state without a postings chain gets an empty one, which compaction
+      fills from the full norm at the default modulus.
+    - A ``token_df`` relation next to the manifest is ignored: the postings
+      answer every document frequency.
+    """
     groups: dict[bool | None, list[str]] = {}
-    for path in paths:
+    fold = False
+    for path in manifest["norm_paths"]:
         schema = ckpt.recorded_schema(path)
-        legacy = None if schema is None else "rid_b" in schema.fieldNames()
-        groups.setdefault(legacy, []).append(path)
+        names = set() if schema is None else set(schema.fieldNames())
+        groups.setdefault(None if schema is None else "rid_b" in names, []).append(path)
+        fold |= schema is None or bool(names & {"th32", "rid_b"})
     parts = []
     for group in groups.values():
         df = ckpt.read_parquet(spark, *group).drop("th32")
         if "rid_b" in df.columns:
             df = df.withColumn("rid", F.col("rid_b")).drop("rid_b")
         parts.append(df)
-    return reduce(DataFrame.unionByName, parts)
-
-
-def load_catalog_state(spark: SparkSession, run_dir: str) -> CatalogState:
-    """Read a persisted state (batch run_dir or maintained delta run_dir).
-    A ``token_df`` directory that older code wrote next to the manifest is
-    ignored: the postings chain answers every document frequency."""
-    manifest = json.loads((Path(run_dir) / STATE_MANIFEST).read_text())
-    if manifest.get("version", 1) < STATE_VERSION or "labels_chain" not in manifest:
-        raise ValueError(
-            f"{run_dir!r} holds a pre-v{STATE_VERSION} catalog state "
-            "(global-position sn_index, no sn/labels chain) — rebuild the "
-            "catalog with the current pipeline (run_pipeline) before "
-            "chaining deltas"
-        )
-    norm_paths = manifest["norm_paths"]
-    sn_chain = manifest["sn_chain"]
-    labels_chain = manifest["labels_chain"]
-    stored = _read_sn_chain(spark, sn_chain)
-    bounds = ckpt.read_parquet(spark, str(Path(run_dir) / "sn_bounds"))
-    tok_chain = manifest.get("tok_chain")
-    tok_postings = (
-        ckpt.read_parquet(spark, *tok_chain) if tok_chain else None
-    )  # append-only overlay: plain union, no shadowing
-    return CatalogState(
-        norm=_read_norm(spark, *norm_paths),
-        sn_index=resolve_sn_index(stored, bounds),
-        sn_bounds=bounds,
-        sn_stored=stored,
-        labels=_read_labels_chain(spark, labels_chain),
-        norm_paths=norm_paths,
-        sn_chain=sn_chain,
-        labels_chain=labels_chain,
-        tok_postings=tok_postings,
+    norm = reduce(DataFrame.unionByName, parts)
+    bounds = ckpt.read_parquet(spark, str(Path(run_dir) / "sn_bounds")).select(
+        "bucket", "n", "start_pos", "min_name", "min_rid"
+    )
+    tok_chain = manifest.get("tok_chain") or []
+    tok_buckets = manifest.get("tok_buckets") or MatcherConfig().tok_buckets
+    state = CatalogState(
+        norm=norm,
+        sn_stored=_read_sn_chain(spark, manifest["sn_chain"]),
+        sn_bounds=sorted(bounds.collect(), key=lambda b: b.start_pos),
+        tok_postings=(
+            ckpt.read_parquet(spark, *tok_chain) if tok_chain
+            else build_tok_postings(norm, tok_buckets)
+        ),
+        tok_buckets=tok_buckets,
+        labels=_read_labels_chain(spark, manifest["labels_chain"]),
+        norm_paths=manifest["norm_paths"],
+        sn_chain=manifest["sn_chain"],
+        labels_chain=manifest["labels_chain"],
         tok_chain=tok_chain,
-        tok_buckets=manifest.get("tok_buckets"),
     )
-
-
-def manifest_paths(run_dir: str) -> list[str]:
-    """Every chain element the state manifest at ``run_dir`` references
-    (norm, sn, labels and postings chains). The state's ``sn_bounds`` sits
-    at a fixed path inside ``run_dir`` and is not listed."""
-    m = json.loads((Path(run_dir) / STATE_MANIFEST).read_text())
-    return (
-        m["norm_paths"]
-        + [e["path"] for e in m["sn_chain"]]
-        + m["labels_chain"]
-        + (m.get("tok_chain") or [])
-    )
+    return state, fold
 
 
 def _tail_is_large(paths: list[str]) -> bool:
@@ -636,12 +634,15 @@ def compact_state(
     cost: the norm chain is written as one normalize parquet, the labels
     chain resolved to one relation, and the sn_index RE-BUCKETED over the
     full norm (build_sn_index — this is where bucket balance is restored
-    after many bucket-local merges), with fresh bounds derived from the
-    persisted index. ``sn_bounds`` lives at a fixed path in ``out_dir`` and
-    is always written (copied when the sn chain does not fold). The
-    relations depend only on the loaded state, so they are written
-    concurrently (sources.checkpoint.run_parallel); the manifest is written
-    after all of them, so a failed compaction leaves no state.
+    after many bucket-local merges), with fresh bounds collected from the
+    persisted index. The relations depend only on the loaded state, so
+    they are written concurrently (sources.checkpoint.run_parallel); the
+    manifest, bounds included, is written after all of them, so a failed
+    compaction leaves no state.
+
+    This is also the one migration of a v2 state dir (:func:`_read_v2_state`):
+    its bounds move into the manifest, a norm chain with an older layout
+    folds, and missing postings are built.
 
     ``num_buckets`` is the sn_index bucket count and ``tok_buckets`` the
     postings' hash-bucket modulus; each defaults to the state's own, and a
@@ -655,7 +656,11 @@ def compact_state(
     for name, value in (("num_buckets", num_buckets), ("tok_buckets", tok_buckets)):
         if value is not None and value < 1:
             raise ValueError(f"compact_state: {name} must be >= 1, got {value}")
-    state = load_catalog_state(spark, run_dir)
+    manifest = _raw_manifest(run_dir)
+    if _is_v2(manifest):
+        state, fold_norm = _read_v2_state(spark, run_dir, manifest)
+    else:
+        state, fold_norm = load_catalog_state(spark, run_dir), False
     out = Path(out_dir)
     if out.exists() and any(out.iterdir()):
         raise ValueError(f"compact_state target {out_dir!r} is not empty")
@@ -669,7 +674,7 @@ def compact_state(
         return [ckpt.stage_path(str(out), stage)]
 
     def norm_chain() -> list[str]:
-        if _tail_is_large(state.norm_paths):
+        if fold_norm or _tail_is_large(state.norm_paths):
             return write("normalize", state.norm)
         return state.norm_paths
 
@@ -678,32 +683,24 @@ def compact_state(
             return write("labels", state.labels)
         return state.labels_chain
 
-    # One sn_bounds row per bucket: the marker's row count is the state's
-    # bucket count, read without a Spark job.
-    sn_count = ckpt.read_marker(run_dir, "sn_bounds")["rows"]
     if num_buckets is None:
-        num_buckets = sn_count
+        num_buckets = len(state.sn_bounds)
 
-    def sn_chain() -> list[dict]:
-        if num_buckets == sn_count and not _tail_is_large(
+    def sn_chain() -> tuple[list[dict], list[Row]]:
+        if num_buckets == len(state.sn_bounds) and not _tail_is_large(
             [e["path"] for e in state.sn_chain]
         ):
-            write("sn_bounds", state.sn_bounds)
-            return state.sn_chain
-        stored, _ = build_sn_index(state.norm, num_buckets=num_buckets)
-        write("sn_index", stored)
-        idxp = ckpt.load_stage(spark, str(out), "sn_index")
-        write("sn_bounds", bounds_from_index(idxp))
-        return [{"path": ckpt.stage_path(str(out), "sn_index"), "buckets": None}]
+            return state.sn_chain, state.sn_bounds
+        (path,) = write("sn_index", build_sn_index(state.norm, num_buckets))
+        index = ckpt.load_stage(spark, str(out), "sn_index")
+        return [{"path": path, "buckets": None}], merged_bounds([], index)
 
-    # Postings: compaction is also where a state without them (older v2
-    # dirs) gains a tok_index, built from the full norm at the default
-    # modulus, and where the modulus can grow with the corpus.
+    # Postings: compaction is where the modulus can grow with the corpus.
     if tok_buckets is None:
-        tok_buckets = state.tok_buckets or MatcherConfig().tok_buckets
+        tok_buckets = state.tok_buckets
 
     def tok_chain() -> list[str]:
-        if state.tok_postings is None or tok_buckets != state.tok_buckets:
+        if not state.tok_chain or tok_buckets != state.tok_buckets:
             postings = build_tok_postings(state.norm, tok_buckets)
         elif _tail_is_large(state.tok_chain):
             # Appended elements are unsorted and each covers the whole
@@ -715,11 +712,11 @@ def compact_state(
         return write("tok_index", clustered_postings(postings))
 
     # The relations are independent of each other: written concurrently.
-    norm_paths, sn, labels, toks = ckpt.run_parallel(
+    norm_paths, (sn, bounds), labels, toks = ckpt.run_parallel(
         spark, norm_chain, sn_chain, labels_chain, tok_chain
     )
     write_state_manifest(
-        str(out), norm_paths, sn_chain=sn, labels_chain=labels, emit="full",
-        tok_chain=toks, tok_buckets=tok_buckets,
+        str(out), norm_paths=norm_paths, sn_chain=sn, sn_bounds=bounds,
+        labels_chain=labels, tok_chain=toks, tok_buckets=tok_buckets,
     )
     return str(out)

@@ -19,17 +19,17 @@ corpus, and the catalog side of the token pass reads the persisted inverted
 postings (catalog_state.build_tok_postings), bucket-pruned by the delta's
 token hash-buckets. The same postings give the document frequencies: a
 delta token's union df = its catalog postings count + its delta count,
-exact. Pre-postings state dirs fall back to the norm-chain explode.
-Remaining corpus-proportional work: only the final full-table emit when
+exact. Remaining corpus-proportional work: only the final full-table emit when
 ``emit="full"`` (use ``emit="delta"`` to emit only new + possibly-relabeled
 rows, i.e. an upsert set).
 
 The graph is defined once and run through a stage sink, like the batch
 graph (plans.matcher): :func:`resolve_entities_incremental` runs it in
 memory, plans.pipeline.run_delta_pipeline through parquet stages. Its
-stages are normalize_delta → sn_index → sn_bounds → pairs_delta →
-score_delta → edges_delta → cc_delta → entities_delta; the parquet run
-adds the postings maintenance (tok_index) beside them. A caller
+stages are normalize_delta → sn_index → pairs_delta → score_delta →
+edges_delta → cc_delta → entities_delta (the new sn bounds are driver
+rows computed off the sn_index stage); the parquet run adds the postings
+maintenance (tok_index) beside them. A caller
 with no state derives one from the catalog entities table first
 (:func:`catalog_side`) — a corpus-proportional pass, paid once per catalog
 by the checkpointed run.
@@ -75,7 +75,6 @@ from __future__ import annotations
 
 import logging
 from dataclasses import dataclass, replace
-from functools import cache
 
 from pyspark.sql import Column, DataFrame, Row
 from pyspark.sql import functions as F
@@ -119,8 +118,7 @@ def incremental_token_pairs_state(
     The catalog side is the persisted inverted postings (state.tok_postings),
     bucket-pruned to the hash-buckets of the delta's tokens (``tbs``, one
     delta-sized collect) and joined to a broadcast of the delta's distinct
-    tokens; without postings it falls back to exploding the norm chain's
-    token arrays. The hot set is taken over the UNION dfs: a token's
+    tokens. The hot set is taken over the UNION dfs: a token's
     catalog df is its number of catalog postings rows, its delta df its
     number of delta postings rows, and it is hot when their sum exceeds
     ``df_cap``. Exact: tokenize emits distinct tokens per record, and
@@ -135,24 +133,21 @@ def incremental_token_pairs_state(
     never read and nothing corpus-sized is shuffled.
     """
     tok_new = work_new.select("rid", F.explode("tokens").alias("tok"))
-    if state.tok_postings is not None and state.tok_buckets:
-        # Exact prune: every delta token's bucket is in the IN list.
-        tbs = sorted(
-            r.tbucket
-            for r in tok_new.select(
-                F.pmod(F.xxhash64("tok"), F.lit(state.tok_buckets))
-                .cast("int")
-                .alias("tbucket")
-            )
-            .distinct()
-            .collect()
+    # Exact prune: every delta token's bucket is in the IN list.
+    tbs = sorted(
+        r.tbucket
+        for r in tok_new.select(
+            F.pmod(F.xxhash64("tok"), F.lit(state.tok_buckets))
+            .cast("int")
+            .alias("tbucket")
         )
-        log.debug("delta collect: %d token buckets (tbs, pairs_delta)", len(tbs))
-        old = state.tok_postings.filter(F.col("tbucket").isin(tbs)).select(
-            "tok", "rid"
-        )
-    else:
-        old = state.norm.select("rid", F.explode("tokens").alias("tok"))
+        .distinct()
+        .collect()
+    )
+    log.debug("delta collect: %d token buckets (tbs, pairs_delta)", len(tbs))
+    old = state.tok_postings.filter(F.col("tbucket").isin(tbs)).select(
+        "tok", "rid"
+    )
     df_cat = (
         old.join(F.broadcast(tok_new.select("tok").distinct()), "tok")
         .groupBy("tok")
@@ -202,30 +197,24 @@ class SnUpdate:
 
 
 def sn_index_stages(stage, state: CatalogState, norm_delta: DataFrame) -> SnUpdate:
-    """The delta's sn_index and sn_bounds stages (plans.catalog_state's
-    bucket-local merge). The old bounds are collected once, the delta keys
-    assigned to buckets once, and the touched-bucket counts collected once
-    — also when a resumed run skips one of the two stages."""
-    bounds = cstate.collect_bounds(state.sn_bounds)
-    log.debug("delta collect: %d old sn_bounds rows (sn_index)", len(bounds))
+    """The delta's sn_index stage (plans.catalog_state's bucket-local
+    merge) and the new bounds. The delta keys are assigned to buckets once
+    and the touched buckets collected once; the new bounds are one collect
+    over the stage's output (catalog_state.merged_bounds), so they describe
+    the element a resumed run loads as well as the one it writes."""
+    bounds = state.sn_bounds
     assigned = cstate.assign_buckets(norm_delta.select("rid", "name_norm"), bounds)
-    counts = cache(lambda: cstate.touched_buckets(assigned, bounds))
+    touched = cstate.touched_buckets(assigned, bounds)
     element = stage(
         "sn_index",
         ["normalize_delta"],
-        lambda: cstate.merge_sn_buckets(state, assigned, list(counts())),
+        lambda: cstate.merge_sn_buckets(state, assigned, touched),
     )
-    new_bounds: list[Row] = []
-
-    def build_bounds() -> DataFrame:
-        new_bounds[:] = cstate.merged_bounds(bounds, counts(), element)
-        return cstate.bounds_frame(element.sparkSession, new_bounds)
-
-    bounds_df = stage("sn_bounds", ["sn_index"], build_bounds)
-    if not new_bounds:  # a resumed run loaded the stage instead
-        new_bounds = cstate.collect_bounds(bounds_df)
-        log.debug("delta collect: %d new sn_bounds rows (pairs_delta)", len(new_bounds))
-    return SnUpdate(element=element, bounds=new_bounds, touched=sorted(counts()))
+    return SnUpdate(
+        element=element,
+        bounds=cstate.merged_bounds(bounds, element),
+        touched=touched,
+    )
 
 
 def _probe_buckets(bounds: list[Row], touched: set[int], reach: int) -> list[int]:
@@ -256,18 +245,14 @@ def sn_probe_index(
     merged positions: (rid, name_norm, pos, is_new) of the touched buckets
     (the merged element) and of every bucket within ``window - 1``
     positions of one (the prior chain, bucket-pruned by a literal IN).
-    ``pos = start_pos' + lpos − 1`` with the new start offsets inlined as
-    one literal map (catalog_state.json_literal) — no bounds join;
+    Positions come from the new bounds (catalog_state.resolve_sn_index);
     ``is_new`` (true, else null) marks the delta's rows, by a broadcast of
     the delta rids."""
     touched = set(sn.touched)
     near = [b for b in _probe_buckets(sn.bounds, touched, window - 1) if b not in touched]
-    start = cstate.json_literal(
-        {str(b.bucket): b.start_pos for b in sn.bounds}, "map<string, bigint>"
-    )
     rows = state.sn_stored.filter(F.col("bucket").isin(near)).unionByName(sn.element)
-    pos = start[F.col("bucket").cast("string")] + F.col("lpos") - 1
-    return rows.select("rid", "name_norm", pos.alias("pos")).join(
+    idx = cstate.resolve_sn_index(rows, sn.bounds)
+    return idx.select("rid", "name_norm", "pos").join(
         F.broadcast(delta_keys.select("rid", F.lit(True).alias("is_new"))),
         "rid",
         "left",
@@ -497,13 +482,19 @@ def delta_stages(
     """The delta graph after normalize_delta, each stage through the sink
     ``stage`` (plans.matcher documents the sinks)::
 
-        sn_index → sn_bounds → pairs_delta → score_delta → edges_delta
-        → cc_delta → entities_delta
+        sn_index → pairs_delta → score_delta → edges_delta → cc_delta
+        → entities_delta
 
-    The sn stages run when the SN pass needs them (``sn``) or the caller
-    maintains the state (``maintain``). The token pass is built beside
-    them: its hash-bucket collect overlaps the merge. Returns the entities
-    stage and the sn-index update (None when the sn stages did not run).
+    The sn_index stage runs when the SN pass needs it (``sn``) or the
+    caller maintains the state (``maintain``). The token pass is built
+    beside it: its hash-bucket collect overlaps the merge. Returns the
+    entities stage and the sn-index update (None when the stage did not
+    run).
+
+    ``sn=False`` drops the SN pairs, and with them the recall on
+    name-similar, token-poor records. It saves little: a maintaining caller
+    (every parquet delta run) merges the index anyway, and the SN probe
+    reads only the touched buckets and their neighbours.
     """
     work_new = work_projection(norm_delta)
     tok_pairs, sn_update = run_parallel(
@@ -515,7 +506,7 @@ def delta_stages(
     )
     pairs = stage(
         "pairs_delta",
-        ["normalize_delta"] + (["sn_index", "sn_bounds"] if sn else []),
+        ["normalize_delta"] + (["sn_index"] if sn else []),
         lambda: incremental_candidate_pairs(
             state, work_new, cfg, tok_pairs, sn=sn_update if sn else None
         ),

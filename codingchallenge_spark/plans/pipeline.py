@@ -13,8 +13,9 @@ concurrently, sources.checkpoint.run_parallel):
                │  ║             ├→ pairs → score → edges → cc → entities
                │  └ block_sn ───┘
                ║
-               └→ sn_index → sn_bounds, tok_index  (catalog state)
-    → state.json, once both branches are written
+               └→ sn_index, tok_index  (catalog state)
+    → state.json (chains + the sn bounds rows), once both branches are
+      written
 
 Every stage materializes to ``run_dir/<stage>/`` with a fingerprinted
 ``_STAGE_DONE`` marker (sources/checkpoint.py). The driver mostly waits on
@@ -66,14 +67,12 @@ STAGES = [
     "entities",
     # catalog-state sinks consumed by --delta runs (plans.catalog_state)
     "sn_index",
-    "sn_bounds",
     "tok_index",
 ]
 
 DELTA_STAGES = [
     "normalize_delta",
     "sn_index",
-    "sn_bounds",
     "pairs_delta",
     "score_delta",
     "edges_delta",
@@ -82,7 +81,7 @@ DELTA_STAGES = [
 ]
 
 # The declared order of every stage a delta run can write: the in-run
-# catalog derivation, the delta chain (its sn-index stages first), then the
+# catalog derivation, the delta chain (its sn-index stage first), then the
 # postings maintenance.
 _DELTA_ORDER = [
     "catalog_norm",
@@ -306,31 +305,27 @@ def run_pipeline(
         )
         return res.labels
 
-    def catalog_state() -> None:
-        # The derived relations a --delta run needs to stay
-        # delta-proportional. sn_bounds is derived from the PERSISTED index,
-        # so both describe one materialization.
-        state = cstate.derive_catalog_state(stage, norm, cfg)
-        stage("sn_bounds", ["sn_index"], lambda: state.sn_bounds)
-
-    # Both sides read only the normalize stage.
-    entities, _ = ckpt.run_parallel(
+    # Both sides read only the normalize stage. The catalog state is what
+    # a --delta run needs to stay delta-proportional; its bounds are
+    # collected from the PERSISTED index, so both describe one
+    # materialization.
+    entities, state = ckpt.run_parallel(
         spark, lambda: matching_stages(stage, norm, cfg, cc=build_cc),
-        catalog_state,
+        lambda: cstate.derive_catalog_state(stage, norm, cfg),
     )
     cstate.write_state_manifest(
         run_dir,
-        [ckpt.stage_path(run_dir, "normalize")],
+        norm_paths=[ckpt.stage_path(run_dir, "normalize")],
         sn_chain=[
             {"path": ckpt.stage_path(run_dir, "sn_index"), "buckets": None}
         ],
+        sn_bounds=state.sn_bounds,
         # The cc stage IS the labels base: binary (rid, entity_id) for every
         # catalog rid — the labels overlay chain grows from it, one
         # delta-sized upsert element per maintained delta run.
         labels_chain=[ckpt.stage_path(run_dir, "cc")],
-        emit="full",
         tok_chain=[ckpt.stage_path(run_dir, "tok_index")],
-        tok_buckets=cfg.tok_buckets,
+        tok_buckets=state.tok_buckets,
     )
     return PipelineRun(
         entities=entities,
@@ -363,18 +358,20 @@ def run_delta_pipeline(
         [catalog_norm → sn_index_cat, tok_index_cat, labels_cat]
                                   (only when no persisted state is passed —
                                    plans.catalog_state builds one in-run)
-        normalize_delta ─┬→ sn_index → sn_bounds ─┬→ pairs_delta
-                         │  ║ token pass (tbs) ─────┘
+        normalize_delta ─┬→ sn_index ─────────┬→ pairs_delta
+                         │  ║ token pass (tbs) ─┘
                          │  → score_delta → edges_delta → cc_delta
                          │  → entities_delta
                          ║
                          └→ tok_index  (the delta's postings, unsorted)
-        → state.json, once both branches are written
+        → state.json (chains + the new sn bounds rows), once both branches
+          are written
 
     The run_dir becomes a valid catalog state for the NEXT delta (norm
     chain = catalog paths + this delta's). The delta SN pass reads its
-    pairs off the merged index, so sn_index and sn_bounds sit upstream of
-    pairs_delta; the token pass's bucket collect overlaps them. The postings
+    pairs off the merged index, so sn_index sits upstream of pairs_delta,
+    and the new bounds are computed on the driver from its output; the
+    token pass's bucket collect overlaps the merge. The postings
     branch reads only normalize_delta, and its stage is not consumed by the
     delta chain, so the two overlap; the manifest
     is written only after both succeed, so a failure on either side leaves
@@ -415,38 +412,29 @@ def run_delta_pipeline(
             labels_chain=[ckpt.stage_path(run_dir, "labels_cat")],
             tok_chain=[ckpt.stage_path(run_dir, "tok_index_cat")],
         )
-    if state.sn_chain is None or state.labels_chain is None:
+    if not (state.sn_chain and state.labels_chain and state.tok_chain):
         raise ValueError(
             "run_delta_pipeline maintains the catalog state and needs a "
-            "parquet-backed one (state.sn_chain + state.labels_chain) — "
+            "parquet-backed one (state.sn_chain, labels_chain, tok_chain) — "
             "pass state from load_catalog_state / a prior run_dir"
         )
 
     norm_delta = inc.normalize_delta_stage(stage, state, delta_records)
 
-    def maintenance() -> list[str] | None:
-        """The next state's postings; returns the next tok_chain."""
-        # Inverted-postings maintenance: APPEND-ONLY — the delta's own
-        # postings become a delta-sized chain element; no catalog posting is
-        # ever rewritten (only catalogs that carry a postings chain maintain
-        # one — pre-postings state dirs keep the norm-explode fallback).
-        if state.tok_chain is None or not state.tok_buckets:
-            return None
-        stage(
-            "tok_index",
-            ["normalize_delta"],
-            lambda: cstate.build_tok_postings(norm_delta, state.tok_buckets),
-        )
-        return list(state.tok_chain) + [ckpt.stage_path(run_dir, "tok_index")]
-
-    # The postings branch depends only on normalize_delta and the state;
-    # the delta graph maintains the sn index itself (sn_index, sn_bounds).
-    (entities, sn_update), tok_chain_next = ckpt.run_parallel(
+    # The postings branch depends only on normalize_delta and the state:
+    # APPEND-ONLY maintenance, the delta's own postings become a
+    # delta-sized chain element and no catalog posting is ever rewritten.
+    # The delta graph maintains the sn index itself.
+    (entities, sn_update), _ = ckpt.run_parallel(
         spark,
         lambda: inc.delta_stages(
             stage, state, norm_delta, cfg, sn=sn, emit=emit, maintain=True
         ),
-        maintenance,
+        lambda: stage(
+            "tok_index",
+            ["normalize_delta"],
+            lambda: cstate.build_tok_postings(norm_delta, state.tok_buckets),
+        ),
     )
     log.debug(
         "delta run %s: %d delta edges into cc_delta",
@@ -465,17 +453,18 @@ def run_delta_pipeline(
         ]
     cstate.write_state_manifest(
         run_dir,
-        (state.norm_paths or [])
+        norm_paths=state.norm_paths
         + [ckpt.stage_path(run_dir, "normalize_delta")],
         sn_chain=sn_chain_next,
+        sn_bounds=sn_update.bounds,
         # cc_delta IS the labels-chain upsert element: new rids + every
         # member of a touched catalog entity, relabeled — exactly the set
         # whose labels the next chain read must override.
-        labels_chain=list(state.labels_chain)
+        labels_chain=state.labels_chain
         + [ckpt.stage_path(run_dir, "cc_delta")],
+        tok_chain=state.tok_chain + [ckpt.stage_path(run_dir, "tok_index")],
+        tok_buckets=state.tok_buckets,
         emit=emit,
-        tok_chain=tok_chain_next,
-        tok_buckets=state.tok_buckets if tok_chain_next else None,
     )
     return PipelineRun(
         entities=entities,

@@ -432,15 +432,18 @@ def start_stream_ingest(
 
     Restarting with the same ``out_dir`` resumes: the streaming checkpoint
     skips already-committed files, and the pointer carries the catalog chain
-    forward across query restarts.
+    forward across query restarts. A state the first batch could not load
+    (an older layout, catalog_state.read_manifest) is refused before the
+    query starts.
     """
     out_root = str(Path(out_dir).resolve())
-    Path(out_root).mkdir(parents=True, exist_ok=True)
     if not cstate.has_state(catalog_run_dir):
         raise ValueError(
             f"{catalog_run_dir!r} carries no persisted catalog state "
             "(state.json); run the batch pipeline first"
         )
+    cstate.read_manifest(read_pointer(out_root) or catalog_run_dir)
+    Path(out_root).mkdir(parents=True, exist_ok=True)
 
     reader = spark.readStream.schema(RECORDS_SCHEMA)
     if max_files_per_trigger is not None:

@@ -74,10 +74,11 @@ def main(argv: list[str] | None = None) -> int:
                          "entities output), and only delta-touching pairs "
                          "are scored (plans.incremental)")
     ap.add_argument("--token-only", action="store_true",
-                    help="with --delta: drop the sorted-neighborhood pass "
-                         "(sn=False) — delta-proportional blocking for "
-                         "high-frequency ingest; fold SN recall into the "
-                         "periodic full re-resolution instead")
+                    help="with --delta: drop the sorted-neighborhood pairs "
+                         "(sn=False). This only lowers recall on "
+                         "name-similar, token-poor records: every delta run "
+                         "still merges the SN index, and the SN probe reads "
+                         "only the touched buckets and their neighbours")
     ap.add_argument("--emit-delta", action="store_true",
                     help="with --delta: write only new + possibly-relabeled "
                          "rows (an upsert set) instead of the full combined "

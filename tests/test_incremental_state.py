@@ -68,8 +68,9 @@ def _plan(df) -> str:
 
 
 def _sn_update(st, delta_norm, root=None):
-    """The delta's sn_index/sn_bounds stages, in memory or (``root``) each
-    written to parquet and read back, as the pipeline's sink does."""
+    """The delta's sn_index stage and new bounds, in memory or (``root``)
+    with the stage written to parquet and read back, as the pipeline's sink
+    does."""
     if root is None:
         return sn_index_stages(_InMemorySink("sn_index").stage, st, delta_norm)
     spark = delta_norm.sparkSession
@@ -82,8 +83,8 @@ def _sn_update(st, delta_norm, root=None):
 
 
 def _assigned(st, delta_norm):
-    """Old bounds, pinned bucket assignment and touched-bucket counts."""
-    bounds = cstate.collect_bounds(st.sn_bounds)
+    """Old bounds, pinned bucket assignment and touched buckets."""
+    bounds = st.sn_bounds
     assigned = cstate.assign_buckets(delta_norm.select("rid", "name_norm"), bounds)
     return bounds, assigned, cstate.touched_buckets(assigned, bounds)
 
@@ -114,14 +115,8 @@ def state(spark, catalog, tmp_path_factory):
     ).withColumn("rid", F.unhex("rid"))
     norm.write.parquet(str(tmp / "norm"))
     normp = spark.read.parquet(str(tmp / "norm"))
-    stored, _ = cstate.build_sn_index(normp, num_buckets=8)
-    stored.write.parquet(str(tmp / "sn_index"))
+    cstate.build_sn_index(normp, num_buckets=8).write.parquet(str(tmp / "sn_index"))
     idxp = spark.read.parquet(str(tmp / "sn_index"))
-    # bounds persisted like the pipeline's sn_bounds stage (derived from the
-    # persisted index, then parquet-backed — the plan gates below must see
-    # the production lineage, a scan, not the derivation)
-    cstate.bounds_from_index(idxp).write.parquet(str(tmp / "sn_bounds"))
-    bounds = spark.read.parquet(str(tmp / "sn_bounds"))
     from codingchallenge_spark.functions.normalize import guarded_unhex
 
     catalog.select(
@@ -131,16 +126,16 @@ def state(spark, catalog, tmp_path_factory):
     cstate.build_tok_postings(normp, 16).write.parquet(str(tmp / "tok_index"))
     return cstate.CatalogState(
         norm=normp,
-        sn_index=cstate.resolve_sn_index(idxp, bounds),
-        sn_bounds=bounds,
         sn_stored=idxp,
+        # the bounds of the persisted index, as the pipeline computes them
+        sn_bounds=cstate.merged_bounds([], idxp),
+        tok_postings=spark.read.parquet(str(tmp / "tok_index")),
+        tok_buckets=16,
         labels=spark.read.parquet(str(tmp / "labels")),
         norm_paths=[str(tmp / "norm")],
         sn_chain=[{"path": str(tmp / "sn_index"), "buckets": None}],
         labels_chain=[str(tmp / "labels")],
-        tok_postings=spark.read.parquet(str(tmp / "tok_index")),
         tok_chain=[str(tmp / "tok_index")],
-        tok_buckets=16,
     ), str(tmp / "norm")
 
 
@@ -224,7 +219,6 @@ def test_delta_token_pairs_exact(spark, state, work_new):
     corpus restricted to pairs with ≥ 1 new side — as a MULTISET (one row
     per shared cold token: meta-blocking counts them as overlap)."""
     st, _ = state
-    assert st.tok_postings is not None  # the production catalog side
     union_work = _union_work(st, work_new)
     df_cap = 50
     batch = token_blocking(union_work, df_cap=df_cap, dedupe=False)
@@ -277,11 +271,13 @@ def _hand_state(spark, keys, sizes) -> cstate.CatalogState:
     stored = spark.createDataFrame(
         rows, "bucket int, rid binary, name_norm string, lpos int"
     )
-    bounds = cstate.bounds_from_index(stored)
-    norm = spark.createDataFrame(keys, "name_norm string, rid binary")
+    norm = spark.createDataFrame(
+        [(n, rid, []) for n, rid in keys],
+        "name_norm string, rid binary, tokens array<string>",
+    )
     return cstate.CatalogState(
-        norm=norm, sn_index=cstate.resolve_sn_index(stored, bounds),
-        sn_bounds=bounds, sn_stored=stored,
+        norm=norm, sn_stored=stored, sn_bounds=cstate.merged_bounds([], stored),
+        tok_postings=cstate.build_tok_postings(norm, 4), tok_buckets=4,
     )
 
 
@@ -338,7 +334,7 @@ def test_delta_sn_pairs_exact_edge_cases(spark, case):
     st = _hand_state(spark, cat_keys, sizes)
     keys = spark.createDataFrame(delta, "name_norm string, rid binary")
 
-    bounds = cstate.collect_bounds(st.sn_bounds)
+    bounds = st.sn_bounds
     got_buckets = {
         (r.name_norm, bytes(r.rid)): r.bucket
         for r in cstate.assign_buckets(keys, bounds).collect()
@@ -382,8 +378,8 @@ def test_sn_probe_reads_touched_and_neighbour_buckets(spark, state, work_new):
 
 
 def test_bucket_assignment_evaluated_once_per_operation(spark, state, work_new):
-    """The sn-index stages read the delta keys' bucket assignment three
-    times (touched buckets, the merge, the merged element's minima); the
+    """The sn-index stage reads the delta keys' bucket assignment three
+    times (touched buckets, the merge, the merged element's bucket stats); the
     delta keys are still evaluated exactly once."""
     st, _ = state
     seen = spark.sparkContext.accumulator(0)
@@ -440,19 +436,30 @@ def test_blocking_plan_reads_no_catalog_content(spark, state, work_new, tmp_path
             assert "content" not in cols, cols
 
 
-def test_tok_postings_path_equals_fallback(spark, state, work_new):
-    """The inverted-postings catalog side produces the SAME pair multiset as
-    the norm-chain explode it replaces (round 5): postings = explode(norm)
-    by construction, and the tbucket prune is lossless — every probe token's
-    bucket is in the IN list."""
+def test_tok_postings_prune_is_lossless(spark, state, work_new):
+    """The catalog side of the token pass is the postings chain pruned to
+    the hash-buckets of the delta's tokens. The prune is lossless for any
+    modulus: with no token hot, the pairs equal batch token blocking over
+    the union restricted to pairs with ≥ 1 new side, for one bucket and for
+    a modulus other than the state's."""
     import dataclasses
 
     st, _ = state
-    st_noidx = dataclasses.replace(st, tok_postings=None, tok_chain=None)
-    got = _pair_rows(incremental_token_pairs_state(st, work_new, df_cap=50))
-    ref = _pair_rows(incremental_token_pairs_state(st_noidx, work_new, df_cap=50))
-    assert got == ref
-    assert len(got) > 0  # non-vacuous on this corpus
+    union_work = _union_work(st, work_new)
+    no_cap = 10**9
+    want = _pair_rows(
+        _touching_new(
+            token_blocking(union_work, df_cap=no_cap, dedupe=False), union_work
+        )
+    )
+    assert want  # non-vacuous on this corpus
+    for modulus in (1, 7):
+        s = dataclasses.replace(
+            st, tok_postings=cstate.build_tok_postings(st.norm, modulus),
+            tok_buckets=modulus,
+        )
+        got = _pair_rows(incremental_token_pairs_state(s, work_new, df_cap=no_cap))
+        assert got == want, modulus
 
 
 def _cap_case(spark):
@@ -475,8 +482,9 @@ def _cap_case(spark):
     ]
     schema = "rid binary, name_norm string, tokens array<string>"
     norm = spark.createDataFrame(cat, schema)
+    # The token pass reads no sn index.
     st = cstate.CatalogState(
-        norm=norm, sn_index=None, sn_bounds=None,
+        norm=norm, sn_stored=None, sn_bounds=[],
         tok_postings=cstate.build_tok_postings(norm, 4), tok_buckets=4,
     )
     return st, spark.createDataFrame(delta, schema)
@@ -484,21 +492,14 @@ def _cap_case(spark):
 
 def test_delta_token_pairs_exact_at_the_cap(spark):
     """At the df cap the delta pairs, block keys included, equal batch
-    token blocking over the union restricted to pairs with ≥ 1 new side —
-    on the postings path and on the norm-explode fallback."""
-    import dataclasses
-
+    token blocking over the union restricted to pairs with ≥ 1 new side."""
     st, work = _cap_case(spark)
     union = _union_work(st, work)
     want = _pair_rows(_touching_new(token_blocking(union, df_cap=3, dedupe=False), union))
     keys = {k for _, _, k in want}
     assert keys == {"below_cap", "delta_only", "shared"}, keys
-    for label, s in (
-        ("postings", st),
-        ("fallback", dataclasses.replace(st, tok_postings=None, tok_buckets=None)),
-    ):
-        got = _pair_rows(incremental_token_pairs_state(s, work, df_cap=3))
-        assert got == want, label
+    got = _pair_rows(incremental_token_pairs_state(st, work, df_cap=3))
+    assert got == want
 
 
 def test_token_pass_plan_is_bucket_pruned(spark, state, work_new):
@@ -517,7 +518,8 @@ def test_updated_state_equals_rebuild(spark, state, catalog, split_corpus, tmp_p
     """Incremental maintenance is exact: the postings count per token over
     the catalog postings plus the delta's element equals a from-scratch df
     over the union, and the BUCKET-LOCAL merge (touched
-    buckets rewritten, untouched untouched, bounds re-prefix-summed)
+    buckets rewritten, untouched untouched, bounds re-prefix-summed on the
+    driver)
     resolves to the union order re-materialized (same keys, contiguous
     1..N positions) — without any corpus re-sort (plan gate below)."""
     _, new = split_corpus
@@ -543,22 +545,25 @@ def test_updated_state_equals_rebuild(spark, state, catalog, split_corpus, tmp_p
     assert got == want
 
     # bucket-local merge, persisted like the pipeline stage would persist it
-    bounds, assigned, counts = _assigned(st, norm_new)
-    merged = cstate.merge_sn_buckets(st, assigned, list(counts))
+    bounds, assigned, touched_list = _assigned(st, norm_new)
+    merged = cstate.merge_sn_buckets(st, assigned, touched_list)
     merged.write.parquet(str(tmp_path / "sn_touched"))
     touched = spark.read.parquet(str(tmp_path / "sn_touched"))
-    new_bounds = cstate.merged_bounds(bounds, counts, touched)
-    bounds2 = cstate.bounds_frame(spark, new_bounds)
-    # the driver-side rows round-trip through the JSON literal unchanged
-    assert bounds2.dtypes == st.sn_bounds.dtypes
-    assert list(map(tuple, cstate.collect_bounds(bounds2))) == list(
+    new_bounds = cstate.merged_bounds(bounds, touched)
+    # the driver-side rows round-trip through the state manifest unchanged
+    cstate.write_state_manifest(
+        str(tmp_path), norm_paths=[], sn_chain=[], sn_bounds=new_bounds,
+        labels_chain=[], tok_chain=[], tok_buckets=1,
+    )
+    bounds2 = cstate.read_manifest(str(tmp_path))["sn_bounds"]
+    assert list(map(tuple, cstate._bounds_rows(bounds2))) == list(
         map(tuple, new_bounds)
     )
     touched_ids = {r.bucket for r in touched.select("bucket").distinct().collect()}
     stored2 = st.sn_stored.filter(
         ~F.col("bucket").isin(sorted(touched_ids))
     ).unionByName(touched)
-    rows = cstate.resolve_sn_index(stored2, bounds2).select(
+    rows = cstate.resolve_sn_index(stored2, new_bounds).select(
         "rid", "name_norm", "pos"
     ).collect()
     n = union_norm.count()
@@ -584,8 +589,8 @@ def test_maintenance_plan_is_bucket_local(spark, state, catalog, split_corpus):
         )
         .withColumn("rid", F.unhex("rid"))
     )
-    bounds, assigned, counts = _assigned(st, norm_new)
-    plan = _plan(cstate.merge_sn_buckets(st, assigned, list(counts)))
+    bounds, assigned, touched = _assigned(st, norm_new)
+    plan = _plan(cstate.merge_sn_buckets(st, assigned, touched))
     assert "rangepartitioning" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     # the touched-bucket predicate reaches the parquet scan

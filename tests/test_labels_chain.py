@@ -11,12 +11,17 @@ Contract under test:
   run_dirs that have no manifest;
 - ``compact_state`` re-references short chains, folds long ones (or all of
   them when forced), and the compacted dir chains a further delta
-  identically to the uncompacted one.
+  identically to the uncompacted one;
+- every older state layout is refused by ``load_catalog_state`` and
+  migrated by one ``compact_state``, after which it takes a delta with the
+  labels of the current layout.
 """
 
 from __future__ import annotations
 
+import base64
 import json
+import shutil
 from pathlib import Path
 
 import pytest
@@ -32,6 +37,9 @@ from codingchallenge_spark.plans.pipeline import (
 )
 
 CFG = MatcherConfig()
+# The schema of the sn_bounds relation v2 state dirs kept next to the
+# manifest.
+V2_BOUNDS = "bucket int, n bigint, start_pos bigint, min_name string, min_rid binary"
 
 
 def _labels(df) -> list[tuple[str, str]]:
@@ -95,6 +103,55 @@ def full_chain_entities(spark, corpus3, catalog_run, tmp_path_factory):
     return r2.entities
 
 
+@pytest.fixture(scope="module")
+def delta_labels(spark, delta_chain):
+    """Labels after delta A, and after deltas A and B, chained from the
+    current-layout catalog: what a migrated state must give."""
+    return [_labels(current_entities(spark, d)) for d in delta_chain]
+
+
+def _save(run_dir: str, manifest: dict) -> None:
+    (Path(run_dir) / "state.json").write_text(json.dumps(manifest))
+
+
+def _as_v2(spark, src: str, dst: str) -> dict:
+    """Copy the state dir ``src`` to ``dst`` in the v2 layout: the bounds
+    as an ``sn_bounds`` parquet relation next to a version-2 manifest.
+    Returns the manifest, for a test to edit and :func:`_save`."""
+    from codingchallenge_spark.sources import checkpoint as ckpt
+
+    shutil.copytree(src, dst)
+    manifest = json.loads((Path(dst) / "state.json").read_text())
+    rows = [
+        (b["bucket"], b["n"], b["start_pos"], b["min_name"],
+         base64.b64decode(b["min_rid"]))
+        for b in manifest.pop("sn_bounds")
+    ]
+    ckpt.write_stage(spark.createDataFrame(rows, V2_BOUNDS), dst, "sn_bounds", "v2")
+    manifest["version"] = 2
+    _save(dst, manifest)
+    return manifest
+
+
+def _migrate_then_delta(spark, legacy, delta, want, tmp_path, **kwargs) -> str:
+    """The three steps every old layout takes: ``load_catalog_state``
+    refuses it, naming ``compact_state``; one ``compact_state`` migrates it;
+    the migrated dir takes ``delta`` with the labels ``want``. Returns the
+    migrated dir."""
+    with pytest.raises(ValueError, match=r"compact_state\(spark, run_dir, out_dir\)"):
+        cstate.load_catalog_state(spark, legacy)
+    migrated = str(tmp_path / "migrated")
+    cstate.compact_state(spark, legacy, migrated, **kwargs)
+    assert cstate.read_manifest(migrated)["version"] == cstate.STATE_VERSION
+    rd = str(tmp_path / "after_migration")
+    run_delta_pipeline(
+        spark, None, delta, rd, CFG, input_id="migrated",
+        state=cstate.load_catalog_state(spark, migrated), emit="delta",
+    )
+    assert _labels(current_entities(spark, rd)) == want
+    return migrated
+
+
 def test_delta_emit_chain_matches_full_chain(
     spark, delta_chain, full_chain_entities
 ):
@@ -129,8 +186,6 @@ def test_emit_delta_marker_without_manifest(spark, delta_chain, tmp_path):
     """A delta-emit run_dir without a state.json — the shape older runs
     left when they skipped state maintenance — is refused through its
     EMIT_DELTA marker alone."""
-    import shutil
-
     d1, _ = delta_chain
     rd = tmp_path / "nm"
     shutil.copytree(d1, rd)
@@ -205,11 +260,9 @@ def test_compact_state_keeps_the_state_bucket_counts(spark, catalog_run, tmp_pat
     state's forces no fold: compacting a state whose chains are single
     elements re-references every chain and keeps its sn buckets (not the
     session's default parallelism)."""
-    from codingchallenge_spark.sources import checkpoint as ckpt
-
-    buckets = ckpt.read_marker(catalog_run, "sn_bounds")["rows"]
+    chained = cstate.read_manifest(catalog_run)
+    buckets = len(chained["sn_bounds"])
     assert buckets != spark.sparkContext.defaultParallelism
-    chained = json.loads((Path(catalog_run) / "state.json").read_text())
     for name, kwargs in (
         ("unset", {}),
         ("same", {"num_buckets": buckets, "tok_buckets": CFG.tok_buckets}),
@@ -217,13 +270,12 @@ def test_compact_state_keeps_the_state_bucket_counts(spark, catalog_run, tmp_pat
         out = str(tmp_path / name)
         cstate.compact_state(spark, catalog_run, out, **kwargs)
         manifest = json.loads((Path(out) / "state.json").read_text())
-        for chain in ("norm_paths", "sn_chain", "labels_chain", "tok_chain"):
-            assert manifest[chain] == chained[chain], (name, chain)
+        for key in (
+            "norm_paths", "sn_chain", "sn_bounds", "labels_chain", "tok_chain"
+        ):
+            assert manifest[key] == chained[key], (name, key)
         assert manifest["tok_buckets"] == CFG.tok_buckets
-        assert ckpt.read_marker(out, "sn_bounds")["rows"] == buckets
-        assert sorted(p.name for p in Path(out).iterdir()) == [
-            "sn_bounds", "stage_metrics.jsonl", "state.json",
-        ]
+        assert sorted(p.name for p in Path(out).iterdir()) == ["state.json"]
 
 
 def test_parent_layout_states_take_a_delta_and_a_compaction(
@@ -263,32 +315,25 @@ def test_parent_layout_states_take_a_delta_and_a_compaction(
 
 
 def test_compact_state_builds_and_rebuckets_tok_index(
-    spark, catalog_run, tmp_path
+    spark, corpus3, catalog_run, delta_labels, tmp_path
 ):
-    """Round 6 (ADVICE r05): compaction (a) gives a PRE-postings state a
+    """Compaction (a) migrates a PRE-postings v2 state, giving it a
     tok_index built from the folded norm, and (b) re-buckets an existing
     index when ``tok_buckets`` is passed — tbucket recomputed over the new
     modulus, postings multiset unchanged."""
     from pyspark.sql import functions as F
 
-    # (a) strip the postings from a copy of the catalog manifest → legacy
-    # pre-postings state; compaction must add a tok_index at the default
-    # modulus, not silently leave the state index-less forever.
+    # (a) a v2 copy of the catalog without its postings chain: the
+    # migration adds a tok_index at the default modulus.
     legacy = str(tmp_path / "legacy")
-    import shutil
-
-    shutil.copytree(catalog_run, legacy)
-    mpath = Path(legacy) / "state.json"
-    manifest = json.loads(mpath.read_text())
-    manifest.pop("tok_chain", None)
-    manifest.pop("tok_buckets", None)
-    mpath.write_text(json.dumps(manifest))
-    assert cstate.load_catalog_state(spark, legacy).tok_postings is None
-
-    c1 = str(tmp_path / "c1")
-    cstate.compact_state(spark, legacy, c1, num_buckets=8)
+    manifest = _as_v2(spark, catalog_run, legacy)
+    del manifest["tok_chain"], manifest["tok_buckets"]
+    _save(legacy, manifest)
+    c1 = _migrate_then_delta(
+        spark, legacy, corpus3[1], delta_labels[0], tmp_path, num_buckets=8
+    )
     st1 = cstate.load_catalog_state(spark, c1)
-    assert st1.tok_postings is not None
+    assert st1.tok_chain == [str(Path(c1) / "tok_index")]
     assert st1.tok_buckets == MatcherConfig().tok_buckets
     # postings content = explode of the folded norm's tokens
     want = (
@@ -332,19 +377,16 @@ def test_compact_state_refuses_bucket_counts_below_one(
         assert not (out / "state.json").exists()
 
 
-def test_legacy_th32_catalog_takes_a_delta(spark, corpus3, catalog_run, tmp_path):
-    """A catalog whose persisted norm carries the retired ``th32`` column
-    (written while the engine still had its int32-prefilter opt-in) loads,
-    takes a delta and compacts: both norm reads drop the column, so the
-    delta's norm still unions with the catalog's by name."""
-    import shutil
-
+def test_legacy_th32_catalog_takes_a_delta(
+    spark, corpus3, catalog_run, delta_labels, tmp_path
+):
+    """A v2 catalog whose persisted norm carries the retired ``th32`` column
+    (written while the engine still had its int32-prefilter opt-in): the
+    migration folds the norm chain into one element without the column."""
     from pyspark.sql import functions as F
 
     legacy = str(tmp_path / "legacy32")
-    shutil.copytree(catalog_run, legacy)
-    mpath = Path(legacy) / "state.json"
-    manifest = json.loads(mpath.read_text())
+    manifest = _as_v2(spark, catalog_run, legacy)
     norm32 = str(tmp_path / "norm32")
     spark.read.parquet(*manifest["norm_paths"]).withColumn(
         "th32",
@@ -358,40 +400,30 @@ def test_legacy_th32_catalog_takes_a_delta(spark, corpus3, catalog_run, tmp_path
     ).write.parquet(norm32)
     assert "th32" in spark.read.parquet(norm32).columns
     manifest["norm_paths"] = [norm32]
-    mpath.write_text(json.dumps(manifest))
+    _save(legacy, manifest)
 
-    da = corpus3[1]
-    ref = run_delta_pipeline(
-        spark, None, da, str(tmp_path / "ref"), CFG, input_id="l32",
-        state=cstate.load_catalog_state(spark, catalog_run),
+    migrated = _migrate_then_delta(
+        spark, legacy, corpus3[1], delta_labels[0], tmp_path
     )
-    got = run_delta_pipeline(
-        spark, None, da, str(tmp_path / "d"), CFG, input_id="l32",
-        state=cstate.load_catalog_state(spark, legacy),
-    )
-    assert "th32" not in got.entities.columns
-    assert _labels(got.entities) == _labels(ref.entities)
-
-    compacted = str(tmp_path / "c")
-    cstate.compact_state(spark, legacy, compacted, num_buckets=8)
-    assert "th32" not in cstate.load_catalog_state(spark, compacted).norm.columns
+    assert cstate.read_manifest(migrated)["norm_paths"] == [
+        str(Path(migrated) / "normalize")
+    ]
+    assert "th32" not in cstate.load_catalog_state(spark, migrated).norm.columns
 
 
 def test_parent_state_with_token_df_takes_a_delta(
-    spark, corpus3, catalog_run, tmp_path
+    spark, corpus3, catalog_run, delta_labels, tmp_path
 ):
-    """A state dir written while the state still kept a ``token_df``
-    relation next to its manifest loads (the relation is ignored), takes a
-    delta with the labels the unmodified catalog gives, and compacts into a
-    dir without it."""
-    import shutil
-
+    """A v2 state dir that still keeps a ``token_df`` relation next to its
+    manifest: the migration ignores it (the postings answer every document
+    frequency) and, the chains being in the current layout and short,
+    copies no data file — the bounds move into the manifest."""
     from pyspark.sql import functions as F
 
     from codingchallenge_spark.sources import checkpoint as ckpt
 
     legacy = str(tmp_path / "legacy_df")
-    shutil.copytree(catalog_run, legacy)
+    _as_v2(spark, catalog_run, legacy)
     norm = ckpt.load_stage(spark, legacy, "normalize")
     token_df = norm.select(F.explode("tokens").alias("tok")).groupBy("tok").agg(
         F.count("*").alias("df")
@@ -399,96 +431,116 @@ def test_parent_state_with_token_df_takes_a_delta(
     ckpt.write_stage(token_df, legacy, "token_df", "parent")
     assert (Path(legacy) / "token_df" / "_STAGE_DONE").exists()
 
-    da = corpus3[1]
-    got, want = (
-        run_delta_pipeline(
-            spark, None, da, str(tmp_path / name), CFG, input_id="df",
-            state=cstate.load_catalog_state(spark, src), emit="delta",
-        )
-        for name, src in (("d", legacy), ("ref", catalog_run))
+    migrated = _migrate_then_delta(
+        spark, legacy, corpus3[1], delta_labels[0], tmp_path
     )
-    assert not (Path(got.run_dir) / "token_df").exists()
-    assert _labels(current_entities(spark, got.run_dir)) == _labels(
-        current_entities(spark, want.run_dir)
-    )
-    out = str(tmp_path / "c")
-    cstate.compact_state(spark, legacy, out)
-    assert not (Path(out) / "token_df").exists()
+    assert sorted(p.name for p in Path(migrated).iterdir()) == ["state.json"]
 
 
 def test_parent_layout_norm_takes_deltas_and_a_compaction(
-    spark, corpus3, catalog_run, delta_chain, tmp_path, monkeypatch
+    spark, corpus3, catalog_run, delta_chain, delta_labels, tmp_path
 ):
-    """A catalog whose persisted normalize stage stores the id twice — the
-    hex ``rid`` next to a binary ``rid_b``, as engines before the single
-    binary id column wrote it — takes two deltas, so the second loads a
-    chain that mixes both layouts, and a forced compaction. Loading the
-    mixed chain starts no Spark job, and labels and entities equal those of
-    the same deltas chained from the unmodified catalog."""
-    import shutil
+    """A v2 delta run_dir whose catalog norm element stores the id twice —
+    the hex ``rid`` next to a binary ``rid_b``, as engines before the single
+    binary id column wrote it — while its delta element is in the current
+    layout. The migration reads the two layouts in groups and folds the
+    chain into the current one; the entities are those of the unmodified
+    chain, and the next delta gives its labels."""
+    from pyspark.sql import functions as F
+
+    from codingchallenge_spark.sources import checkpoint as ckpt
+
+    d1, _ = delta_chain
+    legacy = str(tmp_path / "legacy_rid")
+    manifest = _as_v2(spark, d1, legacy)
+    norm_tmp = str(tmp_path / "norm_tmp")
+    ckpt.load_stage(spark, catalog_run, "normalize").withColumn(
+        "rid_b", F.col("rid")
+    ).withColumn("rid", F.lower(F.hex("rid"))).write.parquet(norm_tmp)
+    ckpt.write_stage(
+        spark.read.parquet(norm_tmp), str(tmp_path), "norm_rid", "parent"
+    )
+    norm_rid = ckpt.stage_path(str(tmp_path), "norm_rid")
+    recorded = ckpt.recorded_schema(norm_rid)
+    assert recorded["rid"].dataType.simpleString() == "string"
+    assert recorded["rid_b"].dataType.simpleString() == "binary"
+    assert len(manifest["norm_paths"]) == 2
+    manifest["norm_paths"][0] = norm_rid
+    _save(legacy, manifest)
+
+    migrated = _migrate_then_delta(
+        spark, legacy, corpus3[2], delta_labels[1], tmp_path
+    )
+    assert cstate.read_manifest(migrated)["norm_paths"] == [
+        str(Path(migrated) / "normalize")
+    ]
+    state = cstate.load_catalog_state(spark, migrated)
+    assert dict(state.norm.dtypes)["rid"] == "binary"
+    assert "rid_b" not in state.norm.columns
+
+    def rows(df):
+        return df.columns, sorted(map(tuple, df.collect()))
+
+    assert rows(current_entities(spark, migrated)) == rows(
+        current_entities(spark, d1)
+    )
+
+
+def test_v2_bounds_move_into_the_manifest(spark, tmp_path):
+    """The migration carries a v2 state's ``sn_bounds`` rows into the
+    manifest unchanged — bucket minima with quotes, a backslash and
+    non-ASCII characters, and their ``min_rid`` bytes — and the migrated
+    state loads them back as the same rows."""
+    import hashlib
 
     from pyspark.sql import functions as F
 
     from codingchallenge_spark.sources import checkpoint as ckpt
 
-    legacy = str(tmp_path / "legacy_rid")
-    shutil.copytree(catalog_run, legacy)
-    norm_tmp = str(tmp_path / "norm_tmp")
-    ckpt.load_stage(spark, legacy, "normalize").withColumn(
-        "rid_b", F.col("rid")
-    ).withColumn("rid", F.lower(F.hex("rid"))).write.parquet(norm_tmp)
-    fingerprint = ckpt.read_marker(legacy, "normalize")["fingerprint"]
-    ckpt.write_stage(
-        spark.read.parquet(norm_tmp), legacy, "normalize", fingerprint
+    names = ['a"b', "a'b", "a\\b", "ab", "é", "éa", "日本", "😀x"]
+    norm = spark.createDataFrame(
+        [(hashlib.sha256(n.encode()).digest(), n, [n]) for n in names],
+        "rid binary, name_norm string, tokens array<string>",
     )
-    recorded = ckpt.recorded_schema(ckpt.stage_path(legacy, "normalize"))
-    assert recorded["rid"].dataType.simpleString() == "string"
-    assert recorded["rid_b"].dataType.simpleString() == "binary"
-    mpath = Path(legacy) / "state.json"
-    manifest = json.loads(mpath.read_text())
-    manifest["norm_paths"] = [ckpt.stage_path(legacy, "normalize")]
-    mpath.write_text(json.dumps(manifest))
-
-    _, da, db, _ = corpus3
-    l1, l2 = str(tmp_path / "l1"), str(tmp_path / "l2")
-    run_delta_pipeline(
-        spark, None, da, l1, CFG, input_id="d1",
-        state=cstate.load_catalog_state(spark, legacy), emit="delta",
+    d = str(tmp_path / "v2")
+    for stage, df in (
+        ("normalize", norm),
+        ("sn_index", cstate.build_sn_index(norm, num_buckets=4)),
+        ("labels", norm.select("rid", F.col("rid").alias("entity_id"))),
+        ("tok_index", cstate.build_tok_postings(norm, 4)),
+    ):
+        ckpt.write_stage(df, d, stage, "v2")
+    bounds = cstate.merged_bounds([], ckpt.load_stage(spark, d, "sn_index"))
+    ckpt.write_stage(spark.createDataFrame(bounds, V2_BOUNDS), d, "sn_bounds", "v2")
+    _save(d, {
+        "version": 2,
+        "norm_paths": [ckpt.stage_path(d, "normalize")],
+        "sn_chain": [{"path": ckpt.stage_path(d, "sn_index"), "buckets": None}],
+        "labels_chain": [ckpt.stage_path(d, "labels")],
+        "tok_chain": [ckpt.stage_path(d, "tok_index")],
+        "tok_buckets": 4,
+        "emit": "full",
+    })
+    want = sorted(
+        (r.bucket, r.n, r.start_pos, r.min_name, bytes(r.min_rid))
+        for r in ckpt.load_stage(spark, d, "sn_bounds").collect()
     )
-    sc = spark.sparkContext
-    sc.setJobGroup("mixed-norm-load", "count the jobs a mixed load starts")
-    try:
-        state = cstate.load_catalog_state(spark, l1)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    assert sc.statusTracker().getJobIdsForGroup("mixed-norm-load") == []
-    assert dict(state.norm.dtypes)["rid"] == "binary"
-    assert "rid_b" not in state.norm.columns
-    run_delta_pipeline(
-        spark, None, db, l2, CFG, input_id="d2", state=state, emit="delta",
-    )
-    compacted = str(tmp_path / "compact")
-    with monkeypatch.context() as m:
-        m.setattr(cstate, "FOLD_RATIO", 0.0)
-        cstate.compact_state(spark, l2, compacted)
+    mins = [b[3] for b in want]
+    assert any('"' in m for m in mins) and any(not m.isascii() for m in mins), mins
 
-    def rows(df):
-        return df.columns, sorted(map(tuple, df.collect()))
-
-    def hex_labels(run_dir):
-        labels = cstate.load_catalog_state(spark, run_dir).labels
-        return sorted(
-            (bytes(r.rid).hex(), bytes(r.entity_id).hex())
-            for r in labels.collect()
-        )
-
-    _, d2 = delta_chain
-    want = rows(current_entities(spark, d2))
-    want_labels = hex_labels(d2)
-    for run_dir in (l2, compacted):
-        assert rows(current_entities(spark, run_dir)) == want, run_dir
-        assert hex_labels(run_dir) == want_labels, run_dir
+    with pytest.raises(ValueError, match="compact_state"):
+        cstate.load_catalog_state(spark, d)
+    out = str(tmp_path / "v3")
+    cstate.compact_state(spark, d, out)
+    got = [
+        (b["bucket"], b["n"], b["start_pos"], b["min_name"],
+         base64.b64decode(b["min_rid"]))
+        for b in cstate.read_manifest(out)["sn_bounds"]
+    ]
+    assert sorted(got, key=lambda b: b[2]) == got  # position order
+    assert sorted(got) == want
+    loaded = cstate.load_catalog_state(spark, out).sn_bounds
+    assert sorted(tuple(b) for b in loaded) == want
 
 
 @pytest.fixture(scope="module")
@@ -512,12 +564,11 @@ def test_delta_touching_half_the_sn_buckets_becomes_the_sn_base(
     from pyspark.sql import functions as F
 
     from codingchallenge_spark.functions.normalize import normalize_records
-    from codingchallenge_spark.sources import checkpoint as ckpt
 
     cat = corpus3[0]
     if touched == "half":
-        bounds = ckpt.load_stage(spark, two_bucket_catalog, "sn_bounds")
-        second = bounds.orderBy(F.desc("start_pos")).first().min_name
+        bounds = cstate.load_catalog_state(spark, two_bucket_catalog).sn_bounds
+        second = bounds[-1].min_name
         cat = normalize_records(cat).filter(F.col("name_norm") < second)
         cat = cat.select(*corpus3[0].columns)
     delta = cat.withColumn("commit", F.lit("recommitted"))
@@ -525,7 +576,7 @@ def test_delta_touching_half_the_sn_buckets_becomes_the_sn_base(
         keys = normalize_records(delta).select(
             F.unhex("rid").alias("rid"), "name_norm"
         )
-        landed = keys.select(cstate.bucket_column(cstate.collect_bounds(bounds)))
+        landed = keys.select(cstate.bucket_column(bounds))
         assert landed.distinct().count() == 1
     d = str(tmp_path / "d")
     run_delta_pipeline(
@@ -545,7 +596,9 @@ def test_delta_touching_half_the_sn_buckets_becomes_the_sn_base(
         )
 
     state = cstate.load_catalog_state(spark, d)
-    stored, bounds = cstate.build_sn_index(state.norm, num_buckets=2)
-    want = positions(cstate.resolve_sn_index(stored, bounds))
+    stored = cstate.build_sn_index(state.norm, num_buckets=2)
+    want = positions(
+        cstate.resolve_sn_index(stored, cstate.merged_bounds([], stored))
+    )
     assert len(want) == corpus3[0].count() + delta.count()
-    assert positions(state.sn_index) == want
+    assert positions(cstate.resolve_sn_index(state.sn_stored, state.sn_bounds)) == want

@@ -54,7 +54,7 @@ def test_resume_recomputes_only_missing_suffix(spark, tiny_records, run_dir):
     # the catalog-state stages depend only on normalize → also skipped
     assert run.skipped == [
         "normalize", "block_token", "block_sn", "pairs",
-        "sn_index", "sn_bounds", "tok_index",
+        "sn_index", "tok_index",
     ]
     assert run.executed == ["score", "edges", "cc", "entities"]
     assert _labels(run.entities) == out_before

@@ -342,10 +342,11 @@ def _token_pass_state(spark, tiny_records, tmp_path):
     norm.filter(~is_new).write.parquet(norm_path)
     cat = spark.read.parquet(norm_path)
     cstate.build_tok_postings(cat, 16).write.parquet(idx_path)
+    # The token pass reads no sn index.
     st = cstate.CatalogState(
         norm=cat,
-        sn_index=None,
-        sn_bounds=None,
+        sn_stored=None,
+        sn_bounds=[],
         tok_postings=spark.read.parquet(idx_path),
         tok_buckets=16,
     )
@@ -356,11 +357,8 @@ def test_incremental_token_join_guarded(spark, tiny_records, tmp_path):
     """The delta⋈catalog token join broadcasts the delta side (|delta| ×
     tokens per record rows) and streams the catalog side through it: the
     join is a BroadcastHashJoin, no exchange on ``tok`` sits between the
-    catalog scan and it, and no broadcast carries a catalog scan — neither
-    the postings scan nor the norm scan the pre-postings fallback explodes
+    catalog scan and it, and no broadcast carries the postings scan
     (Catalyst under-estimates exploded relations, commits ce2a8c6/05fcdda)."""
-    import dataclasses
-
     from codingchallenge_spark.plans.incremental import (
         incremental_token_pairs_state,
     )
@@ -370,31 +368,25 @@ def test_incremental_token_join_guarded(spark, tiny_records, tmp_path):
         re.escape(idx_path) + "|" + re.escape(norm_path)
         + r"|FileScan parquet \[[^\]]*\b(tbucket|tokens)#"
     )
-    for label, s in (
-        ("postings", st),
-        ("norm fallback", dataclasses.replace(st, tok_postings=None)),
-    ):
-        plan = _simple_plan(incremental_token_pairs_state(s, work_new, df_cap=100))
-        assert "BroadcastHashJoin" in plan, f"{label}: tok join not broadcast:\n{plan}"
-        assert "ShuffledHashJoin" not in plan, label
-        # A catalog scan is recognised by its path or, should the plan
-        # string truncate the path, by the columns it reads.
-        for sub in _broadcast_subtrees(plan):
-            assert not catalog_scan.search(sub), (
-                f"{label}: catalog scan on a broadcast build side:\n{sub}\n{plan}"
-            )
-        # The path from the catalog scan up to its join: no exchange.
-        lines = plan.splitlines()
-        scan = next(i for i, ln in enumerate(lines) if catalog_scan.search(ln))
-        join = max(
-            i for i, ln in enumerate(lines[:scan]) if "BroadcastHashJoin" in ln
+    plan = _simple_plan(incremental_token_pairs_state(st, work_new, df_cap=100))
+    assert "BroadcastHashJoin" in plan, f"tok join not broadcast:\n{plan}"
+    assert "ShuffledHashJoin" not in plan
+    # A catalog scan is recognised by its path or, should the plan string
+    # truncate the path, by the columns it reads.
+    for sub in _broadcast_subtrees(plan):
+        assert not catalog_scan.search(sub), (
+            f"catalog scan on a broadcast build side:\n{sub}\n{plan}"
         )
-        assert not any(
-            re.search(r"(?<!Broadcast)Exchange", ln) for ln in lines[join:scan]
-        ), (label, plan)
-        assert "Exchange hashpartitioning(tok" not in plan, (label, plan)
-        assert "BroadcastNestedLoopJoin" not in plan, label
-        assert "CartesianProduct" not in plan, label
+    # The path from the catalog scan up to its join: no exchange.
+    lines = plan.splitlines()
+    scan = next(i for i, ln in enumerate(lines) if catalog_scan.search(ln))
+    join = max(i for i, ln in enumerate(lines[:scan]) if "BroadcastHashJoin" in ln)
+    assert not any(
+        re.search(r"(?<!Broadcast)Exchange", ln) for ln in lines[join:scan]
+    ), plan
+    assert "Exchange hashpartitioning(tok" not in plan, plan
+    assert "BroadcastNestedLoopJoin" not in plan
+    assert "CartesianProduct" not in plan
 
 
 def test_delta_postings_plan_is_unsorted(spark, tiny_records, tmp_path):

@@ -43,7 +43,7 @@ CFG = MatcherConfig()
 AWAIT_SECS = 600
 # Spark jobs of one ingest_batch(compact_every=1) on the tiny fixture,
 # measured (test_ingest_job_count_guard).
-JOBS_MEASURED = 47
+JOBS_MEASURED = 45
 
 
 @pytest.fixture(scope="module")
@@ -342,7 +342,7 @@ def test_failed_branch_leaves_no_state_then_resume_completes(
 
     res = run()
     assert res.skipped == [
-        "normalize_delta", "sn_index", "sn_bounds", "pairs_delta",
+        "normalize_delta", "sn_index", "pairs_delta",
         "score_delta", "edges_delta", "cc_delta", "entities_delta",
     ]
     assert res.executed == ["tok_index"]
@@ -465,9 +465,9 @@ def test_prune_is_numeric_and_watermarked(tmp_path):
     Path(cur).mkdir()
     cstate.write_state_manifest(
         cur,
-        [str(out / f"batch-{bid:06d}" / "normalize_delta")
-         for bid in (999999, 1000000)],
-        sn_chain=[], labels_chain=[],
+        norm_paths=[str(out / f"batch-{bid:06d}" / "normalize_delta")
+                    for bid in (999999, 1000000)],
+        sn_chain=[], sn_bounds=[], labels_chain=[], tok_chain=[], tok_buckets=1,
     )
     pruned = prune_superseded(str(out), cur, watermark=-1)
     # both older dirs pruned down to the referenced normalize_delta
@@ -500,6 +500,32 @@ def test_start_requires_persisted_state(spark, tmp_path):
             spark, str(tmp_path / "src"), str(tmp_path / "nostate"),
             str(tmp_path / "out"), CFG,
         )
+
+
+def test_start_refuses_an_unmigrated_catalog(spark, catalog_run, tmp_path):
+    """A catalog state in an older layout is refused before the query
+    starts, with the message load_catalog_state gives (migrate a v2 state,
+    rebuild a v1 one): no streaming checkpoint is written, so no offset is
+    committed against a state no batch can load."""
+    import json
+    import shutil
+
+    legacy = tmp_path / "v2"
+    shutil.copytree(catalog_run, legacy)
+    manifest = json.loads((legacy / "state.json").read_text())
+    manifest["version"] = 2
+    (legacy / "state.json").write_text(json.dumps(manifest))
+    with pytest.raises(ValueError, match=r"compact_state\(spark, run_dir, out_dir\)"):
+        cstate.load_catalog_state(spark, str(legacy))
+    out = tmp_path / "out"
+    with pytest.raises(ValueError, match=r"compact_state\(spark, run_dir, out_dir\)"):
+        start_stream_ingest(spark, str(tmp_path / "src"), str(legacy), str(out), CFG)
+    assert not (out / "_stream_checkpoint").exists()
+    # A state from before the labels chain cannot be migrated: rebuild.
+    manifest["version"] = 1
+    (legacy / "state.json").write_text(json.dumps(manifest))
+    with pytest.raises(ValueError, match="rebuild the catalog"):
+        start_stream_ingest(spark, str(tmp_path / "src"), str(legacy), str(out), CFG)
 
 
 # --- Reference safety: size-tiered compaction re-references chain elements
@@ -565,10 +591,8 @@ def test_compacted_chain_references_only_live_paths(
     resolution over the same rows, and the state keeps the catalog's sn
     bucket count. Each compaction leaves nothing unreferenced behind; over
     the run some chain is re-referenced and some chain folds."""
-    from codingchallenge_spark.sources import checkpoint as ckpt
-
     out = str(tmp_path / "out")
-    buckets = ckpt.read_marker(catalog_run, "sn_bounds")["rows"]
+    buckets = len(cstate.read_manifest(catalog_run)["sn_bounds"])
     rereferenced = folded = False
     for bid, pdf in enumerate(chain8):
         res = ingest_batch(
@@ -579,7 +603,7 @@ def test_compacted_chain_references_only_live_paths(
         assert cur == (res["compacted"] or res["run_dir"])
         paths = cstate.manifest_paths(cur)
         assert [p for p in paths if not Path(p).exists()] == [], bid
-        assert ckpt.read_marker(cur, "sn_bounds")["rows"] == buckets
+        assert len(cstate.read_manifest(cur)["sn_bounds"]) == buckets
         assert _partition(current_entities(spark, cur)) == batch_partitions(bid)
         if res["compacted"]:
             assert _unreferenced(out) == [], bid
