@@ -112,7 +112,8 @@ def normalize_records(df: DataFrame) -> DataFrame:
 
 
 def with_token_hashes(records_norm: DataFrame) -> DataFrame:
-    """Append ``th`` = sorted xxhash64 fingerprints of ``tokens``.
+    """Replace ``tokens`` with ``th``, their sorted xxhash64 fingerprints
+    (functions.similarity.token_hashes): a token is its hash from here on.
 
     This column MUST be materialized (persisted / written by the normalize
     stage) before scoring: the expression is array_sort∘transform, which Spark
@@ -123,7 +124,7 @@ def with_token_hashes(records_norm: DataFrame) -> DataFrame:
     """
     from codingchallenge_spark.functions.similarity import token_hashes
 
-    return records_norm.withColumn("th", token_hashes("tokens"))
+    return records_norm.withColumn("th", token_hashes("tokens")).drop("tokens")
 
 
 def partition_floor(df: DataFrame) -> DataFrame:
@@ -162,5 +163,5 @@ def normalize_for_matching(records: DataFrame) -> DataFrame:
 
 def work_projection(norm: DataFrame) -> DataFrame:
     """The narrow relation blocking, scoring and CC read from a matching
-    normalize: ``(rid, name_norm, tokens, th)``, ``rid`` binary."""
-    return norm.select("rid", "name_norm", "tokens", "th")
+    normalize: ``(rid, name_norm, th)``, ``rid`` binary."""
+    return norm.select("rid", "name_norm", "th")

@@ -257,13 +257,15 @@ def token_jaccard(c1: Column | str, c2: Column | str) -> Column:
 
 
 def token_hashes(col: Column | str = "tokens") -> Column:
-    """Per-record sorted xxhash64 fingerprints of a distinct token array.
+    """Per-record sorted xxhash64 fingerprints of a distinct token array:
+    the matcher's one token identity. Token blocking, the postings, the
+    delta document frequencies and the Jaccard all key on these longs.
+    Precomputed once per record (NOT per pair); deterministic (seeded).
 
-    Precomputed once per record (NOT per pair) so the pair fan-in join ships
-    8-byte longs instead of full token strings, and the scorer's
-    ``array_intersect`` compares primitive longs. Deterministic (seeded
-    xxhash64). In-array collisions would need two of a record's ~10² tokens
-    to collide in 64 bits (~10⁻¹⁵ per record).
+    Collision bound, the one every hash-keyed step relies on: a vocabulary
+    of 10⁶ tokens holds a colliding pair with probability about
+    (10⁶)²/2 · 2⁻⁶⁴ ≈ 3·10⁻⁸; a collision would merge two tokens' blocks
+    and document frequencies.
     """
     return F.array_sort(F.transform(_col(col), lambda t: F.xxhash64(t)))
 

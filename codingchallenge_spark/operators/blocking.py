@@ -6,11 +6,11 @@ explode + hash-partitioned self-join) … with explicit salting for hot blocking
 keys".
 
 Scale design (the 10^12-file clause):
-- Token blocking self-joins on token. Block of size n emits n(n-1)/2 pairs —
-  *output* skew that AQE cannot fix after the fact, so hot tokens are capped
-  *before* the join via a broadcast anti-join against the (tiny) hot-token
-  list. High-df tokens carry no linkage signal anyway (they are the corpus's
-  stopwords/keywords).
+- Token blocking self-joins on the token's 64-bit hash. Block of size n
+  emits n(n-1)/2 pairs — *output* skew that AQE cannot fix after the fact,
+  so hot tokens are capped *before* the join via a broadcast anti-join
+  against the (tiny) hot-token list. High-df tokens carry no linkage
+  signal anyway (they are the corpus's stopwords/keywords).
 - Sorted-neighborhood must NOT use a global single-partition window. We
   range-partition by the sort key, run the `lead` window per partition, and
   recover cross-boundary pairs by re-windowing only the (tiny) set of rows
@@ -50,16 +50,20 @@ def token_blocking(
     num_partitions: int | None = None,
     dedupe: bool = True,
 ) -> DataFrame:
-    """B2+B3 — explode tokens, drop hot tokens, hash-partitioned self-join.
+    """B2+B3 — explode the token hashes ``th``, drop hot tokens,
+    hash-partitioned self-join.
 
-    Returns DataFrame[rid1, rid2, block_key] with rid1 < rid2, deduped.
+    Returns DataFrame[rid1, rid2, block_key] with rid1 < rid2, deduped; the
+    block key is the shared token's hash. A token is its xxhash64
+    (functions.similarity.token_hashes, which states the collision bound),
+    so the hot-token groupBy and the self-join both exchange a ``long`` key.
 
     The hot-token list is computed with one groupBy and broadcast (it is
     small by construction: only tokens with df > cap). The self-join runs on
     the exploded (rid, tok) relation repartitioned by token so both sides
     co-locate; AQE skew-join splits any residual within-cap skew.
     """
-    tok = records_norm.select("rid", F.explode("tokens").alias("tok"))
+    tok = records_norm.select("rid", F.explode("th").alias("tok"))
     hot = (
         tok.groupBy("tok")
         .agg(F.count("*").alias("df"))
@@ -119,10 +123,9 @@ def _explode_nbrs(df: DataFrame) -> DataFrame:
 
 def sn_window_pairs(df: DataFrame, part_col: str, window: int) -> DataFrame:
     """Pair every row with its ``window - 1`` successors in (name_norm, rid)
-    order WITHIN each ``part_col`` group — the SN pairing kernel shared by
-    :func:`sorted_neighborhood` (seam pass) and the delta SN path
-    (plans.incremental windows gap-free stretches of the candidate set with
-    the same kernel). ``df`` needs [rid, name_norm, part_col]."""
+    order WITHIN each ``part_col`` group — the seam pass of
+    :func:`sorted_neighborhood`, which windows each gap-free stretch of its
+    edge rows. ``df`` needs [rid, name_norm, part_col]."""
     w = Window.partitionBy(part_col).orderBy("name_norm", "rid")
     return _explode_nbrs(
         df.select("rid", "name_norm", _nbrs_array(w, window).alias("nbrs"))
@@ -261,7 +264,6 @@ def union_candidates_meta(
     token_pairs: DataFrame,
     sn_pairs: DataFrame,
     min_token_overlap: int = 1,
-    keep_block_key: bool = False,
 ) -> DataFrame:
     """B4 with meta-blocking: dedup + common-token filter in ONE shuffle.
 
@@ -278,25 +280,20 @@ def union_candidates_meta(
     Papadakis et al.; exempting SN pairs keeps the recall path for
     name-similar records.)
 
-    ``keep_block_key=False`` (default) drops the block-key column: a string
-    min() in the agg forces SortAggregate (immutable agg buffer → no hash
-    agg), i.e. a full sort of the biggest relation in the pipeline. With
-    only primitive aggregates the dedup runs as a partial-agg HashAggregate.
+    The block keys are dropped (a token pair's is the token hash, an SN
+    pair's a string), so the dedup aggregates only primitives and runs as a
+    partial-agg HashAggregate, not a sort of the biggest relation in the
+    pipeline. Returns DataFrame[rid1, rid2].
     """
-    keys = ["rid1", "rid2"] + (["block_key"] if keep_block_key else [])
-    tok = token_pairs.select(*keys, F.lit(1).alias("_tok"))
-    sn = sn_pairs.select(*keys, F.lit(0).alias("_tok"))
-    aggs = [
+    tok = token_pairs.select("rid1", "rid2", F.lit(1).alias("_tok"))
+    sn = sn_pairs.select("rid1", "rid2", F.lit(0).alias("_tok"))
+    agg = tok.unionByName(sn).groupBy("rid1", "rid2").agg(
         F.sum("_tok").alias("_tok_overlap"),
         F.max(1 - F.col("_tok")).alias("_in_sn"),
-    ]
-    if keep_block_key:
-        aggs.append(F.min("block_key").alias("block_key"))
-    agg = tok.unionByName(sn).groupBy("rid1", "rid2").agg(*aggs)
-    out_cols = ["rid1", "rid2"] + (["block_key"] if keep_block_key else [])
+    )
     return agg.filter(
         (F.col("_tok_overlap") >= F.lit(min_token_overlap)) | (F.col("_in_sn") == 1)
-    ).select(*out_cols)
+    ).select("rid1", "rid2")
 
 
 def salted_join(

@@ -6,7 +6,7 @@ candidate pairs".
 
 One production scorer, :func:`score_pairs_fused`:
   cand_pairs ⋈ records_norm(rid1) ⋈ records_norm(rid2)   (attribute fan-in,
-    one join round per side shipping (name_norm, token-hashes) together)
+    one join round per side shipping (name_norm, th) together)
   → codegen'd size-ratio pre-prune
   → native Jaccard: one array_intersect count per pair, in the JVM
   → codegen'd exact score-bound filter
@@ -15,11 +15,12 @@ One production scorer, :func:`score_pairs_fused`:
 rids, token hashes and the jaccard column never cross into Python.
 
 :func:`attach_pair_attrs` + :func:`score_pairs` are the unpruned REFERENCE
-scorer: every candidate pair scored, jaccard over the token strings. Tests
-check the production scorer against it and read exact scores of pairs the
+scorer: every candidate pair scored, jaccard over the token strings, so its
+input keeps ``tokens`` (normalize_records plus token_hashes). Tests check
+the production scorer against it and read exact scores of pairs the
 production prune drops (the flagship's threshold-margin gate).
 
-Only the *name keys and token arrays* travel into the joins — never
+Only the *name keys and token hashes* travel into the joins — never
 ``content`` (the wide column stays at the scan; SURVEY.md §4 column pruning).
 The fan-in join is optionally salted (operators.blocking.salted_join) when a
 record participates in pathologically many pairs.

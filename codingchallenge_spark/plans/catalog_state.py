@@ -30,8 +30,9 @@ pass the round-3 incremental path still paid:
 - ``tok_index`` — inverted token postings (tbucket, tok, rid), the catalog
   side of the delta token pass pre-exploded ONCE (round 5 — removes the
   last corpus-proportional term in pairs_delta: the per-batch re-explode of
-  every catalog row's token array). Query: bucket-pruned scan via a literal
-  IN over the delta's token hash-buckets. The postings are also the
+  every catalog row's token array). ``tok`` is the token's hash, an element
+  of the norm's ``th``. Query: bucket-pruned scan via a literal IN over the
+  delta's token buckets (:func:`tok_bucket`). The postings are also the
   catalog's document frequencies: a token's catalog df is its number of
   postings rows (tokenize emits distinct tokens per record), so a delta
   token's union df is that count plus its delta count — exact, because
@@ -67,8 +68,8 @@ the operator picks and is size-tiered: it folds a chain back into one
 element only once the chain's tail has grown to a fixed fraction of its
 base (:data:`FOLD_RATIO`), and otherwise re-references the chain's
 existing elements, so a compacted state may still point into older
-run_dirs. Older state layouts are read by :func:`compact_state` alone,
-which writes them out in the current one.
+run_dirs. Older state layouts (v2, v3) are read by :func:`compact_state`
+alone, which writes them out in the current one.
 
 Production shape: at 10^12 files ``sn_index`` buckets would be sized to
 ~64k rows (here: defaultParallelism buckets — a knob), bucket splits and
@@ -99,13 +100,13 @@ from codingchallenge_spark.sources import checkpoint as ckpt
 log = logging.getLogger(__name__)
 
 STATE_MANIFEST = "state.json"
-# v3: the sn bounds are rows of the manifest, and every chain (postings
-# included) is in the current layout. v2 (bounds as a parquet relation,
-# optional postings, older norm layouts) is refused by load_catalog_state
-# and migrated once by compact_state. v1 run_dirs (global-pos index, no
-# chain) are refused with a rebuild hint: silently resolving them would
-# mix incompatible position semantics.
-STATE_VERSION = 3
+# v4: a token is its hash — the norm chain stores ``th``, not ``tokens``,
+# and the postings key on it. v3 (string tokens) and v2 (also the sn bounds
+# as a parquet relation) are refused by load_catalog_state and migrated
+# once by compact_state. v1 run_dirs (global-pos index, no chain) are
+# refused with a rebuild hint: silently resolving them would mix
+# incompatible position semantics.
+STATE_VERSION = 4
 # compact_state folds a chain once the elements newer than its base hold at
 # least this fraction of the base's on-disk bytes; below it the chain is
 # re-referenced as it is. With deltas at ~10% of the base, a chain folds
@@ -117,12 +118,12 @@ FOLD_RATIO = 0.5
 class CatalogState:
     """In-memory handle on a catalog's persisted derived relations."""
 
-    norm: DataFrame  # normalize-stage rows: full cols + name_norm/tokens/th, binary rid
+    norm: DataFrame  # normalize-stage rows: full cols + name_norm/th, binary rid
     sn_stored: DataFrame  # stored form: (bucket, rid, name_norm, lpos)
     sn_bounds: list[Row]  # (bucket, n, start_pos, min_name, min_rid), position order
-    # Inverted token postings (round 5): (tbucket, tok, rid) — the catalog
-    # side of the delta token pass reads THIS, bucket-pruned to the delta's
-    # token hash-buckets, instead of re-exploding the corpus token arrays
+    # Inverted token postings (round 5): (tbucket, tok hash, rid) — the
+    # catalog side of the delta token pass reads THIS, bucket-pruned to the
+    # delta's token buckets, instead of re-exploding the corpus token arrays
     # per batch (the last corpus-proportional term in pairs_delta).
     tok_postings: DataFrame
     tok_buckets: int  # hash-bucket modulus the postings were built with
@@ -134,13 +135,20 @@ class CatalogState:
     tok_chain: list[str] = field(default_factory=list)  # append-only (postings never change)
 
 
+def tok_bucket(tok: Column | str, num_buckets: int) -> Column:
+    """The postings bucket of a token hash, shared by the postings build
+    and the delta token pass's bucket prune."""
+    return F.pmod(tok, F.lit(num_buckets)).cast("int")
+
+
 def build_tok_postings(norm: DataFrame, num_buckets: int) -> DataFrame:
-    """Inverted token postings (tbucket, tok, rid) over a normalized relation,
-    unsorted.
+    """Inverted token postings (tbucket int, tok bigint, rid binary) over a
+    normalized relation, unsorted: one row per element of each record's
+    ``th`` (collision bound: functions.similarity.token_hashes).
 
     The explode the delta token pass would otherwise pay per batch over the
     whole catalog, paid ONCE at catalog build (and per delta for the delta's
-    own rows). ``tbucket = pmod(xxhash64(tok), num_buckets)`` so a delta's
+    own rows). ``tbucket`` = :func:`tok_bucket` so a delta's
     probe tokens prune the scan to their buckets with a small literal IN
     (the sn_index ``In(bucket`` precedent). Production shape: num_buckets
     sized so one bucket ≈ one healthy parquet file (~64 MB of postings),
@@ -151,10 +159,9 @@ def build_tok_postings(norm: DataFrame, num_buckets: int) -> DataFrame:
     written as it comes: a range sort of a delta-sized element costs a
     sampling job and a shuffle and prunes nothing below one row group.
     """
-    return norm.select("rid", F.explode("tokens").alias("tok")).select(
-        F.pmod(F.xxhash64("tok"), F.lit(num_buckets)).cast("int").alias("tbucket"),
-        "tok",
-        "rid",
+    tok = norm.select("rid", F.explode("th").alias("tok"))
+    return tok.select(
+        tok_bucket("tok", num_buckets).alias("tbucket"), "tok", "rid"
     )
 
 
@@ -423,21 +430,21 @@ def _raw_manifest(run_dir: str) -> dict:
     return json.loads((Path(run_dir) / STATE_MANIFEST).read_text())
 
 
-def _is_v2(manifest: dict) -> bool:
-    return manifest.get("version") == 2 and "labels_chain" in manifest
+def _is_migratable(manifest: dict) -> bool:
+    return manifest.get("version") in (2, 3) and "labels_chain" in manifest
 
 
 def read_manifest(run_dir: str) -> dict:
     """The state manifest at ``run_dir``, refused with ``ValueError`` unless
-    it is in the current layout: a v2 state names its one-time migration
-    (:func:`compact_state`), an older one the rebuild."""
+    it is in the current layout: a v2 or v3 state names its one-time
+    migration (:func:`compact_state`), an older one the rebuild."""
     manifest = _raw_manifest(run_dir)
-    if _is_v2(manifest):
+    if _is_migratable(manifest):
         raise ValueError(
-            f"{run_dir!r} holds a v2 catalog state (sn bounds as a parquet "
-            "relation, optional postings) — migrate it once with "
-            "compact_state(spark, run_dir, out_dir) and chain deltas from "
-            "out_dir"
+            f"{run_dir!r} holds a v{manifest['version']} catalog state "
+            "(string-keyed token postings, a norm chain storing tokens) — "
+            "migrate it once with compact_state(spark, run_dir, out_dir) and "
+            "chain deltas from out_dir"
         )
     if manifest.get("version", 1) < STATE_VERSION:
         raise ValueError(
@@ -545,59 +552,57 @@ def manifest_paths(run_dir: str) -> list[str]:
     )
 
 
-def _read_v2_state(
+def _read_old_state(
     spark: SparkSession, run_dir: str, manifest: dict
-) -> tuple[CatalogState, bool]:
-    """A v2 state dir mapped onto the current layout, for its migration by
-    :func:`compact_state`; also returns whether its norm chain must fold.
+) -> CatalogState:
+    """A v2 or v3 state dir mapped onto the current layout, for its
+    migration by :func:`compact_state`, which folds its norm chain: every
+    v2 and v3 norm element stores ``tokens``.
 
-    - Norm elements in an older layout: a retired ``th32`` column is
-      dropped, and a hex ``rid`` stored next to its binary ``rid_b`` gives
-      way to it. One scan cannot read ``rid`` as both string and binary, so
-      paths are read in groups by the layout their markers record (no Spark
-      job), then unioned. Any such element (or one without a recorded
-      schema) folds the chain.
-    - The ``sn_bounds`` parquet relation becomes driver rows (one collect).
-    - A state without a postings chain gets an empty one, which compaction
-      fills from the full norm at the default modulus.
+    - Norm elements: the ``tokens`` strings and a retired ``th32`` column
+      are dropped (``th`` is the token), and a hex ``rid`` stored next to
+      its binary ``rid_b`` gives way to it. One scan cannot read ``rid`` as
+      both string and binary, so paths are read in groups by the layout
+      their markers record (no Spark job), then unioned.
+    - The sn bounds: rows of a v3 manifest, the ``sn_bounds`` parquet
+      relation of a v2 one (one collect).
+    - The postings chain, keyed on token strings, is treated as missing:
+      compaction rebuilds it from the norm's ``th``, at the manifest's
+      modulus (the default when it records none).
     - A ``token_df`` relation next to the manifest is ignored: the postings
       answer every document frequency.
     """
     groups: dict[bool | None, list[str]] = {}
-    fold = False
     for path in manifest["norm_paths"]:
         schema = ckpt.recorded_schema(path)
-        names = set() if schema is None else set(schema.fieldNames())
-        groups.setdefault(None if schema is None else "rid_b" in names, []).append(path)
-        fold |= schema is None or bool(names & {"th32", "rid_b"})
+        key = None if schema is None else "rid_b" in schema.fieldNames()
+        groups.setdefault(key, []).append(path)
     parts = []
     for group in groups.values():
-        df = ckpt.read_parquet(spark, *group).drop("th32")
+        df = ckpt.read_parquet(spark, *group).drop("tokens", "th32")
         if "rid_b" in df.columns:
             df = df.withColumn("rid", F.col("rid_b")).drop("rid_b")
         parts.append(df)
     norm = reduce(DataFrame.unionByName, parts)
-    bounds = ckpt.read_parquet(spark, str(Path(run_dir) / "sn_bounds")).select(
-        "bucket", "n", "start_pos", "min_name", "min_rid"
-    )
-    tok_chain = manifest.get("tok_chain") or []
+    if "sn_bounds" in manifest:
+        bounds = _bounds_rows(manifest["sn_bounds"])
+    else:
+        rows = ckpt.read_parquet(spark, str(Path(run_dir) / "sn_bounds")).select(
+            "bucket", "n", "start_pos", "min_name", "min_rid"
+        )
+        bounds = sorted(rows.collect(), key=lambda b: b.start_pos)
     tok_buckets = manifest.get("tok_buckets") or MatcherConfig().tok_buckets
-    state = CatalogState(
+    return CatalogState(
         norm=norm,
         sn_stored=_read_sn_chain(spark, manifest["sn_chain"]),
-        sn_bounds=sorted(bounds.collect(), key=lambda b: b.start_pos),
-        tok_postings=(
-            ckpt.read_parquet(spark, *tok_chain) if tok_chain
-            else build_tok_postings(norm, tok_buckets)
-        ),
+        sn_bounds=bounds,
+        tok_postings=build_tok_postings(norm, tok_buckets),
         tok_buckets=tok_buckets,
         labels=_read_labels_chain(spark, manifest["labels_chain"]),
         norm_paths=manifest["norm_paths"],
         sn_chain=manifest["sn_chain"],
         labels_chain=manifest["labels_chain"],
-        tok_chain=tok_chain,
     )
-    return state, fold
 
 
 def _tail_is_large(paths: list[str]) -> bool:
@@ -640,16 +645,17 @@ def compact_state(
     manifest, bounds included, is written after all of them, so a failed
     compaction leaves no state.
 
-    This is also the one migration of a v2 state dir (:func:`_read_v2_state`):
-    its bounds move into the manifest, a norm chain with an older layout
-    folds, and missing postings are built.
+    This is also the one migration of a v2 or v3 state dir
+    (:func:`_read_old_state`): the norm chain folds without ``tokens``, the
+    postings are rebuilt keyed on the token hash, and v2's bounds move into
+    the manifest.
 
     ``num_buckets`` is the sn_index bucket count and ``tok_buckets`` the
     postings' hash-bucket modulus; each defaults to the state's own, and a
     value equal to the state's forces no fold. A folded postings chain with
     an unchanged modulus is only re-clustered (every stored ``tbucket``
-    stays valid); another modulus, or a state without postings, rebuilds
-    them from the full norm. Either way the new base is clustered
+    stays valid); another modulus, or a migrated state, rebuilds them from
+    the full norm. Either way the new base is clustered
     (:func:`clustered_postings`). A value below 1 raises ``ValueError``
     before anything is written.
     """
@@ -657,8 +663,8 @@ def compact_state(
         if value is not None and value < 1:
             raise ValueError(f"compact_state: {name} must be >= 1, got {value}")
     manifest = _raw_manifest(run_dir)
-    if _is_v2(manifest):
-        state, fold_norm = _read_v2_state(spark, run_dir, manifest)
+    if _is_migratable(manifest):
+        state, fold_norm = _read_old_state(spark, run_dir, manifest), True
     else:
         state, fold_norm = load_catalog_state(spark, run_dir), False
     out = Path(out_dir)

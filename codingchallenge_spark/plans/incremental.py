@@ -17,9 +17,10 @@ ever re-normalized), the delta's keys are merged into the persisted
 reads its pairs off the merged positions instead of re-sorting the union
 corpus, and the catalog side of the token pass reads the persisted inverted
 postings (catalog_state.build_tok_postings), bucket-pruned by the delta's
-token hash-buckets. The same postings give the document frequencies: a
-delta token's union df = its catalog postings count + its delta count,
-exact. Remaining corpus-proportional work: only the final full-table emit when
+token buckets; a token is its hash (``th``) there as in the batch graph.
+The same postings give the document frequencies: a delta token's union
+df = its catalog postings count + its delta count, exact. Remaining
+corpus-proportional work: only the final full-table emit when
 ``emit="full"`` (use ``emit="delta"`` to emit only new + possibly-relabeled
 rows, i.e. an upsert set).
 
@@ -115,8 +116,10 @@ def incremental_token_pairs_state(
     delta-touching pair once per shared cold token (NON-deduped — exactly
     the multiplicity union_candidates_meta counts as token overlap).
 
-    The catalog side is the persisted inverted postings (state.tok_postings),
-    bucket-pruned to the hash-buckets of the delta's tokens (``tbs``, one
+    Tokens are the delta's exploded ``th``, the ``long`` key of the
+    postings (collision bound: functions.similarity.token_hashes). The
+    catalog side is the persisted inverted postings (state.tok_postings),
+    bucket-pruned to the buckets of the delta's tokens (``tbs``, one
     delta-sized collect) and joined to a broadcast of the delta's distinct
     tokens. The hot set is taken over the UNION dfs: a token's
     catalog df is its number of catalog postings rows, its delta df its
@@ -132,14 +135,12 @@ def incremental_token_pairs_state(
     delta-sized bound, like the SN probes'. The catalog's content column is
     never read and nothing corpus-sized is shuffled.
     """
-    tok_new = work_new.select("rid", F.explode("tokens").alias("tok"))
+    tok_new = work_new.select("rid", F.explode("th").alias("tok"))
     # Exact prune: every delta token's bucket is in the IN list.
     tbs = sorted(
         r.tbucket
         for r in tok_new.select(
-            F.pmod(F.xxhash64("tok"), F.lit(state.tok_buckets))
-            .cast("int")
-            .alias("tbucket")
+            cstate.tok_bucket("tok", state.tok_buckets).alias("tbucket")
         )
         .distinct()
         .collect()
@@ -320,22 +321,16 @@ def incremental_candidate_pairs(
     work_new: DataFrame,
     cfg: MatcherConfig,
     tok_pairs: DataFrame,
-    sn: SnUpdate | None = None,
+    sn: SnUpdate,
 ) -> DataFrame:
     """Multi-pass delta blocking: the restricted token pass ``tok_pairs``
     (:func:`incremental_token_pairs_state`) ∪ delta-touching
     sorted-neighborhood pairs read off the sn-index update ``sn``
     (:func:`delta_sn_pairs`), merged through the same single-shuffle
-    meta-union as the batch matcher (identical overlap semantics). Without
-    ``sn`` the sorted-neighborhood pass is dropped — the recall path for
-    name-similar-but-token-poor records folds into the periodic full
-    re-resolution instead."""
-    if sn is None:
-        sn_pairs = tok_pairs.filter(F.lit(False))
-    else:
-        sn_pairs = delta_sn_pairs(
-            state, sn, work_new.select("rid", "name_norm"), window=cfg.sn_window
-        )
+    meta-union as the batch matcher (identical overlap semantics)."""
+    sn_pairs = delta_sn_pairs(
+        state, sn, work_new.select("rid", "name_norm"), window=cfg.sn_window
+    )
     return union_candidates_meta(
         tok_pairs, sn_pairs, min_token_overlap=cfg.min_token_overlap
     )
@@ -475,26 +470,16 @@ def delta_stages(
     state: CatalogState,
     norm_delta: DataFrame,
     cfg: MatcherConfig,
-    sn: bool = True,
     emit: str = "full",
-    maintain: bool = False,
-) -> tuple[DataFrame, SnUpdate | None]:
+) -> tuple[DataFrame, SnUpdate]:
     """The delta graph after normalize_delta, each stage through the sink
     ``stage`` (plans.matcher documents the sinks)::
 
         sn_index → pairs_delta → score_delta → edges_delta → cc_delta
         → entities_delta
 
-    The sn_index stage runs when the SN pass needs it (``sn``) or the
-    caller maintains the state (``maintain``). The token pass is built
-    beside it: its hash-bucket collect overlaps the merge. Returns the
-    entities stage and the sn-index update (None when the stage did not
-    run).
-
-    ``sn=False`` drops the SN pairs, and with them the recall on
-    name-similar, token-poor records. It saves little: a maintaining caller
-    (every parquet delta run) merges the index anyway, and the SN probe
-    reads only the touched buckets and their neighbours.
+    The token pass is built beside the sn_index stage: its bucket collect
+    overlaps the merge. Returns the entities stage and the sn-index update.
     """
     work_new = work_projection(norm_delta)
     tok_pairs, sn_update = run_parallel(
@@ -502,13 +487,13 @@ def delta_stages(
         lambda: incremental_token_pairs_state(
             state, work_new, df_cap=cfg.token_df_cap
         ),
-        lambda: sn_index_stages(stage, state, norm_delta) if sn or maintain else None,
+        lambda: sn_index_stages(stage, state, norm_delta),
     )
     pairs = stage(
         "pairs_delta",
-        ["normalize_delta"] + (["sn_index"] if sn else []),
+        ["normalize_delta", "sn_index"],
         lambda: incremental_candidate_pairs(
-            state, work_new, cfg, tok_pairs, sn=sn_update if sn else None
+            state, work_new, cfg, tok_pairs, sn=sn_update
         ),
     )
     scored = stage(
@@ -563,7 +548,6 @@ def resolve_entities_incremental(
     catalog: DataFrame,
     new_records: DataFrame,
     cfg: MatcherConfig | None = None,
-    sn: bool = True,
     state: CatalogState | None = None,
     emit: str = "full",
 ) -> DataFrame:
@@ -599,4 +583,4 @@ def resolve_entities_incremental(
         stage, state, catalog, cfg, "resolve_entities_incremental"
     )
     norm_delta = normalize_delta_stage(stage, state, new_records)
-    return delta_stages(stage, state, norm_delta, cfg, sn=sn, emit=emit)[0]
+    return delta_stages(stage, state, norm_delta, cfg, emit=emit)[0]

@@ -126,7 +126,7 @@ def emit_entities(norm: DataFrame, labels: DataFrame) -> DataFrame:
     ``entity_id``.
     """
     return (
-        norm.drop("name_norm", "tokens", "th")
+        norm.drop("name_norm", "th")
         .join(labels, "rid")
         .withColumn("rid", F.lower(F.hex("rid")))
         .withColumn("entity_id", F.lower(F.hex("entity_id")))

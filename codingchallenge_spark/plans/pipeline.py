@@ -30,7 +30,8 @@ mid-iteration-sequence.
 
 Column discipline at scale: ``content`` (the wide column) exists only in the
 normalize output and the final entities join — blocking/scoring/cc stages
-carry (rid, name_norm, tokens) at most.
+carry (rid, name_norm, th) at most; ``th`` stores each token once, as its
+64-bit hash, the key of token blocking, the postings and the Jaccard.
 """
 
 from __future__ import annotations
@@ -173,8 +174,8 @@ def current_entities(spark: SparkSession, run_dir: str) -> DataFrame:
 # Bump whenever any stage's OUTPUT SCHEMA or on-disk semantics change: the
 # token is folded into every stage fingerprint, so --resume against a run_dir
 # written by older code rebuilds instead of loading a stale-schema checkpoint
-# (v5: the normalize stages store one id column, the binary rid).
-PIPELINE_SCHEMA_VERSION = 5
+# (v6: the normalize stages store each token once, as its hash ``th``).
+PIPELINE_SCHEMA_VERSION = 6
 
 
 def _fingerprint(cfg: MatcherConfig, input_id: str, upstream: str, stage: str) -> str:
@@ -343,7 +344,6 @@ def run_delta_pipeline(
     cfg: MatcherConfig | None = None,
     input_id: str = "",
     resume: bool = False,
-    sn: bool = True,
     state: "cstate.CatalogState | None" = None,
     emit: str = "full",
 ) -> PipelineRun:
@@ -378,9 +378,9 @@ def run_delta_pipeline(
     no state.json and a ``resume=True`` rerun completes it.
 
     ``input_id`` must identify BOTH the catalog and the delta (the CLI folds
-    both paths plus the sn/emit flags) so fingerprints invalidate when either
-    side changes. ``catalog`` is the prior entities table (rid, entity_id +
-    record columns) — pass ``None`` when ``state`` carries a labels chain
+    both paths; the emit mode is folded here) so fingerprints invalidate
+    when either side changes. ``catalog`` is the prior entities table (rid,
+    entity_id + record columns) — pass ``None`` when ``state`` carries a labels chain
     (load_catalog_state): the prior labels come from the chain, which is
     what makes an ``emit="delta"`` run_dir chainable (its partial entities
     sink is never consulted — VERDICT r04 #3 / ADVICE r04).
@@ -390,7 +390,7 @@ def run_delta_pipeline(
     cfg = cfg or MatcherConfig()
     Path(run_dir).mkdir(parents=True, exist_ok=True)
     runner = _StageRunner(
-        spark, run_dir, cfg, f"{input_id}|sn={int(sn)}|emit={emit}", resume,
+        spark, run_dir, cfg, f"{input_id}|emit={emit}", resume,
         _DELTA_ORDER,
     )
     stage = runner.stage
@@ -427,9 +427,7 @@ def run_delta_pipeline(
     # The delta graph maintains the sn index itself.
     (entities, sn_update), _ = ckpt.run_parallel(
         spark,
-        lambda: inc.delta_stages(
-            stage, state, norm_delta, cfg, sn=sn, emit=emit, maintain=True
-        ),
+        lambda: inc.delta_stages(stage, state, norm_delta, cfg, emit=emit),
         lambda: stage(
             "tok_index",
             ["normalize_delta"],

@@ -612,16 +612,15 @@ def q_jaccard_pairs(spark, sf_dir):
     # arrays |A∪B| = |A|+|B| − |A∩B| exactly, and the per-record sizes are
     # computed once before the join — so the pair kernel is a single
     # array_intersect and the jaccard double is the SAME integer division
-    # (size ints unchanged → identical IEEE result; null/empty handling
-    # identical: any null side nulls the guard and falls to the 1.0 branch,
-    # exactly like size(array_union(null, x))). Measured 9.2 s → 0.65 s at
-    # sf1.0 (floor 9.2→0.9, kernel 0.9→0.65). ``n`` is null, not size(null),
-    # for a null text: with ANSI mode off size(null) is −1, which would turn
-    # the 1.0 branch into a negative jaccard.
-    d = _t_par(spark, sf_dir, "documents").select(
+    # (size ints unchanged → identical IEEE result). Measured 9.2 s → 0.65 s
+    # at sf1.0 (floor 9.2→0.9, kernel 0.9→0.65). A null text has no tokens,
+    # so, as in the DuckDB twin (no ``sz`` row), its document pairs with
+    # nothing: it is dropped before the join. Every other text splits into
+    # at least one token, so the divisor is at least 1.
+    d = _t_par(spark, sf_dir, "documents").filter(F.col("text").isNotNull()).select(
         "doc_id", "lang", "n_chars",
         F.array_distinct(F.split("text", " ")).alias("toks"),
-    ).withColumn("n", F.when(F.col("toks").isNotNull(), F.size("toks")))
+    ).withColumn("n", F.size("toks"))
     a, b = d.alias("a"), d.alias("b")
     paired = a.join(
         b,
@@ -635,11 +634,7 @@ def q_jaccard_pairs(spark, sf_dir):
         (F.col("a.n") + F.col("b.n")).alias("_t"),
     )
     return paired.select(
-        "d1", "d2",
-        F.when(
-            (F.col("_t") - F.col("_i")) > 0,
-            F.col("_i") / (F.col("_t") - F.col("_i")),
-        ).otherwise(F.lit(1.0)).alias("jaccard"),
+        "d1", "d2", (F.col("_i") / (F.col("_t") - F.col("_i"))).alias("jaccard")
     )
 
 
@@ -1265,7 +1260,8 @@ def _er_cte_body() -> str:
     (0.2·jw + 0.2·lev + 0.6·token-jaccard ≥ 0.75), and min-label components
     via recursive reachability. Valid because every kernel is bitwise equal
     across engines on these inputs (name keys < 64 chars — the numpy kernels
-    truncate at 64) and hashed jaccard has no 64-bit collisions here.
+    truncate at 64) and the token hashes the Spark matcher blocks and scores
+    on have no 64-bit collisions here.
 
     ``cand`` dedups explicitly: under ``WITH RECURSIVE`` DuckDB 1.0 plans a
     plain ``… UNION …`` CTE as a recursive one and keeps duplicate rows, so a

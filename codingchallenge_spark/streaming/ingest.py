@@ -265,7 +265,6 @@ def ingest_batch(
     out_dir: str,
     catalog_run_dir: str,
     cfg: MatcherConfig | None = None,
-    sn: bool = True,
     compact_every: int | None = None,
 ) -> dict:
     """One micro-batch: link ``batch_df`` against the current catalog chain.
@@ -382,7 +381,6 @@ def ingest_batch(
         cfg,
         input_id=input_id,
         resume=True,  # replays of half-finished batches resume the suffix
-        sn=sn,
         state=state,
         emit="delta",  # every per-batch write is delta-sized (VERDICT r04 #3)
     )
@@ -418,7 +416,6 @@ def start_stream_ingest(
     out_dir: str,
     cfg: MatcherConfig | None = None,
     *,
-    sn: bool = True,
     max_files_per_trigger: int | None = 1,
     available_now: bool = True,
     compact_every: int | None = None,
@@ -457,7 +454,7 @@ def start_stream_ingest(
     def _on_batch(batch_df: DataFrame, batch_id: int) -> None:
         ingest_batch(
             spark, batch_df, batch_id, out_root, catalog_run_dir, cfg,
-            sn=sn, compact_every=compact_every,
+            compact_every=compact_every,
         )
 
     writer = (

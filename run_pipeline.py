@@ -26,7 +26,7 @@ run_dir maintains the state, so ingests chain:
 
     python run_pipeline.py --master 'local[8]' \
         --input /tmp/run1 --delta <new>/repo_files.parquet \
-        --run-dir /tmp/run1_d1 [--resume] [--token-only] [--emit-delta]
+        --run-dir /tmp/run1_d1 [--resume] [--emit-delta]
     python run_pipeline.py --input /tmp/run1_d1 --delta <newer>.parquet \
         --run-dir /tmp/run1_d2
 
@@ -73,12 +73,6 @@ def main(argv: list[str] | None = None) -> int:
                          "--input is then a RESOLVED catalog (a prior run's "
                          "entities output), and only delta-touching pairs "
                          "are scored (plans.incremental)")
-    ap.add_argument("--token-only", action="store_true",
-                    help="with --delta: drop the sorted-neighborhood pairs "
-                         "(sn=False). This only lowers recall on "
-                         "name-similar, token-poor records: every delta run "
-                         "still merges the SN index, and the SN probe reads "
-                         "only the touched buckets and their neighbours")
     ap.add_argument("--emit-delta", action="store_true",
                     help="with --delta: write only new + possibly-relabeled "
                          "rows (an upsert set) instead of the full combined "
@@ -92,13 +86,9 @@ def main(argv: list[str] | None = None) -> int:
                     help="only for local runs; omit under spark-submit")
     ap.add_argument("--shuffle-partitions", type=int, default=None)
     args = ap.parse_args(argv)
-    for flag, name in (
-        (args.token_only, "--token-only"),
-        (args.emit_delta, "--emit-delta"),
-    ):
-        if flag and not args.delta:
-            # Reject flags that would otherwise be silently ignored.
-            ap.error(f"{name} only applies with --delta; drop it")
+    if args.emit_delta and not args.delta:
+        # Reject a flag that would otherwise be silently ignored.
+        ap.error("--emit-delta only applies with --delta; drop it")
 
     spark = build_session(
         app_name="codingchallenge-pipeline",
@@ -145,7 +135,6 @@ def main(argv: list[str] | None = None) -> int:
             cfg,
             input_id=f"{args.format}:{catalog_path}|delta:{args.delta}",
             resume=args.resume,
-            sn=not args.token_only,
             state=state,
             emit="delta" if args.emit_delta else "full",
         )

@@ -50,12 +50,6 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--catalog", required=True,
                     help="completed pipeline run_dir with persisted state")
     ap.add_argument("--out-dir", required=True)
-    ap.add_argument("--token-only", action="store_true",
-                    help="drop the sorted-neighborhood pairs (sn=False). "
-                         "This only lowers recall on name-similar, token-poor "
-                         "records: every batch still merges the SN index, and "
-                         "the SN probe reads only the touched buckets and "
-                         "their neighbours")
     ap.add_argument("--max-files-per-trigger", type=int, default=1,
                     help="per-micro-batch delta size bound")
     ap.add_argument("--compact-every", type=int, default=None,
@@ -89,7 +83,6 @@ def main(argv: list[str] | None = None) -> int:
         args.catalog,
         args.out_dir,
         cfg,
-        sn=not args.token_only,
         max_files_per_trigger=args.max_files_per_trigger,
         available_now=not args.continuous,
         compact_every=args.compact_every,

@@ -4,7 +4,10 @@ import itertools
 
 from pyspark.sql import functions as F
 
-from codingchallenge_spark.functions.normalize import normalize_records
+from codingchallenge_spark.functions.normalize import (
+    normalize_records,
+    with_token_hashes,
+)
 from codingchallenge_spark.operators.blocking import (
     canonical_pairs,
     salted_join,
@@ -15,9 +18,9 @@ from codingchallenge_spark.operators.blocking import (
 
 
 def _mk_records(spark, rows):
-    return normalize_records(
+    return with_token_hashes(normalize_records(
         spark.createDataFrame(rows, ["repo", "path", "commit", "lang", "content"])
-    )
+    ))
 
 
 def test_token_blocking_links_shared_rare_tokens(spark):
@@ -141,13 +144,9 @@ def test_sorted_neighborhood_exact_in_polluted_session(spark, small_records):
     (bumps RDD ids) over the same relation, then demand exact global SN on a
     5k-row corpus at several bucketings.
     """
-    from codingchallenge_spark.functions.normalize import normalize_records
-    from codingchallenge_spark.operators.blocking import (
-        sorted_neighborhood,
-        token_blocking,
+    norm = with_token_hashes(normalize_records(small_records)).select(
+        "rid", "name_norm", "th"
     )
-
-    norm = normalize_records(small_records).select("rid", "name_norm", "tokens")
     token_blocking(norm, df_cap=100).count()  # pollute: advance RDD ids
     want = _global_sn(norm, 4)
     for buckets in (8, 32):

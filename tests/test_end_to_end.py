@@ -73,11 +73,14 @@ def test_clusters_match_planted_partition(resolved, small_fixture):
 
 def test_hot_key_fixture_completes_and_bounded(spark):
     from fixtures.gen_repo_files import generate
-    from codingchallenge_spark.functions.normalize import normalize_records
+    from codingchallenge_spark.functions.normalize import (
+        normalize_records,
+        with_token_hashes,
+    )
     from codingchallenge_spark.operators.blocking import token_blocking
 
     fx = generate(1000, hot_key=True)
-    recs = normalize_records(spark.createDataFrame(fx.records))
+    recs = with_token_hashes(normalize_records(spark.createDataFrame(fx.records)))
     n_hot_rows = 2000
     pairs = token_blocking(recs, df_cap=100)
     n = pairs.count()

@@ -187,32 +187,6 @@ def test_delta_cli_mode(spark, split_corpus, tmp_path):
     assert _partition(out) == _partition(lib)
 
 
-def test_token_only_incremental(spark, split_corpus):
-    """sn=False (delta-proportional blocking): exact-duplicate ingest still
-    attaches via shared tokens, old entities still never split, and the
-    result refines the sn=True form (token pairs ⊆ multi-pass pairs)."""
-    old, new = split_corpus
-    catalog = resolve_entities(old, MatcherConfig())
-    full = resolve_entities_incremental(catalog, new, MatcherConfig())
-    tok_only = resolve_entities_incremental(
-        catalog, new, MatcherConfig(), sn=False
-    )
-    assert tok_only.count() == full.count()
-    # token-only clusters refine (or equal) the multi-pass clusters
-    p_full = _partition(full)
-    by_rid = {rid: c for c in p_full for rid in c}
-    for cluster in _partition(tok_only):
-        assert len({frozenset(by_rid[r]) for r in cluster}) == 1
-    # catalog entities still intact
-    joined = catalog.select("rid", F.col("entity_id").alias("old_e")).join(
-        tok_only.select("rid", F.col("entity_id").alias("new_e")), "rid"
-    )
-    assert (
-        joined.groupBy("old_e").agg(F.countDistinct("new_e").alias("n"))
-        .filter(F.col("n") > 1).count() == 0
-    )
-
-
 def test_refinement_property_across_random_splits(spark, tiny_fixture):
     """The refinement contract must hold for ANY split, not just the module
     fixture's: for three deterministic hash-based splits (different salts,

@@ -149,7 +149,7 @@ def work_new(spark, catalog, split_corpus):
     )
     nn = with_token_hashes(nn).withColumn("rid", F.unhex("rid")).cache()
     nn.count()
-    return nn.select("rid", "name_norm", "tokens", "th")
+    return nn.select("rid", "name_norm", "th")
 
 
 @pytest.fixture(scope="module")
@@ -171,20 +171,6 @@ def test_state_path_equals_batch(spark, catalog, split_corpus, state, batch_unio
     assert bad == 0
 
 
-def test_token_only_derived_state_equals_parquet_state(
-    spark, catalog, split_corpus, state
-):
-    """Token-only (sn=False) ingest: the state derived in memory from the
-    catalog rows links the delta exactly like the parquet-backed state."""
-    _, new = split_corpus
-    st, _ = state
-    ref = resolve_entities_incremental(catalog, new, MatcherConfig(), sn=False)
-    got = resolve_entities_incremental(
-        catalog, new, MatcherConfig(), sn=False, state=st
-    )
-    assert _partition(got) == _partition(ref)
-
-
 def _pair_rows(df) -> list[tuple[str, str, str]]:
     return sorted(
         (bytes(r.rid1).hex(), bytes(r.rid2).hex(), r.block_key)
@@ -194,9 +180,9 @@ def _pair_rows(df) -> list[tuple[str, str, str]]:
 
 def _union_work(st, work_new):
     return st.norm.select(
-        "rid", "name_norm", "tokens", F.lit(False).alias("is_new"),
+        "rid", "name_norm", "th", F.lit(False).alias("is_new"),
     ).unionByName(
-        work_new.select("rid", "name_norm", "tokens").withColumn(
+        work_new.select("rid", "name_norm", "th").withColumn(
             "is_new", F.lit(True)
         )
     )
@@ -228,9 +214,9 @@ def test_delta_token_pairs_exact(spark, state, work_new):
     assert len(got) > 0  # non-vacuous on this corpus
     # and the cap is live: some delta token is hot over the union
     hot = (
-        union_work.select(F.explode("tokens").alias("tok"))
+        union_work.select(F.explode("th").alias("tok"))
         .groupBy("tok").count().filter(F.col("count") > df_cap)
-        .join(work_new.select(F.explode("tokens").alias("tok")), "tok", "left_semi")
+        .join(work_new.select(F.explode("th").alias("tok")), "tok", "left_semi")
     )
     assert hot.count() > 0
 
@@ -273,7 +259,7 @@ def _hand_state(spark, keys, sizes) -> cstate.CatalogState:
     )
     norm = spark.createDataFrame(
         [(n, rid, []) for n, rid in keys],
-        "name_norm string, rid binary, tokens array<string>",
+        "name_norm string, rid binary, th array<bigint>",
     )
     return cstate.CatalogState(
         norm=norm, sn_stored=stored, sn_bounds=cstate.merged_bounds([], stored),
@@ -412,14 +398,12 @@ def test_blocking_plan_reads_no_catalog_content(spark, state, work_new, tmp_path
     upd = _sn_update(st, work_new, tmp_path)
     cfg = MatcherConfig()
     tok = incremental_token_pairs_state(st, work_new, df_cap=cfg.token_df_cap)
-    for sn in (None, upd):
-        pairs = incremental_candidate_pairs(st, work_new, cfg, tok, sn=sn)
-        plan = _plan(pairs)
-        for cols in norm_scan_cols(plan):
-            assert "content" not in cols, (sn, cols)
-        # sha2/normalize expressions must not appear anywhere (the catalog
-        # is never re-normalized; the delta side arrives pre-normalized).
-        assert "sha2" not in plan, sn
+    plan = _plan(incremental_candidate_pairs(st, work_new, cfg, tok, sn=upd))
+    for cols in norm_scan_cols(plan):
+        assert "content" not in cols, cols
+    # sha2/normalize expressions must not appear anywhere (the catalog
+    # is never re-normalized; the delta side arrives pre-normalized).
+    assert "sha2" not in plan
 
     # The probe pins the index rows it reads, which truncates their lineage
     # out of the pairs plan: both plans are checked.
@@ -462,32 +446,41 @@ def test_tok_postings_prune_is_lossless(spark, state, work_new):
         assert got == want, modulus
 
 
+def _token_names(spark, rows) -> dict[int, str]:
+    """Token hash → token, over the token lists of ``rows``."""
+    words = sorted({t for *_, toks in rows for t in toks})
+    hashes = spark.range(1).select(*[F.xxhash64(F.lit(w)) for w in words]).first()
+    return dict(zip(hashes, words))
+
+
+_CAP_CAT = [
+    (_rid(1), "c1", ["at_cap", "below_cap", "shared"]),
+    (_rid(2), "c2", ["at_cap", "below_cap"]),
+    (_rid(3), "c3", ["at_cap", "catalog_only"]),
+    (_rid(4), "c4", ["shared", "catalog_only"]),
+]
+_CAP_DELTA = [
+    (_rid(10), "d1", ["at_cap", "below_cap", "delta_only", "delta_hot"]),
+    (_rid(11), "d2", ["delta_only", "delta_hot", "shared"]),
+    (_rid(12), "d3", ["delta_hot"]),
+    (_rid(13), "d4", ["delta_hot"]),
+]
+
+
 def _cap_case(spark):
     """A catalog and a delta around the df cap (3): ``at_cap`` has catalog
     df = cap and the delta adds one (hot over the union), ``below_cap`` has
     catalog df = cap − 1 and the delta adds one (stays cold), ``delta_only``
     and ``delta_hot`` appear only in the delta (cold, and hot by the delta's
-    own count)."""
-    cat = [
-        (_rid(1), "c1", ["at_cap", "below_cap", "shared"]),
-        (_rid(2), "c2", ["at_cap", "below_cap"]),
-        (_rid(3), "c3", ["at_cap", "catalog_only"]),
-        (_rid(4), "c4", ["shared", "catalog_only"]),
-    ]
-    delta = [
-        (_rid(10), "d1", ["at_cap", "below_cap", "delta_only", "delta_hot"]),
-        (_rid(11), "d2", ["delta_only", "delta_hot", "shared"]),
-        (_rid(12), "d3", ["delta_hot"]),
-        (_rid(13), "d4", ["delta_hot"]),
-    ]
+    own count). Both sides carry the token hashes ``th``."""
     schema = "rid binary, name_norm string, tokens array<string>"
-    norm = spark.createDataFrame(cat, schema)
+    norm = with_token_hashes(spark.createDataFrame(_CAP_CAT, schema))
     # The token pass reads no sn index.
     st = cstate.CatalogState(
         norm=norm, sn_stored=None, sn_bounds=[],
         tok_postings=cstate.build_tok_postings(norm, 4), tok_buckets=4,
     )
-    return st, spark.createDataFrame(delta, schema)
+    return st, with_token_hashes(spark.createDataFrame(_CAP_DELTA, schema))
 
 
 def test_delta_token_pairs_exact_at_the_cap(spark):
@@ -496,7 +489,8 @@ def test_delta_token_pairs_exact_at_the_cap(spark):
     st, work = _cap_case(spark)
     union = _union_work(st, work)
     want = _pair_rows(_touching_new(token_blocking(union, df_cap=3, dedupe=False), union))
-    keys = {k for _, _, k in want}
+    names = _token_names(spark, _CAP_CAT + _CAP_DELTA)
+    keys = {names[k] for _, _, k in want}
     assert keys == {"below_cap", "delta_only", "shared"}, keys
     got = _pair_rows(incremental_token_pairs_state(st, work, df_cap=3))
     assert got == want
@@ -530,8 +524,8 @@ def test_updated_state_equals_rebuild(spark, state, catalog, split_corpus, tmp_p
         )
         .withColumn("rid", F.unhex("rid"))
     )
-    union_norm = st.norm.select("rid", "tokens", "name_norm").unionByName(
-        norm_new.select("rid", "tokens", "name_norm")
+    union_norm = st.norm.select("rid", "th", "name_norm").unionByName(
+        norm_new.select("rid", "th", "name_norm")
     )
     postings = st.tok_postings.unionByName(
         cstate.build_tok_postings(norm_new, st.tok_buckets)
@@ -539,7 +533,7 @@ def test_updated_state_equals_rebuild(spark, state, catalog, split_corpus, tmp_p
     got = {tuple(r) for r in postings.groupBy("tok").count().collect()}
     want = {
         tuple(r)
-        for r in union_norm.select(F.explode("tokens").alias("tok"))
+        for r in union_norm.select(F.explode("th").alias("tok"))
         .groupBy("tok").count().collect()
     }
     assert got == want

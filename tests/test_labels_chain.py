@@ -114,14 +114,48 @@ def _save(run_dir: str, manifest: dict) -> None:
     (Path(run_dir) / "state.json").write_text(json.dumps(manifest))
 
 
-def _as_v2(spark, src: str, dst: str) -> dict:
-    """Copy the state dir ``src`` to ``dst`` in the v2 layout: the bounds
-    as an ``sn_bounds`` parquet relation next to a version-2 manifest.
-    Returns the manifest, for a test to edit and :func:`_save`."""
+def _as_v3(spark, src: str, dst: str) -> dict:
+    """Copy the state dir ``src`` to ``dst`` in the v3 layout: each norm
+    element written back with the ``tokens`` strings beside ``th``, the
+    postings rebuilt as one element keyed on the token strings, and a
+    version-3 manifest. Returns the manifest, for a test to edit and
+    :func:`_save`."""
+    from pyspark.sql import functions as F
+
+    from codingchallenge_spark.functions.normalize import tokenize
     from codingchallenge_spark.sources import checkpoint as ckpt
 
     shutil.copytree(src, dst)
     manifest = json.loads((Path(dst) / "state.json").read_text())
+    norm_paths = []
+    for i, path in enumerate(manifest["norm_paths"]):
+        norm = ckpt.read_parquet(spark, path).withColumn("tokens", tokenize())
+        ckpt.write_stage(norm, dst, f"norm_v3_{i}", "v3")
+        norm_paths.append(ckpt.stage_path(dst, f"norm_v3_{i}"))
+    tok = ckpt.read_parquet(spark, *norm_paths).select(
+        "rid", F.explode("tokens").alias("tok")
+    )
+    tbucket = F.pmod(F.xxhash64("tok"), F.lit(manifest["tok_buckets"]))
+    ckpt.write_stage(
+        tok.select(tbucket.cast("int").alias("tbucket"), "tok", "rid"),
+        dst, "tok_v3", "v3",
+    )
+    manifest.update(
+        version=3, norm_paths=norm_paths,
+        tok_chain=[ckpt.stage_path(dst, "tok_v3")],
+    )
+    _save(dst, manifest)
+    return manifest
+
+
+def _as_v2(spark, src: str, dst: str) -> dict:
+    """Copy the state dir ``src`` to ``dst`` in the v2 layout: the v3 one
+    (:func:`_as_v3`) with the bounds as an ``sn_bounds`` parquet relation
+    next to a version-2 manifest. Returns the manifest, for a test to edit
+    and :func:`_save`."""
+    from codingchallenge_spark.sources import checkpoint as ckpt
+
+    manifest = _as_v3(spark, src, dst)
     rows = [
         (b["bucket"], b["n"], b["start_pos"], b["min_name"],
          base64.b64decode(b["min_rid"]))
@@ -335,9 +369,9 @@ def test_compact_state_builds_and_rebuckets_tok_index(
     st1 = cstate.load_catalog_state(spark, c1)
     assert st1.tok_chain == [str(Path(c1) / "tok_index")]
     assert st1.tok_buckets == MatcherConfig().tok_buckets
-    # postings content = explode of the folded norm's tokens
+    # postings content = explode of the folded norm's token hashes
     want = (
-        st1.norm.select("rid", F.explode("tokens").alias("tok"))
+        st1.norm.select("rid", F.explode("th").alias("tok"))
         .groupBy()
         .count()
         .collect()[0][0]
@@ -350,7 +384,7 @@ def test_compact_state_builds_and_rebuckets_tok_index(
     st2 = cstate.load_catalog_state(spark, c2)
     assert st2.tok_buckets == 7
     bad = st2.tok_postings.filter(
-        F.col("tbucket") != F.pmod(F.xxhash64("tok"), F.lit(7)).cast("int")
+        F.col("tbucket") != F.pmod("tok", F.lit(7)).cast("int")
     ).count()
     assert bad == 0
     # same (tok, rid) multiset as before the re-bucket
@@ -416,15 +450,16 @@ def test_parent_state_with_token_df_takes_a_delta(
 ):
     """A v2 state dir that still keeps a ``token_df`` relation next to its
     manifest: the migration ignores it (the postings answer every document
-    frequency) and, the chains being in the current layout and short,
-    copies no data file — the bounds move into the manifest."""
+    frequency). It writes only the folded norm (without ``tokens``) and the
+    postings keyed on the hash; the short sn and labels chains are
+    re-referenced, and the bounds move into the manifest."""
     from pyspark.sql import functions as F
 
     from codingchallenge_spark.sources import checkpoint as ckpt
 
     legacy = str(tmp_path / "legacy_df")
-    _as_v2(spark, catalog_run, legacy)
-    norm = ckpt.load_stage(spark, legacy, "normalize")
+    manifest = _as_v2(spark, catalog_run, legacy)
+    norm = ckpt.read_parquet(spark, *manifest["norm_paths"])
     token_df = norm.select(F.explode("tokens").alias("tok")).groupBy("tok").agg(
         F.count("*").alias("df")
     )
@@ -434,7 +469,12 @@ def test_parent_state_with_token_df_takes_a_delta(
     migrated = _migrate_then_delta(
         spark, legacy, corpus3[1], delta_labels[0], tmp_path
     )
-    assert sorted(p.name for p in Path(migrated).iterdir()) == ["state.json"]
+    assert sorted(p.name for p in Path(migrated).iterdir()) == [
+        "normalize", "stage_metrics.jsonl", "state.json", "tok_index"
+    ]
+    migrated_manifest = cstate.read_manifest(migrated)
+    for chain in ("sn_chain", "labels_chain"):
+        assert migrated_manifest[chain] == manifest[chain], chain
 
 
 def test_parent_layout_norm_takes_deltas_and_a_compaction(
@@ -486,6 +526,28 @@ def test_parent_layout_norm_takes_deltas_and_a_compaction(
     )
 
 
+def test_v3_state_migrates_and_takes_a_delta(
+    spark, corpus3, delta_chain, delta_labels, tmp_path
+):
+    """A v3 delta run_dir — norm elements storing ``tokens`` beside ``th``,
+    postings keyed on the token strings — is refused by
+    ``load_catalog_state``, migrated by one ``compact_state`` (the norm
+    chain folds without ``tokens``, the postings are rebuilt keyed on the
+    hash) and then takes a delta with the labels of the current layout."""
+    d1, _ = delta_chain
+    legacy = str(tmp_path / "legacy_v3")
+    manifest = _as_v3(spark, d1, legacy)
+    assert len(manifest["norm_paths"]) == 2
+
+    migrated = _migrate_then_delta(
+        spark, legacy, corpus3[2], delta_labels[1], tmp_path
+    )
+    state = cstate.load_catalog_state(spark, migrated)
+    assert "tokens" not in state.norm.columns
+    assert dict(state.tok_postings.dtypes)["tok"] == "bigint"
+    assert state.tok_chain == [str(Path(migrated) / "tok_index")]
+
+
 def test_v2_bounds_move_into_the_manifest(spark, tmp_path):
     """The migration carries a v2 state's ``sn_bounds`` rows into the
     manifest unchanged — bucket minima with quotes, a backslash and
@@ -499,8 +561,8 @@ def test_v2_bounds_move_into_the_manifest(spark, tmp_path):
 
     names = ['a"b', "a'b", "a\\b", "ab", "é", "éa", "日本", "😀x"]
     norm = spark.createDataFrame(
-        [(hashlib.sha256(n.encode()).digest(), n, [n]) for n in names],
-        "rid binary, name_norm string, tokens array<string>",
+        [(hashlib.sha256(n.encode()).digest(), n, [i]) for i, n in enumerate(names)],
+        "rid binary, name_norm string, th array<bigint>",
     )
     d = str(tmp_path / "v2")
     for stage, df in (

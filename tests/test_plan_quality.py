@@ -82,14 +82,14 @@ def test_whole_stage_codegen_covers_quality_metrics(spark):
 
 def test_content_never_enters_blocking_or_scoring(spark, tiny_records):
     """The wide column must stay at the scan/normalize boundary: blocking and
-    scoring plans may only carry (rid, name_norm, tokens, th) derivatives."""
+    scoring plans may only carry (rid, name_norm, th) derivatives."""
     # Other tests may have persisted plans that carry `content`; cache
     # substitution would splice their InMemoryRelation description into this
     # plan string and fail the assertion spuriously.
     spark.catalog.clearCache()
     cfg = MatcherConfig()
     norm = with_token_hashes(normalize_records(tiny_records)).select(
-        "rid", "name_norm", "tokens", "th"
+        "rid", "name_norm", "th"
     )
     pairs = candidate_pairs(norm, cfg)
     scored = score_pairs_fused(pairs, norm, weights=cfg.weights,
@@ -106,7 +106,7 @@ def test_scoring_python_crossings_bounded(spark, tiny_records):
     never enter Python either."""
     cfg = MatcherConfig()
     norm = with_token_hashes(normalize_records(tiny_records)).select(
-        "rid", "name_norm", "tokens", "th"
+        "rid", "name_norm", "th"
     )
     pairs = candidate_pairs(norm, cfg)
 
@@ -136,8 +136,12 @@ def test_production_scorer_equals_reference(spark, tiny_records):
     the unpruned reference (score_pairs over the token strings): the same
     edge set, and every row production emits equals the reference row of
     the same pair."""
+    from codingchallenge_spark.functions.similarity import token_hashes
+
     cfg = MatcherConfig()
-    norm = with_token_hashes(normalize_records(tiny_records)).persist()
+    norm = normalize_records(tiny_records).withColumn(
+        "th", token_hashes("tokens")
+    ).persist()
     pairs = candidate_pairs(norm, cfg).persist()
     prod = score_pairs_fused(pairs, norm, weights=cfg.weights,
                              threshold=cfg.threshold)
@@ -267,7 +271,9 @@ def _assert_selfjoin_guarded(df, label: str) -> None:
 def test_token_blocking_selfjoin_guarded(spark, tiny_records):
     from codingchallenge_spark.operators.blocking import token_blocking
 
-    norm = normalize_records(tiny_records).select("rid", "name_norm", "tokens")
+    norm = with_token_hashes(normalize_records(tiny_records)).select(
+        "rid", "name_norm", "th"
+    )
     _assert_selfjoin_guarded(token_blocking(norm), "token_blocking")
 
 
@@ -366,7 +372,7 @@ def test_incremental_token_join_guarded(spark, tiny_records, tmp_path):
     st, work_new, norm_path, idx_path = _token_pass_state(spark, tiny_records, tmp_path)
     catalog_scan = re.compile(
         re.escape(idx_path) + "|" + re.escape(norm_path)
-        + r"|FileScan parquet \[[^\]]*\b(tbucket|tokens)#"
+        + r"|FileScan parquet \[[^\]]*\b(tbucket|th)#"
     )
     plan = _simple_plan(incremental_token_pairs_state(st, work_new, df_cap=100))
     assert "BroadcastHashJoin" in plan, f"tok join not broadcast:\n{plan}"
@@ -408,8 +414,53 @@ def test_exchange_count_in_token_blocking(spark, tiny_records):
     aggregation); no additional repartition creeps in."""
     from codingchallenge_spark.operators.blocking import token_blocking
 
-    norm = normalize_records(tiny_records).select("rid", "name_norm", "tokens")
+    norm = with_token_hashes(normalize_records(tiny_records)).select(
+        "rid", "name_norm", "th"
+    )
     plan = _plan(token_blocking(norm))
     # hashpartitioning on tok for the join; the rid1<rid2 filter must NOT
     # force an extra shuffle.
     assert plan.count("Exchange hashpartitioning") <= 4, plan
+
+
+def test_token_key_is_the_hash(spark, tiny_records, tmp_path):
+    """A token has one stored identity, its xxhash64: the normalize and
+    normalize_delta stage markers record ``th`` and no ``tokens`` field,
+    the postings key is a bigint, batch token blocking exchanges on a
+    bigint ``tok``, and the delta token pass plans no string token column
+    (a long attribute prints with an ``L`` suffix)."""
+    import dataclasses
+
+    from codingchallenge_spark.functions.normalize import work_projection
+    from codingchallenge_spark.operators.blocking import token_blocking
+    from codingchallenge_spark.plans.incremental import (
+        incremental_token_pairs_state,
+        normalize_delta_stage,
+    )
+    from codingchallenge_spark.plans.matcher import normalize_stage
+    from codingchallenge_spark.sources import checkpoint as ckpt
+
+    run_dir = str(tmp_path / "run")
+
+    def stage(name, upstream, build):
+        ckpt.write_stage(build(), run_dir, name, "fp")
+        return ckpt.load_stage(spark, run_dir, name)
+
+    st, work_new, _, _ = _token_pass_state(spark, tiny_records, tmp_path)
+    norm = normalize_stage(stage, tiny_records)
+    labels = st.norm.select("rid", F.col("rid").alias("entity_id"))
+    normalize_delta_stage(stage, dataclasses.replace(st, labels=labels), tiny_records)
+    for name in ("normalize", "normalize_delta"):
+        schema = ckpt.recorded_schema(ckpt.stage_path(run_dir, name))
+        assert "tokens" not in schema.fieldNames(), name
+        assert schema["th"].dataType.simpleString() == "array<bigint>", name
+
+    assert dict(st.tok_postings.dtypes)["tok"] == "bigint"
+
+    batch = _plan(token_blocking(work_projection(norm)))
+    assert re.search(r"hashpartitioning\(tok#\d+L, ", batch), batch
+
+    delta = _plan(incremental_token_pairs_state(st, work_new, df_cap=100))
+    assert "tokens" not in delta, delta
+    assert re.search(r"ReadSchema: struct<[^>]*\btok:bigint", delta), delta
+    assert not re.search(r"\btok#\d+(?![\dL])", delta), delta

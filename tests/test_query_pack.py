@@ -116,10 +116,8 @@ def test_flagship_threshold_margin(spark):
     here before the driver hashes diverge."""
     from pyspark.sql import functions as F
 
-    from codingchallenge_spark.functions.normalize import (
-        normalize_records,
-        with_token_hashes,
-    )
+    from codingchallenge_spark.functions.normalize import normalize_records
+    from codingchallenge_spark.functions.similarity import token_hashes
     from codingchallenge_spark.operators.scoring import (
         attach_pair_attrs,
         score_pairs,
@@ -133,7 +131,9 @@ def test_flagship_threshold_margin(spark):
     ):
         recs = documents_as_records(spark, sf_dir)
         cfg = MatcherConfig(threshold=0.75)
-        norm = with_token_hashes(normalize_records(recs)).persist()
+        norm = normalize_records(recs).withColumn(
+            "th", token_hashes("tokens")
+        ).persist()
         pairs = candidate_pairs(norm, cfg)
         scored = score_pairs(
             attach_pair_attrs(pairs, norm), weights=cfg.weights,
@@ -203,11 +203,15 @@ def test_er_entities_matches_twin_small_corpora(spark, tmp_path, n, seed):
 
 
 def test_jaccard_pairs_null_text_same_in_both_ansi_modes(spark, tmp_path):
-    """A null-text side scores 1.0 whether ANSI mode is on or off: with it
-    off, size(null) is −1 and must not reach the jaccard arithmetic."""
+    """A document with null text pairs with nothing, whether ANSI mode is on
+    or off (with it off, size(null) is −1), and the DuckDB twin returns the
+    same rows on the same table."""
     import pandas as pd
 
-    from codingchallenge_spark.plans.query_pack import q_jaccard_pairs
+    from codingchallenge_spark.plans.query_pack import (
+        SQL_JACCARD_PAIRS,
+        q_jaccard_pairs,
+    )
 
     pd.DataFrame(
         {
@@ -229,6 +233,10 @@ def test_jaccard_pairs_null_text_same_in_both_ansi_modes(spark, tmp_path):
             )
     finally:
         spark.conf.set(key, prev)
-    assert got["true"] == got["false"] == [
-        (1, 2, 1.0), (1, 3, 1 / 3), (2, 3, 1.0)
-    ]
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW documents AS SELECT * FROM read_parquet("
+        f"'{tmp_path / 'documents.parquet'}')"
+    )
+    twin = sorted(con.execute(SQL_JACCARD_PAIRS).fetchall())
+    assert got["true"] == got["false"] == twin == [(1, 3, 1 / 3)]
